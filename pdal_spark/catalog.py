@@ -13,11 +13,18 @@ same on-disk shape Iceberg uses:
       metadata/version-hint.text     current-version pointer
 
 * **Atomic, optimistic commits.** A writer stages data files, then
-  creates ``v<N+1>.json`` with ``open(..., "x")`` — EXCLUSIVE create. If
-  another writer won the race the create fails and the commit RETRIES
-  against the new current snapshot (re-reading its file list), exactly
-  Iceberg's optimistic-concurrency loop. The version hint is updated
-  last (a stale hint only costs a directory probe, never correctness).
+  creates ``v<N+1>.json`` with ``open(..., "x")`` — EXCLUSIVE create, so
+  one writer wins each version. The version hint is updated last (a
+  stale hint only costs a directory probe, never correctness).
+  ``_commit`` applies one of two rules:
+
+  - **retrying** — ``append``, ``audited_append``, ``overwrite``,
+    ``rollback``: a lost race re-reads the head and retries (Iceberg's
+    optimistic-concurrency loop).
+  - **validated** — ``merge``, ``compact``, ``layout.optimize_catalog``
+    (all via ``rewrite``): one attempt against the planned version; if
+    another writer committed since, raise ``CommitConflict`` and delete
+    the staged files (Iceberg's validation semantics).
 * **Time travel.** ``read(version=K)`` / ``history()`` — every snapshot
   records parent, operation, timestamp and summary counts.
 * **File pruning.** ``append`` collects per-file min/max for the
@@ -25,14 +32,16 @@ same on-disk shape Iceberg uses:
   scan — no data read) and stores them in the manifest; ``read`` with a
   ``bbox`` prunes whole files before Spark ever sees them, the
   manifest-level analog of Iceberg partition/metrics pruning. Row-group
-  pushdown inside surviving files still applies on top.
+  pushdown inside surviving files still applies on top. Every read
+  (``read``, ``incremental_read``, ``changes``, ``pruned_count``) picks
+  its files through ``_select`` and scans them through ``_scan``.
 * **Rollback.** ``rollback(K)`` commits a new snapshot that re-points to
   ``K``'s file list (history is never rewritten).
 * **Point-lookup indexes.** ``bloom_cols`` adds a per-file Bloom bitmap
-  to the manifest (1 KiB/file at defaults, built from one column-pruned
-  pyarrow read at stage time): range stats cannot prune interleaved
-  keys, the bloom prunes point lookups and small merges anyway — no
-  false negatives, Iceberg/Delta's bloom-index analog.
+  to the manifest (1 KiB/file, built from one column-pruned pyarrow
+  read at stage time): range stats cannot prune interleaved keys, the
+  bloom prunes point lookups and small merges anyway — no false
+  negatives, Iceberg/Delta's bloom-index analog.
 
 ``lineage.ResumableJob`` (write-then-commit batches) composes with this:
 each completed batch can be ``append``-ed as one snapshot, giving
@@ -41,65 +50,83 @@ exactly-once visible commits over at-least-once batch writes.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import time
 import uuid
-from typing import Optional, Sequence
+from typing import Iterator, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+
+# Bloom geometry is part of the on-disk format: the manifest stores the
+# bits without their size, so every reader must probe with these values.
+BLOOM_BITS = 8192
+BLOOM_K = 4
+MAX_COMMIT_ATTEMPTS = 10
 
 
 class CommitConflict(RuntimeError):
     pass
 
 
+# -- per-file bloom indexes -------------------------------------------------
+#
+# min/max footer stats prune RANGE predicates; they are useless for
+# point lookups over interleaved keys (every file's [min,max] covers
+# every key — the "find one url among 10^12" shape). A per-file Bloom
+# bitmap (BLOOM_BITS bits, BLOOM_K probes; 1 KiB per file) in the
+# manifest prunes those: no false negatives, deterministic (md5-derived
+# probe positions), built at stage time from ONE column-pruned pyarrow
+# read of the staged file.
+
+
+def _bloom_positions(value) -> list[int]:
+    out = []
+    for i in range(BLOOM_K):
+        d = hashlib.md5(f"{i}:{value}".encode()).digest()
+        out.append(int.from_bytes(d[:8], "big") % BLOOM_BITS)
+    return out
+
+
+def _build_bloom(path: str, col: str) -> str:
+    import pyarrow.parquet as pq
+
+    bits = bytearray(BLOOM_BITS // 8)
+    vals = pq.read_table(path, columns=[col]).column(0)
+    for v in vals.drop_null().to_pylist():
+        for p in _bloom_positions(v):
+            bits[p >> 3] |= 1 << (p & 7)
+    return bytes(bits).hex()
+
+
+def _overlaps(f: dict, bbox: tuple, bbox_cols: tuple) -> bool:
+    """False only when ``f``'s footer stats put it outside ``bbox``."""
+    minx, miny, maxx, maxy = bbox
+    cx, cy = bbox_cols
+    st = f.get("stats", {})
+    if cx in st and (st[cx][0] > maxx or st[cx][1] < minx):
+        return False
+    if cy in st and (st[cy][0] > maxy or st[cy][1] < miny):
+        return False
+    return True  # missing stats -> cannot prune, must read
+
+
 class SnapshotTable:
     def __init__(self, spark: SparkSession, path: str,
                  stats_cols: Sequence[str] = (),
-                 bloom_cols: Sequence[str] = (),
-                 bloom_bits: int = 8192, bloom_k: int = 4):
+                 bloom_cols: Sequence[str] = ()):
         self.spark = spark
         self.path = path
         self.data_dir = os.path.join(path, "data")
         self.meta_dir = os.path.join(path, "metadata")
         self.stats_cols = tuple(stats_cols)
         self.bloom_cols = tuple(bloom_cols)
-        self.bloom_bits = int(bloom_bits)
-        self.bloom_k = int(bloom_k)
         os.makedirs(self.data_dir, exist_ok=True)
         os.makedirs(self.meta_dir, exist_ok=True)
 
-    # -- per-file bloom indexes ---------------------------------------------
-    #
-    # min/max footer stats prune RANGE predicates; they are useless for
-    # point lookups over interleaved keys (every file's [min,max] covers
-    # every key — the "find one url among 10^12" shape). A per-file
-    # Bloom bitmap (bloom_bits bits, bloom_k probes; 1 KiB per file at
-    # the default) in the manifest prunes those: no false negatives,
-    # deterministic (md5-derived probe positions), built at stage time
-    # from ONE column-pruned pyarrow read of the staged file.
-
-    def _bloom_positions(self, value) -> list[int]:
-        import hashlib
-
-        out = []
-        for i in range(self.bloom_k):
-            d = hashlib.md5(f"{i}:{value}".encode()).digest()
-            out.append(int.from_bytes(d[:8], "big") % self.bloom_bits)
-        return out
-
-    def _build_bloom(self, path: str, col: str) -> str:
-        import pyarrow.parquet as pq
-
-        bits = bytearray(self.bloom_bits // 8)
-        vals = pq.read_table(path, columns=[col]).column(0)
-        for v in vals.drop_null().to_pylist():
-            for p in self._bloom_positions(v):
-                bits[p >> 3] |= 1 << (p & 7)
-        return bytes(bits).hex()
-
-    def _bloom_may_contain(self, f: dict, col: str, values) -> bool:
+    @staticmethod
+    def _bloom_may_contain(f: dict, col: str, values) -> bool:
         bl = f.get("bloom", {}).get(col)
         if bl is None:
             return True  # unindexed file -> cannot prune
@@ -107,7 +134,7 @@ class SnapshotTable:
         for v in values:
             if all(
                 bits[p >> 3] & (1 << (p & 7))
-                for p in self._bloom_positions(v)
+                for p in _bloom_positions(v)
             ):
                 return True
         return False
@@ -137,14 +164,17 @@ class SnapshotTable:
         with open(os.path.join(self.meta_dir, f"v{v}.json")) as f:
             return json.load(f)
 
+    def _snapshots(self, start: int = 1) -> Iterator[dict]:
+        """Committed snapshots from version ``start`` to the head."""
+        for v in range(start, self.current_version() + 1):
+            yield self.snapshot(v)
+
     def history(self) -> DataFrame:
-        rows = []
-        v = self.current_version()
-        for i in range(1, v + 1):
-            s = self.snapshot(i)
-            rows.append((s["version"], s["parent"], s["operation"],
-                         float(s["ts"]), len(s["files"]),
-                         int(s["total_rows"])))
+        rows = [
+            (s["version"], s["parent"], s["operation"], float(s["ts"]),
+             len(s["files"]), int(s["total_rows"]))
+            for s in self._snapshots()
+        ]
         return self.spark.createDataFrame(
             rows,
             "version int, parent int, operation string, ts double, "
@@ -184,7 +214,7 @@ class SnapshotTable:
                     stats[c] = [min(mins), max(maxs)]
             entry = {"path": dst, "rows": meta.num_rows, "stats": stats}
             blooms = {
-                c: self._build_bloom(dst, c)
+                c: _build_bloom(dst, c)
                 for c in self.bloom_cols if c in meta.schema.names
             }
             if blooms:
@@ -196,18 +226,33 @@ class SnapshotTable:
         return entries
 
     def _commit(self, new_files: list[dict], operation: str,
-                base_files_fn, max_retries: int = 10) -> int:
-        """Optimistic commit loop (exclusive-create on the manifest)."""
-        for _ in range(max_retries):
+                keep: Optional[list] = None,
+                planned: Optional[int] = None) -> int:
+        """Commit ``keep`` + ``new_files`` as the next snapshot; ``keep``
+        None carries the head's file list. The two commit rules:
+
+        * ``planned`` None — retrying: a lost exclusive-create race
+          re-reads the head and tries again.
+        * ``planned`` = a version — validated: one attempt, and only if
+          the head is still ``planned``.
+
+        On failure the staged ``new_files`` are deleted before
+        ``CommitConflict`` is raised: they were never visible, and
+        ``expire()`` only collects once-committed files."""
+        attempts = MAX_COMMIT_ATTEMPTS if planned is None else 1
+        for _ in range(attempts):
             cur = self.current_version()
-            files = base_files_fn(self.snapshot(cur))
+            if planned is not None and cur != planned:
+                break
+            files = (self.snapshot(cur)["files"] if keep is None
+                     else list(keep)) + new_files
             manifest = {
                 "version": cur + 1,
                 "parent": cur if cur else None,
                 "operation": operation,
                 "ts": time.time(),
-                "files": files + new_files,
-                "total_rows": sum(int(f["rows"]) for f in files + new_files),
+                "files": files,
+                "total_rows": sum(int(f["rows"]) for f in files),
                 "stats_cols": list(self.stats_cols),
             }
             target = os.path.join(self.meta_dir, f"v{cur + 1}.json")
@@ -221,14 +266,20 @@ class SnapshotTable:
                 f.write(str(cur + 1))
             os.replace(tmp, self._hint_path())
             return cur + 1
-        raise CommitConflict(f"gave up after {max_retries} commit attempts")
+        for f in new_files:
+            os.remove(f["path"])
+        if planned is None:
+            raise CommitConflict(f"gave up after {attempts} commit attempts")
+        raise CommitConflict(
+            f"another writer committed after v{planned} while {operation} "
+            f"planned against it"
+        )
 
     def append(self, df: DataFrame, operation: str = "append") -> int:
         """Stage data files, then commit snapshot = parent files + new.
         ``operation`` labels the snapshot in history() — callers use it
         for idempotence (skip an already-committed labeled append)."""
-        new_files = self._stage(df)
-        return self._commit(new_files, operation, lambda s: list(s["files"]))
+        return self._commit(self._stage(df), operation)
 
     def audited_append(self, df: DataFrame,
                        constraints: list[dict]) -> tuple[Optional[int], list]:
@@ -249,12 +300,20 @@ class SnapshotTable:
         staged = self.spark.read.parquet(*[f["path"] for f in new_files])
         verdicts = check(staged, constraints).collect()
         if all(r.passed == 1 for r in verdicts):
-            v = self._commit(new_files, "audited-append",
-                             lambda s: list(s["files"]))
-            return v, verdicts
+            return self._commit(new_files, "audited-append"), verdicts
         for f in new_files:
             os.remove(f["path"])
         return None, verdicts
+
+    def rewrite(self, df: Optional[DataFrame], operation: str,
+                planned: int, keep: list[dict]) -> int:
+        """Copy-on-write commit of a rewrite planned against version
+        ``planned``: stage ``df`` (nothing when None) and commit it
+        beside the carried ``keep`` files under the validated rule —
+        ``CommitConflict`` (staged files removed) if any other writer
+        committed after ``planned``. Returns the new version."""
+        new_files = self._stage(df) if df is not None else []
+        return self._commit(new_files, operation, keep, planned)
 
     def fsck(self, version: Optional[int] = None,
              check_rows: bool = False) -> dict:
@@ -280,9 +339,7 @@ class SnapshotTable:
                     mismatches.append(
                         {"path": f["path"], "manifest_rows": int(f["rows"]),
                          "footer_rows": n})
-        live: set = set()
-        for v in range(1, self.current_version() + 1):
-            live |= {f["path"] for f in self.snapshot(v)["files"]}
+        live = {f["path"] for snap in self._snapshots() for f in snap["files"]}
         orphans = sorted(
             os.path.join(self.data_dir, name)
             for name in os.listdir(self.data_dir)
@@ -297,16 +354,12 @@ class SnapshotTable:
         }
 
     def committed_operations(self) -> set:
-        return {
-            self.snapshot(v)["operation"]
-            for v in range(1, self.current_version() + 1)
-        }
+        return {s["operation"] for s in self._snapshots()}
 
     def overwrite(self, df: DataFrame) -> int:
         """Snapshot containing ONLY the new files (old files stay on disk
         for time travel until expired)."""
-        new_files = self._stage(df)
-        return self._commit(new_files, "overwrite", lambda s: [])
+        return self._commit(self._stage(df), "overwrite", keep=[])
 
     def merge(self, source: DataFrame, key: str,
               when_matched: str = "update") -> dict:
@@ -328,11 +381,9 @@ class SnapshotTable:
         provenance (input_file_name) finds the files with real matches.
 
         Source must be unique on ``key`` (checked) and schema-aligned
-        with the target in update mode. Commit is serializable: if
-        another writer commits between planning and commit, the merge
-        raises CommitConflict rather than committing against a file
-        list it did not plan on (Iceberg's validation semantics).
-        Returns counts + the new version."""
+        with the target in update mode. Commits through ``rewrite``, so
+        a concurrent commit between planning and commit raises
+        CommitConflict. Returns counts + the new version."""
         from pyspark.sql import functions as F
 
         if when_matched not in ("update", "delete"):
@@ -400,27 +451,7 @@ class SnapshotTable:
             )
         else:
             new_data = kept_rows
-        new_files = self._stage(new_data) if new_data is not None else []
-
-        def base(s: dict) -> list:
-            if s["version"] != planned_version:
-                raise CommitConflict(
-                    f"table advanced to v{s['version']} while merge "
-                    f"planned against v{planned_version}"
-                )
-            return list(keep_files)
-
-        try:
-            v = self._commit(new_files, "merge", base, max_retries=1)
-        except CommitConflict:
-            # staged files were never committed: remove them (mirrors
-            # audited_append's failure cleanup) so a retried merge
-            # under contention cannot leak permanent orphans — expire()
-            # only collects once-committed files and fsck only reports.
-            for f in new_files:
-                if os.path.exists(f["path"]):
-                    os.remove(f["path"])
-            raise
+        v = self.rewrite(new_data, "merge", planned_version, keep_files)
         return {
             "version": v,
             "files_total": len(files),
@@ -429,17 +460,16 @@ class SnapshotTable:
             "files_carried": len(keep_files),
         }
 
-    def compact(self, small_threshold_rows: int,
-                target_partitions: int | None = None) -> dict:
+    def compact(self, small_threshold_rows: int) -> dict:
         """Small-file compaction (the lakehouse OPTIMIZE bin-pack):
-        rewrite files below ``small_threshold_rows`` into
-        ``target_partitions`` right-sized ones; every large file
+        rewrite files below ``small_threshold_rows`` into right-sized
+        ones (one per ``small_threshold_rows`` rows); every large file
         carries into the new snapshot untouched. The weekly-crawl
         failure mode this exists for: thousands of stripe-sized commit
         files turning every scan's task list into driver pressure.
 
         Needs >= 2 small files to do anything (a lone small file
-        cannot be packed tighter). Same serializable validation as
+        cannot be packed tighter). Commits through ``rewrite``, like
         merge(). Returns counts + the new version (unchanged version
         on no-op)."""
         planned_version = self.current_version()
@@ -450,30 +480,13 @@ class SnapshotTable:
                     "files_carried": len(files)}
         keep_files = [f for f in files if int(f["rows"]) >= small_threshold_rows]
         rows_small = sum(int(f["rows"]) for f in small)
-        if target_partitions is None:
-            target_partitions = max(1, rows_small // small_threshold_rows)
         packed = self.spark.read.parquet(
             *[f["path"] for f in small]
-        ).repartition(target_partitions)
-        new_files = self._stage(packed)
-
-        def base(s: dict) -> list:
-            if s["version"] != planned_version:
-                raise CommitConflict(
-                    f"table advanced to v{s['version']} while compaction "
-                    f"planned against v{planned_version}"
-                )
-            return list(keep_files)
-
-        try:
-            v = self._commit(new_files, "compact", base, max_retries=1)
-        except CommitConflict:
-            for f in new_files:  # same orphan cleanup as merge()
-                if os.path.exists(f["path"]):
-                    os.remove(f["path"])
-            raise
+        ).repartition(max(1, rows_small // small_threshold_rows))
+        v = self.rewrite(packed, "compact", planned_version, keep_files)
         return {"version": v, "files_compacted": len(small),
-                "files_new": len(new_files), "files_carried": len(keep_files)}
+                "files_new": len(self.snapshot(v)["files"]) - len(keep_files),
+                "files_carried": len(keep_files)}
 
     def changes(self, from_version: int,
                 to_version: Optional[int] = None) -> DataFrame:
@@ -491,22 +504,11 @@ class SnapshotTable:
         cancel one-for-one)."""
         from pyspark.sql import functions as F
 
-        a = self.snapshot(from_version)["files"]
-        b = self.snapshot(to_version)["files"]
-        a_paths = {f["path"] for f in a}
-        b_paths = {f["path"] for f in b}
-        removed = sorted(f["path"] for f in a if f["path"] not in b_paths)
-        added = sorted(f["path"] for f in b if f["path"] not in a_paths)
-
-        def rd(paths):
-            if not paths:
-                ref = (b or a)
-                if not ref:
-                    raise ValueError("empty table and no snapshot schema")
-                return self.spark.read.parquet(ref[0]["path"]).limit(0)
-            return self.spark.read.parquet(*paths)
-
-        added_rows, removed_rows = rd(added), rd(removed)
+        b, added = self._select(to_version, since=from_version)
+        a, removed = self._select(from_version, since=b["version"])
+        schema_from = b["files"] or a["files"]
+        added_rows = self._scan(added, schema_from)
+        removed_rows = self._scan(removed, schema_from)
         inserts = added_rows.exceptAll(removed_rows).withColumn(
             "_change_type", F.lit("insert")
         )
@@ -518,18 +520,17 @@ class SnapshotTable:
     def rollback(self, version: int) -> int:
         """New snapshot re-pointing to an old file list (history intact)."""
         old = self.snapshot(version)["files"]
-        return self._commit(
-            [], f"rollback-to-{version}", lambda s: list(old)
-        )
+        return self._commit([], f"rollback-to-{version}", keep=old)
 
     def expire(self, keep_from_version: int) -> int:
         """Delete data files unreachable from snapshots >= the given one.
 
         Returns the number of files removed. Manifests are kept (cheap,
         and reads of expired versions fail loudly on the missing file)."""
-        live: set = set()
-        for v in range(keep_from_version, self.current_version() + 1):
-            live |= {f["path"] for f in self.snapshot(v)["files"]}
+        live = {
+            f["path"] for snap in self._snapshots(keep_from_version)
+            for f in snap["files"]
+        }
         removed = 0
         for name in os.listdir(self.data_dir):
             p = os.path.join(self.data_dir, name)
@@ -544,10 +545,48 @@ class SnapshotTable:
         """SQL ``AS OF TIMESTAMP`` resolution: the latest version whose
         commit timestamp is <= ``ts`` (0 = before any commit)."""
         best = 0
-        for v in range(1, self.current_version() + 1):
-            if float(self.snapshot(v)["ts"]) <= ts:
-                best = v
+        for s in self._snapshots():
+            if float(s["ts"]) <= ts:
+                best = s["version"]
         return best
+
+    def _select(
+        self,
+        version: Optional[int] = None,
+        as_of_ts: Optional[float] = None,
+        bbox: Optional[tuple] = None,
+        bbox_cols: tuple = ("x", "y"),
+        since: Optional[int] = None,
+    ) -> tuple[dict, list[dict]]:
+        """The snapshot a read targets (``version``, or the one current
+        at ``as_of_ts``; the head by default) and the data files it
+        scans: only those not already in snapshot ``since`` when given,
+        minus those the manifest stats put outside ``bbox``."""
+        if as_of_ts is not None:
+            if version is not None:
+                raise ValueError("pass version or as_of_ts, not both")
+            version = self.version_as_of(as_of_ts)
+            if version == 0:
+                raise ValueError(
+                    f"no snapshot committed at or before ts={as_of_ts}"
+                )
+        s = self.snapshot(version)
+        files = s["files"]
+        if since is not None:
+            base = {f["path"] for f in self.snapshot(since)["files"]}
+            files = [f for f in files if f["path"] not in base]
+        if bbox is not None:
+            files = [f for f in files if _overlaps(f, bbox, bbox_cols)]
+        return s, files
+
+    def _scan(self, files: list[dict], schema_from: list[dict]) -> DataFrame:
+        """Spark scan of ``files``; with none, zero rows carrying the
+        schema of the first file in ``schema_from``."""
+        if files:
+            return self.spark.read.parquet(*[f["path"] for f in files])
+        if not schema_from:
+            raise ValueError("empty table and no snapshot schema")
+        return self.spark.read.parquet(schema_from[0]["path"]).limit(0)
 
     def read(
         self,
@@ -560,36 +599,8 @@ class SnapshotTable:
         files from the manifest stats before Spark plans the read.
         ``as_of_ts`` reads the table as of a wall-clock epoch second
         (mutually exclusive with ``version``)."""
-        if as_of_ts is not None:
-            if version is not None:
-                raise ValueError("pass version or as_of_ts, not both")
-            version = self.version_as_of(as_of_ts)
-            if version == 0:
-                raise ValueError(
-                    f"no snapshot committed at or before ts={as_of_ts}"
-                )
-        s = self.snapshot(version)
-        files = s["files"]
-        if bbox is not None:
-            minx, miny, maxx, maxy = bbox
-            cx, cy = bbox_cols
-
-            def overlaps(f: dict) -> bool:
-                st = f.get("stats", {})
-                if cx in st and (st[cx][0] > maxx or st[cx][1] < minx):
-                    return False
-                if cy in st and (st[cy][0] > maxy or st[cy][1] < miny):
-                    return False
-                return True  # missing stats -> cannot prune, must read
-
-            files = [f for f in files if overlaps(f)]
-        if not files:
-            # preserve schema when possible by reading zero rows
-            all_files = s["files"]
-            if not all_files:
-                raise ValueError("empty table and no snapshot schema")
-            return self.spark.read.parquet(all_files[0]["path"]).limit(0)
-        return self.spark.read.parquet(*[f["path"] for f in files])
+        s, files = self._select(version, as_of_ts, bbox, bbox_cols)
+        return self._scan(files, s["files"])
 
     def incremental_read(
         self,
@@ -605,35 +616,13 @@ class SnapshotTable:
         footer-stats prune. Files REMOVED since from_version (overwrite/
         rollback) are the consumer's signal to recompute; this scan is
         append-diff only."""
-        base = {f["path"] for f in self.snapshot(from_version)["files"]}
-        s = self.snapshot(to_version)
-        files = [f for f in s["files"] if f["path"] not in base]
-        if bbox is not None:
-            minx, miny, maxx, maxy = bbox
-            cx, cy = bbox_cols
-            files = [
-                f for f in files
-                if not (cx in f.get("stats", {})
-                        and (f["stats"][cx][0] > maxx or f["stats"][cx][1] < minx))
-                and not (cy in f.get("stats", {})
-                         and (f["stats"][cy][0] > maxy or f["stats"][cy][1] < miny))
-            ]
-        if not files:
-            ref = s["files"] or self.snapshot(self.current_version())["files"]
-            if not ref:
-                raise ValueError("empty table and no snapshot schema")
-            return self.spark.read.parquet(ref[0]["path"]).limit(0)
-        return self.spark.read.parquet(*[f["path"] for f in files])
+        s, files = self._select(to_version, bbox=bbox, bbox_cols=bbox_cols,
+                                since=from_version)
+        return self._scan(files, s["files"] or self.snapshot()["files"])
 
     def pruned_count(self, bbox: tuple, version: Optional[int] = None,
                      bbox_cols: tuple = ("x", "y")) -> tuple[int, int]:
-        """(files read, files total) for a bbox — pruning evidence."""
-        s = self.snapshot(version)
-        total = len(s["files"])
-        kept = self.read(version=version, bbox=bbox, bbox_cols=bbox_cols)
-        # count distinct files in the planned scan (inputFiles returns
-        # file:// URIs; data-file names are uuids, so compare basenames)
-        n = len({
-            os.path.basename(f["path"]) for f in s["files"]
-        } & {os.path.basename(p) for p in kept.inputFiles()})
-        return n, total
+        """(files read, files total) for a bbox — pruning evidence: the
+        files ``read(version=version, bbox=bbox)`` hands Spark."""
+        s, files = self._select(version, bbox=bbox, bbox_cols=bbox_cols)
+        return len(files), len(s["files"])

@@ -25,9 +25,10 @@ Execution shape (the part that must survive 100×):
 * the rewrite is ONE ``repartitionByRange`` exchange (range boundaries
   from Spark's reservoir sample of the key) + an in-partition sort —
   exactly the shuffle a sorted write requires, nothing more.
-* the commit is a full-snapshot replace through the catalog's
-  optimistic-commit protocol, so readers never observe a half-optimized
-  table and time travel to the pre-optimize version still works.
+* the commit is a full-snapshot replace through the catalog's validated
+  commit, so readers never observe a half-optimized table, a concurrent
+  append is never silently dropped, and time travel to the
+  pre-optimize version still works.
 
 The DFA-LUT construction: the classic per-level xy2d loop (rotate /
 reflect state carried through 16 levels) is a data-dependent recurrence
@@ -231,7 +232,6 @@ def optimize_catalog(
     target_rows_per_file: int = 1_000_000,
     x: str = "x",
     y: str = "y",
-    version: Optional[int] = None,
 ) -> int:
     """Rewrite the current snapshot clustered by Hilbert key; returns the
     new version.
@@ -239,16 +239,17 @@ def optimize_catalog(
     One ``repartitionByRange`` exchange on the key (range boundaries
     come from Spark's sampled range partitioner, so skewed regions get
     proportionally more files), an in-partition sort so row groups
-    within a file are also tight, then a full-replace optimistic commit
-    — concurrent appends retry against the new snapshot, readers of old
+    within a file are also tight, then a full-replace validated commit
+    (``SnapshotTable.rewrite``) — a concurrent commit raises
+    ``CommitConflict`` instead of being dropped; readers of old
     versions are untouched (time travel intact).
 
     The key column is dropped before the write: it is derivable, and
     storing it would change the table schema (Iceberg keeps sort keys
     as metadata, not data — same stance).
     """
-    snap = cat.snapshot(version if version is not None else None)
-    df = cat.read(version=version)
+    snap = cat.snapshot()
+    df = cat.read(version=snap["version"])
     if n_files is None:
         n_files = max(1, math.ceil(snap["total_rows"] / target_rows_per_file))
     keyed = df.withColumn("_hkey", hilbert_key(F.col(x), F.col(y), bounds))
@@ -257,5 +258,4 @@ def optimize_catalog(
         .sortWithinPartitions("_hkey")
         .drop("_hkey")
     )
-    new_files = cat._stage(out)
-    return cat._commit(new_files, "optimize", lambda s: [])
+    return cat.rewrite(out, "optimize", snap["version"], keep=[])

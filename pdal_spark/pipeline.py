@@ -459,9 +459,14 @@ def _f_projpipeline(spark, inputs, o, filename):
     pipeline string + reverse_transfo flag."""
     from pdal_spark.operators.projpipeline import projpipeline
 
+    df = _one(inputs, "projpipeline")
+    try:
+        z = _dim_col(df, "Z")  # the reference transforms X, Y AND Z
+    except PipelineError:
+        z = None
     return projpipeline(
-        _one(inputs, "projpipeline"), o["coord_op"],
-        reverse_transfo=bool(o.get("reverse_transfo", False)))
+        df, o["coord_op"],
+        reverse_transfo=bool(o.get("reverse_transfo", False)), z=z)
 
 
 def _f_smrf(spark, inputs, o, filename):
@@ -797,6 +802,17 @@ def _w_null(spark, inputs, o, filename):
     return df
 
 
+def _las_compression(value) -> bool:
+    """writers.las ``compression``: PDAL spells it as a string, so
+    "none"/"false" must read as off rather than as a truthy string."""
+    v = str(value).strip().lower()
+    if v in ("none", "false", ""):
+        return False
+    if v in ("laszip", "lazperf", "true"):
+        return True
+    raise PipelineError(f"writers.las: unknown compression {value!r}")
+
+
 def _w_las(spark, inputs, o, filename):
     """writers.las (io/LasWriter.cpp): single-file LAS with summary
     header; scale/offset options mirror the reference's
@@ -821,7 +837,7 @@ def _w_las(spark, inputs, o, filename):
         ),
         # a .laz filename implies compression, like the reference
         # (LasWriter infers laszip output from the extension)
-        compression=bool(o.get("compression", False))
+        compression=_las_compression(o.get("compression", False))
         or (filename or o["filename"]).endswith(".laz"),
     )
     return df

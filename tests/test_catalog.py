@@ -244,11 +244,13 @@ def test_merge_rejects_duplicate_source_keys(spark, ktable):
         ktable.merge(dup, key="k")
 
 
-def test_merge_conflict_detected(spark, ktable, tmp_path):
-    """A concurrent commit between planning and commit must fail the
-    merge (serializable validation), not silently drop the racer's
-    files."""
+@pytest.mark.parametrize("rewrite", ["merge", "compact", "optimize"])
+def test_rewrite_conflict_detected(spark, ktable, rewrite):
+    """A concurrent commit between planning and commit must fail a
+    copy-on-write rewrite (merge, compact, optimize_catalog) under
+    serializable validation, not silently drop the racer's files."""
     from pdal_spark.catalog import CommitConflict
+    from pdal_spark.operators.layout import optimize_catalog
 
     class Racy(SnapshotTable):
         def _stage(self, df):
@@ -260,11 +262,16 @@ def test_merge_conflict_detected(spark, ktable, tmp_path):
 
     racy = Racy(spark, ktable.path, stats_cols=("k",))
     with pytest.raises(CommitConflict):
-        racy.merge(_kv(spark, 150, 160, tag="new"), key="k")
+        if rewrite == "merge":
+            racy.merge(_kv(spark, 150, 160, tag="new"), key="k")
+        elif rewrite == "compact":
+            racy.compact(small_threshold_rows=1000)
+        else:
+            optimize_catalog(racy, (0.0, 0.0, 1000.0, 1000.0), x="k", y="k")
     # the racer's append is intact
     t2 = SnapshotTable(spark, ktable.path)
     assert t2.read().count() == 310
-    # and the failed merge's staged files were removed, not leaked as
+    # and the failed rewrite's staged files were removed, not leaked as
     # permanent orphans (expire() never collects uncommitted files)
     import os
 

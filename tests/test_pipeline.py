@@ -366,3 +366,46 @@ def test_reprojection_and_projpipeline_stages(spark):
     with pytest.raises(pl.PipelineError):
         pl.validate([{"type": "readers.faux"},
                      {"type": "filters.projpipeline"}])
+
+
+def test_projpipeline_stage_transforms_z(spark, tmp_path):
+    """filters.projpipeline applies the coord_op to Z as well as X/Y,
+    like the reference: a z unitconvert rescales the z column."""
+    path = str(tmp_path / "xyz")
+    src = synth.synth_points(spark, 50).withColumn(
+        "z", (F.col("page_id") * 10).cast("double"))
+    src.write.parquet(path)
+    doc = [
+        {"type": "readers.parquet", "filename": path},
+        {"type": "filters.projpipeline",
+         "coord_op": "+proj=unitconvert +z_in=m +z_out=km"},
+    ]
+    out = pl.run(spark, doc).select("page_id", "x", "y", "z")
+    want = {r.page_id: (r.x, r.y, r.z / 1000.0) for r in src.collect()}
+    got = {r.page_id: (r.x, r.y, r.z) for r in out.collect()}
+    assert got.keys() == want.keys()
+    for k, (x, y, z) in got.items():
+        assert (x, y) == want[k][:2]
+        assert z == pytest.approx(want[k][2])
+
+
+def test_las_writer_compression_none_is_uncompressed(spark, tmp_path):
+    """writers.las reads PDAL's string option: "none" means no LASzip,
+    so the point-format byte keeps its compression bit (7) clear."""
+    out = str(tmp_path / "plain.las")
+    src = synth.synth_points(spark, 100).withColumn(
+        "z", (F.col("page_id") % 7).cast("double"))
+    path = str(tmp_path / "src")
+    src.write.parquet(path)
+    pl.run(spark, [
+        {"type": "readers.parquet", "filename": path},
+        {"type": "writers.las", "filename": out, "compression": "none"},
+    ])
+    buf = open(out, "rb").read()
+    assert not buf[104] & 0x80
+    with pytest.raises(pl.PipelineError, match="compression"):
+        pl.run(spark, [
+            {"type": "readers.parquet", "filename": path},
+            {"type": "writers.las", "filename": str(tmp_path / "b.las"),
+             "compression": "zip"},
+        ])
