@@ -271,8 +271,8 @@ def cell_pnp_join(
       phase 1 (prune): each polygon's bbox covering compiles to a few
         [lo, hi] id ranges; the (geom_id, lo, hi) table is broadcast
         and range-joined on the cell id — candidates only, no PnP yet;
-      phase 2 (refine): the exact even-odd PnP codegen expression runs
-        per candidate geom.
+      phase 2 (refine): the exact even-odd PnP column
+        (crop.polygon_contains_col) runs per candidate geom.
 
     At 10^12 rows phase 1 is what makes the join feasible: each point
     meets only the polygons whose covering it falls in, instead of
@@ -299,7 +299,7 @@ def cell_pnp_join(
     # ring tests nests the analyzer hundreds deep for big polygon sets
     preds = [
         (F.col("geom_id") == gid)
-        & crop_mod.polygon_contains_col(poly, F.col(x), F.col(y))
+        & crop_mod.polygon_contains_col(poly, x, y)
         for gid, poly in enumerate(polygons)
     ]
     while len(preds) > 1:

@@ -6,27 +6,34 @@ Reference semantics (/root/reference/filters/CropFilter.cpp):
   * circle: bbox pre-reject on |dx|,|dy|(,|dz|) > d, then strict
             `x²+y²(+z²) < d²` (295-318)
   * polygon: exact point-in-polygon; reference accelerates with a grid
-            (GridPnp.hpp:60-80) — our scale path is a coarse-cell
-            prefilter with the exact even-odd ray cast vectorized in
-            numpy over Arrow batches
+            (GridPnp.hpp:60-80) — ours is the same even-odd ray cast
+            behind a bbox prefilter (polygon_contains_col)
   * batch mode emits ONE VIEW PER GEOMETRY (221-248) → `geom_id` column
   * stream mode ORs all geometries (146-162) → `crop_any`
 
-Scale notes: geometry lists are small and broadcast (Spark literal
-arrays / broadcast join); box & circle predicates stay entirely in
-WholeStageCodegen. Polygon tests only leave the JVM for points whose
-coarse cell straddles a polygon boundary.
+Scale notes: geometries are small and travel inside the plan as literals
+(or in a UDF closure); box & circle predicates stay entirely in
+WholeStageCodegen. Every polygon test starts with its bbox as a plain
+predicate, which Spark pushes to the parquet scan. Up to
+_EXPR_EDGE_LIMIT edges the ring test is one code-generated SQL
+expression; above it a scalar Arrow UDF receives only the (x, y)
+columns, and under a filter only the rows inside the bbox, and runs the
+numpy ray cast on them.
 """
 
 from __future__ import annotations
 
+import functools
 import math
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType
+from pyspark.sql.udf import UserDefinedFunction
+from pyspark.util import PythonEvalType
 
 
 @dataclass(frozen=True)
@@ -124,7 +131,10 @@ def _wkt_ring(s: str) -> tuple:
     pts = []
     for tok in s[1:-1].split(","):
         c = tok.split()
-        pts.append((float(c[0]), float(c[1])))  # Z (if any) ignored — 2-D crop
+        xy = (float(c[0]), float(c[1]))  # Z (if any) ignored — 2-D crop
+        if not all(map(math.isfinite, xy)):
+            raise ValueError(f"non-finite WKT coordinate: {tok.strip()!r}")
+        pts.append(xy)
     return tuple(pts)
 
 
@@ -160,6 +170,17 @@ def parse_wkt_polygons(wkt: str) -> list[Polygon]:
 # ---------------------------------------------------------------------------
 
 
+def _edges(poly: Polygon):
+    """Every (x1, y1, x2, y2) edge over all rings, closing each ring."""
+    for ring in poly.rings():
+        pts = list(ring)
+        if pts[0] == pts[-1]:
+            pts = pts[:-1]
+        n = len(pts)
+        for i in range(n):
+            yield (*pts[i], *pts[(i + 1) % n])
+
+
 def pnp_even_odd_np(px: np.ndarray, py: np.ndarray, poly: Polygon) -> np.ndarray:
     """Even-odd (crossing-number) test over all rings; holes flip parity.
 
@@ -169,111 +190,124 @@ def pnp_even_odd_np(px: np.ndarray, py: np.ndarray, poly: Polygon) -> np.ndarray
     (y1 > py) != (y2 > py) and px < x-at-py on the edge.
     """
     inside = np.zeros(len(px), dtype=bool)
-    for ring in poly.rings():
-        pts = list(ring)
-        if pts[0] == pts[-1]:
-            pts = pts[:-1]
-        n = len(pts)
-        for i in range(n):
-            x1, y1 = pts[i]
-            x2, y2 = pts[(i + 1) % n]
-            crosses = (y1 > py) != (y2 > py)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                xint = (x2 - x1) * (py - y1) / (y2 - y1) + x1
-            inside ^= crosses & (px < xint)
+    for x1, y1, x2, y2 in _edges(poly):
+        crosses = (y1 > py) != (y2 > py)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            xint = (x2 - x1) * (py - y1) / (y2 - y1) + x1
+        inside ^= crosses & (px < xint)
     return inside
 
 
 def polygon_pnp_sql(poly: Polygon, x: str = "x", y: str = "y") -> str:
     """ANSI-SQL even-odd test (edge-by-edge XOR as sum-of-crossings % 2)."""
-    terms = []
-    for ring in poly.rings():
-        pts = list(ring)
-        if pts[0] == pts[-1]:
-            pts = pts[:-1]
-        n = len(pts)
-        for i in range(n):
-            x1, y1 = pts[i]
-            x2, y2 = pts[(i + 1) % n]
-            terms.append(
-                f"(CASE WHEN (({y1!r} > {y}) <> ({y2!r} > {y})) AND "
-                f"({x} < ({x2!r} - {x1!r}) * ({y} - {y1!r}) / ({y2!r} - {y1!r}) + {x1!r}) "
-                f"THEN 1 ELSE 0 END)"
-            )
+    terms = [
+        f"(CASE WHEN (({y1!r} > {y}) <> ({y2!r} > {y})) AND "
+        f"({x} < ({x2!r} - {x1!r}) * ({y} - {y1!r}) / ({y2!r} - {y1!r}) + {x1!r}) "
+        f"THEN 1 ELSE 0 END)"
+        for x1, y1, x2, y2 in _edges(poly)
+    ]
     return f"((({' + '.join(terms)}) % 2) = 1)"
 
 
-def polygon_contains_col(poly: Polygon, x: Column, y: Column) -> Column:
-    """Exact even-odd PnP as a pure Column expression (JVM, codegen'd).
-
-    Unrolls the crossing-number sum over every edge — identical decision
-    procedure to pnp_even_odd_np / polygon_pnp_sql. For the typical crop
-    polygon (tens to a few hundred vertices) this stays entirely inside
-    WholeStageCodegen: no Arrow round-trip, no Python, columns untouched.
-    The bbox prefilter short-circuits the edge sum for most rows.
-    """
-    b = poly.bbox()
-    crossings: Column | None = None
-    for ring in poly.rings():
-        pts = list(ring)
-        if pts[0] == pts[-1]:
-            pts = pts[:-1]
-        n = len(pts)
-        for i in range(n):
-            x1, y1 = pts[i]
-            x2, y2 = pts[(i + 1) % n]
-            if y1 == y2:
-                # horizontal edge: (y1 > py) != (y2 > py) is identically
-                # false — contributes no crossing, so skip it at build
-                # time (also keeps identical-AST noise out of the plan)
-                continue
-            crosses = (F.lit(y1) > y) != (F.lit(y2) > y)
-            xint = (
-                F.lit(x2 - x1) * (y - F.lit(y1)) / F.lit(y2 - y1) + F.lit(x1)
-            )
-            term = F.when(crosses & (x < xint), F.lit(1)).otherwise(F.lit(0))
-            crossings = term if crossings is None else crossings + term
-    assert crossings is not None
-    return box_contains(b, x, y) & ((crossings % 2) == 1)
-
-
-# Above this many total edges, the unrolled codegen expression gets large;
-# fall back to the Arrow/numpy kernel (which scales to arbitrary rings).
+# Up to this many total edges the ring test is one SQL expression the JVM
+# code-generates; above it the unrolled expression grows too large to plan
+# quickly, so the ring test runs as an Arrow UDF over (x, y) instead.
 _EXPR_EDGE_LIMIT = 512
 
 
-def _poly_edge_count(poly: Polygon) -> int:
-    return sum(len(r) for r in poly.rings())
+def _dlit(v: float) -> str:
+    """A DOUBLE SQL literal that parses back to exactly `v`."""
+    if not math.isfinite(v):
+        raise ValueError(f"non-finite polygon coordinate: {v!r}")
+    # parenthesised when signed, so the sign stays bound wherever it is spliced
+    return f"({v!r}D)" if math.copysign(1.0, v) < 0 else f"{v!r}D"
+
+
+def _qcol(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _bbox_sql(b: Box, x: str, y: str) -> str:
+    return (
+        f"({_dlit(b.minx)} <= {x} AND {x} <= {_dlit(b.maxx)} "
+        f"AND {_dlit(b.miny)} <= {y} AND {y} <= {_dlit(b.maxy)})"
+    )
+
+
+def _pnp_expr_sql(poly: Polygon, x: str = "x", y: str = "y") -> str:
+    """Bbox test AND the even-odd crossing sum, as one Spark SQL string.
+
+    Per edge, the crossing test is pnp_even_odd_np's, in the same
+    operation order, with x2 - x1 and y2 - y1 folded in Python, so the
+    JVM result is bit-identical to numpy's. Horizontal edges never cross
+    and are skipped, which also keeps ANSI mode off a division by zero.
+    """
+    qx, qy = _qcol(x), _qcol(y)
+    terms = [
+        f"CASE WHEN (({_dlit(y1)} > {qy}) <> ({_dlit(y2)} > {qy})) AND "
+        f"({qx} < {_dlit(x2 - x1)} * ({qy} - {_dlit(y1)}) / {_dlit(y2 - y1)}"
+        f" + {_dlit(x1)}) THEN 1 ELSE 0 END"
+        for x1, y1, x2, y2 in _edges(poly)
+        if y1 != y2
+    ]
+    # a sum of 32-term sums: one left-deep chain of ~500 terms takes the
+    # analyzer twice as long and can overflow the JVM stack in codegen,
+    # while deeper parenthesis nesting slows the SQL parser down
+    sums = [" + ".join(terms[i:i + 32]) for i in range(0, len(terms), 32)]
+    odd = f"(((({') + ('.join(sums)})) % 2) = 1)" if terms else "FALSE"
+    return f"({_bbox_sql(poly.bbox(), qx, qy)} AND {odd})"
+
+
+def _pnp_arrow_col(poly: Polygon, x: str = "x", y: str = "y") -> Column:
+    """Bbox test AND a scalar Arrow UDF over (x, y) only.
+
+    The bbox stays a plain predicate, so Spark pushes it to the scan and
+    evaluates the UDF only on rows that pass it; the UDF repeats the bbox
+    test in numpy because a projection (batch mode, overlay) evaluates it
+    on every row. A null coordinate reads as NaN and tests false, as in
+    the SQL form, where its crossing terms all fall to ELSE 0.
+    """
+    b = poly.bbox()
+
+    def pnp(xa: pa.Array, ya: pa.Array) -> pa.Array:
+        px = np.asarray(xa.to_numpy(zero_copy_only=False), dtype=np.float64)
+        py = np.asarray(ya.to_numpy(zero_copy_only=False), dtype=np.float64)
+        cand = (b.minx <= px) & (px <= b.maxx) & (b.miny <= py) & (py <= b.maxy)
+        res = np.zeros(len(px), dtype=bool)
+        if cand.any():
+            res[cand] = pnp_even_odd_np(px[cand], py[cand], poly)
+        return pa.array(res)
+
+    # evalType given outright: under postponed annotations, inferring it
+    # from the type hints is fragile and warns
+    udf = UserDefinedFunction(
+        pnp, BooleanType(), name="polygon_pnp",
+        evalType=PythonEvalType.SQL_SCALAR_ARROW_UDF,
+    )
+    qx, qy = _qcol(x), _qcol(y)
+    return F.expr(_bbox_sql(b, qx, qy)) & udf(F.col(qx), F.col(qy))
+
+
+def polygon_contains_col(poly: Polygon, x: str = "x", y: str = "y") -> Column:
+    """Exact even-odd PnP over columns `x`, `y` (names) as one Column.
+
+    Same decision procedure as pnp_even_odd_np / polygon_pnp_sql, behind
+    a bbox test that Spark pushes to the scan. Up to _EXPR_EDGE_LIMIT
+    edges the whole test is one code-generated SQL expression, handed to
+    the JVM in one call instead of several per edge; above
+    it the ring test is a scalar Arrow UDF that receives only (x, y) and,
+    under a filter, only the rows inside the bbox.
+    """
+    if sum(len(r) for r in poly.rings()) <= _EXPR_EDGE_LIMIT:
+        return F.expr(_pnp_expr_sql(poly, x, y))
+    return _pnp_arrow_col(poly, x, y)
 
 
 def polygon_contains(
     df: DataFrame, poly: Polygon, x: str = "x", y: str = "y", out: str = "_inside"
 ) -> DataFrame:
-    """Add a boolean `out` column: exact PnP, vectorized over Arrow batches.
-
-    Cheap bbox prefilter stays in codegen; only candidate rows run the
-    numpy kernel. The polygon is captured in the closure (broadcast with
-    the task — tiny) — the reference likewise grid-indexes the polygon
-    per thread (CropFilter.cpp:183-190).
-    """
-    b = poly.bbox()
-    pre = box_contains(b, F.col(x), F.col(y))
-
-    def kernel(it):
-        for pdf in it:
-            res = np.zeros(len(pdf), dtype=bool)
-            cand = pdf["_pre"].to_numpy(dtype=bool)
-            if cand.any():
-                res[cand] = pnp_even_odd_np(
-                    pdf.loc[cand, x].to_numpy(np.float64),
-                    pdf.loc[cand, y].to_numpy(np.float64),
-                    poly,
-                )
-            yield pdf.drop(columns=["_pre"]).assign(**{out: res})
-
-    staged = df.withColumn("_pre", pre)
-    schema = staged.drop("_pre").schema.add(out, "boolean")
-    return staged.mapInPandas(kernel, schema=schema)
+    """Add a boolean `out` column: exact PnP (see polygon_contains_col)."""
+    return df.withColumn(out, polygon_contains_col(poly, x, y))
 
 
 # ---------------------------------------------------------------------------
@@ -311,42 +345,18 @@ def crop(
             return box_contains(g, F.col(x), F.col(y), zc)
         if isinstance(g, Circle):
             return circle_contains(g, F.col(x), F.col(y), zc)
+        if isinstance(g, Polygon):
+            return polygon_contains_col(g, x, y)
         raise TypeError(g)
 
-    polys = [(i, g) for i, g in enumerate(geometries) if isinstance(g, Polygon)]
-    simple = [(i, g) for i, g in enumerate(geometries) if not isinstance(g, Polygon)]
-
-    work = df
-    flags: list[tuple[int, Column]] = []
-    for i, g in simple:
-        flags.append((i, contains(g)))
-    for i, g in polys:
-        if _poly_edge_count(g) <= _EXPR_EDGE_LIMIT:
-            # fast path: pure column expression, stays in codegen
-            flags.append((i, polygon_contains_col(g, F.col(x), F.col(y))))
-            continue
-        col = f"_pnp_{i}"
-        work = polygon_contains(work, g, x=x, y=y, out=col)
-        flags.append((i, F.col(col)))
-    flags.sort(key=lambda t: t[0])
-
-    keep = [(i, (~c if outside else c)) for i, c in flags]
-    drop_tmp = [f"_pnp_{i}" for i, _ in polys]
+    keep = [~contains(g) if outside else contains(g) for g in geometries]
 
     if mode == "stream":
-        cond = keep[0][1]
-        for _, c in keep[1:]:
-            cond = cond | c
-        return work.filter(cond).drop(*drop_tmp)
+        return df.filter(functools.reduce(lambda a, b: a | b, keep))
 
     # batch: tag each row with the array of geom_ids that keep it, explode.
-    tags = F.array(
-        *[F.when(c, F.lit(i)).otherwise(F.lit(None)) for i, c in keep]
-    )
-    return (
-        work.withColumn("geom_id", F.explode(F.filter(tags, lambda v: v.isNotNull())))
-        .drop(*drop_tmp)
-    )
+    tags = F.array(*[F.when(c, F.lit(i)) for i, c in enumerate(keep)])
+    return df.withColumn("geom_id", F.explode(F.filter(tags, lambda v: v.isNotNull())))
 
 
 def hexagon_ring(cx: float, cy: float, r: float) -> Polygon:

@@ -592,7 +592,7 @@ def overlay(
 
     val: Column = F.col(dim) if dim in df.columns else F.lit(None).cast("long")
     for poly, v in polygons:  # later polygons overwrite earlier — last wins
-        inside = polygon_contains_col(poly, F.col(x), F.col(y))
+        inside = polygon_contains_col(poly, x, y)
         val = F.when(inside, F.lit(v)).otherwise(val)
     return df.withColumn(dim, val)
 

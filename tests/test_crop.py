@@ -7,14 +7,21 @@ stream-vs-standard dual-run pattern).
 
 from __future__ import annotations
 
+import math
+import warnings
+
 import numpy as np
+import pytest
+from pyspark.sql import functions as F
 
 from pdal_spark import geo
+from pdal_spark.operators import crop as crop_mod
 from pdal_spark.operators.crop import (
     Box,
     Circle,
     Polygon,
     crop,
+    parse_wkt_polygons,
     pnp_even_odd_np,
     polygon_contains,
 )
@@ -26,6 +33,20 @@ CONCAVE = Polygon(
               (-20.0, 0.0), (-60.0, 0.0), (-60.0, 60.0), (-100.0, 60.0)),
     holes=(((-90.0, -40.0), (-70.0, -40.0), (-70.0, -20.0), (-90.0, -20.0)),),
 )
+
+
+def star_ring(n: int, cx: float, cy: float, r: float) -> tuple:
+    """n-vertex star: radii alternate r and 0.6 r, squashed in latitude."""
+    return tuple(
+        (cx + r * (1.0 - 0.4 * (k % 2)) * math.cos(2 * math.pi * k / n),
+         cy + 0.6 * r * (1.0 - 0.4 * (k % 2)) * math.sin(2 * math.pi * k / n))
+        for k in range(n)
+    )
+
+
+# over the crop's codegen edge limit, so the ring test runs as the Arrow UDF
+STAR = Polygon(exterior=star_ring(600, 10.0, 5.0, 150.0),
+               holes=(star_ring(10, 30.0, 10.0, 40.0),))
 
 
 def pts():
@@ -105,3 +126,115 @@ def test_text_byte_identity_through_crop(spark):
         out.select("url", "text").rdd.map(lambda r: (r["url"], r["text"])).collect()
     )
     assert before == after
+
+
+def test_crop_large_ring_stream_outside_batch(spark):
+    assert sum(len(r) for r in STAR.rings()) > crop_mod._EXPR_EDGE_LIMIT
+    df = synth_points(spark, N)
+    ids, xs, ys = pts()
+    inside = pnp_even_odd_np(xs, ys, STAR)
+    assert inside.any() and not inside.all()
+    # the hole removes points
+    assert (inside != pnp_even_odd_np(xs, ys, Polygon(exterior=STAR.exterior))).any()
+
+    got = {r[0] for r in crop(df, [STAR], mode="stream").select("page_id").collect()}
+    assert got == set(ids[inside].tolist())
+    got_out = {
+        r[0] for r in crop(df, [STAR], outside=True, mode="stream")
+        .select("page_id").collect()
+    }
+    assert got_out == set(ids[~inside].tolist())
+    # batch mixes both polygon paths in one projection
+    rows = {
+        (r[0], r[1]) for r in crop(df, [CONCAVE, STAR], mode="batch")
+        .select("page_id", "geom_id").collect()
+    }
+    want = {(i, 0) for i in ids[pnp_even_odd_np(xs, ys, CONCAVE)].tolist()}
+    want |= {(i, 1) for i in ids[inside].tolist()}
+    assert rows == want
+
+
+def test_arrow_pnp_column_builds_without_warnings():
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        crop_mod.polygon_contains_col(STAR, "x", "y")
+
+
+def _plan_after_crop(spark, path, poly):
+    # plan nodes abbreviate scan metadata (PushedFilters) to this length,
+    # read when the node is planned
+    key = "spark.sql.maxMetadataStringLength"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "100000")
+    try:
+        out = crop(spark.read.parquet(path), [poly], mode="stream").groupBy(
+            F.floor(F.col("x") / 30.0).alias("tile")).count()
+        out.collect()
+        return out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize("edges", [8, 600])
+def test_crop_plan_reads_xy_and_pushes_bbox(spark, tmp_path, edges):
+    """Both polygon paths: the scan reads only (x, y), the polygon bbox
+    reaches parquet as pushed filters, and no whole-row Python stage runs."""
+    from pdal_spark.synth import synth_pages, with_coords
+
+    path = str(tmp_path / "pages")
+    with_coords(synth_pages(spark, 2000)).write.parquet(path)
+    poly = Polygon(exterior=star_ring(edges, 10.0, 5.0, 60.0))
+    plan = _plan_after_crop(spark, path, poly)
+    assert "MapInPandas" not in plan
+    scan = plan[plan.index("FileScan parquet"):]
+    assert "ReadSchema: struct<x:double,y:double>" in scan
+    pushed = scan[scan.index("PushedFilters: ["):]
+    pushed = pushed[:pushed.index("]")]
+    b = poly.bbox()
+    for f in (f"GreaterThanOrEqual(x,{b.minx!r}", f"LessThanOrEqual(x,{b.maxx!r}",
+              f"GreaterThanOrEqual(y,{b.miny!r}", f"LessThanOrEqual(y,{b.maxy!r}"):
+        assert f in pushed, (f, pushed)
+
+
+def test_pnp_builders_bit_identical_on_boundaries(spark):
+    """Points on vertices, on vertical / horizontal / slanted edges and at
+    a vertex's y: the SQL-string builder and the Arrow builder each equal
+    pnp_even_odd_np row for row."""
+    poly = Polygon(
+        exterior=((0.0, 0.0), (10.0, 0.0), (10.0, 10.0), (5.3, 14.7),
+                  (0.1, 10.3), (0.1, 0.0)),
+        holes=(((2.0, 2.0), (4.0, 2.0), (3.1, 4.3)),),
+    )
+    edges = list(crop_mod._edges(poly))
+    px, py = [], []
+    for x1, y1, x2, y2 in edges:
+        px += [x1, (x1 + x2) / 2]  # the vertex, the edge midpoint
+        py += [y1, (y1 + y2) / 2]
+        for x in (-1.0, x1 - 1e-9, x1 + 1e-9, (x1 + x2) / 2, 20.0):
+            px.append(x)  # along the vertex's y
+            py.append(y1)
+        if y1 != y2:  # on the edge, by the kernel's own formula, and beside it
+            for t in np.arange(1, 17) / 17:
+                y = y1 + t * (y2 - y1)
+                x = (x2 - x1) * (y - y1) / (y2 - y1) + x1
+                px += [x, np.nextafter(x, -np.inf), np.nextafter(x, np.inf)]
+                py += [y, y, y]
+    xs, ys = np.array(px), np.array(py)
+    want = pnp_even_odd_np(xs, ys, poly)
+    assert want.any() and not want.all()
+    rows = [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(xs, ys))]
+    n = len(rows)
+    rows += [(n, None, 5.0), (n + 1, 5.0, None)]  # a null coordinate is outside
+    df = spark.createDataFrame(rows, "id long, x double, y double").repartition(3)
+    for col in (F.expr(crop_mod._pnp_expr_sql(poly, "x", "y")),
+                crop_mod._pnp_arrow_col(poly, "x", "y")):
+        got = dict(df.select("id", col.alias("v")).collect())
+        assert [got[i] for i in range(n + 2)] == want.tolist() + [False, False]
+
+
+@pytest.mark.parametrize("tok", ["nan", "inf", "-inf", "Infinity", "NaN"])
+def test_wkt_rejects_non_finite_coordinates(tok):
+    with pytest.raises(ValueError, match=tok):
+        parse_wkt_polygons(f"POLYGON ((0 0, 1 0, {tok} 1, 0 0))")
+    with pytest.raises(ValueError, match=tok):
+        parse_wkt_polygons(f"MULTIPOLYGON (((0 0, 1 0, 1 {tok}, 0 0)))")

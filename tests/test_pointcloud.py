@@ -224,6 +224,20 @@ def test_overlay_last_match_wins(pts_df):
         assert row["ovl"] == (20 if row["x"] > 0 else 10)
 
 
+def test_overlay_large_ring(pts_df):
+    # a ring over the crop's codegen edge limit: the Arrow PnP path
+    from test_crop import STAR
+
+    from pdal_spark.operators.crop import pnp_even_odd_np
+
+    p1 = Polygon(exterior=((-200.0, -100.0), (200.0, -100.0), (200.0, 100.0),
+                           (-200.0, 100.0)))
+    out = pc.overlay(pts_df, [(p1, 10), (STAR, 20)], "ovl").toPandas()
+    inside = pnp_even_odd_np(out["x"].to_numpy(), out["y"].to_numpy(), STAR)
+    assert inside.any() and not inside.all()
+    assert out["ovl"].tolist() == np.where(inside, 20, 10).tolist()
+
+
 def test_dem_and_colorization(spark, pts_df):
     g = raster.GridSpec.create(-180.0, -90.0, 12, 6, 30.0)
     cells = raster.rasterize(pts_df, g, "z", order_col="page_id")
