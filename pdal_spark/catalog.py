@@ -35,6 +35,11 @@ same on-disk shape Iceberg uses:
   pushdown inside surviving files still applies on top. Every read
   (``read``, ``incremental_read``, ``changes``, ``pruned_count``) picks
   its files through ``_select`` and scans them through ``_scan``.
+* **Copy-on-write merge.** ``merge`` reads the source keys once (up to
+  ``MERGE_KEY_CAP``) and plans in Python: uniqueness, footer-stats
+  and bloom file pruning, and one SQL ``IN`` predicate, so Spark runs
+  one provenance scan and one shuffle-free rewrite of the files that
+  hold a key. A larger source keeps its keys in Spark (semi/anti join).
 * **Rollback.** ``rollback(K)`` commits a new snapshot that re-points to
   ``K``'s file list (history is never rewritten).
 * **Point-lookup indexes.** ``bloom_cols`` adds a per-file Bloom bitmap
@@ -64,6 +69,9 @@ from pyspark.sql import DataFrame, SparkSession
 BLOOM_BITS = 8192
 BLOOM_K = 4
 MAX_COMMIT_ATTEMPTS = 10
+# merge() collects up to this many source keys into Python and plans
+# from them there; a larger source keeps its keys in Spark.
+MERGE_KEY_CAP = 10_000
 
 
 class CommitConflict(RuntimeError):
@@ -98,6 +106,20 @@ def _build_bloom(path: str, col: str) -> str:
         for p in _bloom_positions(v):
             bits[p >> 3] |= 1 << (p & 7)
     return bytes(bits).hex()
+
+
+def _sql_literal(dtype):
+    """Exact SQL literal renderer for a merge key of Spark type
+    ``dtype``, or None for a type merge() matches by join instead."""
+    from pyspark.sql.types import IntegralType, StringType
+
+    if isinstance(dtype, IntegralType):
+        return lambda v: str(int(v))
+    if dtype == StringType():
+        # hex of the UTF-8 bytes: no quote or backslash escaping, so the
+        # literal is exact under any string-literal parser setting
+        return lambda v: f"CAST(X'{v.encode().hex()}' AS STRING)"
+    return None
 
 
 def _overlaps(f: dict, bbox: tuple, bbox_cols: tuple) -> bool:
@@ -371,14 +393,29 @@ class SnapshotTable:
         rewritten — every other file carries into the new snapshot
         untouched, which is the property that makes point-updates
         affordable on a 100 TB table (rewrite = touched files only,
-        not the table).
+        not the table). Null keys match nothing: a null-key target row
+        is kept, a null-key source row is inserted.
 
-        Candidate selection is two-level: manifest footer stats on the
-        key column prune files whose [min,max] range cannot intersect
-        the source keys (no data read — requires ``key`` in
-        ``stats_cols``; without stats every file is a candidate), then
-        one column-pruned scan of the candidates with per-row file
-        provenance (input_file_name) finds the files with real matches.
+        The source keys are read ONCE, up to ``MERGE_KEY_CAP`` of them
+        (one bounded ``collect``). Within the cap, and for an integral
+        or string key, Python does the rest of the planning from
+        that list: the uniqueness check (two null keys are duplicates),
+        the key bounds, the bloom probe and the match predicate, one SQL
+        ``IN`` list. Spark then runs one provenance scan of the
+        candidate files (``input_file_name`` of the rows the predicate
+        keeps, the filter pushed into the parquet scan) and one
+        shuffle-free write of the touched files' unmatched rows (plus
+        ``source`` in update mode). Over the cap, or for another key
+        type, the keys stay in Spark: one aggregate gives the
+        uniqueness check and the bounds, and the match is a semi join
+        (provenance) and an anti join (rewrite) against the distinct
+        source keys.
+
+        The provenance scan reads only candidate files, picked from the
+        manifest: footer stats on the key column drop files whose
+        [min,max] range misses the key bounds (needs ``key`` in
+        ``stats_cols``), then, for collected keys and ``key`` in
+        ``bloom_cols``, the per-file bloom drops files that hold none.
 
         Source must be unique on ``key`` (checked) and schema-aligned
         with the target in update mode. Commits through ``rewrite``, so
@@ -388,18 +425,40 @@ class SnapshotTable:
 
         if when_matched not in ("update", "delete"):
             raise ValueError("when_matched must be 'update' or 'delete'")
-        dup = source.groupBy(key).count().filter("count > 1").limit(1)
-        if dup.count():
+        key_col = source.select(key)
+        render = _sql_literal(key_col.schema[0].dataType)
+        rows = key_col.limit(MERGE_KEY_CAP + 1).collect()
+        keys = [r[0] for r in rows] if len(rows) <= MERGE_KEY_CAP else None
+        present = None if keys is None else [k for k in keys if k is not None]
+        if present is not None and render is not None:
+            dup = len(set(keys)) < len(keys)
+            lo, hi = (min(present), max(present)) if present else (None, None)
+            matched = F.expr(
+                f"`{key.replace('`', '``')}` IN "
+                f"({', '.join(render(k) for k in present)})"
+            ) if present else F.lit(False)
+
+            def file_hits(scan: DataFrame) -> DataFrame:
+                return scan.where(matched).select(F.input_file_name())
+
+            def unmatched(df: DataFrame) -> DataFrame:
+                return df.where(~matched | F.col(key).isNull())
+        else:
+            dup, lo, hi = source.groupBy(key).count().agg(
+                F.max("count") > 1, F.min(key), F.max(key)
+            ).collect()[0]
+            src_keys = key_col.distinct()
+
+            def file_hits(scan: DataFrame) -> DataFrame:
+                return (scan.select(key, F.input_file_name().alias("_f"))
+                        .join(src_keys, key, "semi").select("_f").distinct())
+
+            def unmatched(df: DataFrame) -> DataFrame:
+                return df.join(src_keys, key, "anti")
+        if dup:
             raise ValueError(f"source is not unique on {key}")
         planned_version = self.current_version()
-        snap = self.snapshot(planned_version)
-        files = snap["files"]
-
-        # level 1: manifest stats prune (no I/O)
-        bounds = source.agg(
-            F.min(key).alias("lo"), F.max(key).alias("hi")
-        ).collect()[0]
-        lo, hi = bounds.lo, bounds.hi
+        files = self.snapshot(planned_version)["files"]
 
         def may_match(f: dict) -> bool:
             st = f.get("stats", {}).get(key)
@@ -408,49 +467,28 @@ class SnapshotTable:
             return not (st[0] > hi or st[1] < lo)
 
         cand = [f for f in files if may_match(f)]
-        # level 1b: per-file bloom prune — decisive for point updates
-        # over interleaved keys, where every file's [min,max] range
-        # covers every key. Only engaged when the source keyset is
-        # small enough to collect (CDC batches are; a 100 TB-source
-        # merge skips straight to the provenance scan).
-        if key in self.bloom_cols and cand:
-            probe = source.select(key).limit(10_001).collect()
-            if len(probe) <= 10_000:
-                keys_small = [r[0] for r in probe]
-                cand = [
-                    f for f in cand
-                    if self._bloom_may_contain(f, key, keys_small)
-                ]
-        # level 2: provenance scan of candidates, column-pruned to key
+        # the bloom prune is decisive for point updates over interleaved
+        # keys, where every file's [min,max] range covers every key
+        if key in self.bloom_cols and present is not None:
+            cand = [f for f in cand
+                    if self._bloom_may_contain(f, key, present)]
         touched_paths: set = set()
         if cand:
             scan = self.spark.read.parquet(*[f["path"] for f in cand])
-            hit = (
-                scan.select(F.col(key), F.input_file_name().alias("_f"))
-                .join(source.select(key).distinct(), key, "semi")
-                .select("_f").distinct().collect()
-            )
-            touched_basenames = {os.path.basename(r._f) for r in hit}
+            hit = {os.path.basename(r[0]) for r in file_hits(scan).collect()}
             touched_paths = {
-                f["path"] for f in cand
-                if os.path.basename(f["path"]) in touched_basenames
+                f["path"] for f in cand if os.path.basename(f["path"]) in hit
             }
         keep_files = [f for f in files if f["path"] not in touched_paths]
 
+        new_data = source if when_matched == "update" else None
         if touched_paths:
-            touched_scan = self.spark.read.parquet(*sorted(touched_paths))
-            kept_rows = touched_scan.join(
-                source.select(key).distinct(), key, "anti"
-            )
-        else:
-            kept_rows = None
-        if when_matched == "update":
-            new_data = (
-                kept_rows.unionByName(source) if kept_rows is not None
-                else source
-            )
-        else:
-            new_data = kept_rows
+            # the provenance scan's schema: no second footer inference
+            touched = self.spark.read.schema(scan.schema).parquet(
+                *sorted(touched_paths))
+            kept_rows = unmatched(touched)
+            new_data = (kept_rows if new_data is None
+                        else kept_rows.unionByName(new_data))
         v = self.rewrite(new_data, "merge", planned_version, keep_files)
         return {
             "version": v,

@@ -541,8 +541,9 @@ def _merc(B, p, x, y, z, inverse):
                    / (B.lit(1.0) + B.lit(e) * sin_p)) ** B.lit(e / 2.0))
         mx = B.lit(fe) + lam * B.lit(ak)
         my = B.lit(fn) - B.lit(ak) * ln_t
-        ok = B.both(phi > B.lit(-_WEBMERC_MAX_LAT),
-                    phi < B.lit(_WEBMERC_MAX_LAT))
+        # like PROJ, fail only at the poles themselves: the square-world
+        # webmerc cutoff is not part of the ellipsoidal Mercator
+        ok = B.abs(phi) < B.lit(math.pi / 2.0 - 1e-10)
         return mx, my, z, ok
 
     lam = (x - B.lit(fe)) / B.lit(ak)
@@ -646,6 +647,14 @@ def _eqc(B, p, x, y, z, inverse):
             (y - B.lit(fn)) / B.lit(a), z, None)
 
 
+def _adjlon(B, lam):
+    """A longitude less than one turn outside (-pi, pi], wrapped into
+    it (PROJ's adjlon)."""
+    return B.where(lam > B.lit(math.pi), lam - B.lit(2.0 * math.pi),
+                   B.where(lam > B.lit(-math.pi), lam,
+                           lam + B.lit(2.0 * math.pi)))
+
+
 def _stere(B, p, x, y, z, inverse):
     """POLAR stereographic (+proj=stere with lat_0=±90: k_0 or lat_ts,
     lon_0, x_0/y_0) — EPSG Guidance Note 7-2 §3.4 variants A/B
@@ -702,7 +711,7 @@ def _stere(B, p, x, y, z, inverse):
     lam = B.lit(-lon0 if south else lon0) + B.atan2(dx, -dy)
     if south:
         lam, phi = -lam, -phi
-    return lam, phi, z, None
+    return _adjlon(B, lam), phi, z, None
 
 
 def _sinu(B, p, x, y, z, inverse):

@@ -244,6 +244,124 @@ def test_merge_rejects_duplicate_source_keys(spark, ktable):
         ktable.merge(dup, key="k")
 
 
+def test_merge_null_keys_match_nothing(spark, tmp_path):
+    """Null keys never match: null-key target rows survive update and
+    delete merges, a null source key is inserted, and two null source
+    keys are duplicates."""
+    t = SnapshotTable(spark, str(tmp_path / "nt"), stats_cols=("k",))
+    nulls = spark.createDataFrame([(None, "n1"), (None, "n2")],
+                                  "k long, v string")
+    t.append(_kv(spark, 0, 10).unionByName(nulls).coalesce(1))
+    upd = spark.createDataFrame([(None, "ins"), (5, "new5")],
+                                "k long, v string")
+    assert t.merge(upd, key="k")["files_rewritten"] == 1
+    dele = spark.createDataFrame([(3,), (4,)], "k long")
+    res = t.merge(dele, key="k", when_matched="delete")
+    assert res["files_rewritten"] == 1
+    got = sorted((r.k is None, r.k, r.v) for r in t.read().collect())
+    want = sorted([(False, k, f"a{k}") for k in (0, 1, 2, 6, 7, 8, 9)]
+                  + [(False, 5, "new5"), (True, None, "ins"),
+                     (True, None, "n1"), (True, None, "n2")])
+    assert got == want
+    two = spark.createDataFrame([(None, "a"), (None, "b")], "k long, v string")
+    with pytest.raises(ValueError, match="not unique"):
+        t.merge(two, key="k")
+
+
+def test_merge_string_keys_with_quotes_and_backslashes(spark, tmp_path):
+    t = SnapshotTable(spark, str(tmp_path / "st"), stats_cols=("k",))
+    keys = ["plain", "it's", "back\\slash", "both\\'", "'", "\\"]
+    t.append(spark.createDataFrame([(k, "old") for k in keys],
+                                   "k string, v string").coalesce(1))
+    upd = spark.createDataFrame(
+        [("it's", "new"), ("\\", "new"), ("fresh'\\", "new")],
+        "k string, v string")
+    assert t.merge(upd, key="k")["files_rewritten"] == 1
+    # a key-only source deletes
+    t.merge(spark.createDataFrame([("both\\'",), ("'",)], "k string"),
+            key="k", when_matched="delete")
+    got = {r.k: r.v for r in t.read().collect()}
+    assert got == {"plain": "old", "it's": "new", "back\\slash": "old",
+                   "\\": "new", "fresh'\\": "new"}
+
+
+def _staged_plans(monkeypatch):
+    """Executed plans of the DataFrames ``_stage`` writes."""
+    plans = []
+    stage = SnapshotTable._stage
+
+    def spy(self, df):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return stage(self, df)
+
+    monkeypatch.setattr(SnapshotTable, "_stage", spy)
+    return plans
+
+
+def test_merge_over_key_cap_joins_in_spark(spark, tmp_path, monkeypatch):
+    """A source of more than MERGE_KEY_CAP keys keeps them in Spark
+    (anti-join rewrite) and keeps the file plan: stats-pruned
+    candidates, only the files that hold a key rewritten."""
+    from pdal_spark.catalog import MERGE_KEY_CAP
+
+    t = SnapshotTable(spark, str(tmp_path / "big"), stats_cols=("k",))
+    # three files holding keys [0, 10k), [10k, 20k) and [30k, 40k)
+    ids = spark.range(0, 30_000, 1, 3).select(
+        F.when(F.col("id") >= 20_000, F.col("id") + 10_000)
+        .otherwise(F.col("id")).alias("id"))
+    t.append(ids.select(F.col("id").alias("k"),
+                        F.concat(F.lit("a"), F.col("id")).alias("v")))
+    plans = _staged_plans(monkeypatch)
+    src = _kv(spark, 5_000, 25_001, tag="new")
+    assert 25_001 - 5_000 > MERGE_KEY_CAP
+    res = t.merge(src, key="k")
+    assert (res["files_candidate"], res["files_rewritten"],
+            res["files_carried"]) == (2, 2, 1)
+    assert "LeftAnti" in plans[0]
+    want = _kv(spark, 0, 5_000).unionByName(src).unionByName(
+        _kv(spark, 30_000, 40_000))
+    got = t.read()
+    assert got.count() == 35_001
+    assert got.exceptAll(want).count() == 0
+
+
+def test_merge_small_source_job_budget(spark, tmp_path, monkeypatch):
+    """A 100-key CDC merge plans from one collect of its keys: at most
+    six Spark jobs, a shuffle-free rewrite, and exactly the files that
+    hold a key rewritten."""
+    t = SnapshotTable(spark, str(tmp_path / "jb"), stats_cols=("k",))
+    # eight files of 100 consecutive keys each
+    t.append(spark.range(0, 800, 1, 8).select(
+        F.col("id").alias("k"), F.concat(F.lit("a"), F.col("id")).alias("v")))
+    files = t.snapshot()["files"]
+    assert len(files) == 8
+    keys = list(range(100, 190, 2)) + list(range(500, 590, 2))
+    keys += list(range(10_000, 10_010))
+    src = spark.createDataFrame([(k, f"new{k}") for k in keys],
+                                "k long, v string")
+    plans = _staged_plans(monkeypatch)
+    sc = spark.sparkContext
+    sc.setJobGroup("merge-budget", "merge-budget")
+    try:
+        res = t.merge(src, key="k")
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup("merge-budget")
+    assert len(jobs) <= 6, len(jobs)
+    assert "Exchange" not in plans[0]
+    holds = {f["path"] for f in files
+             if any(f["stats"]["k"][0] <= k <= f["stats"]["k"][1]
+                    for k in keys)}
+    assert res["files_rewritten"] == len(holds) == 2
+    after = {f["path"] for f in t.snapshot()["files"]}
+    assert not holds & after and len(after & {f["path"] for f in files}) == 6
+    got = {r.k: r.v for r in t.read().collect()}
+    assert len(got) == 810
+    assert all(got[k] == f"new{k}" for k in keys)
+    assert got[101] == "a101"
+
+
 @pytest.mark.parametrize("rewrite", ["merge", "compact", "optimize"])
 def test_rewrite_conflict_detected(spark, ktable, rewrite):
     """A concurrent commit between planning and commit must fail a

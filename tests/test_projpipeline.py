@@ -665,6 +665,57 @@ def test_reproject_wellknown_epsg_codes(spark):
                                    err_msg=code)
 
 
+def _three_backends(spark, op, lon, lat, reverse):
+    """(x, y) of ``op`` over the points from the numpy, Column and SQL
+    (DuckDB) backends; rows a backend drops come back NaN."""
+    import duckdb
+
+    gx, gy, _, ok = pp.pipeline_np(op, lon, lat, reverse_transfo=reverse)
+    gx, gy = np.where(ok, gx, np.nan), np.where(ok, gy, np.nan)
+    pdf = pd.DataFrame({"id": np.arange(len(lon)), "x": lon, "y": lat})
+    col = (pp.projpipeline(spark.createDataFrame(pdf), op,
+                           reverse_transfo=reverse)
+           .toPandas().set_index("id").reindex(pdf.id))
+    xs, ys, _, w = pp.pipeline_sql(op, reverse_transfo=reverse)
+    con = duckdb.connect()
+    con.register("g", pdf)
+    sql = (con.sql(f"SELECT id, {xs} AS x, {ys} AS y FROM g WHERE {w}")
+           .df().set_index("id").reindex(pdf.id))
+    return [(gx, gy), (col.x.values, col.y.values),
+            (sql.x.values, sql.y.values)]
+
+
+def test_stere_inverse_wraps_longitude(spark):
+    """EPSG:3413 (lon_0 = -45): points near the antimeridian come back
+    from the inverse in (-180, 180], not offset by 360 (PROJ adjlon)."""
+    op = ("+proj=pipeline +step +proj=unitconvert +xy_in=deg "
+          "+xy_out=rad +step +proj=stere +lat_0=90 +lat_ts=70 "
+          "+lon_0=-45 +ellps=WGS84")
+    lon = np.array([179.0, 179.9, 179.999, -179.0, -179.9, -179.999, 134.0])
+    lat = np.array([60.0, 70.0, 80.0, 85.0, 75.0, 65.0, 89.0])
+    x, y, _, _ = pp.pipeline_np(op, lon, lat)
+    for lo, la in _three_backends(spark, op, x, y, reverse=True):
+        assert ((lo > -180.0) & (lo <= 180.0)).all(), lo
+        np.testing.assert_allclose(lo, lon, atol=1e-9)
+        np.testing.assert_allclose(la, lat, atol=1e-9)
+
+
+def test_merc_keeps_latitudes_past_webmerc_cutoff(spark):
+    """EPSG:3395 is the ellipsoidal Mercator: it is defined up to the
+    poles, so rows at 85.1..89.5 degrees survive and round-trip."""
+    op = ("+proj=pipeline +step +proj=unitconvert +xy_in=deg "
+          "+xy_out=rad +step +proj=merc +ellps=WGS84")
+    band = np.linspace(85.1, 89.5, 9)
+    lat = np.concatenate([band, -band])
+    lon = np.linspace(-170.0, 170.0, lat.size)
+    fwd = _three_backends(spark, op, lon, lat, reverse=False)
+    for x, y in fwd:
+        assert not np.isnan(x).any() and not np.isnan(y).any()
+    for lo, la in _three_backends(spark, op, *fwd[0], reverse=True):
+        np.testing.assert_allclose(lo, lon, atol=1e-9)
+        np.testing.assert_allclose(la, lat, atol=1e-9)
+
+
 def test_reproject_sql_wellknown_epsg_twin():
     import duckdb
 
