@@ -75,8 +75,8 @@ def _docs_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.select(
         "doc_id",
         "lang",
-        geo.geocode_lcg_x(F.col("doc_id")).alias("x"),
-        geo.geocode_lcg_y(F.col("doc_id")).alias("y"),
+        geo.geocode_lcg_x("doc_id").alias("x"),
+        geo.geocode_lcg_y("doc_id").alias("y"),
     )
 
 
@@ -560,8 +560,8 @@ def q_raster_cells(spark, sf_dir):
     df = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id",
         F.col("n_chars").cast("double").alias("n_chars"),
-        geo.geocode_lcg_x(F.col("doc_id")).alias("x"),
-        geo.geocode_lcg_y(F.col("doc_id")).alias("y"),
+        geo.geocode_lcg_x("doc_id").alias("x"),
+        geo.geocode_lcg_y("doc_id").alias("y"),
     )
     cells = raster_op.rasterize(
         df, RGRID, "n_chars", order_col="doc_id"
@@ -1362,8 +1362,8 @@ def q_ogr_multipoint(spark, sf_dir):
 
     df = _table(spark, sf_dir, "documents").select(
         "doc_id",
-        geo.geocode_lcg_x(F.col("doc_id")).alias("x"),
-        geo.geocode_lcg_y(F.col("doc_id")).alias("y"),
+        geo.geocode_lcg_x("doc_id").alias("x"),
+        geo.geocode_lcg_y("doc_id").alias("y"),
         F.col("n_chars").cast("double").alias("z"),
     )
     return ogr_op.ogr_features(
@@ -1450,8 +1450,8 @@ def _docs_z(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id",
         F.col("n_chars").cast("double").alias("z"),
-        geo.geocode_lcg_x(F.col("doc_id")).alias("x"),
-        geo.geocode_lcg_y(F.col("doc_id")).alias("y"),
+        geo.geocode_lcg_x("doc_id").alias("x"),
+        geo.geocode_lcg_y("doc_id").alias("y"),
     )
 
 
@@ -3083,12 +3083,11 @@ def q_cell_encode(spark, sf_dir):
     """S2-style hierarchical cell index: level-12 cell id + token +
     level-6 ancestor for every geocoded page — pure codegen bit math."""
     df = _docs_geo(spark, sf_dir)
-    cid = cellindex_op.cell_id(F.col("x"), F.col("y"), 12)
-    return df.select(
+    return df.withColumn("cell_id", cellindex_op.cell_id("x", "y", 12)).select(
         "doc_id",
-        cid.alias("cell_id"),
-        cellindex_op.cell_token(cid).alias("cell_token"),
-        cellindex_op.cell_parent(cid, 6).alias("cell_l6"),
+        "cell_id",
+        cellindex_op.cell_token("cell_id").alias("cell_token"),
+        cellindex_op.cell_parent("cell_id", 6).alias("cell_l6"),
     )
 
 
@@ -3107,7 +3106,7 @@ def q_cell_range_scan(spark, sf_dir):
     ranges = cellindex_op.covering_ranges(
         (BOX.minx, BOX.miny, BOX.maxx, BOX.maxy), CELL_SCAN_LEVEL
     )
-    cid = cellindex_op.cell_id(F.col("x"), F.col("y"), 12)
+    cid = cellindex_op.cell_id("x", "y", 12)
     return cellindex_op.range_scan_join(
         df.withColumn("cell_id", cid), "cell_id", ranges
     ).select("doc_id", "cell_id")
@@ -3140,7 +3139,7 @@ def q_cell_pnp_join(spark, sf_dir):
     the cell id (broadcast), exact even-odd PnP refine. Oracle is the
     index-FREE exact PnP per polygon — pruning must lose/add nothing."""
     df = _docs_geo(spark, sf_dir)
-    cid = cellindex_op.cell_id(F.col("x"), F.col("y"), 12)
+    cid = cellindex_op.cell_id("x", "y", 12)
     out = cellindex_op.cell_pnp_join(
         df.withColumn("cell_id", cid), [POLY, CELL_PNP_HEX], level=CELL_SCAN_LEVEL
     )
@@ -3884,8 +3883,8 @@ def _misc_oracles() -> dict[str, str]:
       )
       SELECT doc_id FROM r WHERE rn = 1
     """
-    tx_sql = geo.tile_coord_sql("x", repr(TILE_OX), TILE_LEN)
-    ty_sql = geo.tile_coord_sql("y", repr(TILE_OY), TILE_LEN)
+    tx_sql = geo.tile_coord_sql("x", TILE_OX, TILE_LEN)
+    ty_sql = geo.tile_coord_sql("y", TILE_OY, TILE_LEN)
     tind = f"""
       SELECT {tx_sql} AS tile_x, {ty_sql} AS tile_y,
              count(*) AS n_points,
@@ -5648,11 +5647,9 @@ def _raster_oracles() -> dict[str, str]:
                * {g.edge!r} AS DOUBLE) AS y
       FROM px
     """
-    # point cell key (raster_col/raster_row twins; Spark cast truncates)
-    pcol = f"CAST(trunc(({_X_SQL} - ({g.origin_x!r})) / {g.edge!r}) AS BIGINT)"
-    prow = (
-        f"({g.height} - CAST(trunc(({_Y_SQL} - ({g.origin_y!r})) / {g.edge!r})"
-        f" AS BIGINT) - 1)"
+    # point cell key: the engine's raster_cell text, in DuckDB's dialect
+    pcol, prow = geo.raster_cell_sql(
+        f"({_X_SQL})", f"({_Y_SQL})", g.origin_x, g.origin_y, g.edge, g.height
     )
     dem_sql = f"""
       WITH rc AS ({_raster_rc_sql()}),

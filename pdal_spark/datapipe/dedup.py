@@ -20,7 +20,7 @@ per-doc payloads (chunked bitmasks, simhash words) CARRY through the
 self-join and verify inline; the open-vocabulary word-hash ARRAYS do
 NOT — they would cross the exchange 2 x bands times per doc, which is
 free inside one JVM but measured 2x slower at 4 executors than 1 over
-netty (tools/cluster_bench.py) — candidates instead FETCH arrays per
+netty (BENCH/BASELINE.md §6) — candidates instead FETCH arrays per
 surviving pair (_fetch_verified_pairs). Candidate self-joins are SALTED
 (side b = hash(id) % s, side a explodes over s) because candidate keys
 are few and hot (rare-word prefix ords, LSH buckets, simhash bit-bands)
@@ -941,7 +941,7 @@ def _fetch_verified_pairs(
     it 2 x bands times across executors. Inside one JVM (local[N]) that
     shuffle is process-local and nearly free, but on a real cluster it is
     netty traffic — measured 2x SLOWER at 4 executors than at 1 on a
-    1.5M-doc corpus (tools/cluster_bench.py). Here the array-bearing
+    1.5M-doc corpus (BENCH/BASELINE.md §6). Here the array-bearing
     table is only touched by the two candidate joins; when candidates
     are few (the normal case post-LSH) AQE turns them into broadcast
     joins and the arrays never cross an exchange at all.

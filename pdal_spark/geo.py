@@ -1,9 +1,14 @@
-"""Deterministic geocoding + spatial cell math (Column exprs and numpy twins).
+"""Deterministic geocoding + spatial cell math: SQL text rendered per
+dialect, plus numpy.
 
-Every function here exists in two forms where parity testing needs it:
-a Spark ``Column`` expression (JVM-side, codegen'd, the production path)
-and a numpy implementation (the slow obviously-correct oracle used by
-tests, mirroring the reference's stream-vs-standard dual-run pattern).
+Every formula here has two sources where parity testing needs it. A
+``*_sql`` builder writes it once as SQL text, rendered for one of two
+dialects: ``"spark"``, which the engine wraps in one ``F.expr`` (the
+Spark entry point of the same name without ``_sql``, taking column
+names; JVM-side and codegen'd, the production path), and ``"duckdb"``,
+which the DuckDB oracle runs. The other source is a numpy
+implementation (the slow obviously-correct oracle used by tests,
+mirroring the reference's stream-vs-standard dual-run pattern).
 
 Reference semantics matched:
   * splitter tile assignment — int-cast-then-decrement floor and strict
@@ -17,6 +22,7 @@ Reference semantics matched:
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import math
 
@@ -31,6 +37,49 @@ SQRT_3 = math.sqrt(3.0)
 # Bit-parity on cell assignment requires replicating both choices exactly
 # (verified against a compiled build of the reference hexer sources).
 SQRT_3_HEXER = 1.732050808
+
+# ---------------------------------------------------------------------------
+# SQL rendering. The two dialects differ in three places only, and these
+# renderers are the only code that knows them. Builders splice the column
+# expressions they are given as is; Spark entry points quote their column
+# names with sql_ident first.
+# ---------------------------------------------------------------------------
+
+
+def sql_double(v: float, dialect: str) -> str:
+    """A DOUBLE SQL literal that parses back to exactly `v`.
+
+    Both engines read a bare ``1.5`` as DECIMAL: Spark would then divide
+    in DECIMAL, and DuckDB's DECIMAL-to-DOUBLE cast can land one ulp off.
+    Spark reads ``1.5D`` as DOUBLE; DuckDB reads an exponent form such as
+    ``1.5e0`` as DOUBLE.
+    """
+    v = float(v)
+    if not math.isfinite(v):
+        raise ValueError(f"non-finite SQL literal: {v!r}")
+    s = repr(v)
+    if dialect == "spark":
+        s += "D"
+    elif "e" not in s:
+        s += "e0"
+    # parenthesised when signed, so the sign stays bound wherever it is spliced
+    return f"({s})" if math.copysign(1.0, v) < 0 else s
+
+
+def sql_trunc(e: str, dialect: str) -> str:
+    """DOUBLE `e` truncated toward zero to BIGINT, like C++ static_cast.
+
+    Spark's CAST truncates; DuckDB's CAST rounds, so it truncates first.
+    """
+    if dialect == "spark":
+        return f"CAST({e} AS BIGINT)"
+    return f"CAST(trunc({e}) AS BIGINT)"
+
+
+def sql_ident(name: str) -> str:
+    """A column name as a quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
 
 # ---------------------------------------------------------------------------
 # Geocoding: deterministic (key -> lon/lat). Two flavors:
@@ -48,34 +97,27 @@ _HY = (2246822519, 101, 69621, 7)
 _LCG_M = 2147483648  # 2^31
 
 
-def _mix(id_col: Column, p: tuple[int, int, int, int]) -> Column:
-    a1, c1, a2, c2 = p
-    h = (id_col * F.lit(a1) + F.lit(c1)) % F.lit(_LCG_M)
-    return (h * F.lit(a2) + F.lit(c2)) % F.lit(_LCG_M)
-
-
-def geocode_lcg_x(id_col: Column) -> Column:
-    """x/lon in [-180, 180) from an int64 id; exact in float64."""
-    h = _mix(id_col, _HX)
-    return (h.cast("double") / F.lit(float(_LCG_M))) * F.lit(360.0) - F.lit(180.0)
-
-
-def geocode_lcg_y(id_col: Column) -> Column:
-    """y/lat in [-90, 90) from an int64 id; exact in float64."""
-    h = _mix(id_col, _HY)
-    return (h.cast("double") / F.lit(float(_LCG_M))) * F.lit(180.0) - F.lit(90.0)
-
-
 def _mix_sql(id_expr: str, p: tuple[int, int, int, int]) -> str:
     a1, c1, a2, c2 = p
     return f"((({id_expr} * {a1} + {c1}) % {_LCG_M}) * {a2} + {c2}) % {_LCG_M}"
 
 
-def geocode_lcg_sql(id_expr: str) -> tuple[str, str]:
-    """ANSI-SQL twins of geocode_lcg_{x,y} (DuckDB-compatible)."""
-    x = f"(({_mix_sql(id_expr, _HX)}) / {float(_LCG_M)!r}) * 360.0 - 180.0"
-    y = f"(({_mix_sql(id_expr, _HY)}) / {float(_LCG_M)!r}) * 180.0 - 90.0"
+def geocode_lcg_sql(id_expr: str, dialect: str = "duckdb") -> tuple[str, str]:
+    """(x/lon in [-180, 180), y/lat in [-90, 90)) from an int64 id; exact
+    in float64."""
+    d = functools.partial(sql_double, dialect=dialect)
+    m = d(_LCG_M)
+    x = f"(({_mix_sql(id_expr, _HX)}) / {m}) * {d(360.0)} - {d(180.0)}"
+    y = f"(({_mix_sql(id_expr, _HY)}) / {m}) * {d(180.0)} - {d(90.0)}"
     return x, y
+
+
+def geocode_lcg_x(id_col: str) -> Column:
+    return F.expr(geocode_lcg_sql(sql_ident(id_col), "spark")[0])
+
+
+def geocode_lcg_y(id_col: str) -> Column:
+    return F.expr(geocode_lcg_sql(sql_ident(id_col), "spark")[1])
 
 
 def geocode_lcg_np(ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -121,29 +163,22 @@ def geocode_sha2_py(url: str, warc_ts_iso: str) -> tuple[float, float]:
 # ---------------------------------------------------------------------------
 
 
-def _trunc_long(col: Column) -> Column:
-    # Spark's cast(double as long) truncates toward zero, matching C++
-    # static_cast<int>. (DuckDB CAST rounds — oracle SQL must use trunc().)
-    return col.cast("long")
-
-
-def tile_coord(v: Column, origin: Column | float, length: float) -> Column:
+def tile_coord_sql(
+    v: str, origin: float, length: float, dialect: str = "duckdb"
+) -> str:
     """One axis of the splitter tile id: int-cast then decrement-if-negative.
 
     NOT plain floor: a point exactly on a negative tile boundary
     (dv/length integral and < 0) lands one tile lower than floor would
     put it — matching SplitterFilter.cpp:131-141 exactly.
     """
-    dv = v - origin
-    pos = _trunc_long(dv / F.lit(length))
-    return F.when(dv < 0, pos - 1).otherwise(pos)
-
-
-def tile_coord_sql(v: str, origin: str, length: float) -> str:
-    """DuckDB/ANSI twin of tile_coord (trunc(), not round-on-cast)."""
-    dv = f"({v} - {origin})"
-    pos = f"CAST(trunc({dv} / {length!r}) AS BIGINT)"
+    dv = f"({v} - {sql_double(origin, dialect)})"
+    pos = sql_trunc(f"{dv} / {sql_double(length, dialect)}", dialect)
     return f"(CASE WHEN {dv} < 0 THEN {pos} - 1 ELSE {pos} END)"
+
+
+def tile_coord(v: str, origin: float, length: float) -> Column:
+    return F.expr(tile_coord_sql(sql_ident(v), origin, length, "spark"))
 
 
 def tile_coord_np(v: np.ndarray, origin: float, length: float) -> np.ndarray:
@@ -221,65 +256,32 @@ def hex_cell_np(
     return x, y
 
 
-def hex_cell_cols(
-    px: Column, py: Column, origin_x: float, origin_y: float, height: float
-) -> tuple[Column, Column]:
-    """Column-expression twin of hex_cell_np — stays in WholeStageCodegen."""
-    width = (3.0 / (2.0 * SQRT_3_HEXER)) * height
-    x0 = px - F.lit(float(origin_x))
-    y0 = py - F.lit(float(origin_y))
-
-    col = x0 / F.lit(width)
-    x = F.floor(col).cast("long")
-    x_even = (x % 2) == 0
-    y = F.when(x_even, F.floor(y0 / F.lit(height))).otherwise(
-        F.floor((y0 - F.lit(height / 2.0)) / F.lit(height))
-    ).cast("long")
-
-    xcol = col - F.floor(col)
-    mini = xcol > F.lit(2.0 / 3.0)
-    xoff = (xcol - F.lit(2.0 / 3.0)) * F.lit(3.0)
-
-    halfrow = y0 / F.lit(height / 2.0)
-    halfy = halfrow.cast("long")  # Spark cast truncates toward zero, like C
-    yrow = halfrow - F.floor(halfrow)
-
-    halfy_even = (halfy % 2) == 0  # Spark % truncates like C — even-test safe
-    x_odd = ~x_even
-
-    neg_slope = (halfy_even & x_even) | (x_odd & ~halfy_even)
-    bump_neg = mini & neg_slope & (xoff > yrow)
-    bump_pos = mini & ~neg_slope & (yrow > xoff)
-
-    y_out = y - F.when(bump_neg & x_even, F.lit(1)).otherwise(F.lit(0))
-    y_out = y_out + F.when(bump_pos & x_odd, F.lit(1)).otherwise(F.lit(0))
-    x_out = x + F.when(bump_neg | bump_pos, F.lit(1)).otherwise(F.lit(0))
-    return x_out.cast("long"), y_out.cast("long")
-
-
 def hex_cell_sql(
-    px: str, py: str, origin_x: float, origin_y: float, height: float
+    px: str, py: str, origin_x: float, origin_y: float, height: float,
+    dialect: str = "duckdb",
 ) -> tuple[str, str]:
-    """ANSI-SQL twin of hex_cell_cols for the DuckDB oracle.
+    """SQL twin of hex_cell_np: (hex_x, hex_y) as BIGINT expressions.
 
-    DuckDB gotchas handled: CAST(double AS int) rounds → use trunc();
-    `%` on integers truncates (same as C) so even-tests are safe.
+    floor() for column/row, a truncating cast for ``(int)halfrow``, and
+    `%` on integers truncates in both engines (as in C), so the
+    even-tests are safe for negative cells.
     """
+    d = functools.partial(sql_double, dialect=dialect)
     width = (3.0 / (2.0 * SQRT_3_HEXER)) * height
-    x0 = f"({px} - {float(origin_x)!r})"
-    y0 = f"({py} - {float(origin_y)!r})"
-    col = f"({x0} / {width!r})"
+    x0 = f"({px} - {d(origin_x)})"
+    y0 = f"({py} - {d(origin_y)})"
+    col = f"({x0} / {d(width)})"
     x = f"CAST(floor({col}) AS BIGINT)"
     x_even = f"(({x}) % 2 = 0)"
     y = (
-        f"CAST(CASE WHEN {x_even} THEN floor({y0} / {height!r}) "
-        f"ELSE floor(({y0} - {height / 2.0!r}) / {height!r}) END AS BIGINT)"
+        f"CAST(CASE WHEN {x_even} THEN floor({y0} / {d(height)}) "
+        f"ELSE floor(({y0} - {d(height / 2.0)}) / {d(height)}) END AS BIGINT)"
     )
     xcol = f"({col} - floor({col}))"
-    mini = f"({xcol} > (2.0/3.0))"
-    xoff = f"(({xcol} - 2.0/3.0) * 3.0)"
-    halfrow = f"({y0} / {height / 2.0!r})"
-    halfy = f"CAST(trunc({halfrow}) AS BIGINT)"
+    mini = f"({xcol} > {d(2.0 / 3.0)})"
+    xoff = f"(({xcol} - {d(2.0 / 3.0)}) * {d(3.0)})"
+    halfrow = f"({y0} / {d(height / 2.0)})"
+    halfy = sql_trunc(halfrow, dialect)
     yrow = f"({halfrow} - floor({halfrow}))"
     halfy_even = f"(({halfy}) % 2 = 0)"
     x_odd = f"(NOT {x_even})"
@@ -294,17 +296,38 @@ def hex_cell_sql(
     return x_sql, y_sql
 
 
+def hex_cell(
+    px: str, py: str, origin_x: float, origin_y: float, height: float
+) -> tuple[Column, Column]:
+    hx, hy = hex_cell_sql(
+        sql_ident(px), sql_ident(py), origin_x, origin_y, height, "spark"
+    )
+    return F.expr(hx), F.expr(hy)
+
+
 # ---------------------------------------------------------------------------
 # Raster cell indexing (GDALGrid.hpp:120-127): truncating, y-flipped rows.
 # ---------------------------------------------------------------------------
 
 
-def raster_col(x: Column, origin_x: float, edge: float) -> Column:
-    return ((x - F.lit(origin_x)) / F.lit(edge)).cast("long")
+def raster_cell_sql(
+    x: str, y: str, origin_x: float, origin_y: float, edge: float, height: int,
+    dialect: str = "duckdb",
+) -> tuple[str, str]:
+    """(col, row) of a point's raster cell as BIGINT expressions."""
+    d = functools.partial(sql_double, dialect=dialect)
+    i = sql_trunc(f"({x} - {d(origin_x)}) / {d(edge)}", dialect)
+    j = sql_trunc(f"({y} - {d(origin_y)}) / {d(edge)}", dialect)
+    return i, f"({int(height)} - {j} - 1)"
 
 
-def raster_row(y: Column, origin_y: float, edge: float, height: int) -> Column:
-    return F.lit(height) - ((y - F.lit(origin_y)) / F.lit(edge)).cast("long") - 1
+def raster_cell(
+    x: str, y: str, origin_x: float, origin_y: float, edge: float, height: int
+) -> tuple[Column, Column]:
+    i, j = raster_cell_sql(
+        sql_ident(x), sql_ident(y), origin_x, origin_y, edge, height, "spark"
+    )
+    return F.expr(i), F.expr(j)
 
 
 def raster_cell_np(

@@ -23,8 +23,10 @@ of the level-L grid coordinates. Consequences, all O(1) integer math:
     — prefix-comparable: a cell's token is a prefix-truncation of its
     descendants' ids.
 
-Everything is pure BIGINT column arithmetic — bit-identical in Spark,
-DuckDB (SQL twins below), and numpy; zero Python in the hot path.
+Everything is pure BIGINT column arithmetic, written once as SQL text
+(the ``*_sql`` builders below, rendered per dialect by pdal_spark.geo):
+Spark wraps it in one ``F.expr``, the DuckDB oracle runs it, and both
+are bit-identical to numpy; zero Python in the hot path.
 
 The planar analog: PDAL buckets space with hexbin/splitter grids
 (flat, single-level); this index adds the hierarchical/range-scan
@@ -33,8 +35,12 @@ layer a 10^12-row table needs for partition pruning.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from pdal_spark.geo import sql_double, sql_ident
 
 MAX_LEVEL = 20  # 2*20 position bits + sentinel = 41 bits < 63
 
@@ -42,34 +48,16 @@ MAX_LEVEL = 20  # 2*20 position bits + sentinel = 41 bits < 63
 DOMAIN = (-180.0, -90.0, 180.0, 90.0)
 
 
-def _grid_coord(v: Column, lo: float, hi: float, level: int) -> Column:
+def _grid_coord_sql(v: str, lo: float, hi: float, level: int, dialect: str) -> str:
     """Clamped level-L grid coordinate in [0, 2^L - 1]."""
     n = 1 << level
-    raw = F.floor((v - F.lit(lo)) / F.lit(hi - lo) * F.lit(float(n))).cast("long")
-    return F.least(F.greatest(raw, F.lit(0).cast("long")), F.lit(n - 1).cast("long"))
-
-
-def _grid_coord_sql(v: str, lo: float, hi: float, level: int) -> str:
-    n = 1 << level
-    raw = f"CAST(floor((({v}) - ({lo!r})) / ({(hi - lo)!r}) * {float(n)!r}) AS BIGINT)"
+    d = functools.partial(sql_double, dialect=dialect)
+    raw = f"CAST(floor((({v}) - {d(lo)}) / {d(hi - lo)} * {d(n)}) AS BIGINT)"
     return f"least(greatest({raw}, 0), {n - 1})"
 
 
-def _interleave(yi: Column, xi: Column, level: int) -> Column:
-    """2L-bit Morton position: y bit above x bit per pair."""
-    pos = F.lit(0).cast("long")
-    for b in range(level):
-        pos = (
-            pos
-            + F.shiftleft(F.shiftright(xi, b).bitwiseAND(F.lit(1)).cast("long"), 2 * b)
-            + F.shiftleft(
-                F.shiftright(yi, b).bitwiseAND(F.lit(1)).cast("long"), 2 * b + 1
-            )
-        )
-    return pos
-
-
 def _interleave_sql(yi: str, xi: str, level: int) -> str:
+    """2L-bit Morton position: y bit above x bit per pair."""
     # NB: DuckDB/Postgres give << and | EQUAL precedence with left
     # associativity ("a | b << 3" is "(a | b) << 3"), so every term
     # must close its own parens around the shift.
@@ -80,54 +68,52 @@ def _interleave_sql(yi: str, xi: str, level: int) -> str:
     return "(" + " | ".join(terms) + ")"
 
 
-def cell_id(
-    x: Column, y: Column, level: int,
-    domain: tuple[float, float, float, float] = DOMAIN,
-) -> Column:
-    """Level-L cell id of a point (pure codegen expression)."""
-    if not 0 < level <= MAX_LEVEL:
-        raise ValueError(f"level must be in 1..{MAX_LEVEL}")
-    x0, y0, x1, y1 = domain
-    xi = _grid_coord(x, x0, x1, level)
-    yi = _grid_coord(y, y0, y1, level)
-    pos = _interleave(yi, xi, level)
-    shift = 2 * (MAX_LEVEL - level)
-    return F.shiftleft(pos, shift + 1).bitwiseOR(F.lit(1 << shift).cast("long"))
-
-
 def cell_id_sql(
     x: str, y: str, level: int,
     domain: tuple[float, float, float, float] = DOMAIN,
+    dialect: str = "duckdb",
 ) -> str:
+    """Level-L cell id of a point."""
+    if not 0 < level <= MAX_LEVEL:
+        raise ValueError(f"level must be in 1..{MAX_LEVEL}")
     x0, y0, x1, y1 = domain
-    xi = _grid_coord_sql(x, x0, x1, level)
-    yi = _grid_coord_sql(y, y0, y1, level)
+    xi = _grid_coord_sql(x, x0, x1, level, dialect)
+    yi = _grid_coord_sql(y, y0, y1, level, dialect)
     pos = _interleave_sql(f"({yi})", f"({xi})", level)
     shift = 2 * (MAX_LEVEL - level)
     return f"(({pos} << {shift + 1}) | {1 << shift})"
 
 
-def cell_parent(cid: Column, level: int) -> Column:
-    """Ancestor of a cell id at a coarser level — mask arithmetic only."""
-    lsb = 1 << (2 * (MAX_LEVEL - level))
-    mask = ~(2 * lsb - 1)
-    return cid.bitwiseAND(F.lit(mask).cast("long")).bitwiseOR(F.lit(lsb).cast("long"))
+# parent and token render the same text in both dialects: integer
+# literals and functions that Spark and DuckDB share
 
 
 def cell_parent_sql(cid: str, level: int) -> str:
+    """Ancestor of a cell id at a coarser level — mask arithmetic only."""
     lsb = 1 << (2 * (MAX_LEVEL - level))
     mask = ~(2 * lsb - 1) & ((1 << 63) - 1)  # ids are positive, 63-bit safe
     return f"((({cid}) & {mask}) | {lsb})"
 
 
-def cell_token(cid: Column) -> Column:
+def cell_token_sql(cid: str) -> str:
     """S2-form token: lowercase hex, trailing zeros stripped (the
     sentinel bit guarantees at least one non-zero nibble)."""
-    return F.regexp_replace(F.lower(F.lpad(F.hex(cid), 16, "0")), "0+$", "")
-
-
-def cell_token_sql(cid: str) -> str:
     return f"regexp_replace(printf('%016x', {cid}), '0+$', '')"
+
+
+def cell_id(
+    x: str, y: str, level: int,
+    domain: tuple[float, float, float, float] = DOMAIN,
+) -> Column:
+    return F.expr(cell_id_sql(sql_ident(x), sql_ident(y), level, domain, "spark"))
+
+
+def cell_parent(cid: str, level: int) -> Column:
+    return F.expr(cell_parent_sql(sql_ident(cid), level))
+
+
+def cell_token(cid: str) -> Column:
+    return F.expr(cell_token_sql(sql_ident(cid)))
 
 
 def cell_level(cid: int) -> int:
@@ -321,13 +307,13 @@ def cell_rollup(
     Output: (level, cell_id, n)."""
     finest = max(levels)
     base = df.groupBy(
-        cell_id(F.col(x), F.col(y), finest, domain).alias("cell_id")
+        cell_id(x, y, finest, domain).alias("cell_id")
     ).agg(F.count(F.lit(1)).alias("n"))
     base = base.persist()
     out = base.withColumn("level", F.lit(finest))
     for lv in sorted(set(levels) - {finest}, reverse=True):
         up = (
-            base.groupBy(cell_parent(F.col("cell_id"), lv).alias("cell_id"))
+            base.groupBy(cell_parent("cell_id", lv).alias("cell_id"))
             .agg(F.sum("n").alias("n"))
             .withColumn("level", F.lit(lv))
         )

@@ -217,8 +217,8 @@ def chip_partitioned(
     xcol, ycol, ocol = x, y, order_col
 
     tiled = df.withColumn(
-        "tile_x", geo.tile_coord(F.col(x), origin_x, tile_len)
-    ).withColumn("tile_y", geo.tile_coord(F.col(y), origin_y, tile_len))
+        "tile_x", geo.tile_coord(x, origin_x, tile_len)
+    ).withColumn("tile_y", geo.tile_coord(y, origin_y, tile_len))
 
     def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(ocol, kind="stable").reset_index(drop=True)

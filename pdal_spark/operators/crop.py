@@ -35,6 +35,8 @@ from pyspark.sql.types import BooleanType
 from pyspark.sql.udf import UserDefinedFunction
 from pyspark.util import PythonEvalType
 
+from pdal_spark import geo
+
 
 @dataclass(frozen=True)
 class Box:
@@ -70,39 +72,34 @@ class Polygon:
         return Box(min(xs), min(ys), max(xs), max(ys))
 
 
-def box_contains(b: Box, x: Column, y: Column, z: Column | None = None) -> Column:
+def box_contains_sql(
+    b: Box, x: str = "x", y: str = "y", z: str | None = None,
+    dialect: str = "duckdb",
+) -> str:
+    """Inclusive box test; the z bounds apply when both they and `z` are set."""
+    d = functools.partial(geo.sql_double, dialect=dialect)
     c = (
-        (F.lit(b.minx) <= x) & (x <= F.lit(b.maxx))
-        & (F.lit(b.miny) <= y) & (y <= F.lit(b.maxy))
+        f"{d(b.minx)} <= {x} AND {x} <= {d(b.maxx)} "
+        f"AND {d(b.miny)} <= {y} AND {y} <= {d(b.maxy)}"
     )
     if b.minz is not None and z is not None:
-        c = c & (F.lit(b.minz) <= z) & (z <= F.lit(b.maxz))
-    return c
+        c += f" AND {d(b.minz)} <= {z} AND {z} <= {d(b.maxz)}"
+    return f"({c})"
 
 
-def circle_contains(c: Circle, x: Column, y: Column, z: Column | None = None) -> Column:
-    dx, dy = F.abs(x - F.lit(c.x)), F.abs(y - F.lit(c.y))
-    pre = (dx <= F.lit(c.distance)) & (dy <= F.lit(c.distance))
-    d2 = F.lit(c.distance * c.distance)
+def circle_contains_sql(
+    c: Circle, x: str = "x", y: str = "y", z: str | None = None,
+    dialect: str = "duckdb",
+) -> str:
+    """Per-axis |d| <= distance pre-reject, then a strict squared-distance test."""
+    d = functools.partial(geo.sql_double, dialect=dialect)
+    r = d(c.distance)
+    deltas = [f"abs({x} - {d(c.x)})", f"abs({y} - {d(c.y)})"]
     if c.z is not None and z is not None:
-        dz = F.abs(z - F.lit(c.z))
-        return pre & (dz <= F.lit(c.distance)) & (dx * dx + dy * dy + dz * dz < d2)
-    return pre & (dx * dx + dy * dy < d2)
-
-
-def box_contains_sql(b: Box, x: str = "x", y: str = "y") -> str:
-    return (
-        f"({b.minx!r} <= {x} AND {x} <= {b.maxx!r} "
-        f"AND {b.miny!r} <= {y} AND {y} <= {b.maxy!r})"
-    )
-
-
-def circle_contains_sql(c: Circle, x: str = "x", y: str = "y") -> str:
-    return (
-        f"(abs({x} - {c.x!r}) <= {c.distance!r} AND abs({y} - {c.y!r}) <= {c.distance!r} "
-        f"AND (abs({x} - {c.x!r}) * abs({x} - {c.x!r})"
-        f" + abs({y} - {c.y!r}) * abs({y} - {c.y!r})) < {c.distance * c.distance!r})"
-    )
+        deltas.append(f"abs({z} - {d(c.z)})")
+    pre = " AND ".join(f"{v} <= {r}" for v in deltas)
+    d2 = " + ".join(f"{v} * {v}" for v in deltas)
+    return f"({pre} AND ({d2}) < {d(c.distance * c.distance)})"
 
 
 # ---------------------------------------------------------------------------
@@ -198,55 +195,28 @@ def pnp_even_odd_np(px: np.ndarray, py: np.ndarray, poly: Polygon) -> np.ndarray
     return inside
 
 
-def polygon_pnp_sql(poly: Polygon, x: str = "x", y: str = "y") -> str:
-    """ANSI-SQL even-odd test (edge-by-edge XOR as sum-of-crossings % 2)."""
-    terms = [
-        f"(CASE WHEN (({y1!r} > {y}) <> ({y2!r} > {y})) AND "
-        f"({x} < ({x2!r} - {x1!r}) * ({y} - {y1!r}) / ({y2!r} - {y1!r}) + {x1!r}) "
-        f"THEN 1 ELSE 0 END)"
-        for x1, y1, x2, y2 in _edges(poly)
-    ]
-    return f"((({' + '.join(terms)}) % 2) = 1)"
-
-
 # Up to this many total edges the ring test is one SQL expression the JVM
 # code-generates; above it the unrolled expression grows too large to plan
 # quickly, so the ring test runs as an Arrow UDF over (x, y) instead.
 _EXPR_EDGE_LIMIT = 512
 
 
-def _dlit(v: float) -> str:
-    """A DOUBLE SQL literal that parses back to exactly `v`."""
-    if not math.isfinite(v):
-        raise ValueError(f"non-finite polygon coordinate: {v!r}")
-    # parenthesised when signed, so the sign stays bound wherever it is spliced
-    return f"({v!r}D)" if math.copysign(1.0, v) < 0 else f"{v!r}D"
-
-
-def _qcol(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _bbox_sql(b: Box, x: str, y: str) -> str:
-    return (
-        f"({_dlit(b.minx)} <= {x} AND {x} <= {_dlit(b.maxx)} "
-        f"AND {_dlit(b.miny)} <= {y} AND {y} <= {_dlit(b.maxy)})"
-    )
-
-
-def _pnp_expr_sql(poly: Polygon, x: str = "x", y: str = "y") -> str:
-    """Bbox test AND the even-odd crossing sum, as one Spark SQL string.
+def polygon_pnp_sql(
+    poly: Polygon, x: str = "x", y: str = "y", dialect: str = "duckdb"
+) -> str:
+    """Bbox test AND the even-odd crossing sum, as one SQL string.
 
     Per edge, the crossing test is pnp_even_odd_np's, in the same
     operation order, with x2 - x1 and y2 - y1 folded in Python, so the
-    JVM result is bit-identical to numpy's. Horizontal edges never cross
-    and are skipped, which also keeps ANSI mode off a division by zero.
+    engine's result is bit-identical to numpy's. Horizontal edges never
+    cross and are skipped, which also keeps ANSI mode off a division by
+    zero.
     """
-    qx, qy = _qcol(x), _qcol(y)
+    d = functools.partial(geo.sql_double, dialect=dialect)
     terms = [
-        f"CASE WHEN (({_dlit(y1)} > {qy}) <> ({_dlit(y2)} > {qy})) AND "
-        f"({qx} < {_dlit(x2 - x1)} * ({qy} - {_dlit(y1)}) / {_dlit(y2 - y1)}"
-        f" + {_dlit(x1)}) THEN 1 ELSE 0 END"
+        f"CASE WHEN (({d(y1)} > {y}) <> ({d(y2)} > {y})) AND "
+        f"({x} < {d(x2 - x1)} * ({y} - {d(y1)}) / {d(y2 - y1)}"
+        f" + {d(x1)}) THEN 1 ELSE 0 END"
         for x1, y1, x2, y2 in _edges(poly)
         if y1 != y2
     ]
@@ -255,7 +225,12 @@ def _pnp_expr_sql(poly: Polygon, x: str = "x", y: str = "y") -> str:
     # while deeper parenthesis nesting slows the SQL parser down
     sums = [" + ".join(terms[i:i + 32]) for i in range(0, len(terms), 32)]
     odd = f"(((({') + ('.join(sums)})) % 2) = 1)" if terms else "FALSE"
-    return f"({_bbox_sql(poly.bbox(), qx, qy)} AND {odd})"
+    return f"({box_contains_sql(poly.bbox(), x, y, dialect=dialect)} AND {odd})"
+
+
+def _pnp_expr_sql(poly: Polygon, x: str = "x", y: str = "y") -> str:
+    """polygon_pnp_sql in the Spark dialect, over column names `x`, `y`."""
+    return polygon_pnp_sql(poly, geo.sql_ident(x), geo.sql_ident(y), "spark")
 
 
 def _pnp_arrow_col(poly: Polygon, x: str = "x", y: str = "y") -> Column:
@@ -284,8 +259,8 @@ def _pnp_arrow_col(poly: Polygon, x: str = "x", y: str = "y") -> Column:
         pnp, BooleanType(), name="polygon_pnp",
         evalType=PythonEvalType.SQL_SCALAR_ARROW_UDF,
     )
-    qx, qy = _qcol(x), _qcol(y)
-    return F.expr(_bbox_sql(b, qx, qy)) & udf(F.col(qx), F.col(qy))
+    qx, qy = geo.sql_ident(x), geo.sql_ident(y)
+    return F.expr(box_contains_sql(b, qx, qy, dialect="spark")) & udf(F.col(qx), F.col(qy))
 
 
 def polygon_contains_col(poly: Polygon, x: str = "x", y: str = "y") -> Column:
@@ -338,13 +313,14 @@ def crop(
         raise ValueError("crop requires at least one geometry")
     if mode not in ("batch", "stream"):
         raise ValueError(f"mode must be 'batch' or 'stream', got {mode!r}")
-    zc = F.col(z) if z else None
+    qx, qy = geo.sql_ident(x), geo.sql_ident(y)
+    qz = geo.sql_ident(z) if z else None
 
     def contains(g: Geometry) -> Column:
         if isinstance(g, Box):
-            return box_contains(g, F.col(x), F.col(y), zc)
+            return F.expr(box_contains_sql(g, qx, qy, qz, "spark"))
         if isinstance(g, Circle):
-            return circle_contains(g, F.col(x), F.col(y), zc)
+            return F.expr(circle_contains_sql(g, qx, qy, qz, "spark"))
         if isinstance(g, Polygon):
             return polygon_contains_col(g, x, y)
         raise TypeError(g)

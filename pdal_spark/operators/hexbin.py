@@ -5,8 +5,8 @@ filters/private/hexer/):
   * user param edge_length; grid height = edge_length * sqrt(3)
     (HexBinFilter.cpp:100), width = (3/(2*sqrt3)) * height (HexGrid.cpp:57)
   * cell addressing: offset-rectangle + mini-column slope correction
-    (HexGrid.cpp:181-260) — vectorized as pure Column exprs in
-    pdal_spark.geo.hex_cell_cols (and numpy / SQL twins)
+    (HexGrid.cpp:181-260) — one SQL builder, pdal_spark.geo.hex_cell_sql
+    (Spark F.expr and DuckDB oracle), plus the numpy twin hex_cell_np
   * origin = first point in the reference (order-dependent) — pinned
     explicitly here, as the reference's own tests effectively do
   * auto edge: h = density * (sum of consecutive-pair distances) / n over
@@ -48,7 +48,7 @@ def hex_cells(
 ) -> DataFrame:
     """Assign (hex_x, hex_y) cell coordinates (HexGrid::findHexagon)."""
     height = edge_length * SQRT_3
-    hx, hy = geo.hex_cell_cols(F.col(x), F.col(y), origin_x, origin_y, height)
+    hx, hy = geo.hex_cell(x, y, origin_x, origin_y, height)
     return df.withColumn("hex_x", hx).withColumn("hex_y", hy)
 
 

@@ -364,8 +364,8 @@ def sample(
         if not tile_len or tile_len < 2 * radius:
             raise ValueError("tile_len must be >= 2*radius")
         tiled = df.withColumn(
-            "_tx", geo.tile_coord(F.col(x), origin[0], tile_len)
-        ).withColumn("_ty", geo.tile_coord(F.col(y), origin[1], tile_len))
+            "_tx", geo.tile_coord(x, origin[0], tile_len)
+        ).withColumn("_ty", geo.tile_coord(y, origin[1], tile_len))
         out = tiled.groupBy("_tx", "_ty").applyInPandas(kernel, schema=tiled.schema)
         return out.drop("_tx", "_ty")
     if n is None:
@@ -616,8 +616,7 @@ def dem_filter(
     [band+lo, band+hi] of the raster band value at its cell. cells = a
     rasterize() output; broadcast-joined on the (col,row) key."""
     lo, hi = limits
-    i = geo.raster_col(F.col(x), grid.origin_x, grid.edge)
-    j = geo.raster_row(F.col(y), grid.origin_y, grid.edge, grid.height)
+    i, j = geo.raster_cell(x, y, grid.origin_x, grid.origin_y, grid.edge, grid.height)
     work = df.withColumn("col", i).withColumn("row", j)
     joined = work.join(
         F.broadcast(cells.select("col", "row", F.col(band).alias("_dem"))),
@@ -642,8 +641,7 @@ def colorization(
     """filters.colorization (ColorizationFilter.cpp:204-226): sample
     raster bands at each point's cell, write band*scale into new dims.
     bands = [(cell_column, out_dim, scale), ...]."""
-    i = geo.raster_col(F.col(x), grid.origin_x, grid.edge)
-    j = geo.raster_row(F.col(y), grid.origin_y, grid.edge, grid.height)
+    i, j = geo.raster_cell(x, y, grid.origin_x, grid.origin_y, grid.edge, grid.height)
     work = df.withColumn("col", i).withColumn("row", j)
     sel = cells.select("col", "row", *[b[0] for b in bands])
     joined = work.join(F.broadcast(sel), ["col", "row"], "left")

@@ -11,7 +11,8 @@ Reference semantics (/root/reference/filters/SplitterFilter.cpp:129-178):
     so we require it explicitly (same choice as kernels/TileKernel.cpp:225-229
     when driven at scale)
 
-Spark shape: tile ids are pure column expressions (WholeStageCodegen);
+Spark shape: each tile id is one SQL expression (geo.tile_coord_sql, the
+text the DuckDB oracle runs too) in WholeStageCodegen;
 buffer duplication is a single explode over a ≤4-element array built with
 the same strict inequalities — no join, no shuffle. The shuffle happens
 once, at the partitioned write (kernels.tile), on the tile key.
@@ -39,13 +40,14 @@ def split(
     if buffer >= length / 2:
         raise ValueError(f"Buffer ({buffer}) must be less than half of length ({length})")
 
-    xc, yc = F.col(x), F.col(y)
-    xpos = geo.tile_coord(xc, F.lit(float(origin_x)), length)
-    ypos = geo.tile_coord(yc, F.lit(float(origin_y)), length)
-    out = df.withColumn("tile_x", xpos).withColumn("tile_y", ypos)
+    out = df.withColumns({
+        "tile_x": geo.tile_coord(x, origin_x, length),
+        "tile_y": geo.tile_coord(y, origin_y, length),
+    })
     if buffer <= 0.0:
         return out
 
+    xc, yc = F.col(x), F.col(y)
     tx, ty = F.col("tile_x"), F.col("tile_y")
 
     def sq(xp: Column, yp: Column) -> Column:
@@ -85,10 +87,10 @@ def split(
 def split_sql(
     length: float, origin_x: float, origin_y: float, x: str = "x", y: str = "y"
 ) -> tuple[str, str]:
-    """DuckDB/ANSI twins of the unbuffered tile id expressions."""
+    """DuckDB text of the unbuffered tile id expressions (geo.tile_coord_sql)."""
     return (
-        geo.tile_coord_sql(x, repr(float(origin_x)), length),
-        geo.tile_coord_sql(y, repr(float(origin_y)), length),
+        geo.tile_coord_sql(x, origin_x, length),
+        geo.tile_coord_sql(y, origin_y, length),
     )
 
 

@@ -44,10 +44,10 @@ def tindex(
     """One manifest row per occupied tile:
     (tile_x, tile_y, n_points, minx, miny, maxx, maxy, boundary WKT)."""
     height = hex_edge * math.sqrt(3.0)
-    hx, hy = geo.hex_cell_cols(F.col(x), F.col(y), origin_x, origin_y, height)
+    hx, hy = geo.hex_cell(x, y, origin_x, origin_y, height)
     tiled = (
-        df.withColumn("tile_x", geo.tile_coord(F.col(x), origin_x, tile_len))
-        .withColumn("tile_y", geo.tile_coord(F.col(y), origin_y, tile_len))
+        df.withColumn("tile_x", geo.tile_coord(x, origin_x, tile_len))
+        .withColumn("tile_y", geo.tile_coord(y, origin_y, tile_len))
         .withColumn("_hx", hx)
         .withColumn("_hy", hy)
     )

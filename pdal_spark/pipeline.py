@@ -693,8 +693,9 @@ def merge(
     writer_options: dict | None = None,
 ) -> DataFrame:
     """``pdal merge in1 in2 ... out`` (kernels/MergeKernel.cpp:73-90):
-    N inferred readers -> merge -> inferred writer."""
-    if len(input_paths) < 2:
+    N >= 1 inferred readers -> merge -> inferred writer (the reference
+    counts the output among its files and needs two of them)."""
+    if not input_paths:
         raise PipelineError("Must specify an input and output file.")
     doc: list = [
         {"type": "readers.infer", "filename": p} for p in input_paths

@@ -28,8 +28,8 @@ def stream_tile_counts(
     On a streaming frame this is a stateful aggregation (complete/update
     mode); on batch it's the plain splitter count. Tile math is identical
     to operators.splitter (int-cast-then-decrement floor)."""
-    tx = geo.tile_coord(F.col(x), origin_x, tile_len)
-    ty = geo.tile_coord(F.col(y), origin_y, tile_len)
+    tx = geo.tile_coord(x, origin_x, tile_len)
+    ty = geo.tile_coord(y, origin_y, tile_len)
     return (
         df.withColumn("tile_x", tx)
         .withColumn("tile_y", ty)
@@ -167,8 +167,8 @@ def stream_tile_stats_stateful(
 
     import pandas as pd
 
-    tx = geo.tile_coord(F.col(x), origin_x, tile_len)
-    ty = geo.tile_coord(F.col(y), origin_y, tile_len)
+    tx = geo.tile_coord(x, origin_x, tile_len)
+    ty = geo.tile_coord(y, origin_y, tile_len)
     keyed = df.withColumn("tile_x", tx).withColumn("tile_y", ty).select(
         "tile_x", "tile_y", F.col(value).cast("double").alias("_v")
     )
@@ -213,8 +213,8 @@ def tile_stats_batch(
     value: str = "n_chars",
 ) -> DataFrame:
     """Batch twin of stream_tile_stats_stateful (same outputs)."""
-    tx = geo.tile_coord(F.col(x), origin_x, tile_len)
-    ty = geo.tile_coord(F.col(y), origin_y, tile_len)
+    tx = geo.tile_coord(x, origin_x, tile_len)
+    ty = geo.tile_coord(y, origin_y, tile_len)
     v = F.col(value).cast("double")
     return (
         df.withColumn("tile_x", tx).withColumn("tile_y", ty)
@@ -241,7 +241,7 @@ def stream_cell_rollup(
     from pdal_spark.operators import cellindex as ci
 
     finest = max(levels)
-    cid = ci.cell_id(F.col(x), F.col(y), finest)
+    cid = ci.cell_id(x, y, finest)
     keyed = df.withColumn("_cid", cid)
     lv_cells = F.array(
         *[
@@ -250,7 +250,7 @@ def stream_cell_rollup(
                 (
                     F.col("_cid")
                     if lv == finest
-                    else ci.cell_parent(F.col("_cid"), lv)
+                    else ci.cell_parent("_cid", lv)
                 ).alias("cell_id"),
             )
             for lv in sorted(set(levels))

@@ -87,8 +87,8 @@ def with_coords(df: DataFrame, id_col: str = "page_id") -> DataFrame:
         return df.withColumn("x", geo.geocode_sha2_x(F.col("url"), F.col("warc_ts"))).withColumn(
             "y", geo.geocode_sha2_y(F.col("url"), F.col("warc_ts"))
         )
-    return df.withColumn("x", geo.geocode_lcg_x(F.col(id_col))).withColumn(
-        "y", geo.geocode_lcg_y(F.col(id_col))
+    return df.withColumn("x", geo.geocode_lcg_x(id_col)).withColumn(
+        "y", geo.geocode_lcg_y(id_col)
     )
 
 
@@ -99,8 +99,8 @@ def synth_points(
     df = spark.range(0, n, 1, num_partitions or spark.sparkContext.defaultParallelism)
     return df.select(
         F.col("id").alias("page_id"),
-        geo.geocode_lcg_x(F.col("id")).alias("x"),
-        geo.geocode_lcg_y(F.col("id")).alias("y"),
+        geo.geocode_lcg_x("id").alias("x"),
+        geo.geocode_lcg_y("id").alias("y"),
     )
 
 

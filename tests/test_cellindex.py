@@ -19,8 +19,8 @@ def docs_geo(spark):
     df = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     return df.select(
         "doc_id",
-        geo.geocode_lcg_x(F.col("doc_id")).alias("x"),
-        geo.geocode_lcg_y(F.col("doc_id")).alias("y"),
+        geo.geocode_lcg_x("doc_id").alias("x"),
+        geo.geocode_lcg_y("doc_id").alias("y"),
     )
 
 
@@ -53,13 +53,12 @@ def test_cell_id_layout_invariants():
 
 
 def test_cell_encode_sql_twin(docs_geo):
-    cid = ci.cell_id(F.col("x"), F.col("y"), 12)
     got = (
-        docs_geo.select(
+        docs_geo.withColumn("cell_id", ci.cell_id("x", "y", 12)).select(
             "doc_id",
-            cid.alias("cell_id"),
-            ci.cell_token(cid).alias("cell_token"),
-            ci.cell_parent(cid, 6).alias("cell_l6"),
+            "cell_id",
+            ci.cell_token("cell_id").alias("cell_token"),
+            ci.cell_parent("cell_id", 6).alias("cell_l6"),
         )
         .toPandas().sort_values("doc_id").reset_index(drop=True)
     )
@@ -104,7 +103,7 @@ def test_range_scan_superset_of_crop(docs_geo):
     come along) and a subset of a one-cell-padded box."""
     bbox = (-90.0, -45.0, 90.0, 45.0)
     ranges = ci.covering_ranges(bbox, 6)
-    cid = ci.cell_id(F.col("x"), F.col("y"), 12)
+    cid = ci.cell_id("x", "y", 12)
     scanned = set(
         r.doc_id
         for r in ci.range_scan_join(
@@ -137,7 +136,7 @@ def test_range_scan_parquet_pushdown(spark, docs_geo, tmp_path):
     contiguous."""
     p = str(tmp_path / "cells.parquet")
     docs_geo.withColumn(
-        "cell_id", ci.cell_id(F.col("x"), F.col("y"), 12)
+        "cell_id", ci.cell_id("x", "y", 12)
     ).write.mode("overwrite").parquet(p)
     ranges = ci.covering_ranges((-90.0, -45.0, 90.0, 45.0), 6)
     df = spark.read.parquet(p).filter(
@@ -161,7 +160,7 @@ def test_cell_pnp_join_equals_exact_crop(docs_geo):
                 (-90.0, -20.0)),),
     )
     hexg = crop_op.hexagon_ring(40.0, -10.0, 45.0)
-    cid = ci.cell_id(F.col("x"), F.col("y"), 12)
+    cid = ci.cell_id("x", "y", 12)
     got = set(
         (r.doc_id, r.geom_id)
         for r in ci.cell_pnp_join(
@@ -211,10 +210,10 @@ def test_partitioned_write_partition_pruning(spark, docs_geo, tmp_path):
     groups) — the scan's partition count drops and the plan carries the
     partition filter."""
     p = str(tmp_path / "bytile.parquet")
-    cid = ci.cell_id(F.col("x"), F.col("y"), 12)
+    cid = ci.cell_id("x", "y", 12)
     (
         docs_geo.withColumn("cell_id", cid)
-        .withColumn("cell_l2", ci.cell_token(ci.cell_parent(F.col("cell_id"), 2)))
+        .withColumn("cell_l2", F.expr(ci.cell_token_sql(ci.cell_parent_sql("cell_id", 2))))
         .write.partitionBy("cell_l2").mode("overwrite").parquet(p)
     )
     back = spark.read.parquet(p)

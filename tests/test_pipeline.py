@@ -258,8 +258,22 @@ def test_kernel_merge(spark, tmp_path):
     out = str(tmp_path / "merged.las")
     pl.merge(spark, [SIMPLE_LAS, SIMPLE_LAS], out)
     assert read_las(spark, out).count() == 2130
+    pl.merge(spark, [SIMPLE_LAS], str(tmp_path / "one.las"))
+    assert read_las(spark, str(tmp_path / "one.las")).count() == 1065
+
+
+def test_kernel_merge_single_input(spark, tmp_path):
+    """pdal merge with one input file plus the output (MergeKernel
+    accepts it): the output holds the input's rows; no input at all
+    is still an error."""
+    src, out = str(tmp_path / "in.parquet"), str(tmp_path / "out.parquet")
+    synth.synth_points(spark, 50, 2).write.parquet(src)
+    pl.merge(spark, [src], out)
+    got = sorted(map(tuple, spark.read.parquet(out).collect()))
+    assert got == sorted(map(tuple, spark.read.parquet(src).collect()))
+    assert len(got) == 50
     with pytest.raises(pl.PipelineError):
-        pl.merge(spark, [SIMPLE_LAS], str(tmp_path / "x.las"))
+        pl.merge(spark, [], str(tmp_path / "x.parquet"))
 
 
 @needs_simple
