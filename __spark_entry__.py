@@ -64,6 +64,12 @@ POLY = crop_op.Polygon(
 )
 TILE_LEN, TILE_OX, TILE_OY = 30.0, -180.0, -90.0
 
+
+def _dbl(v: float) -> str:
+    """`v` as an exact DOUBLE literal in the DuckDB oracle texts."""
+    return geo.sql_double(v, "duckdb")
+
+
 _X_SQL, _Y_SQL = geo.geocode_lcg_sql("doc_id")
 _DOCS_GEO_SQL = (
     f"SELECT doc_id, lang, ({_X_SQL}) AS x, ({_Y_SQL}) AS y FROM documents"
@@ -1514,7 +1520,7 @@ def q_hilbert_key(spark, sf_dir):
 
     out = _docs_geo(spark, sf_dir).withColumn(
         "hilbert_key",
-        layout_op.hilbert_key(F.col("x"), F.col("y"), MORTON_BOUNDS),
+        layout_op.hilbert_key("x", "y", MORTON_BOUNDS),
     )
     return out.select("doc_id", "hilbert_key")
 
@@ -3764,8 +3770,8 @@ def _misc_oracles() -> dict[str, str]:
     m = AFFINE
     transformation = f"""
       SELECT doc_id,
-             round({m[0]!r} * x + {m[1]!r} * y + {m[3]!r}, 9) AS x,
-             round({m[4]!r} * x + {m[5]!r} * y + {m[7]!r}, 9) AS y
+             round({_dbl(m[0])} * x + {_dbl(m[1])} * y + {_dbl(m[3])}, 9) AS x,
+             round({_dbl(m[4])} * x + {_dbl(m[5])} * y + {_dbl(m[7])}, 9) AS y
       FROM ({_DOCS_GEO_SQL})
     """
     info = f"""
@@ -3827,7 +3833,7 @@ def _misc_oracles() -> dict[str, str]:
       counts AS (
         SELECT s.doc_id, count(*) AS n
         FROM pts s JOIN pts c
-          ON ((s.x - c.x) * (s.x - c.x) + (s.y - c.y) * (s.y - c.y)) <= {10.0 * 10.0!r}
+          ON ((s.x - c.x) * (s.x - c.x) + (s.y - c.y) * (s.y - c.y)) <= {_dbl(10.0 * 10.0)}
         GROUP BY 1
       )
       SELECT p.doc_id,
@@ -3924,7 +3930,7 @@ def _misc_oracles() -> dict[str, str]:
     # pdal_types.hpp:123 + sround, Utils.hpp:152 + int32 store) then the
     # reader's de-quantization (i * scale, LasReader.cpp loadPointV10) —
     # identical IEEE-double ops on both engines, so bit-comparable.
-    ls = repr(1e-6)
+    ls = _dbl(1e-6)
 
     def _squant(col: str) -> str:
         v = f"(({col}) - 0.0) / {ls}"
@@ -4032,8 +4038,8 @@ def _misc_oracles() -> dict[str, str]:
       ),
       keep AS (
         SELECT tx, ty FROM m
-        WHERE minx <= {tb[2]!r} AND maxx >= {tb[0]!r}
-          AND miny <= {tb[3]!r} AND maxy >= {tb[1]!r}
+        WHERE minx <= {_dbl(tb[2])} AND maxx >= {_dbl(tb[0])}
+          AND miny <= {_dbl(tb[3])} AND maxy >= {_dbl(tb[1])}
       )
       SELECT g.doc_id, {_lq('g.x')} AS x, {_lq('g.y')} AS y
       FROM g JOIN keep USING (tx, ty)
@@ -4117,8 +4123,8 @@ def _pointcloud_oracles() -> dict[str, str]:
     elm = f"""
       WITH pts AS ({docs_z}),
       cells AS (
-        SELECT *, CAST(trunc(floor(x - (-180.0)) / {ELM_CELL!r}) AS BIGINT) AS cx,
-                  CAST(trunc(floor(y - (-90.0)) / {ELM_CELL!r}) AS BIGINT) AS cy
+        SELECT *, CAST(trunc(floor(x - (-180.0)) / {_dbl(ELM_CELL)}) AS BIGINT) AS cx,
+                  CAST(trunc(floor(y - (-90.0)) / {_dbl(ELM_CELL)}) AS BIGINT) AS cy
         FROM pts
       ),
       ordd AS (
@@ -4128,7 +4134,7 @@ def _pointcloud_oracles() -> dict[str, str]:
       ),
       flag AS (
         SELECT *, CASE WHEN nz IS NULL THEN TRUE
-                       ELSE abs(z - nz) < {ELM_THR!r} END AS gap_small
+                       ELSE abs(z - nz) < {_dbl(ELM_THR)} END AS gap_small
         FROM ordd
       ),
       stops AS (
@@ -4176,8 +4182,8 @@ def _pointcloud_oracles() -> dict[str, str]:
     """
     # morton forward: xi/yi = trunc-normalized int31; x bit at 2b+1, y at 2b
     minx, miny, maxx, maxy = MORTON_BOUNDS
-    xi = f"CAST(trunc((x - ({minx!r})) / {maxx - minx!r} * 2147483647) AS BIGINT)"
-    yi = f"CAST(trunc((y - ({miny!r})) / {maxy - miny!r} * 2147483647) AS BIGINT)"
+    xi = f"CAST(trunc((x - ({_dbl(minx)})) / {_dbl(maxx - minx)} * 2147483647) AS BIGINT)"
+    yi = f"CAST(trunc((y - ({_dbl(miny)})) / {_dbl(maxy - miny)} * 2147483647) AS BIGINT)"
     terms = []
     for b in range(31):
         terms.append(f"((({xi} >> {b}) & 1) << {2 * b + 1})")
@@ -4304,9 +4310,8 @@ def _pointcloud_oracles() -> dict[str, str]:
 def _hilbert_oracle() -> str:
     from pdal_spark.operators.layout import hilbert_key_sql
 
-    return hilbert_key_sql(
-        "x", "y", MORTON_BOUNDS, _DOCS_GEO_SQL, "doc_id"
-    )
+    return (f"SELECT doc_id, {hilbert_key_sql('x', 'y', MORTON_BOUNDS)}"
+            f" AS hilbert_key FROM ({_DOCS_GEO_SQL})")
 
 
 def _layout_optimize_oracle() -> str:
@@ -4595,9 +4600,9 @@ def _eigen_oracles() -> dict[str, str]:
       WITH {cov3}, {_EIG3_SQL}
       SELECT doc_id,
              CASE WHEN greatest(abs(e0), abs(e1), abs(e2)) > 0 THEN
-               (CASE WHEN abs(e0) > {t32!r} * greatest(abs(e0), abs(e1), abs(e2)) THEN 1 ELSE 0 END)
-               + (CASE WHEN abs(e1) > {t32!r} * greatest(abs(e0), abs(e1), abs(e2)) THEN 1 ELSE 0 END)
-               + (CASE WHEN abs(e2) > {t32!r} * greatest(abs(e0), abs(e1), abs(e2)) THEN 1 ELSE 0 END)
+               (CASE WHEN abs(e0) > {_dbl(t32)} * greatest(abs(e0), abs(e1), abs(e2)) THEN 1 ELSE 0 END)
+               + (CASE WHEN abs(e1) > {_dbl(t32)} * greatest(abs(e0), abs(e1), abs(e2)) THEN 1 ELSE 0 END)
+               + (CASE WHEN abs(e2) > {_dbl(t32)} * greatest(abs(e0), abs(e1), abs(e2)) THEN 1 ELSE 0 END)
              ELSE 0 END AS est_rank
       FROM eig3
     """
@@ -5200,9 +5205,9 @@ def _icp_oracle_sql() -> str:
       ),
       mvg AS (
         SELECT id,
-               {M[0]!r}*x + {M[1]!r}*y + {M[2]!r}*z + {M[3]!r} AS x,
-               {M[4]!r}*x + {M[5]!r}*y + {M[6]!r}*z + {M[7]!r} AS y,
-               {M[8]!r}*x + {M[9]!r}*y + {M[10]!r}*z + {M[11]!r} AS z
+               {_dbl(M[0])}*x + {_dbl(M[1])}*y + {_dbl(M[2])}*z + {_dbl(M[3])} AS x,
+               {_dbl(M[4])}*x + {_dbl(M[5])}*y + {_dbl(M[6])}*z + {_dbl(M[7])} AS y,
+               {_dbl(M[8])}*x + {_dbl(M[9])}*y + {_dbl(M[10])}*z + {_dbl(M[11])} AS z
         FROM pts
       ),
       cen AS (SELECT avg(x) AS cx, avg(y) AS cy, avg(z) AS cz FROM pts),
@@ -5300,8 +5305,8 @@ def _smrf_oracle_sql() -> str:
         SELECT pc, pr FROM range(0, {n_cols}) t1(pc), range(0, {n_rows}) t2(pr)
       ),
       zmin AS (
-        SELECT CAST(trunc(floor(x - ({minx!r})) / {cell!r}) AS INT) AS pc,
-               CAST(trunc(floor(y - ({miny!r})) / {cell!r}) AS INT) AS pr,
+        SELECT CAST(trunc(floor(x - ({_dbl(minx)})) / {_dbl(cell)}) AS INT) AS pc,
+               CAST(trunc(floor(y - ({_dbl(miny)})) / {_dbl(cell)}) AS INT) AS pr,
                min(z) AS zv
         FROM pts GROUP BY 1, 2
       ),
@@ -5354,7 +5359,7 @@ def _smrf_oracle_sql() -> str:
                     LIMIT 8) t)) AS zv
         FROM grid g LEFT JOIN keepc k0 ON k0.pc = g.pc AND k0.pr = g.pr
       ),
-      sc AS (SELECT pc, pr, zv / {cell!r} AS zv FROM zipro),
+      sc AS (SELECT pc, pr, zv / {_dbl(cell)} AS zv FROM zipro),
       gr AS (
         SELECT g.pc, g.pr,
                CASE WHEN g.pc = 0
@@ -5385,7 +5390,7 @@ def _smrf_oracle_sql() -> str:
       ),
       thr AS (
         SELECT z.pc, z.pr, z.zv AS dem,
-               {threshold!r} + {scalar!r} * sqrt(g.gx*g.gx + g.gy*g.gy)
+               {_dbl(threshold)} + {_dbl(scalar)} * sqrt(g.gx*g.gx + g.gy*g.gy)
                  AS thr
         FROM zipro z JOIN gr g ON g.pc = z.pc AND g.pr = z.pr
       )
@@ -5395,8 +5400,8 @@ def _smrf_oracle_sql() -> str:
                AS classification
       FROM pts p
       LEFT JOIN thr t
-        ON t.pc = CAST(trunc(floor(p.x - ({minx!r})) / {cell!r}) AS INT)
-       AND t.pr = CAST(trunc(floor(p.y - ({miny!r})) / {cell!r}) AS INT)
+        ON t.pc = CAST(trunc(floor(p.x - ({_dbl(minx)})) / {_dbl(cell)}) AS INT)
+       AND t.pr = CAST(trunc(floor(p.y - ({_dbl(miny)})) / {_dbl(cell)}) AS INT)
     """
 
 
@@ -5435,7 +5440,7 @@ def _pmf_oracle_sql() -> str:
           ON abs(h.pc - g.pc) + abs(h.pr - g.pr) <= {iters}
         GROUP BY 1, 2
       )""")
-        lims.append(f"op{j}.zv + {ht!r}")
+        lims.append(f"op{j}.zv + {_dbl(ht)}")
         prev = f"op{j}"
     joins = " ".join(
         f"JOIN op{j} ON op{j}.pc = grid.pc AND op{j}.pr = grid.pr"
@@ -5452,8 +5457,8 @@ def _pmf_oracle_sql() -> str:
         SELECT pc, pr FROM range(0, {n_cols}) t1(pc), range(0, {n_rows}) t2(pr)
       ),
       zmin AS (
-        SELECT CAST(trunc(floor(x - ({minx!r})) / {cell!r}) AS INT) AS pc,
-               CAST(trunc(floor(y - ({miny!r})) / {cell!r}) AS INT) AS pr,
+        SELECT CAST(trunc(floor(x - ({_dbl(minx)})) / {_dbl(cell)}) AS INT) AS pc,
+               CAST(trunc(floor(y - ({_dbl(miny)})) / {_dbl(cell)}) AS INT) AS pr,
                min(z) AS zv
         FROM pts GROUP BY 1, 2
       ),
@@ -5475,8 +5480,8 @@ def _pmf_oracle_sql() -> str:
              CASE WHEN p.z < l.zlim THEN 2 ELSE 1 END AS classification
       FROM pts p
       LEFT JOIN lim l
-        ON l.pc = CAST(trunc(floor((p.x - ({minx!r})) / {cell!r})) AS INT)
-       AND l.pr = CAST(trunc(floor((p.y - ({miny!r})) / {cell!r})) AS INT)
+        ON l.pc = CAST(trunc(floor((p.x - ({_dbl(minx)})) / {_dbl(cell)})) AS INT)
+       AND l.pr = CAST(trunc(floor((p.y - ({_dbl(miny)})) / {_dbl(cell)})) AS INT)
     """
 
 
@@ -5586,8 +5591,8 @@ def _raster_rc_sql() -> str:
     docs = (
         f"SELECT doc_id, n_chars, ({_X_SQL}) AS x, ({_Y_SQL}) AS y FROM documents"
     )
-    cx = f"(({g.origin_x!r}) + (c.i + 0.5) * {g.edge!r})"
-    cy = f"(({g.origin_y!r}) + ({float(g.height)!r} - (c.j + 0.5)) * {g.edge!r})"
+    cx = f"(({_dbl(g.origin_x)}) + (c.i + 0.5) * {_dbl(g.edge)})"
+    cy = f"(({_dbl(g.origin_y)}) + ({_dbl(g.height)} - (c.j + 0.5)) * {_dbl(g.edge)})"
     d = f"sqrt((p.x - {cx}) * (p.x - {cx}) + (p.y - {cy}) * (p.y - {cy}))"
     return f"""
       WITH pts AS ({docs}),
@@ -5599,7 +5604,7 @@ def _raster_rc_sql() -> str:
       hits AS (
         SELECT c.i AS col, c.j AS row, p.doc_id, CAST(p.n_chars AS DOUBLE) AS v,
                {d} AS dd
-        FROM pts p JOIN cells c ON {d} < {g.radius!r}
+        FROM pts p JOIN cells c ON {d} < {_dbl(g.radius)}
       )
       SELECT col, row,
              CASE WHEN count(*) FILTER (WHERE dd = 0) > 0
@@ -5614,8 +5619,8 @@ def _raster_oracles() -> dict[str, str]:
     docs = (
         f"SELECT doc_id, n_chars, ({_X_SQL}) AS x, ({_Y_SQL}) AS y FROM documents"
     )
-    cx = f"(({g.origin_x!r}) + (c.i + 0.5) * {g.edge!r})"
-    cy = f"(({g.origin_y!r}) + ({float(g.height)!r} - (c.j + 0.5)) * {g.edge!r})"
+    cx = f"(({_dbl(g.origin_x)}) + (c.i + 0.5) * {_dbl(g.edge)})"
+    cy = f"(({_dbl(g.origin_y)}) + ({_dbl(g.height)} - (c.j + 0.5)) * {_dbl(g.edge)})"
     d = f"sqrt((p.x - {cx}) * (p.x - {cx}) + (p.y - {cy}) * (p.y - {cy}))"
     cells_sql = f"""
       WITH pts AS ({docs}),
@@ -5627,7 +5632,7 @@ def _raster_oracles() -> dict[str, str]:
       hits AS (
         SELECT c.i AS col, c.j AS row, p.doc_id, CAST(p.n_chars AS DOUBLE) AS v,
                {d} AS dd
-        FROM pts p JOIN cells c ON {d} < {g.radius!r}
+        FROM pts p JOIN cells c ON {d} < {_dbl(g.radius)}
       )
       SELECT col, row, count(*) AS count,
              round(min(v), 6) AS vmin, round(max(v), 6) AS vmax,
@@ -5640,11 +5645,11 @@ def _raster_oracles() -> dict[str, str]:
     pixels_sql = f"""
       WITH px AS (SELECT unnest(range(0, {g.width * g.height})) AS pid)
       SELECT pid, pid % {g.width} AS col, pid // {g.width} AS row,
-             CAST(({g.origin_x!r}) + (pid % {g.width} + 0.5) * {g.edge!r}
+             CAST(({_dbl(g.origin_x)}) + (pid % {g.width} + 0.5) * {_dbl(g.edge)}
                AS DOUBLE) AS x,
-             CAST(({g.origin_y!r})
-               + ({float(g.height)!r} - (pid // {g.width} + 0.5))
-               * {g.edge!r} AS DOUBLE) AS y
+             CAST(({_dbl(g.origin_y)})
+               + ({_dbl(g.height)} - (pid // {g.width} + 0.5))
+               * {_dbl(g.edge)} AS DOUBLE) AS y
       FROM px
     """
     # point cell key: the engine's raster_cell text, in DuckDB's dialect
@@ -6365,11 +6370,11 @@ def _knn_oracles() -> dict[str, str]:
       counts AS (
         SELECT s.doc_id, count(*) AS n
         FROM pts s JOIN pts c
-          ON ((s.x-c.x)*(s.x-c.x) + (s.y-c.y)*(s.y-c.y)) <= {12.0 * 12.0!r}
+          ON ((s.x-c.x)*(s.x-c.x) + (s.y-c.y)*(s.y-c.y)) <= {_dbl(12.0 * 12.0)}
         GROUP BY 1
       )
       SELECT p.doc_id,
-             round(coalesce(n, 0) / ((4.0/3.0) * pi() * {12.0**3!r}), 9)
+             round(coalesce(n, 0) / ((4.0/3.0) * pi() * {_dbl(12.0**3)}), 9)
                AS radial_density
       FROM pts p LEFT JOIN counts USING (doc_id)
     """

@@ -36,6 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pdal_spark.geo import sql_double
 from pdal_spark.session import ensure_min_partitions
 
 
@@ -122,7 +123,7 @@ WHERE CAST(n_events AS DOUBLE)
                  / (CAST(n_tot AS DOUBLE) / CAST(span AS DOUBLE)))
             - (CAST(n_events AS DOUBLE)
                - CAST(n_tot AS DOUBLE) / CAST(span AS DOUBLE)), 6)
-      >= {min_surprise!r}
+      >= {sql_double(min_surprise, 'duckdb')}
 """.strip()
 
 

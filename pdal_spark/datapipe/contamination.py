@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pdal_spark.datapipe.repetition import _ngrams
+from pdal_spark.geo import sql_double
 
 
 def ngram_contamination(
@@ -156,8 +157,8 @@ def source_mixture_sql(
         FROM {table} GROUP BY {keys}
       )
       SELECT {keys}, n_docs, n_tokens,
-             round(pow(CAST(n_tokens AS DOUBLE), {alpha!r})
-                   / sum(pow(CAST(n_tokens AS DOUBLE), {alpha!r})) OVER (),
+             round(pow(CAST(n_tokens AS DOUBLE), {sql_double(alpha, 'duckdb')})
+                   / sum(pow(CAST(n_tokens AS DOUBLE), {sql_double(alpha, 'duckdb')})) OVER (),
                    9) AS weight
       FROM g
     """
@@ -219,7 +220,7 @@ def mixture_sample_sql(
       WITH mix AS ({mix}),
       rates AS (
         SELECT {keys},
-               least(1.0, {float(budget)!r} * weight / n_docs) AS rate
+               least(1.0, {sql_double(budget, 'duckdb')} * weight / n_docs) AS rate
         FROM mix
       )
       SELECT {select}

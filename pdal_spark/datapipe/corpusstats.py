@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pdal_spark.geo import sql_double
 from pdal_spark.operators.ordered import grouped_topk
 from pdal_spark.session import ensure_min_partitions
 
@@ -250,7 +251,7 @@ SELECT {by}, w, cnt_ws, cnt_w,
        round(2.0 * ({body}), 6) AS llr
 FROM j
 WHERE k11 / r1 > c1 / m
-  AND round(2.0 * ({body}), 6) > {min_llr!r}
+  AND round(2.0 * ({body}), 6) > {sql_double(min_llr, 'duckdb')}
 """.strip()
 
 

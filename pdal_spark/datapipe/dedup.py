@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pdal_spark.geo import sql_double
 from pdal_spark.operators.ordered import global_rank
 
 P31 = 2147483647  # Mersenne prime 2^31-1
@@ -188,29 +189,6 @@ def _mask_inter(a: Column, b: Column, n_chunks: int | None = None) -> Column:
     )
 
 
-def _verify_pairs_bitmask(cand: DataFrame, masks: DataFrame, threshold: float,
-                          n_chunks: int | None = None) -> DataFrame:
-    """Exact Jaccard on candidate pairs via chunked-bitmask intersection."""
-    m1 = masks.select(F.col("id").alias("id1"), F.col("sz").alias("sz1"),
-                      F.col("masks").alias("ma"))
-    m2 = masks.select(F.col("id").alias("id2"), F.col("sz").alias("sz2"),
-                      F.col("masks").alias("mb"))
-    return (
-        cand.join(m1, "id1").join(m2, "id2")
-        .withColumn("inter", _mask_inter(F.col("ma"), F.col("mb"), n_chunks))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter").cast("double")
-                / (F.col("sz1") + F.col("sz2") - F.col("inter")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id1", "id2", "jaccard")
-    )
-
-
 def _verify_pairs_arrays(cand: DataFrame, sets: DataFrame,
                          threshold: float) -> DataFrame:
     """Exact Jaccard on candidate pairs via sorted word-hash arrays —
@@ -237,42 +215,6 @@ def _verify_pairs_arrays(cand: DataFrame, sets: DataFrame,
         )
         .filter(F.col("jaccard") >= threshold)
         .select("id1", "id2", "jaccard")
-    )
-
-
-def _prefix_candidates(words: DataFrame, v: DataFrame, threshold: float) -> DataFrame:
-    """Prefix-filtered candidate pairs (exact — no near-dup pair is lost).
-
-    Words globally ordered by (document frequency asc, word): any pair
-    with Jaccard >= t must share a word within each doc's first
-    sz - ceil(t*sz) + 1 words of that order (prefix-filter theorem), so
-    only rare-word prefixes are self-joined — the buckets the join fans
-    out over are the SMALLEST ones in the corpus.
-    """
-    dfreq = words.groupBy("word").agg(F.count("*").alias("df"))
-    order = global_rank(
-        dfreq.join(v, "word").select("word", "df"),
-        [F.col("df").asc(), F.col("word").asc()],
-        out_col="ord",
-    ).select("word", "ord")
-    sized = words.join(F.broadcast(order), "word").withColumn(
-        "sz", F.count("*").over(Window.partitionBy("id"))
-    )
-    pref_len = (F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1).cast("int")
-    prefix = (
-        sized.withColumn(
-            "rk",
-            F.row_number().over(Window.partitionBy("id").orderBy(F.col("ord").asc())),
-        )
-        .filter(F.col("rk") <= pref_len)
-        .select("id", "ord")
-    )
-    return (
-        prefix.alias("a")
-        .join(prefix.alias("b"), "ord")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
-        .distinct()
     )
 
 
@@ -505,7 +447,7 @@ def jaccard_pairs_sql(threshold: float, table: str = "documents",
       FROM inter
       JOIN sizes s1 ON s1.id = id1
       JOIN sizes s2 ON s2.id = id2
-      WHERE round(CAST(inter AS DOUBLE) / (s1.sz + s2.sz - inter), 6) >= {threshold!r}
+      WHERE round(CAST(inter AS DOUBLE) / (s1.sz + s2.sz - inter), 6) >= {sql_double(threshold, 'duckdb')}
     """
 
 
@@ -656,7 +598,7 @@ def containment_pairs_sql(threshold: float, table: str = "documents",
              round(CAST(inter AS DOUBLE) / s1.sz, 6) AS containment
       FROM inter
       JOIN sizes s1 ON s1.id = src_id
-      WHERE round(CAST(inter AS DOUBLE) / s1.sz, 6) >= {threshold!r}
+      WHERE round(CAST(inter AS DOUBLE) / s1.sz, 6) >= {sql_double(threshold, 'duckdb')}
     """
 
 
@@ -716,19 +658,6 @@ def minhash_signature_arrays(
     ])
     return mins.select(
         "id", F.array(*[f"_m{i}" for i in range(k)]).alias("sig")
-    )
-
-
-def minhash_signatures(
-    df: DataFrame, k: int = MINHASH_K, text_col: str = "text",
-    id_col: str = "doc_id", word_id_mode: str = "rank",
-) -> DataFrame:
-    """(id, h, minh): k min-hash values per document (exploded view of
-    minhash_signature_arrays — the explode happens AFTER aggregation, so
-    it fans out docs x k rows, not corpus-words x k)."""
-    arr = minhash_signature_arrays(df, k, text_col, id_col, word_id_mode)
-    return arr.select("id", F.posexplode("sig")).select(
-        "id", F.col("pos").cast("int").alias("h"), F.col("col").alias("minh")
     )
 
 
@@ -1041,7 +970,7 @@ def minhash_dedup_pairs_sql(
       SELECT id1, id2,
              round(CAST(inter AS DOUBLE) / (s1.sz + s2.sz - inter), 6) AS jaccard
       FROM inter JOIN sizes s1 ON s1.id = id1 JOIN sizes s2 ON s2.id = id2
-      WHERE round(CAST(inter AS DOUBLE) / (s1.sz + s2.sz - inter), 6) >= {threshold!r}
+      WHERE round(CAST(inter AS DOUBLE) / (s1.sz + s2.sz - inter), 6) >= {sql_double(threshold, 'duckdb')}
     """
 
 

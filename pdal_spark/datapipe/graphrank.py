@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pdal_spark.geo import sql_double
+
 __all__ = [
     "pagerank", "pagerank_sql", "MICRO", "hits", "hits_sql", "HMICRO",
     "triangles", "triangles_sql",
@@ -475,7 +477,7 @@ def harmonic_centrality_sql(edges_sql: str, radius: int = 4) -> str:
     return (
         "WITH " + ", ".join(ctes) +
         f" SELECT v AS node, CAST(sum(w) AS BIGINT) AS h_num,"
-        f" sum(w) / {float(lcm)!r} AS harmonic"
+        f" sum(w) / {sql_double(lcm, 'duckdb')} AS harmonic"
         f" FROM ({unions}) GROUP BY v"
     )
 

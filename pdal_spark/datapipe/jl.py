@@ -26,6 +26,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pdal_spark.geo import sql_double
 from pdal_spark.session import ensure_min_partitions
 
 
@@ -101,6 +102,6 @@ def jl_project_sql(
             f"SELECT {id_col}, {j} AS dim, round(list_sum(\n"
             f"  list_transform(range(1, {d_in} + 1),\n"
             f"    i -> CAST({vec}[i] AS DOUBLE) * ([{lits}])[i])\n"
-            f") * {scale!r}, 6) AS val FROM {table}"
+            f") * {sql_double(scale, 'duckdb')}, 6) AS val FROM {table}"
         )
     return "\nUNION ALL\n".join(arms)

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pdal_spark.geo import sql_double
+
 K1 = 1.2
 B = 0.75
 
@@ -164,6 +166,7 @@ def bm25_score_sql(
     b: float = B,
 ) -> str:
     qlist = ", ".join(f"'{t}'" for t in query_terms)
+    k1, b = sql_double(k1, "duckdb"), sql_double(b, "duckdb")
     return (
         f"WITH terms AS ("
         f"  SELECT {id_col} AS doc_id, len(string_split({text}, ' ')) AS dl,"
@@ -176,8 +179,8 @@ def bm25_score_sql(
         f"  avg(len(string_split({text}, ' '))) AS avgdl FROM {table})"
         f"SELECT doc_id, round(sum("
         f"  ln(1.0 + (n_docs - df + 0.5) / (df + 0.5))"
-        f"  * (tf * ({k1!r} + 1))"
-        f"  / (tf + {k1!r} * (1 - {b!r} + {b!r} * dl / avgdl))"
+        f"  * (tf * ({k1} + 1))"
+        f"  / (tf + {k1} * (1 - {b} + {b} * dl / avgdl))"
         f"), 6) AS bm25 "
         f"FROM qt JOIN dfreq USING (term) CROSS JOIN corpus "
         f"GROUP BY doc_id"

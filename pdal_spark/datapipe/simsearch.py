@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pdal_spark.geo import sql_double
+
 ROUND = 6
 
 
@@ -336,7 +338,7 @@ def margin_align_sql(
         FROM scored
       )
       SELECT src_id, cand_id AS dst_id, cosine, margin
-      FROM best WHERE rn = 1 AND margin >= {threshold!r}
+      FROM best WHERE rn = 1 AND margin >= {sql_double(threshold, 'duckdb')}
     """
 
 
@@ -871,7 +873,7 @@ def cosine_dedup_pairs_sql(
       SELECT a.id AS id1, b.id AS id2,
              round(({dot}) / (a.n * b.n), {ROUND}) AS cosine
       FROM base a JOIN base b ON a.id < b.id AND {cond}
-      WHERE round(({dot}) / (a.n * b.n), {ROUND}) >= {threshold!r}
+      WHERE round(({dot}) / (a.n * b.n), {ROUND}) >= {sql_double(threshold, 'duckdb')}
     """
 
 
@@ -1073,7 +1075,7 @@ def semdedup_sql(
         SELECT x.id AS id1, y.id AS id2
         FROM {last} x JOIN {last} y
           ON x.list_id = y.list_id AND x.id < y.id
-        WHERE round(({dot_xy}) / (x.n * y.n), {ROUND}) >= {threshold!r}
+        WHERE round(({dot_xy}) / (x.n * y.n), {ROUND}) >= {sql_double(threshold, 'duckdb')}
       )""")
     parts.append("""reach(id, lab) AS (
         SELECT id, id FROM base

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pdal_spark.geo import sql_double
+
 P31 = 2_147_483_647
 
 
@@ -133,7 +135,7 @@ def kmv_sketch_sql(
         f"CAST(len(sketch) AS BIGINT) AS n_in_sketch, "
         f"CAST(sketch[least({k}, len(sketch))] AS BIGINT) AS kth_hash, "
         f"round(CASE WHEN len(sketch) < {k} THEN CAST(len(sketch) AS DOUBLE) "
-        f"ELSE {float(k - 1)!r} * {float(P31)!r} / sketch[{k}] END, 6) "
+        f"ELSE {sql_double(k - 1, 'duckdb')} * {sql_double(P31, 'duckdb')} / sketch[{k}] END, 6) "
         f"AS est_distinct "
         f"FROM (SELECT {g}, {sk} AS sketch FROM {table} "
         f"WHERE ({h}) IS NOT NULL GROUP BY {g})"

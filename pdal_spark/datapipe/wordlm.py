@@ -45,9 +45,10 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pdal_spark.geo import sql_double
+
 ALPHA = 0.4
-_LOG2A = math.log2(ALPHA)  # repr() round-trips, so the SQL literal
-# parses to the bit-identical double in DuckDB.
+_LOG2A = math.log2(ALPHA)
 
 
 def _positions(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -224,7 +225,7 @@ def word_lm_logloss_sql(
     """DuckDB twin: identical tokenization, counts, precomputed
     conditional scores, and backoff CASE — as plain left joins (the
     request-union join above picks exactly the same longest hit)."""
-    a1, a2 = repr(_LOG2A), repr(2 * _LOG2A)
+    a1, a2 = sql_double(_LOG2A, "duckdb"), sql_double(2 * _LOG2A, "duckdb")
     return f"""
       WITH toks AS (
         SELECT {id_col}, string_split({text}, ' ') AS ws FROM {table}

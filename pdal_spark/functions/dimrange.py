@@ -18,6 +18,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pdal_spark.geo import sql_double
+
 _RANGE_RE = re.compile(
     r"^\s*(?P<neg>!?)\s*(?P<name>[A-Za-z_][A-Za-z0-9_]*)\s*"
     r"(?P<lb>[\[\(])\s*(?P<lo>[^:\]\)]*?)\s*:\s*(?P<hi>[^\]\)]*?)\s*(?P<ub>[\]\)])\s*$"
@@ -32,11 +34,6 @@ class DimRange:
     inclusive_lower: bool
     inclusive_upper: bool
     negate: bool
-
-    def sort_key(self):
-        # std::sort over DimRange orders by dim then bounds; we only rely
-        # on grouping-by-dim, which groupby below provides regardless.
-        return (self.name, self.lower, self.upper)
 
 
 def parse_range(text: str) -> DimRange:
@@ -107,8 +104,10 @@ def range_sql(r: DimRange, col: str, is_float: bool = True) -> str:
     if is_float:
         fails.append(f"isnan({col})")
     if r.lower != -math.inf:
-        fails.append(f"({col} {'<' if r.inclusive_lower else '<='} {r.lower!r})")
+        lo = sql_double(r.lower, "duckdb")
+        fails.append(f"({col} {'<' if r.inclusive_lower else '<='} {lo})")
     if r.upper != math.inf:
-        fails.append(f"({col} {'>' if r.inclusive_upper else '>='} {r.upper!r})")
+        hi = sql_double(r.upper, "duckdb")
+        fails.append(f"({col} {'>' if r.inclusive_upper else '>='} {hi})")
     fail = " OR ".join(fails) if fails else "FALSE"
     return f"({fail})" if r.negate else f"(NOT ({fail}))"

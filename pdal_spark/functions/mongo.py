@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from pdal_spark.geo import sql_double
+
 _CMP = {
     "$eq": lambda c, v: c == F.lit(v),
     "$ne": lambda c, v: c != F.lit(v),
@@ -80,7 +82,9 @@ def mongo_sql(expr: dict) -> str:
             parts.append(f"(NOT {mongo_sql(val)})")
         else:
             def lit(v):
-                return f"'{v}'" if isinstance(v, str) else repr(float(v)) if isinstance(v, float) else str(v)
+                if isinstance(v, str):
+                    return f"'{v}'"
+                return sql_double(v, "duckdb") if isinstance(v, float) else str(v)
 
             if isinstance(val, dict):
                 ops = {"$eq": "=", "$ne": "<>", "$gt": ">", "$gte": ">=", "$lt": "<", "$lte": "<="}

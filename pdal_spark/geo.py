@@ -39,10 +39,10 @@ SQRT_3 = math.sqrt(3.0)
 SQRT_3_HEXER = 1.732050808
 
 # ---------------------------------------------------------------------------
-# SQL rendering. The two dialects differ in three places only, and these
-# renderers are the only code that knows them. Builders splice the column
-# expressions they are given as is; Spark entry points quote their column
-# names with sql_ident first.
+# SQL rendering. The two dialects differ in DOUBLE literals, truncation,
+# bit shifts and array lookups only, and these renderers are the only code
+# that knows them. Builders splice the column expressions they are given
+# as is; Spark entry points quote their column names with sql_ident first.
 # ---------------------------------------------------------------------------
 
 
@@ -79,6 +79,34 @@ def sql_trunc(e: str, dialect: str) -> str:
 def sql_ident(name: str) -> str:
     """A column name as a quoted Spark SQL identifier."""
     return "`" + name.replace("`", "``") + "`"
+
+
+def sql_shiftleft(e: str, k: int, dialect: str) -> str:
+    """Integer `e` shifted left by `k` bits. Spark's parser rejects the
+    shift operators, so Spark calls its function; DuckDB has only the
+    operator."""
+    if dialect == "spark":
+        return f"shiftleft({e}, {k})"
+    return f"({e} << {k})"
+
+
+def sql_shiftright(e: str, k: int, dialect: str) -> str:
+    """Integer `e` shifted right by `k` bits (see sql_shiftleft)."""
+    if dialect == "spark":
+        return f"shiftright({e}, {k})"
+    return f"({e} >> {k})"
+
+
+def sql_int_lut(values: list[int], i: str, dialect: str) -> str:
+    """`values[i]` as BIGINT, for a 0-based integer index `i`, from an
+    array literal. DuckDB types a list literal as INTEGER, so the element
+    is cast for the BIGINT shift math around it."""
+    items = ",".join(str(int(v)) for v in values)
+    if dialect == "spark":
+        get = f"element_at(array({items}), CAST({i} + 1 AS INT))"
+    else:
+        get = f"list_extract([{items}], CAST({i} + 1 AS INT))"
+    return f"CAST({get} AS BIGINT)"
 
 
 # ---------------------------------------------------------------------------
@@ -188,16 +216,19 @@ def tile_coord_np(v: np.ndarray, origin: float, length: float) -> np.ndarray:
     return pos
 
 
-def square_contains(
-    xpos: Column, ypos: Column, x: Column, y: Column,
+def square_contains_sql(
+    xpos: str, ypos: str, x: str, y: str,
     origin_x: float, origin_y: float, length: float, buffer: float,
-) -> Column:
-    """Strict-inequality buffered-square test (SplitterFilter.cpp:170-178)."""
-    minx = F.lit(origin_x) + xpos.cast("double") * F.lit(length) - F.lit(buffer)
-    maxx = minx + F.lit(length) + F.lit(2.0 * buffer)
-    miny = F.lit(origin_y) + ypos.cast("double") * F.lit(length) - F.lit(buffer)
-    maxy = miny + F.lit(length) + F.lit(2.0 * buffer)
-    return (minx < x) & (x < maxx) & (miny < y) & (y < maxy)
+    dialect: str = "duckdb",
+) -> str:
+    """Strict-inequality buffered-square test of tile (xpos, ypos)
+    (SplitterFilter.cpp:170-178)."""
+    d = functools.partial(sql_double, dialect=dialect)
+    minx = f"({d(origin_x)} + CAST({xpos} AS DOUBLE) * {d(length)} - {d(buffer)})"
+    maxx = f"({minx} + {d(length)} + {d(2.0 * buffer)})"
+    miny = f"({d(origin_y)} + CAST({ypos} AS DOUBLE) * {d(length)} - {d(buffer)})"
+    maxy = f"({miny} + {d(length)} + {d(2.0 * buffer)})"
+    return f"({minx} < {x} AND {x} < {maxx} AND {miny} < {y} AND {y} < {maxy})"
 
 
 # ---------------------------------------------------------------------------

@@ -102,24 +102,6 @@ def grad_y(g: np.ndarray) -> np.ndarray:
 _RING_CACHE: dict = {}
 
 
-def _ring_offsets(rad: int) -> tuple[np.ndarray, np.ndarray]:
-    """All (dr, dc) at Chebyshev radius exactly ``rad`` (the square
-    ring), cached."""
-    got = _RING_CACHE.get(rad)
-    if got is None:
-        if rad == 0:
-            got = (np.zeros(1, np.int64), np.zeros(1, np.int64))
-        else:
-            side = np.arange(-rad, rad + 1, dtype=np.int64)
-            drs = [np.full(len(side), -rad), np.full(len(side), rad),
-                   side[1:-1], side[1:-1]]
-            dcs = [side, side,
-                   np.full(len(side) - 2, -rad), np.full(len(side) - 2, rad)]
-            got = (np.concatenate(drs), np.concatenate(dcs))
-        _RING_CACHE[rad] = got
-    return got
-
-
 def _fill_nearest(
     g: np.ndarray,
     k: int,

@@ -219,43 +219,6 @@ def boundary_wkt(
     return f"MULTIPOLYGON ({body})"
 
 
-def hexbin_summary(
-    df: DataFrame,
-    edge_length: float,
-    origin_x: float,
-    origin_y: float,
-    threshold: int = 15,
-    x: str = "x",
-    y: str = "y",
-) -> dict:
-    """kernels.density / filters.hexbin metadata: per-grid totals
-    (HexBinFilter.cpp:237-263 area/density math) + boundary WKT."""
-    height = edge_length * SQRT_3
-    dens = density(df, edge_length, origin_x, origin_y, x, y).cache()
-    try:
-        total = dens.agg(F.sum("count").alias("n")).collect()[0]["n"] or 0
-        dense = dense_cells(dens, threshold).collect()
-        hex_area = ((3.0 * SQRT_3_HEXER) / 2.0) * (height * height)  # HexBinFilter.cpp:260
-        cells = [(r["hex_x"], r["hex_y"]) for r in dense]
-        dense_points = sum(r["count"] for r in dense)
-        boundary_area = hex_area * len(cells)
-        return {
-            "edge_length": edge_length,
-            "threshold": threshold,
-            "total_points": total,
-            "dense_cell_count": len(cells),
-            "dense_points": dense_points,
-            "hex_area": hex_area,
-            "boundary_area": boundary_area,
-            "avg_density": (dense_points / boundary_area) if cells else 0.0,
-            "boundary": boundary_wkt(cells, edge_length, origin_x, origin_y)
-            if cells
-            else "MULTIPOLYGON EMPTY",
-        }
-    finally:
-        dens.unpersist()
-
-
 def density_layer(
     df: DataFrame,
     edge_length: float,

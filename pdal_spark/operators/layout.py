@@ -17,11 +17,12 @@ same file count.
 
 Execution shape (the part that must survive 100×):
 
-* the Hilbert index is computed as a PURE COLUMN EXPRESSION — a 4-state
-  DFA over the 32-bit Morton code, one 1024-entry array-literal lookup
-  per byte (4 ``element_at`` calls total). No UDF, whole-stage codegen,
-  and the same arithmetic replays bit-for-bit in DuckDB SQL
-  (:func:`hilbert_key_sql`) for the driver oracle.
+* the Hilbert index is ONE SQL expression, :func:`hilbert_key_sql` — a
+  4-state DFA over the 32-bit Morton code, one 1024-entry array-literal
+  lookup per byte (4 lookups total). The same text is rendered for
+  Spark, where :func:`hilbert_key` wraps it in one ``F.expr`` (no UDF,
+  whole-stage codegen, a few py4j calls to build), and for the DuckDB
+  oracle; nothing else computes the key.
 * the rewrite is ONE ``repartitionByRange`` exchange (range boundaries
   from Spark's reservoir sample of the key) + an in-partition sort —
   exactly the shuffle a sorted write requires, nothing more.
@@ -42,10 +43,13 @@ tests/test_layout.py.
 
 from __future__ import annotations
 
+import functools
 import math
 from typing import Optional
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
+
+from pdal_spark import geo
 
 # ---------------------------------------------------------------------------
 # Hilbert DFA byte-LUT (derived from the classic xy2d formulation)
@@ -109,115 +113,59 @@ _SPREAD_LUT = [
 ]
 
 
-def _grid_coord(v: Column, lo: float, hi: float) -> Column:
-    """Normalize to the 2^HILBERT_ORDER grid: trunc((v-lo)/(hi-lo)*2^k),
-    clamped to [0, 2^k - 1]. trunc (not floor) keeps the Spark and
-    DuckDB float arithmetic identical for the oracle."""
-    n = float(1 << HILBERT_ORDER)
-    raw = (v - F.lit(lo)) / F.lit(hi - lo) * F.lit(n)
-    g = raw.cast("long")  # cast truncates toward zero, like trunc()
-    return F.greatest(F.lit(0).cast("long"),
-                      F.least(g, F.lit((1 << HILBERT_ORDER) - 1).cast("long")))
-
-
-def _interleave16(v: Column) -> Column:
-    """Spread the low 16 bits of v to even bit positions (byte LUT)."""
-    lut = F.lit(_SPREAD_LUT).cast("array<bigint>")
-    lo = F.element_at(lut, (v.bitwiseAND(F.lit(255)) + 1).cast("int"))
-    hi = F.element_at(
-        lut, (F.shiftright(v, 8).bitwiseAND(F.lit(255)) + 1).cast("int")
-    )
-    return F.shiftleft(hi, 16) + lo
-
-
-def hilbert_key(
-    x: Column,
-    y: Column,
-    bounds: tuple[float, float, float, float],
-) -> Column:
-    """32-bit Hilbert index of (x, y) within ``bounds`` — pure codegen.
-
-    Morton-interleave the 16-bit grid coords (x in the high bit of each
-    pair), then run the 4-state DFA one byte at a time: 4 array lookups,
-    each packed value carrying (next_state << 8) | 2-bit-digits-byte.
-    """
-    minx, miny, maxx, maxy = bounds
-    xi = _grid_coord(x, minx, maxx)
-    yi = _grid_coord(y, miny, maxy)
-    m = F.shiftleft(_interleave16(xi), 1) + _interleave16(yi)
-
-    lut = F.lit(_HILBERT_LUT).cast("array<bigint>")
-    state = F.lit(0).cast("long")
-    digits: list[Column] = []
-    for byte_i in range(3, -1, -1):  # MSB byte first
-        b = F.shiftright(m, 8 * byte_i).bitwiseAND(F.lit(255))
-        v = F.element_at(lut, (state * 256 + b + 1).cast("int"))
-        state = F.shiftright(v, 8)
-        digits.append(v.bitwiseAND(F.lit(255)))
-    out = F.lit(0).cast("long")
-    for d in digits:
-        out = F.shiftleft(out, 8) + d
-    return out
-
-
 def hilbert_key_sql(
-    x_sql: str,
-    y_sql: str,
+    x: str,
+    y: str,
     bounds: tuple[float, float, float, float],
-    from_sql: str,
-    select_cols: str,
-    key_alias: str = "hilbert_key",
+    dialect: str = "duckdb",
 ) -> str:
-    """DuckDB replay of :func:`hilbert_key` — same LUT, same arithmetic.
+    """32-bit Hilbert index of (x, y) within ``bounds``, one BIGINT
+    expression over the column expressions ``x`` and ``y``.
 
-    Returns a full SELECT over ``from_sql`` (a table expression) carrying
-    ``select_cols`` plus the key. CTE chain keeps each DFA step's packed
-    value single-use, mirroring the Spark expression tree.
+    Each axis goes to the 2^HILBERT_ORDER grid as
+    trunc((v - lo) / (hi - lo) * 2^k), clamped to [0, 2^k - 1] (trunc,
+    not floor, is the same in both engines). The two 16-bit grid
+    coordinates are Morton-interleaved (x in the high bit of each pair)
+    through the byte spread LUT; then the 4-state DFA runs one byte at a
+    time, MSB first: 4 array lookups, each packed value carrying
+    (next_state << 8) | 2-bit-digits-byte.
     """
     minx, miny, maxx, maxy = bounds
+    d = functools.partial(geo.sql_double, dialect=dialect)
+    shl = functools.partial(geo.sql_shiftleft, dialect=dialect)
+    shr = functools.partial(geo.sql_shiftright, dialect=dialect)
+    lut = functools.partial(geo.sql_int_lut, dialect=dialect)
     n = float(1 << HILBERT_ORDER)
     cap = (1 << HILBERT_ORDER) - 1
 
-    def grid(v_sql: str, lo: float, hi: float) -> str:
-        return (
-            f"greatest(CAST(0 AS BIGINT), least(CAST(trunc(({v_sql} - ({lo!r}))"
-            f" / ({hi - lo!r}) * {n!r}) AS BIGINT), CAST({cap} AS BIGINT)))"
-        )
+    def grid(v: str, lo: float, hi: float) -> str:
+        g = geo.sql_trunc(f"({v} - {d(lo)}) / {d(hi - lo)} * {d(n)}", dialect)
+        return f"greatest(CAST(0 AS BIGINT), least({g}, CAST({cap} AS BIGINT)))"
 
-    spread = "[" + ",".join(str(v) for v in _SPREAD_LUT) + "]"
-    lut = "[" + ",".join(str(v) for v in _HILBERT_LUT) + "]"
+    def interleave16(v: str) -> str:
+        lo = lut(_SPREAD_LUT, f"({v} & 255)")
+        hi = lut(_SPREAD_LUT, f"({shr(v, 8)} & 255)")
+        return f"({shl(hi, 16)} + {lo})"
 
-    def interleave16(col: str) -> str:
-        # list literals are INTEGER in DuckDB; shift math needs BIGINT
-        lo = (f"CAST(list_extract({spread},"
-              f" CAST(({col} & 255) + 1 AS INT)) AS BIGINT)")
-        hi = (f"CAST(list_extract({spread},"
-              f" CAST((({col} >> 8) & 255) + 1 AS INT)) AS BIGINT)")
-        return f"(({hi} << 16) + {lo})"
+    m = (f"({shl(interleave16(grid(x, minx, maxx)), 1)}"
+         f" + {interleave16(grid(y, miny, maxy))})")
+    state = key = "CAST(0 AS BIGINT)"
+    for byte_i in range(3, -1, -1):  # MSB byte first
+        v = lut(_HILBERT_LUT, f"({state} * 256 + ({shr(m, 8 * byte_i)} & 255))")
+        state = shr(v, 8)
+        key = f"({shl(key, 8)} + ({v} & 255))"
+    return key
 
-    steps = []
-    prev_state = "CAST(0 AS BIGINT)"
-    for i, byte_i in enumerate(range(3, -1, -1)):
-        b = f"((m >> {8 * byte_i}) & 255)"
-        steps.append(
-            f"s{i} AS (SELECT *, CAST(list_extract({lut},"
-            f" CAST({prev_state} * 256 + {b} + 1 AS INT)) AS BIGINT) AS v{i}"
-            f" FROM {'mor' if i == 0 else f's{i - 1}'})"
-        )
-        prev_state = f"(v{i} >> 8)"
-    final = (
-        "(((v0 & 255) << 24) + ((v1 & 255) << 16)"
-        " + ((v2 & 255) << 8) + (v3 & 255))"
-    )
-    return f"""
-      WITH src AS ({from_sql}),
-      grid AS (SELECT *, {grid(x_sql, minx, maxx)} AS xi,
-                         {grid(y_sql, miny, maxy)} AS yi FROM src),
-      mor AS (SELECT *, ({interleave16('xi')} << 1) + {interleave16('yi')} AS m
-              FROM grid),
-      {', '.join(steps)}
-      SELECT {select_cols}, {final} AS {key_alias} FROM s3
-    """
+
+def hilbert_key(
+    x: str,
+    y: str,
+    bounds: tuple[float, float, float, float],
+) -> Column:
+    """:func:`hilbert_key_sql` over the columns named ``x`` and ``y``, as
+    one Spark expression — pure codegen."""
+    return F.expr(hilbert_key_sql(
+        geo.sql_ident(x), geo.sql_ident(y), bounds, "spark"))
 
 
 # ---------------------------------------------------------------------------
@@ -252,7 +200,7 @@ def optimize_catalog(
     df = cat.read(version=snap["version"])
     if n_files is None:
         n_files = max(1, math.ceil(snap["total_rows"] / target_rows_per_file))
-    keyed = df.withColumn("_hkey", hilbert_key(F.col(x), F.col(y), bounds))
+    keyed = df.withColumn("_hkey", hilbert_key(x, y, bounds))
     out = (
         keyed.repartitionByRange(n_files, "_hkey")
         .sortWithinPartitions("_hkey")

@@ -68,6 +68,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pdal_spark.geo import sql_double
+
 __all__ = ["parse_pipeline", "projpipeline", "pipeline_sql",
            "pipeline_np", "ELLIPSOIDS"]
 
@@ -114,7 +116,7 @@ class _Sx:
 
     @staticmethod
     def _c(v) -> str:
-        return v.s if isinstance(v, _Sx) else repr(float(v))
+        return v.s if isinstance(v, _Sx) else sql_double(v, "duckdb")
 
     def _bin(self, op, other, rev=False):
         a, b = (_Sx._c(other), self.s) if rev else (self.s, _Sx._c(other))
@@ -173,7 +175,7 @@ class _SqlB:
     """ANSI-SQL string backend (DuckDB oracle twin)."""
     @staticmethod
     def lit(v):
-        return _Sx(repr(float(v)))
+        return _Sx(sql_double(v, "duckdb"))
 
     sin = _sqlfn("sin")
     cos = _sqlfn("cos")
@@ -570,7 +572,12 @@ def _lcc(B, p, x, y, z, inverse):
     lon_0/x_0/y_0).  Forward: Snyder 15-1..15-10 via the shared
     LccParams constants (operators/reprojection.py).  Inverse: Snyder
     15-9..15-11 + the closed-form conformal-latitude series (Snyder
-    3-5).  Radian-native."""
+    3-5).  Radian-native.
+
+    The only LCC formula in the engine: reprojection's ``_LCC`` zones
+    (and ``register_lcc`` additions) run this step with their ``a`` and
+    ``es``, forward under their own |dlon| < 90, |lat| < 89.5 keep rule
+    in place of the mask below, inverse as written."""
     from pdal_spark.operators.reprojection import LccParams
 
     a, e2 = _ellps(p)

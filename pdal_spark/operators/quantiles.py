@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pdal_spark.geo import sql_double
+
 __all__ = ["grouped_quantiles", "grouped_quantiles_sql"]
 
 
@@ -75,9 +77,10 @@ def grouped_quantiles_sql(
     id_col: str = "doc_id",
 ) -> str:
     g = ", ".join(by)
-    # CAST: a bare 0.25 literal is DECIMAL(3,2) in DuckDB; Spark emits
-    # DoubleType, and the driver's value hash is dtype-sensitive.
-    q_rows = ", ".join(f"(CAST({float(q)!r} AS DOUBLE))" for q in qs)
+    # DOUBLE literals: a bare 0.25 is DECIMAL(3,2) in DuckDB, and CAST of
+    # it still goes through DECIMAL; Spark emits DoubleType, and the
+    # value hash that compares the two is dtype-sensitive.
+    q_rows = ", ".join(f"({sql_double(q, 'duckdb')})" for q in qs)
     return f"""
       WITH ranked AS (
         SELECT {g}, {value_expr} AS value,

@@ -1,52 +1,48 @@
 """filters.reprojection / filters.projpipeline — CRS transforms.
 
-Reference semantics (/root/reference/filters/ReprojectionFilter.cpp):
+Reference semantics (PDAL filters/ReprojectionFilter.cpp):
   * transform (X, Y, Z) into out_srs; points whose transform FAILS are
     DROPPED (processOne returns ok, :110-112, 118-133).
   * the general GDAL/PROJ engine is out of sandbox scope (no pyproj);
     the transform registry here ships the closed-form pairs a web-corpus
-    engine actually needs — lon/lat (EPSG:4326) <-> Web-Mercator
-    (EPSG:3857) — as pure Column math (public spherical-Mercator
-    formulas), plus a pluggable hook for vectorized pyproj kernels when
-    the library exists.
+    engine actually needs: EPSG:4326 lon/lat to and from Web-Mercator
+    (EPSG:3857), the WGS84 UTM zones (EPSG:326zz/327zz), the Lambert
+    conformal conic zones in ``_LCC`` (plus any ``register_lcc`` adds)
+    and the ``_EPSG_PIPE`` codes.
 
-Failure semantics for 4326->3857: |lat| >= the Mercator cutoff
-(atan(sinh(pi)) deg ~ 85.051129) diverges — those rows are dropped,
-matching the reference's drop-on-failure. The cutoff is exactly the
-Web-Mercator square's edge.
+One source per transform: the registry holds no formulas. ``_route``
+maps a pair to a list of operators/projpipeline.py steps (a deg->rad
+``unitconvert``, then ``webmerc``, ``utm``, ``lcc`` or the ``_EPSG_PIPE``
+string's steps), run forward, or backwards for the inverse pair.
+``reproject`` runs the list on the Column backend, ``reproject_sql`` on
+the SQL backend for the DuckDB oracle. ``reproject_np`` stays
+hand-written as the independent numpy oracle.
+
+Drop rules: each forward entry keeps its own domain, tested on the
+input degrees, in place of the steps' masks. For 4326->3857 that is
+|lat| < the Mercator cutoff (atan(sinh(pi)) deg ~ 85.051129, exactly the
+Web-Mercator square's edge); UTM adds |lon - lon0| < 45; LCC keeps
+|lon - lon0| < 90 and |lat| < 89.5. Inverse pairs and the _EPSG_PIPE
+codes keep the steps' own masks.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pdal_spark.operators import projpipeline as _pp
 
 R = 6378137.0  # WGS84 / spherical-Mercator radius
 MERC_MAX_LAT_DEG = math.degrees(math.atan(math.sinh(math.pi)))  # 85.05112878
 
 
-def _to_3857(x: Column, y: Column) -> tuple[Column, Column, Column]:
-    mx = x * F.lit(math.pi / 180.0) * F.lit(R)
-    my = F.log(F.tan(F.lit(math.pi / 4.0) + y * F.lit(math.pi / 360.0))) * F.lit(R)
-    ok = (y > F.lit(-MERC_MAX_LAT_DEG)) & (y < F.lit(MERC_MAX_LAT_DEG))
-    return mx, my, ok
-
-
-def _to_4326(x: Column, y: Column) -> tuple[Column, Column, Column]:
-    lon = x / F.lit(R) * F.lit(180.0 / math.pi)
-    lat = (
-        F.atan(F.exp(y / F.lit(R))) * F.lit(2.0) - F.lit(math.pi / 2.0)
-    ) * F.lit(180.0 / math.pi)
-    return lon, lat, F.lit(True)
-
-
 # --- WGS84 UTM (EPSG:326xx north / 327xx south) ----------------------------
 # Transverse-Mercator series (Snyder 1987, "Map Projections — A Working
-# Manual", eqs. 3-21, 8-9..8-15; public formulas). Pure Column math —
-# trig + polynomials in whole-stage codegen, ~0.1 mm series accuracy in
-# zone. Proves the transform-registry seam with a second real pair.
+# Manual", eqs. 3-21, 8-9..8-15; public formulas), ~0.1 mm series accuracy
+# in zone: projpipeline's utm step, and below the numpy oracle's constants.
 
 _A_WGS84 = 6378137.0
 _F_WGS84 = 1.0 / 298.257223563
@@ -75,48 +71,6 @@ def _utm_zone(out_srs: str) -> tuple[int, bool] | None:
         return None
     zone = int(code[3:])
     return (zone, north) if 1 <= zone <= 60 else None
-
-
-def _to_utm_factory(zone: int, north: bool):
-    lon0 = math.radians(-183.0 + 6.0 * zone)
-
-    def _to_utm(x: Column, y: Column) -> tuple[Column, Column, Column]:
-        lam = x * F.lit(math.pi / 180.0)
-        phi = y * F.lit(math.pi / 180.0)
-        sin_p, cos_p, tan_p = F.sin(phi), F.cos(phi), F.tan(phi)
-        n_rad = F.lit(_A_WGS84) / F.sqrt(F.lit(1.0) - F.lit(_E2) * sin_p * sin_p)
-        t = tan_p * tan_p
-        c = F.lit(_EP2) * cos_p * cos_p
-        a_ = (lam - F.lit(lon0)) * cos_p
-        m = F.lit(_A_WGS84) * (
-            F.lit(_M0) * phi
-            - F.lit(_M2) * F.sin(phi * 2.0)
-            + F.lit(_M4) * F.sin(phi * 4.0)
-            - F.lit(_M6) * F.sin(phi * 6.0)
-        )
-        easting = F.lit(500000.0) + F.lit(_K0) * n_rad * (
-            a_
-            + (F.lit(1.0) - t + c) * a_**3 / 6.0
-            + (F.lit(5.0) - t * 18.0 + t * t + c * 72.0 - F.lit(58.0 * _EP2))
-            * a_**5 / 120.0
-        )
-        northing = F.lit(0.0 if north else 10000000.0) + F.lit(_K0) * (
-            m
-            + n_rad * tan_p * (
-                a_**2 / 2.0
-                + (F.lit(5.0) - t + c * 9.0 + c * c * 4.0) * a_**4 / 24.0
-                + (F.lit(61.0) - t * 58.0 + t * t + c * 600.0
-                   - F.lit(330.0 * _EP2)) * a_**6 / 720.0
-            )
-        )
-        dlon = x - F.lit(math.degrees(lon0))
-        ok = (
-            (F.abs(dlon) < F.lit(UTM_MAX_DLON_DEG))
-            & (y > F.lit(-MERC_MAX_LAT_DEG)) & (y < F.lit(MERC_MAX_LAT_DEG))
-        )
-        return easting, northing, ok
-
-    return _to_utm
 
 
 # --- Lambert conformal conic, 2 standard parallels (ellipsoidal) -----------
@@ -178,34 +132,6 @@ def register_lcc(srs: str, params: LccParams) -> None:
     _LCC[srs] = params
 
 
-def _to_lcc_factory(p: LccParams):
-    def _to_lcc(x: Column, y: Column) -> tuple[Column, Column, Column]:
-        phi = y * F.lit(math.pi / 180.0)
-        sin_p = F.sin(phi)
-        # t(phi), Snyder 15-9
-        t = F.tan(F.lit(math.pi / 4.0) - phi / 2.0) / F.pow(
-            (F.lit(1.0) - F.lit(p.e) * sin_p)
-            / (F.lit(1.0) + F.lit(p.e) * sin_p),
-            F.lit(p.e / 2.0),
-        )
-        rho = F.lit(p.a * p.big_f) * F.pow(t, F.lit(p.n))
-        theta = F.lit(p.n) * (x - F.lit(p.lon0)) * F.lit(math.pi / 180.0)
-        easting = F.lit(p.fe) + rho * F.sin(theta)
-        northing = F.lit(p.fn) + F.lit(p.rho0) - rho * F.cos(theta)
-        ok = (
-            (F.abs(x - F.lit(p.lon0)) < F.lit(LCC_MAX_DLON_DEG))
-            & (F.abs(y) < F.lit(LCC_MAX_LAT_DEG))
-        )
-        return easting, northing, ok
-
-    return _to_lcc
-
-
-_TRANSFORMS = {
-    ("EPSG:4326", "EPSG:3857"): _to_3857,
-    ("EPSG:3857", "EPSG:4326"): _to_4326,
-}
-
 #: well-known EPSG codes resolved through the projpipeline step
 #: vocabulary (operators/projpipeline.py) — forward AND inverse come
 #: from the same step implementations via reverse_transfo.
@@ -226,67 +152,81 @@ _EPSG_PIPE = {
 }
 
 
-def _pipe_transform_factory(op: str, reverse: bool):
-    from pdal_spark.operators import projpipeline as _pp
-
-    steps = _pp.parse_pipeline(
-        "+proj=pipeline +step +proj=unitconvert +xy_in=deg "
-        "+xy_out=rad +step " + op)
-
-    def _fn(x: Column, y: Column) -> tuple[Column, Column, Column]:
-        nx, ny, _, ok = _pp._apply(
-            _pp._ColB, steps, x, y, F.lit(0.0), reverse)
-        return nx, ny, ok
-
-    return _fn
+_DEG2RAD = _pp.Step("unitconvert", {"xy_in": "deg", "xy_out": "rad"})
 
 
-def _pipe_transform_sql(op: str, reverse: bool, x: str, y: str):
-    from pdal_spark.operators import projpipeline as _pp
+def _domain(max_lat: float, lon0: float = 0.0, max_dlon: float | None = None):
+    """A forward pair's keep rule on the input degrees, written once for
+    every projpipeline backend B: -max_lat < lat < max_lat and, when
+    max_dlon is given, |lon - lon0| < max_dlon."""
 
-    steps = _pp.parse_pipeline(
-        "+proj=pipeline +step +proj=unitconvert +xy_in=deg "
-        "+xy_out=rad +step " + op)
-    nx, ny, _, ok = _pp._apply(
-        _pp._SqlB, steps, _pp._Sx(x), _pp._Sx(y), _pp._Sx("0.0"), reverse)
-    return nx.s, ny.s, _pp._Sx._c(ok)
+    def keep(B, x, y):
+        ok = B.both(y > B.lit(-max_lat), y < B.lit(max_lat))
+        if max_dlon is None:
+            return ok
+        return B.both(B.abs(x - B.lit(lon0)) < B.lit(max_dlon), ok)
 
-
-def _from_utm_factory(zone: int, north: bool):
-    """UTM -> WGS84 lon/lat (degrees): the inverse transverse-Mercator
-    series (Snyder 8-18..8-25) shared with the projpipeline step
-    vocabulary — written once in operators/projpipeline.py and
-    instantiated here on the Column backend."""
-    from pdal_spark.operators import projpipeline as _pp
-
-    p = {"zone": zone, "south": not north, "ellps": "WGS84"}
-
-    def _from_utm(x: Column, y: Column) -> tuple[Column, Column, Column]:
-        lam, phi, _, ok = _pp._utm(
-            _pp._ColB, p, x, y, F.lit(0.0), inverse=True)
-        d = 180.0 / math.pi
-        return lam * F.lit(d), phi * F.lit(d), ok
-
-    return _from_utm
+    return keep
 
 
-def _from_lcc_factory(p: LccParams):
-    """LCC -> WGS84/GRS80 lon/lat (degrees): the closed-form inverse
-    (Snyder 15-9..15-11 + conformal-latitude series) shared with the
-    projpipeline lcc step, instantiated on the Column backend."""
-    from pdal_spark.operators import projpipeline as _pp
+def _projection(srs: str):
+    """srs -> (projpipeline steps from EPSG:4326 degrees to srs, forward
+    keep rule or None), or None when srs is not registered."""
+    if srs == "EPSG:3857":
+        return ([_DEG2RAD, _pp.Step("webmerc", {"ellps": "WGS84"})],
+                _domain(MERC_MAX_LAT_DEG))
+    utm = _utm_zone(srs)
+    if utm is not None:
+        zone, north = utm
+        step = _pp.Step("utm", {"zone": zone, "south": not north,
+                                "ellps": "WGS84"})
+        # the round trip through radians is reproject_np's, so the kept
+        # rows match it exactly
+        lon0 = math.degrees(math.radians(-183.0 + 6.0 * zone))
+        return ([_DEG2RAD, step],
+                _domain(MERC_MAX_LAT_DEG, lon0, UTM_MAX_DLON_DEG))
+    if srs in _LCC:
+        p = _LCC[srs]
+        step = _pp.Step("lcc", {"lat_1": p.lat1, "lat_2": p.lat2,
+                                "lat_0": p.lat0, "lon_0": p.lon0,
+                                "x_0": p.fe, "y_0": p.fn,
+                                "a": p.a, "es": p.e2})
+        return ([_DEG2RAD, step],
+                _domain(LCC_MAX_LAT_DEG, p.lon0, LCC_MAX_DLON_DEG))
+    if srs in _EPSG_PIPE:
+        return [_DEG2RAD, *_pp.parse_pipeline(_EPSG_PIPE[srs])], None
+    return None
 
-    prm = {"lat_1": p.lat1, "lat_2": p.lat2, "lat_0": p.lat0,
-           "lon_0": p.lon0, "x_0": p.fe, "y_0": p.fn,
-           "a": p.a, "es": p.e2}
 
-    def _from_lcc(x: Column, y: Column) -> tuple[Column, Column, Column]:
-        lam, phi, _, _ = _pp._lcc(
-            _pp._ColB, prm, x, y, F.lit(0.0), inverse=True)
-        d = 180.0 / math.pi
-        return lam * F.lit(d), phi * F.lit(d), F.lit(True)
+def _route(in_srs: str, out_srs: str):
+    """The one resolver behind reproject and reproject_sql ->
+    (steps, reverse, keep).
 
-    return _from_lcc
+    Every registered pair runs between EPSG:4326 degrees and one
+    projected CRS; the inverse pair runs the same steps with
+    reverse=True. keep(B, lon, lat) is a forward pair's own domain rule
+    and replaces the steps' masks; with keep None (inverse pairs and
+    the _EPSG_PIPE codes) the steps' masks decide which rows drop.
+    """
+    entry, reverse = None, False
+    if in_srs == "EPSG:4326":
+        entry = _projection(out_srs)
+    elif out_srs == "EPSG:4326":
+        entry, reverse = _projection(in_srs), True
+    if entry is None:
+        raise ValueError(
+            f"no built-in transform {in_srs} -> {out_srs}; register a "
+            f"vectorized kernel (pyproj) for arbitrary CRS pairs"
+        )
+    steps, keep = entry
+    return steps, reverse, None if reverse else keep
+
+
+def _transform(B, in_srs: str, out_srs: str, x, y):
+    """(x, y, ok) of the pair on backend B."""
+    steps, reverse, keep = _route(in_srs, out_srs)
+    nx, ny, _, ok = _pp._apply(B, steps, x, y, B.lit(0.0), reverse)
+    return nx, ny, ok if keep is None else keep(B, x, y)
 
 
 def reproject(
@@ -299,29 +239,7 @@ def reproject(
     """Transform (x, y) from in_srs to out_srs, dropping failed rows."""
     if in_srs == out_srs:
         return df
-    fn = _TRANSFORMS.get((in_srs, out_srs))
-    if fn is None and in_srs == "EPSG:4326":
-        utm = _utm_zone(out_srs)
-        if utm is not None:
-            fn = _to_utm_factory(*utm)
-        elif out_srs in _LCC:
-            fn = _to_lcc_factory(_LCC[out_srs])
-    if fn is None and out_srs == "EPSG:4326":
-        utm = _utm_zone(in_srs)
-        if utm is not None:
-            fn = _from_utm_factory(*utm)
-        elif in_srs in _LCC:
-            fn = _from_lcc_factory(_LCC[in_srs])
-    if fn is None and in_srs == "EPSG:4326" and out_srs in _EPSG_PIPE:
-        fn = _pipe_transform_factory(_EPSG_PIPE[out_srs], False)
-    if fn is None and out_srs == "EPSG:4326" and in_srs in _EPSG_PIPE:
-        fn = _pipe_transform_factory(_EPSG_PIPE[in_srs], True)
-    if fn is None:
-        raise ValueError(
-            f"no built-in transform {in_srs} -> {out_srs}; register a "
-            f"vectorized kernel (pyproj) for arbitrary CRS pairs"
-        )
-    nx, ny, ok = fn(F.col(x), F.col(y))
+    nx, ny, ok = _transform(_pp._ColB, in_srs, out_srs, F.col(x), F.col(y))
     return (
         df.withColumn("_ok", ok)
         .filter(F.col("_ok"))
@@ -332,97 +250,8 @@ def reproject(
 
 def reproject_sql(in_srs: str, out_srs: str, x: str = "x", y: str = "y"):
     """(x_sql, y_sql, where_sql) twins for the DuckDB oracle."""
-    if (in_srs, out_srs) == ("EPSG:4326", "EPSG:3857"):
-        xs = f"({x} * {math.pi / 180.0!r} * {R!r})"
-        ys = f"(ln(tan({math.pi / 4.0!r} + {y} * {math.pi / 360.0!r})) * {R!r})"
-        w = f"({y} > {-MERC_MAX_LAT_DEG!r} AND {y} < {MERC_MAX_LAT_DEG!r})"
-        return xs, ys, w
-    if (in_srs, out_srs) == ("EPSG:3857", "EPSG:4326"):
-        xs = f"({x} / {R!r} * {180.0 / math.pi!r})"
-        ys = f"((atan(exp({y} / {R!r})) * 2.0 - {math.pi / 2.0!r}) * {180.0 / math.pi!r})"
-        return xs, ys, "TRUE"
-    if in_srs == "EPSG:4326":
-        utm = _utm_zone(out_srs)
-        if utm is not None:
-            zone, north = utm
-            lon0 = math.radians(-183.0 + 6.0 * zone)
-            lam = f"({x} * {math.pi / 180.0!r})"
-            phi = f"({y} * {math.pi / 180.0!r})"
-            sp, cp, tp = f"sin({phi})", f"cos({phi})", f"tan({phi})"
-            nr = f"({_A_WGS84!r} / sqrt(1.0 - {_E2!r} * {sp} * {sp}))"
-            t = f"({tp} * {tp})"
-            c = f"({_EP2!r} * {cp} * {cp})"
-            a_ = f"(({lam} - {lon0!r}) * {cp})"
-            m = (
-                f"({_A_WGS84!r} * ({_M0!r} * {phi} - {_M2!r} * sin({phi} * 2.0)"
-                f" + {_M4!r} * sin({phi} * 4.0) - {_M6!r} * sin({phi} * 6.0)))"
-            )
-            xs = (
-                f"(500000.0 + {_K0!r} * {nr} * ({a_}"
-                f" + (1.0 - {t} + {c}) * power({a_}, 3) / 6.0"
-                f" + (5.0 - {t} * 18.0 + {t} * {t} + {c} * 72.0"
-                f" - {58.0 * _EP2!r}) * power({a_}, 5) / 120.0))"
-            )
-            fn0 = 0.0 if north else 10000000.0
-            ys = (
-                f"({fn0!r} + {_K0!r} * ({m} + {nr} * {tp} * ("
-                f"power({a_}, 2) / 2.0"
-                f" + (5.0 - {t} + {c} * 9.0 + {c} * {c} * 4.0)"
-                f" * power({a_}, 4) / 24.0"
-                f" + (61.0 - {t} * 58.0 + {t} * {t} + {c} * 600.0"
-                f" - {330.0 * _EP2!r}) * power({a_}, 6) / 720.0)))"
-            )
-            w = (
-                f"(abs({x} - {math.degrees(lon0)!r}) < {UTM_MAX_DLON_DEG!r}"
-                f" AND {y} > {-MERC_MAX_LAT_DEG!r} AND {y} < {MERC_MAX_LAT_DEG!r})"
-            )
-            return xs, ys, w
-        if out_srs in _LCC:
-            p = _LCC[out_srs]
-            phi = f"({y} * {math.pi / 180.0!r})"
-            sp = f"sin({phi})"
-            t = (
-                f"(tan({math.pi / 4.0!r} - {phi} / 2.0)"
-                f" / power((1.0 - {p.e!r} * {sp}) / (1.0 + {p.e!r} * {sp}),"
-                f" {p.e / 2.0!r}))"
-            )
-            rho = f"({p.a * p.big_f!r} * power({t}, {p.n!r}))"
-            th = f"({p.n!r} * ({x} - {p.lon0!r}) * {math.pi / 180.0!r})"
-            xs_ = f"({p.fe!r} + {rho} * sin({th}))"
-            ys_ = f"({p.fn!r} + {p.rho0!r} - {rho} * cos({th}))"
-            w = (
-                f"(abs({x} - {p.lon0!r}) < {LCC_MAX_DLON_DEG!r}"
-                f" AND abs({y}) < {LCC_MAX_LAT_DEG!r})"
-            )
-            return xs_, ys_, w
-    if out_srs == "EPSG:4326":
-        utm = _utm_zone(in_srs)
-        d = repr(180.0 / math.pi)
-        if utm is not None:
-            from pdal_spark.operators import projpipeline as _pp
-
-            zone, north = utm
-            p = {"zone": zone, "south": not north, "ellps": "WGS84"}
-            lam, phi, _, ok = _pp._utm(
-                _pp._SqlB, p, _pp._Sx(x), _pp._Sx(y), _pp._Sx("0.0"),
-                inverse=True)
-            return f"({lam.s} * {d})", f"({phi.s} * {d})", ok.s
-        if in_srs in _LCC:
-            from pdal_spark.operators import projpipeline as _pp
-
-            lp = _LCC[in_srs]
-            prm = {"lat_1": lp.lat1, "lat_2": lp.lat2, "lat_0": lp.lat0,
-                   "lon_0": lp.lon0, "x_0": lp.fe, "y_0": lp.fn,
-                   "a": lp.a, "es": lp.e2}
-            lam, phi, _, _ = _pp._lcc(
-                _pp._SqlB, prm, _pp._Sx(x), _pp._Sx(y), _pp._Sx("0.0"),
-                inverse=True)
-            return f"({lam.s} * {d})", f"({phi.s} * {d})", "TRUE"
-    if in_srs == "EPSG:4326" and out_srs in _EPSG_PIPE:
-        return _pipe_transform_sql(_EPSG_PIPE[out_srs], False, x, y)
-    if out_srs == "EPSG:4326" and in_srs in _EPSG_PIPE:
-        return _pipe_transform_sql(_EPSG_PIPE[in_srs], True, x, y)
-    raise ValueError((in_srs, out_srs))
+    nx, ny, ok = _transform(_pp._SqlB, in_srs, out_srs, _pp._Sx(x), _pp._Sx(y))
+    return nx.s, ny.s, _pp._Sx._c(ok)
 
 
 def reproject_np(xs, ys, in_srs: str = "EPSG:4326", out_srs: str = "EPSG:3857"):

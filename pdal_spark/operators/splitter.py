@@ -47,31 +47,26 @@ def split(
     if buffer <= 0.0:
         return out
 
-    xc, yc = F.col(x), F.col(y)
     tx, ty = F.col("tile_x"), F.col("tile_y")
 
-    def sq(xp: Column, yp: Column) -> Column:
-        return geo.square_contains(xp, yp, xc, yc, origin_x, origin_y, length, buffer)
+    def first(*offsets: tuple[int, int]) -> Column:
+        """The first neighbour tile, in `offsets` order, whose buffered
+        square strictly contains the point; null when none does."""
+        chain = F.lit(None)
+        for dx, dy in reversed(offsets):
+            inside = F.expr(geo.square_contains_sql(
+                f"(`tile_x` {dx:+d})", f"(`tile_y` {dy:+d})",
+                geo.sql_ident(x), geo.sql_ident(y),
+                origin_x, origin_y, length, buffer, "spark",
+            ))
+            cell = F.struct((tx + dx).alias("tx"), (ty + dy).alias("ty"))
+            chain = F.when(inside, cell).otherwise(chain)
+        return chain
 
     # else-if chains (SplitterFilter.cpp:147-166): at most one winner each.
-    x_nb = F.when(sq(tx - 1, ty), F.struct((tx - 1).alias("tx"), ty.alias("ty"))).otherwise(
-        F.when(sq(tx + 1, ty), F.struct((tx + 1).alias("tx"), ty.alias("ty")))
-    )
-    y_nb = F.when(sq(tx, ty - 1), F.struct(tx.alias("tx"), (ty - 1).alias("ty"))).otherwise(
-        F.when(sq(tx, ty + 1), F.struct(tx.alias("tx"), (ty + 1).alias("ty")))
-    )
-    d_nb = (
-        F.when(sq(tx - 1, ty - 1), F.struct((tx - 1).alias("tx"), (ty - 1).alias("ty")))
-        .otherwise(
-            F.when(sq(tx - 1, ty + 1), F.struct((tx - 1).alias("tx"), (ty + 1).alias("ty")))
-            .otherwise(
-                F.when(sq(tx + 1, ty - 1), F.struct((tx + 1).alias("tx"), (ty - 1).alias("ty")))
-                .otherwise(
-                    F.when(sq(tx + 1, ty + 1), F.struct((tx + 1).alias("tx"), (ty + 1).alias("ty")))
-                )
-            )
-        )
-    )
+    x_nb = first((-1, 0), (1, 0))
+    y_nb = first((0, -1), (0, 1))
+    d_nb = first((-1, -1), (-1, 1), (1, -1), (1, 1))
     cells = F.filter(
         F.array(F.struct(tx.alias("tx"), ty.alias("ty")), x_nb, y_nb, d_nb),
         lambda s: s.isNotNull(),

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pdal_spark.geo import sql_double
+
 
 def _moment_exprs(dim: str, prefix: str, round_to: int | None):
     v = F.col(dim).cast("double")
@@ -104,18 +106,6 @@ def stats_sql(table_expr: str, dims: list[str], round_to: int | None = None) -> 
             f"{r(samp_ex)} AS {p}kurtosis",
         ]
     return f"SELECT {', '.join(cols)} FROM {table_expr}"
-
-
-def enumerate_dim(df: DataFrame, dim: str) -> DataFrame:
-    """`enumerate` option (StatsFilter.cpp:159-163): exact distinct values
-    with counts."""
-    return df.groupBy(dim).agg(F.count("*").alias("count"))
-
-
-def distinct_count(df: DataFrame, dim: str) -> DataFrame:
-    """`count` option: exact distinct-value count (use
-    approx_count_distinct at the 100TB scale path)."""
-    return df.agg(F.countDistinct(dim).alias(f"{dim}_distinct"))
 
 
 def info_bounds(df: DataFrame, dims: list[str]) -> DataFrame:
@@ -210,9 +200,10 @@ def exact_quantiles_sql(
     """DuckDB twin of exact_quantiles — the same counting formulation
     (independently, DuckDB's native quantile_disc agrees; pytest pins
     that equivalence)."""
-    # CAST: a bare 0.25 literal is DECIMAL(3,2) in DuckDB; Spark emits
-    # DoubleType, and the driver's value hash is dtype-sensitive.
-    qvals = ", ".join(f"(CAST({float(q)!r} AS DOUBLE))" for q in qs)
+    # DOUBLE literals: a bare 0.25 is DECIMAL(3,2) in DuckDB, and CAST of
+    # it still goes through DECIMAL; Spark emits DoubleType, and the
+    # value hash that compares the two is dtype-sensitive.
+    qvals = ", ".join(f"({sql_double(q, 'duckdb')})" for q in qs)
     grp = ", ".join(by) + ", " if by else ""
     part = f"PARTITION BY {', '.join(by)} " if by else ""
     return f"""

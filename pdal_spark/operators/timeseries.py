@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pdal_spark.geo import sql_double
+
 
 def _epoch_seconds(df: DataFrame, ts: str) -> Column:
     """Epoch seconds (double, microsecond-exact) for any ts column type.
@@ -69,7 +71,7 @@ def sessionize_sql(
     as DOUBLE, matching Spark's cast('double') on timestamps)."""
     prev = f"lag(epoch({ts})) OVER (PARTITION BY {key} ORDER BY {ts})"
     is_new = (
-        f"CASE WHEN {prev} IS NULL OR epoch({ts}) - {prev} > {gap_seconds!r} "
+        f"CASE WHEN {prev} IS NULL OR epoch({ts}) - {prev} > {sql_double(gap_seconds, 'duckdb')} "
         f"THEN 1 ELSE 0 END"
     )
     return (
@@ -220,5 +222,5 @@ def interval_join_sql(
     return (
         f"SELECT {left_select}, {pay} FROM {left_table} l "
         f"JOIN {right_table} r ON l.{key} = r.{key} "
-        f"AND abs(epoch(l.{ts}) - epoch(r.{ts})) <= {delta_seconds!r}"
+        f"AND abs(epoch(l.{ts}) - epoch(r.{ts})) <= {sql_double(delta_seconds, 'duckdb')}"
     )

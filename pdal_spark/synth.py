@@ -124,43 +124,3 @@ def with_skew(
         "y", F.when(is_hot, F.lit(miny) + fy * (maxy - miny)).otherwise(F.col("y"))
     )
 
-
-def synth_corpus(
-    spark: SparkSession,
-    n: int,
-    words_per_doc: int = 30,
-    dup_every: int = 100,
-    vocab_bits: int = 20,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """(doc_id, text) corpus with a CONTROLLED duplicate rate — the
-    dedup-benchmark fixture.
-
-    Tokens are drawn from a 2^vocab_bits hash-derived space ("w<k>"), so
-    two random docs share essentially no words (E[overlap] ~
-    words^2/2^bits); every dup_every-th doc is an exact clone of its
-    predecessor. Near-dup output is therefore ~n/dup_every pairs — the
-    workload measures the dedup PIPELINE (signatures, banded join,
-    verify), not a quadratic pair dump. Deterministic, RNG-free,
-    partition-count-invariant.
-    """
-    df = spark.range(
-        0, n, 1, num_partitions or spark.sparkContext.defaultParallelism
-    )
-    i = F.col("id")
-    base = i - F.when(
-        (i % dup_every == dup_every - 1) & (i > 0), F.lit(1)
-    ).otherwise(F.lit(0))
-    mask = (1 << vocab_bits) - 1
-    body = F.array_join(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(words_per_doc - 1)),
-            lambda j: F.concat(
-                F.lit("w"),
-                F.pmod(F.xxhash64(base * F.lit(words_per_doc) + j), F.lit(mask + 1))
-                .cast("string"),
-            ),
-        ),
-        " ",
-    )
-    return df.select(i.alias("doc_id"), body.alias("text"))

@@ -1,10 +1,11 @@
 """One SQL source per spatial formula. Each ``*_sql`` builder's Spark
 text (through F.expr), its DuckDB text (through DuckDB) and the numpy
 oracle agree bit for bit, on the inputs where the formulas are most
-fragile: exact negative tile boundaries, hex mini-column and half-row
-edges, cell-grid clamp edges and domain corners, LCG ids near 2^31, a
-polygon with horizontal edges, and null coordinates (Spark and DuckDB
-only: numpy has no null). The Spark Columns cost a few py4j calls each."""
+fragile: exact negative tile boundaries, buffered-square edges, hex
+mini-column and half-row edges, cell-grid clamp edges and domain corners,
+LCG ids near 2^31, a polygon with horizontal edges, and null coordinates
+(Spark and DuckDB only: numpy has no null). The Hilbert key's oracle is
+the textbook xy2d loop. The Spark Columns cost a few py4j calls each."""
 
 from __future__ import annotations
 
@@ -17,9 +18,15 @@ from pdal_spark import geo
 from pdal_spark.operators import cellindex as ci
 from pdal_spark.operators import crop
 from pdal_spark.operators.crop import Box, Circle, Polygon, pnp_even_odd_np
+from pdal_spark.operators.layout import HILBERT_ORDER, hilbert_key, hilbert_key_sql
+from test_layout import _grid, _xy2d
+from test_splitter import square_contains_py
 
 OX, OY = -60.0, -30.0        # shared origin: tile, hex and raster grids
 TILE = 30.0                   # x < OX puts exact boundaries at dv/TILE < 0
+BUF = 7.5                     # splitter buffer: square edges at tile edges -+ BUF
+NEIGHBOURS = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1) if dx or dy]
+WORLD = (-180.0, -90.0, 180.0, 90.0)  # Hilbert bounds; +-200, +-100 clamp
 HEX_H = 2.0 * geo.SQRT_3
 HEX_W = geo.hex_dims(HEX_H)[0]
 EDGE, HEIGHT = 7.5, 16        # raster cell edge and row count
@@ -40,6 +47,12 @@ def _around(vals) -> list[float]:
             for w in (np.nextafter(v, -np.inf), v, np.nextafter(v, np.inf))]
 
 
+def _buffer_edges(origin: float) -> list[float]:
+    """Buffered-square edges of a few tiles, as the splitter computes them."""
+    lo = [origin + k * TILE - BUF for k in (-2, 0, 1)]
+    return lo + [v + TILE + 2 * BUF for v in lo]
+
+
 def _inputs() -> list[tuple]:
     n = 1 << LEVEL
     xs = _around(
@@ -49,6 +62,7 @@ def _inputs() -> list[tuple]:
         + [-200.0, 200.0]                                           # clamp
         + [-180.0 + k * 360.0 / n for k in (1, n // 2, n - 1)]      # cell edges
         + [-75.0, -45.0, VX, 12.3]
+        + _buffer_edges(OX)
     )
     ys = _around(
         [-90.0 + TILE * k for k in range(7)]
@@ -56,6 +70,7 @@ def _inputs() -> list[tuple]:
         + [-100.0, 100.0]
         + [-90.0 + k * 180.0 / n for k in (1, n // 2, n - 1)]
         + [VY, 45.0, 7.7]
+        + _buffer_edges(OY)
     )
     px = [x for x in xs for _ in ys]
     py = [y for _ in xs for y in ys]
@@ -74,6 +89,26 @@ def _cell_id_py(x, y):
     return ci.covering((x, y, x, y), LEVEL)[0]
 
 
+def _hilbert_py(x, y):
+    xi, yi = _grid(x, WORLD[0], WORLD[2]), _grid(y, WORLD[1], WORLD[3])
+    return _xy2d(HILBERT_ORDER, xi, yi)
+
+
+def _square_sql(x, y, d):
+    tx, ty = geo.tile_coord_sql(x, OX, TILE, d), geo.tile_coord_sql(y, OY, TILE, d)
+    return [geo.square_contains_sql(f"({tx} {dx:+d})", f"({ty} {dy:+d})", x, y,
+                                    OX, OY, TILE, BUF, d)
+            for dx, dy in NEIGHBOURS]
+
+
+def _square_py(x, y):
+    tx, ty = geo.tile_coord_np(x, OX, TILE), geo.tile_coord_np(y, OY, TILE)
+    return [np.array([square_contains_py(int(a) + dx, int(b) + dy, u, v,
+                                         TILE, OX, OY, BUF)
+                      for a, b, u, v in zip(tx, ty, x, y)])
+            for dx, dy in NEIGHBOURS]
+
+
 # name -> (SQL texts for (id, x, y, dialect), numpy outputs for (id, x, y))
 CASES = {
     "geocode_lcg": (
@@ -84,6 +119,10 @@ CASES = {
         lambda i, x, y, d: [geo.tile_coord_sql(x, OX, TILE, d),
                             geo.tile_coord_sql(y, OY, TILE, d)],
         lambda i, x, y: [geo.tile_coord_np(x, OX, TILE), geo.tile_coord_np(y, OY, TILE)],
+    ),
+    "square_contains": (
+        lambda i, x, y, d: _square_sql(x, y, d),
+        lambda i, x, y: _square_py(x, y),
     ),
     "hex_cell": (
         lambda i, x, y, d: list(geo.hex_cell_sql(x, y, OX, OY, HEX_H, d)),
@@ -96,6 +135,10 @@ CASES = {
     "cell_id": (
         lambda i, x, y, d: [ci.cell_id_sql(x, y, LEVEL, dialect=d)],
         lambda i, x, y: [np.array([_cell_id_py(a, b) for a, b in zip(x, y)])],
+    ),
+    "hilbert_key": (
+        lambda i, x, y, d: [hilbert_key_sql(x, y, WORLD, d)],
+        lambda i, x, y: [np.array([_hilbert_py(a, b) for a, b in zip(x, y)])],
     ),
     "crop_box": (
         lambda i, x, y, d: [crop.box_contains_sql(BOX, x, y, dialect=d)],
@@ -183,7 +226,8 @@ def _py4j_calls(spark, monkeypatch, build) -> tuple[int, int]:
     lambda: [ci.cell_id("x", "y", LEVEL)],
     lambda: list(geo.hex_cell("x", "y", OX, OY, HEX_H)),
     lambda: [geo.tile_coord("x", OX, TILE), geo.tile_coord("y", OY, TILE)],
-], ids=["cell_id", "hex_cell", "tile_coord"])
+    lambda: [hilbert_key("x", "y", WORLD)],
+], ids=["cell_id", "hex_cell", "tile_coord", "hilbert_key"])
 def test_column_builders_cost_few_py4j_calls(spark, monkeypatch, build):
     """Each Column is one F.expr over the builder's text: a handful of
     py4j round trips, not one or more per operator node."""

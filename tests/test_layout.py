@@ -52,7 +52,7 @@ def test_hilbert_matches_classic_loop(spark):
     got = {
         r.page_id: r.hk
         for r in pts.withColumn(
-            "hk", hilbert_key(F.col("x"), F.col("y"), WORLD)
+            "hk", hilbert_key("x", "y", WORLD)
         ).collect()
     }
     for r in pts.collect():
@@ -63,7 +63,7 @@ def test_hilbert_matches_classic_loop(spark):
 
 def test_hilbert_key_range_and_distinctness(spark):
     pts = synth.synth_points(spark, 2000)
-    keyed = pts.withColumn("hk", hilbert_key(F.col("x"), F.col("y"), WORLD))
+    keyed = pts.withColumn("hk", hilbert_key("x", "y", WORLD))
     r = keyed.agg(
         F.min("hk"), F.max("hk"), F.count_distinct("hk"), F.count("*")
     ).collect()[0]
@@ -95,14 +95,13 @@ def test_hilbert_sql_twin_bit_exact(spark):
 
     pts = synth.synth_points(spark, 800)
     keyed = pts.withColumn(
-        "hilbert_key", hilbert_key(F.col("x"), F.col("y"), WORLD)
+        "hilbert_key", hilbert_key("x", "y", WORLD)
     ).select("page_id", "hilbert_key")
     pdf = pts.toPandas()
     con = duckdb.connect()
     con.register("pts", pdf)
-    sql = hilbert_key_sql(
-        "x", "y", WORLD, "SELECT * FROM pts", "page_id"
-    )
+    sql = (f"SELECT page_id, {hilbert_key_sql('x', 'y', WORLD)}"
+           f" AS hilbert_key FROM pts")
     want = dict(con.sql(sql).fetchall())
     got = {r.page_id: r.hilbert_key for r in keyed.collect()}
     assert got == want
@@ -154,7 +153,7 @@ def test_optimize_plan_is_one_exchange(spark, tmp_path):
     cat = SnapshotTable(spark, str(tmp_path / "t2"), stats_cols=("x", "y"))
     cat.append(synth.synth_points(spark, 5000))
     df = cat.read().withColumn(
-        "_hkey", hilbert_key(F.col("x"), F.col("y"), WORLD)
+        "_hkey", hilbert_key("x", "y", WORLD)
     )
     out = df.repartitionByRange(8, "_hkey").sortWithinPartitions("_hkey")
     assert n_exchanges(out) == 1

@@ -350,6 +350,22 @@ def test_reproject_sql_utm_inverse_twin():
     np.testing.assert_allclose(r.la.values, lat, atol=2e-8)
 
 
+def test_pipeline_sql_literals_are_exact_doubles():
+    """A 17-digit step parameter reaches DuckDB as the very double the
+    engine uses. Spliced as a bare decimal it would be a DECIMAL there,
+    and DuckDB's DECIMAL-to-DOUBLE cast lands one ulp off for this one."""
+    import duckdb
+
+    tx = 123.45678901234567
+    op = f"+proj=helmert +x={tx!r}"
+    xs, _, _, _ = pp.pipeline_sql(op)
+    got = duckdb.sql(
+        f"SELECT {xs} FROM (SELECT CAST(0 AS DOUBLE) AS x,"
+        f" CAST(0 AS DOUBLE) AS y)").fetchone()[0]
+    assert pp.pipeline_np(op, [0.0], [0.0])[0][0] == tx
+    assert got == tx
+
+
 def test_unitconvert_rejects_partial_and_unknown():
     with pytest.raises(ValueError, match="both"):
         pp.pipeline_np("+proj=unitconvert +xy_in=deg", [0.0], [0.0])

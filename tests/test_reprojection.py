@@ -50,6 +50,37 @@ def test_unknown_pair_raises(spark):
         rp.reproject(df, "EPSG:4326", "EPSG:27700")
 
 
+@pytest.mark.parametrize("srs, lon0", [
+    ("EPSG:32631", 3.0),
+    ("EPSG:2154", rp._LCC["EPSG:2154"].lon0),
+    ("EPSG:3347", rp._LCC["EPSG:3347"].lon0),
+])
+def test_forward_drop_rules_match_numpy(spark, srs, lon0):
+    """Forward pairs keep reproject_np's domain, not the projpipeline
+    steps' masks: UTM keeps |lat| < 85.0511 where its step keeps
+    |lat| < 85.5; LCC keeps |dlon| < 90 and |lat| < 89.5 where its step
+    keeps |dlon| < 60 and |lat| < 89."""
+    from pdal_spark.operators import projpipeline as pp
+
+    lats = [-89.7, -89.2, -85.3, -40.0, 0.0, 45.0, 85.3, 89.2, 89.7]
+    dlons = [-95.0, -75.0, -50.0, -1.0, 0.0, 2.0, 50.0, 75.0, 95.0]
+    xs = np.array([lon0 + d for d in dlons for _ in lats])
+    ys = np.array([la for _ in dlons for la in lats])
+    ids = np.arange(xs.size)
+    e, n, ok = rp.reproject_np(xs, ys, "EPSG:4326", srs)
+    steps, _, _ = rp._route("EPSG:4326", srs)
+    _, _, _, step_ok = pp._apply(pp._NpB, steps, xs, ys, 0.0 * xs, False)
+    assert (step_ok != ok).any()  # the inputs tell the two rules apart
+
+    df = spark.createDataFrame(
+        [(int(i), float(x), float(y)) for i, x, y in zip(ids, xs, ys)],
+        "page_id long, x double, y double")
+    out = rp.reproject(df, "EPSG:4326", srs).toPandas().sort_values("page_id")
+    assert list(out.page_id) == list(ids[ok])
+    np.testing.assert_allclose(out.x, e, rtol=1e-12)
+    np.testing.assert_allclose(out.y, n, rtol=1e-12)
+
+
 # --- UTM (EPSG:326xx/327xx) --------------------------------------------------
 
 

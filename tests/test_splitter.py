@@ -59,16 +59,22 @@ def test_negative_boundary_truncation(spark):
     assert rows[2] == (1, 0)
 
 
+def square_contains_py(xp, yp, x, y, length, ox, oy, buffer):
+    """SplitterFilter::squareContains: strict inequalities against tile
+    (xp, yp)'s buffered square."""
+    minx = ox + xp * length - buffer
+    maxx = minx + length + 2 * buffer
+    miny = oy + yp * length - buffer
+    maxy = miny + length + 2 * buffer
+    return minx < x < maxx and miny < y < maxy
+
+
 def numpy_split_oracle(ids, xs, ys, length, ox, oy, buffer):
     """Slow obviously-correct port of SplitterFilter::processPoint."""
     out = []
 
     def sq(xp, yp, x, y):
-        minx = ox + xp * length - buffer
-        maxx = minx + length + 2 * buffer
-        miny = oy + yp * length - buffer
-        maxy = miny + length + 2 * buffer
-        return minx < x < maxx and miny < y < maxy
+        return square_contains_py(xp, yp, x, y, length, ox, oy, buffer)
 
     for i, x, y in zip(ids, xs, ys):
         dx, dy = x - ox, y - oy
