@@ -35,6 +35,12 @@ same on-disk shape Iceberg uses:
   pushdown inside surviving files still applies on top. Every read
   (``read``, ``incremental_read``, ``changes``, ``pruned_count``) picks
   its files through ``_select`` and scans them through ``_scan``.
+* **Reads plan without Spark jobs.** ``_scan`` (and merge's provenance
+  scan, ``audited_append``'s audit and ``compact``) take the schema from
+  the first file's Spark footer instead of Spark's inference job, and
+  hand Spark the paths in chunks it lists serially
+  (``parquet.read_parquet``), so a read of any file count runs its
+  first Spark job only when it is executed.
 * **Copy-on-write merge.** ``merge`` reads the source keys once (up to
   ``MERGE_KEY_CAP``) and plans in Python: uniqueness, footer-stats
   and bloom file pruning, and one SQL ``IN`` predicate, so Spark runs
@@ -63,6 +69,8 @@ import uuid
 from typing import Iterator, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+
+from pdal_spark.parquet import read_parquet
 
 # Bloom geometry is part of the on-disk format: the manifest stores the
 # bits without their size, so every reader must probe with these values.
@@ -319,7 +327,7 @@ class SnapshotTable:
         from pdal_spark.datapipe.dataquality import check
 
         new_files = self._stage(df)
-        staged = self.spark.read.parquet(*[f["path"] for f in new_files])
+        staged = read_parquet(self.spark, [f["path"] for f in new_files])
         verdicts = check(staged, constraints).collect()
         if all(r.passed == 1 for r in verdicts):
             return self._commit(new_files, "audited-append"), verdicts
@@ -474,7 +482,7 @@ class SnapshotTable:
                     if self._bloom_may_contain(f, key, present)]
         touched_paths: set = set()
         if cand:
-            scan = self.spark.read.parquet(*[f["path"] for f in cand])
+            scan = read_parquet(self.spark, [f["path"] for f in cand])
             hit = {os.path.basename(r[0]) for r in file_hits(scan).collect()}
             touched_paths = {
                 f["path"] for f in cand if os.path.basename(f["path"]) in hit
@@ -483,9 +491,7 @@ class SnapshotTable:
 
         new_data = source if when_matched == "update" else None
         if touched_paths:
-            # the provenance scan's schema: no second footer inference
-            touched = self.spark.read.schema(scan.schema).parquet(
-                *sorted(touched_paths))
+            touched = read_parquet(self.spark, sorted(touched_paths))
             kept_rows = unmatched(touched)
             new_data = (kept_rows if new_data is None
                         else kept_rows.unionByName(new_data))
@@ -518,8 +524,8 @@ class SnapshotTable:
                     "files_carried": len(files)}
         keep_files = [f for f in files if int(f["rows"]) >= small_threshold_rows]
         rows_small = sum(int(f["rows"]) for f in small)
-        packed = self.spark.read.parquet(
-            *[f["path"] for f in small]
+        packed = read_parquet(
+            self.spark, [f["path"] for f in small]
         ).repartition(max(1, rows_small // small_threshold_rows))
         v = self.rewrite(packed, "compact", planned_version, keep_files)
         return {"version": v, "files_compacted": len(small),
@@ -621,10 +627,10 @@ class SnapshotTable:
         """Spark scan of ``files``; with none, zero rows carrying the
         schema of the first file in ``schema_from``."""
         if files:
-            return self.spark.read.parquet(*[f["path"] for f in files])
+            return read_parquet(self.spark, [f["path"] for f in files])
         if not schema_from:
             raise ValueError("empty table and no snapshot schema")
-        return self.spark.read.parquet(schema_from[0]["path"]).limit(0)
+        return read_parquet(self.spark, [schema_from[0]["path"]]).limit(0)
 
     def read(
         self,

@@ -46,6 +46,7 @@ from pdal_spark.datapipe.dedup import (
     doc_words,
 )
 from pdal_spark.operators.pointcloud import cc_edge_roots
+from pdal_spark.parquet import read_parquet
 
 __all__ = ["NearDupIndex"]
 
@@ -174,7 +175,7 @@ class NearDupIndex:
             cur = [f["path"] for f in table.snapshot(ver)["files"]]
             delta = [p for p in cur if p not in prev]
             if prev <= set(cur) and delta:
-                out = ent[1].unionByName(self.spark.read.parquet(*delta))
+                out = ent[1].unionByName(read_parquet(self.spark, delta))
         if out is None:
             out = table.read(version=ver)
         out = out.persist()

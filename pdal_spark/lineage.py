@@ -28,6 +28,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pdal_spark.parquet import read_parquet
+
 LEDGER_SCHEMA = "batch_id string, n_rows long, wall_s double, finished_at double"
 
 
@@ -74,7 +76,7 @@ class ResumableJob:
             out = process_fn(self.spark, bid)
             path = os.path.join(self.output_dir, f"batch={bid}")
             out.write.mode("overwrite").parquet(path)
-            n = self.spark.read.parquet(path).count()
+            n = read_parquet(self.spark, [path]).count()
             wall = time.time() - t0
             self._commit(bid, n, wall)
             timings[bid] = wall
@@ -87,4 +89,4 @@ class ResumableJob:
         if not done:
             raise ValueError("no committed batches")
         paths = [os.path.join(self.output_dir, f"batch={b}") for b in done]
-        return self.spark.read.parquet(*paths)
+        return read_parquet(self.spark, paths)

@@ -34,6 +34,7 @@ from pdal_spark.operators import pointcloud as pc_op
 from pdal_spark.operators import relational as rel_op
 from pdal_spark.operators import splitter as splitter_op
 from pdal_spark.operators import stats as stats_op
+from pdal_spark.parquet import read_parquet
 
 
 class PipelineError(ValueError):
@@ -120,7 +121,7 @@ def _infer_reader(spark, inputs, o, filename):
     if filename is None:
         raise PipelineError("reader requires filename")
     if filename.endswith(".parquet"):
-        return spark.read.parquet(filename)
+        return _r_parquet(spark, inputs, o, filename)
     if filename.endswith((".csv", ".txt")):
         return spark.read.csv(filename, header=True, inferSchema=True)
     if filename.endswith(".las"):
@@ -146,7 +147,7 @@ def _infer_reader(spark, inputs, o, filename):
 
 
 def _r_parquet(spark, inputs, o, filename):
-    return spark.read.parquet(filename or o["filename"])
+    return read_parquet(spark, [filename or o["filename"]])
 
 
 def _r_text(spark, inputs, o, filename):

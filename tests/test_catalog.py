@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pdal_spark.catalog import SnapshotTable
+from test_parquet_read import jobs_run
 
 
 def _pts(spark, lo, hi):
@@ -327,7 +328,7 @@ def test_merge_over_key_cap_joins_in_spark(spark, tmp_path, monkeypatch):
 
 def test_merge_small_source_job_budget(spark, tmp_path, monkeypatch):
     """A 100-key CDC merge plans from one collect of its keys: at most
-    six Spark jobs, a shuffle-free rewrite, and exactly the files that
+    four Spark jobs, a shuffle-free rewrite, and exactly the files that
     hold a key rewritten."""
     t = SnapshotTable(spark, str(tmp_path / "jb"), stats_cols=("k",))
     # eight files of 100 consecutive keys each
@@ -348,7 +349,7 @@ def test_merge_small_source_job_budget(spark, tmp_path, monkeypatch):
         sc._jsc.clearJobGroup()
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = sc.statusTracker().getJobIdsForGroup("merge-budget")
-    assert len(jobs) <= 6, len(jobs)
+    assert len(jobs) <= 4, len(jobs)
     assert "Exchange" not in plans[0]
     holds = {f["path"] for f in files
              if any(f["stats"]["k"][0] <= k <= f["stats"]["k"][1]
@@ -360,6 +361,34 @@ def test_merge_small_source_job_budget(spark, tmp_path, monkeypatch):
     assert len(got) == 810
     assert all(got[k] == f"new{k}" for k in keys)
     assert got[101] == "a101"
+
+
+def test_bbox_read_over_many_files_runs_no_job(spark, tmp_path):
+    """A bbox read over more files than Spark's parallel-listing
+    threshold plans with no Spark job (one footer's schema, paths handed
+    over in chunks) and returns the rows of the inferred read."""
+    limit = int(spark.conf.get(
+        "spark.sql.sources.parallelPartitionDiscovery.threshold"))
+    t = SnapshotTable(spark, str(tmp_path / "many"), stats_cols=("x", "y"))
+    t.append(_pts(spark, 0, 2_000).repartition(limit + 8))
+    files = [f["path"] for f in t.snapshot()["files"]]
+    box = (10.0, 5.0, 60.0, 30.0)
+    assert t.pruned_count(box)[0] > limit
+    got, jobs = jobs_run(spark, lambda: t.read(bbox=box))
+    assert jobs == 0
+    want = spark.read.parquet(*files)
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
+def test_zero_file_bbox_read_keeps_schema(spark, table):
+    table.append(_pts(spark, 0, 100))
+    box = (500.0, 500.0, 600.0, 600.0)
+    assert table.pruned_count(box)[0] == 0
+    got, jobs = jobs_run(spark, lambda: table.read(bbox=box))
+    assert jobs == 0
+    assert got.schema == table.read().schema
+    assert got.count() == 0
 
 
 @pytest.mark.parametrize("rewrite", ["merge", "compact", "optimize"])
