@@ -15,16 +15,26 @@ engines agree; ``word_id_mode="hash"`` swaps in xxhash64 ids — zero
 vocabulary shuffles, the open-vocabulary 100 TB path (no SQL twin).
 
 Execution shape (100 TB): every near-dup pair pipeline is
-candidate-generate -> verify with no candidate distinct(). Small
-per-doc payloads (chunked bitmasks, simhash words) CARRY through the
-self-join and verify inline; the open-vocabulary word-hash ARRAYS do
-NOT — they would cross the exchange 2 x bands times per doc, which is
-free inside one JVM but measured 2x slower at 4 executors than 1 over
-netty (BENCH/BASELINE.md §6) — candidates instead FETCH arrays per
-surviving pair (_fetch_verified_pairs). Candidate self-joins are SALTED
-(side b = hash(id) % s, side a explodes over s) because candidate keys
-are few and hot (rare-word prefix ords, LSH buckets, simhash bit-bands)
-— one hot key must not pin its quadratic blow-up on one task.
+candidate-generate -> verify, built from one candidate join and two
+verifiers, one per payload:
+
+* _salted_join — every candidate self-join (prefix ords, LSH buckets,
+  simhash bit-bands, containment postings). Candidate keys are few and
+  hot, so each key splits N_SALTS ways (side b = hash(id) % N_SALTS,
+  side a explodes over the salts) and one hot key cannot pin its
+  quadratic blow-up on one task; _hot_keys limits that to the keys
+  that need it.
+* _fused_verified_pairs — small vocab-sized payloads (chunked bitmasks)
+  CARRY through the join and Jaccard is verified inline.
+* _verify_fetched — doc-sized payloads (sorted word-hash ARRAYS: shingle
+  vocabularies, hash word ids, the incremental index) do NOT ride the
+  join — they would cross the exchange 2 x bands times per doc, free
+  inside one JVM but measured 2x slower at 4 executors than 1 over
+  netty (BENCH/BASELINE.md §6); surviving pairs fetch them instead.
+
+A pair is kept iff its unrounded Jaccard inter / union >= threshold
+(containment: inter / |src|); the output column is rounded to 6
+places, and the SQL oracles apply the same rule.
 """
 
 from __future__ import annotations
@@ -189,35 +199,6 @@ def _mask_inter(a: Column, b: Column, n_chunks: int | None = None) -> Column:
     )
 
 
-def _verify_pairs_arrays(cand: DataFrame, sets: DataFrame,
-                         threshold: float) -> DataFrame:
-    """Exact Jaccard on candidate pairs via sorted word-hash arrays —
-    the wide-vocabulary verifier (doc-sized payload, not vocab-sized).
-    cand = slim (id1, id2) distinct pairs; sets = (id, masks, sz)."""
-    m1 = sets.select(F.col("id").alias("id1"), F.col("sz").alias("sz1"),
-                     F.col("masks").alias("ma"))
-    m2 = sets.select(F.col("id").alias("id2"), F.col("sz").alias("sz2"),
-                     F.col("masks").alias("mb"))
-    return (
-        cand.join(m1, "id1").join(m2, "id2")
-        .filter(
-            F.least("sz1", "sz2")
-            >= F.lit(threshold) * F.greatest("sz1", "sz2")
-        )
-        .withColumn("inter", F.size(F.array_intersect("ma", "mb")).cast("long"))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter").cast("double")
-                / (F.col("sz1") + F.col("sz2") - F.col("inter")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id1", "id2", "jaccard")
-    )
-
-
 def _first_match_band(sig1: Column, sig2: Column, bands: int, rows: int) -> Column:
     """Smallest band index whose signature slices agree — lets the fused
     verifier test each candidate pair in exactly ONE band even when the
@@ -243,92 +224,114 @@ def _first_match_band(sig1: Column, sig2: Column, bands: int, rows: int) -> Colu
 
 
 AUTO_SALT_FLOOR = 512  # min bucket size worth splitting
+N_SALTS = 16  # sub-keys each salted candidate key is split into
 
 
-def _with_hot_salt(keyed: DataFrame, join_keys: list[str],
-                   n_salts: int) -> DataFrame:
-    """Tag keyed rows with `_hot` = this candidate key's population
+def _hot_keys(keyed: DataFrame, join_keys: list[str]) -> DataFrame:
+    """(join_keys..., _hot) for every candidate key whose population
     exceeds max(AUTO_SALT_FLOOR, 8 * rows / shuffle_partitions) — the
     same count-based heuristic as knn_join's auto salting. Only hot
-    keys are salt-exploded: unconditional n_salts-fold replication of
-    every candidate row is O(n * bands * n_salts) with array payloads
+    keys are salt-exploded: unconditional N_SALTS-fold replication of
+    every candidate row is O(n * bands * N_SALTS) with array payloads
     and measured 10 GB+ of shuffle on corpora with NO collisions at
     all (1M disjoint docs), while a dup-dense corpus genuinely needs
-    the split. Costs one map-side-combined aggregate; on well-spread
-    keys the hot table is empty and the plan degenerates to the
-    unsalted join."""
-    spark = keyed.sparkSession
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    total = keyed.count()  # keyed is persisted by the caller
-    thr = max(AUTO_SALT_FLOOR, (8 * total) // max(parts, 1))
-    hot = (
+    the split. Costs one eager count (keyed is persisted by the
+    caller) and one map-side-combined aggregate; on well-spread keys
+    the table is empty and _salted_join degenerates to the unsalted
+    join."""
+    parts = int(keyed.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+    thr = max(AUTO_SALT_FLOOR, (8 * keyed.count()) // max(parts, 1))
+    return (
         keyed.groupBy(*join_keys).agg(F.count("*").alias("_c"))
         .filter(F.col("_c") > thr)
         .select(*join_keys)
         .withColumn("_hot", F.lit(True))
     )
-    return keyed.join(F.broadcast(hot), join_keys, "left").withColumn(
-        "_hot", F.coalesce(F.col("_hot"), F.lit(False))
+
+
+def _salted_join(a: DataFrame, b: DataFrame, a_cols: list, b_cols: list,
+                 join_keys: list[str], hot: DataFrame | None = None) -> DataFrame:
+    """Equi-join side a to side b on join_keys with each key split
+    N_SALTS ways (triangle-join salting): a's rows explode over every
+    salt, b's row takes salt pmod(xxhash64(id), N_SALTS), so every
+    (a, b) pair meets exactly once and one hot key's quadratic blow-up
+    spreads over N_SALTS tasks. Candidate keys are few and hot
+    (rare-word prefix ords, LSH buckets, simhash bit-bands).
+
+    a_cols / b_cols project each side (join keys included); `_salt` is
+    appended to both. hot: the broadcast key table of _hot_keys — only
+    its keys are salted, the rest join on salt 0; None salts every
+    key."""
+    salts = F.sequence(F.lit(0), F.lit(N_SALTS - 1))
+    salt_b = F.pmod(F.xxhash64(F.col("id")), F.lit(N_SALTS))
+    if hot is not None:
+        a, b = (
+            side.join(F.broadcast(hot), join_keys, "left")
+            .withColumn("_hot", F.coalesce(F.col("_hot"), F.lit(False)))
+            for side in (a, b)
+        )
+        salts = F.when(F.col("_hot"), salts).otherwise(F.array(F.lit(0)))
+        salt_b = F.when(F.col("_hot"), salt_b).otherwise(F.lit(0))
+    a = a.select(*a_cols, F.explode(salts).alias("_salt")).withColumn(
+        "_salt", F.col("_salt").cast("int")
+    )
+    b = b.select(*b_cols, salt_b.cast("int").alias("_salt"))
+    return a.join(b, [*join_keys, "_salt"])
+
+
+def _size_ok(threshold: float, sz1: str = "sz1", sz2: str = "sz2") -> Column:
+    """Length filter: Jaccard >= t forces min(sz) >= t * max(sz)."""
+    return F.least(sz1, sz2) >= F.lit(threshold) * F.greatest(sz1, sz2)
+
+
+def _keep_jaccard(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(id1, id2, jaccard) of the rows whose Jaccard
+    inter / (sz1 + sz2 - inter) >= threshold. The test is on the
+    UNROUNDED double — the rule every pre-filter (size ratio, prefix
+    length) is exact for, and the one the SQL oracles and NearDupIndex
+    apply; only the output column is rounded to 6 places."""
+    j = F.col("inter").cast("double") / (
+        F.col("sz1") + F.col("sz2") - F.col("inter")
+    )
+    return pairs.filter(j >= threshold).select(
+        "id1", "id2", F.round(j, 6).alias("jaccard")
     )
 
 
-def _fused_verified_pairs(
+def _candidate_pairs(
     keyed: DataFrame, join_keys: list[str], threshold: float,
-    n_chunks: int | None, n_salts: int = 16,
     band_dedup: tuple[int, int] | None = None,
 ) -> DataFrame:
-    """Self-join candidate rows that CARRY their own (sz, masks), verify
-    Jaccard inline, and only then deduplicate.
+    """Salted self-join of candidate rows into the pairs (id1 < id2)
+    that pass the length filter; each side keeps its sz (sz1, sz2) and,
+    when keyed has them, its masks (ma, mb) and signature (sig1, sig2).
 
-    `keyed` = (id, <join_keys...>, sz, masks). The fusion matters at
-    scale: candidate pairs exist only inside the join stage (map-side
-    filter to true pairs before any further exchange) — no candidate
-    `distinct()` and no per-side mask joins over the candidate blow-up,
-    which dominated the unfused plan (measured 4x the true-pair count on
-    the degenerate small-vocab tables).
-
-    keyed is PERSISTED (tiny — prefix/band rows — but its lineage of
-    windows/ranks/signature aggregates would otherwise recompute for
-    both join sides), and HOT keys are SALTED (triangle-join salting,
-    count-gated — see _with_hot_salt): a hot key's quadratic blow-up
-    must not pin one task, but cold keys must not pay the n_salts-fold
-    row replication. Side b gets salt = hash(id) % n_salts, side a
-    explodes over all salts (hot keys only) — every pair meets exactly
-    once.
+    `keyed` = (id, <join_keys...>, sz[, masks][, sig]); it is PERSISTED
+    (tiny — prefix/band rows — but its lineage of windows/ranks/
+    signature aggregates would otherwise recompute for both join sides)
+    and its hot keys are salted (_hot_keys, _salted_join). A `masks`
+    column rides through the join as ma/mb for inline verification.
 
     band_dedup=(bands, rows): keyed rows also carry `sig` (the full
     k-element signature — k longs, far smaller than the masks) and a
-    pair is verified only in its FIRST matching band (see
-    _first_match_band); each pair then reaches the output exactly once,
-    so the trailing distinct() exchange is dropped."""
-    keyed = _with_hot_salt(keyed.persist(), join_keys, n_salts)
-    jk = [*join_keys, "_salt"]
-    extra = ["sig"] if band_dedup else []
-    a = keyed.select(
-        *join_keys, F.col("id").alias("id1"), F.col("sz").alias("sz1"),
-        F.col("masks").alias("ma"),
-        *[F.col(c).alias(f"{c}1") for c in extra],
-        F.explode(
-            F.when(F.col("_hot"),
-                   F.sequence(F.lit(0), F.lit(n_salts - 1)))
-            .otherwise(F.array(F.lit(0)))
-        ).alias("_salt"),
-    ).withColumn("_salt", F.col("_salt").cast("int"))
-    b = keyed.select(
-        *join_keys, F.col("id").alias("id2"), F.col("sz").alias("sz2"),
-        F.col("masks").alias("mb"),
-        *[F.col(c).alias(f"{c}2") for c in extra],
-        F.when(F.col("_hot"), F.pmod(F.xxhash64(F.col("id")), F.lit(n_salts)))
-        .otherwise(F.lit(0)).cast("int").alias("_salt"),
-    )
+    pair is kept only in its FIRST matching band (see
+    _first_match_band); each pair then leaves the join exactly once, so
+    no distinct() exchange is needed downstream."""
+    keyed = keyed.persist()
+    masks = "masks" in keyed.columns
+
+    def side(i: int) -> list:
+        return [
+            *join_keys, F.col("id").alias(f"id{i}"), F.col("sz").alias(f"sz{i}"),
+            *([F.col("masks").alias("ma" if i == 1 else "mb")] if masks else []),
+            *([F.col("sig").alias(f"sig{i}")] if band_dedup else []),
+        ]
+
     joined = (
-        a.join(b, jk)
+        _salted_join(keyed, keyed, side(1), side(2), join_keys,
+                     _hot_keys(keyed, join_keys))
         .filter(F.col("id1") < F.col("id2"))
-        # length filter: j >= t forces min(sz) >= t * max(sz)
-        .filter(
-            F.least("sz1", "sz2")
-            >= F.lit(threshold) * F.greatest("sz1", "sz2")
-        )
+        .filter(_size_ok(threshold))
     )
     if band_dedup:
         bands_n, rows_n = band_dedup
@@ -336,21 +339,83 @@ def _fused_verified_pairs(
             F.col("band")
             == _first_match_band(F.col("sig1"), F.col("sig2"), bands_n, rows_n)
         )
-    joined = (
-        joined
-        .withColumn("inter", _mask_inter(F.col("ma"), F.col("mb"), n_chunks))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter").cast("double")
-                / (F.col("sz1") + F.col("sz2") - F.col("inter")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    return joined
+
+
+def _fused_verified_pairs(
+    keyed: DataFrame, join_keys: list[str], threshold: float,
+    n_chunks: int | None, band_dedup: tuple[int, int] | None = None,
+) -> DataFrame:
+    """The bitmask verifier: candidate rows CARRY their own (sz, masks)
+    through the salted self-join (_candidate_pairs) and Jaccard is
+    verified inline, before any further exchange.
+
+    The fusion matters at scale: candidate pairs exist only inside the
+    join stage (map-side filter to true pairs before any further
+    exchange) — no candidate `distinct()` and no per-side mask joins
+    over the candidate blow-up, which dominated the unfused plan
+    (measured 4x the true-pair count on the degenerate small-vocab
+    tables). Without band_dedup the verified pairs are distinct()ed
+    (a pair may share several prefix tokens)."""
+    joined = _candidate_pairs(keyed, join_keys, threshold, band_dedup)
+    out = _keep_jaccard(
+        joined.withColumn("inter", _mask_inter(F.col("ma"), F.col("mb"), n_chunks)),
+        threshold,
     )
-    out = joined.select("id1", "id2", "jaccard")
     return out if band_dedup else out.distinct()
+
+
+def _word_hash_sets(words: DataFrame) -> DataFrame:
+    """(id, masks, sz): each doc's sorted xxhash64 word-hash array —
+    the doc-sized payload of _verify_fetched. 64-bit hashes, not the
+    strings: long array_intersect is ~an order of magnitude cheaper per
+    pair, and a same-doc-pair collision (< 2^-64 per word pair) is far
+    below any approximation the pipelines already accept."""
+    return words.groupBy("id").agg(
+        F.sort_array(F.collect_list(F.xxhash64("word"))).alias("masks"),
+        F.count("*").alias("sz"),
+    )
+
+
+def _verify_fetched(cand: DataFrame, sets: DataFrame,
+                    threshold: float) -> DataFrame:
+    """The word-hash-array verifier: exact Jaccard of candidate pairs
+    from each side's sorted word-hash array, fetched per pair —
+    size(array_intersect) over the union. Used wherever the per-doc
+    payload is doc-sized rather than vocab-sized (shingle vocabularies,
+    open-vocabulary hash ids, the incremental index).
+
+    cand = (id1, id2) pairs, each emitted once; sets = (id, sz, masks),
+    masks the sorted array. When cand carries (sz1, sz2) its candidate
+    join already applied the length filter and only the arrays are
+    fetched; otherwise the sizes come with the arrays and the length
+    filter runs before the intersection.
+
+    Fetching keeps the arrays out of the salted candidate join:
+    carrying each doc's array through it shuffles the array 2 x bands
+    times across executors. Inside one JVM (local[N]) that shuffle is
+    process-local and nearly free, but on a real cluster it is netty
+    traffic — measured 2x SLOWER at 4 executors than at 1 on a
+    1.5M-doc corpus (BENCH/BASELINE.md §6). Here the array-bearing
+    table is only touched by the two pair-side joins; when candidates
+    are few (the normal case post-LSH) AQE turns them into broadcast
+    joins and the arrays never cross an exchange at all."""
+    fetch_sz = "sz1" not in cand.columns
+
+    def side(i: int, arr: str) -> DataFrame:
+        return sets.select(
+            F.col("id").alias(f"id{i}"),
+            *([F.col("sz").alias(f"sz{i}")] if fetch_sz else []),
+            F.col("masks").alias(arr),
+        )
+
+    pairs = cand.join(side(1, "ma"), "id1").join(side(2, "mb"), "id2")
+    if fetch_sz:
+        pairs = pairs.filter(_size_ok(threshold))
+    return _keep_jaccard(
+        pairs.withColumn("inter", F.size(F.array_intersect("ma", "mb")).cast("long")),
+        threshold,
+    )
 
 
 def jaccard_pairs(
@@ -403,7 +468,7 @@ def jaccard_pairs(
     # FUSED through the salted self-join with codegen popcount verify —
     # no candidate distinct() exchange. Wide vocab (shingles): the
     # bitmask balloons past the doc's own set size (and the fused join
-    # replicates payloads n_salts-fold — measured OOM at 3-gram scale);
+    # replicates payloads N_SALTS-fold — measured OOM at 3-gram scale);
     # switch to the unfused plan: slim (id, ord)-only candidate join ->
     # distinct pairs -> per-side join of sorted word-hash arrays ->
     # array_intersect verify. Pairs post-prefix-filter are few relative
@@ -412,10 +477,7 @@ def jaccard_pairs(
     # (the array payload), capped at the codegen unroll width.
     avg_sz = n_words / max(df.count(), 1)
     if n_chunks > min(MASK_UNROLL_MAX, max(2 * avg_sz, 16)):
-        sets = words.groupBy("id").agg(
-            F.sort_array(F.collect_list(F.xxhash64("word"))).alias("masks"),
-            F.count("*").alias("sz"),
-        )
+        sets = _word_hash_sets(words)
         cand = (
             prefix.alias("a")
             .join(prefix.alias("b"), "ord")
@@ -423,7 +485,7 @@ def jaccard_pairs(
             .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
             .distinct()
         )
-        return _verify_pairs_arrays(cand, sets, threshold)
+        return _verify_fetched(cand, sets, threshold)
     v = vocab(df, text_col, id_col, shingle=shingle, words=words)
     masks, _ = _doc_masks(words, v, n_chunks)
     keyed = prefix.join(masks, "id")  # prefix rows only — small join
@@ -447,13 +509,13 @@ def jaccard_pairs_sql(threshold: float, table: str = "documents",
       FROM inter
       JOIN sizes s1 ON s1.id = id1
       JOIN sizes s2 ON s2.id = id2
-      WHERE round(CAST(inter AS DOUBLE) / (s1.sz + s2.sz - inter), 6) >= {sql_double(threshold, 'duckdb')}
+      WHERE CAST(inter AS DOUBLE) / (s1.sz + s2.sz - inter) >= {sql_double(threshold, 'duckdb')}
     """
 
 
 def containment_pairs(
     df: DataFrame, threshold: float, text_col: str = "text",
-    id_col: str = "doc_id", shingle: int = 1, n_salts: int = 16,
+    id_col: str = "doc_id", shingle: int = 1,
 ) -> DataFrame:
     """Directed shingle containment C(src->dst) = |S(src) inter S(dst)|
     / |S(src)| >= threshold, emitted as (src_id, dst_id, containment).
@@ -473,12 +535,13 @@ def containment_pairs(
     which is why dst cannot be prefix-filtered and is indexed on every
     token). Rarest-first ordering keeps the postings lists the join
     fans out over the smallest in the corpus, and hot tokens are
-    count-gated salted (same heuristic as _with_hot_salt: dst postings
-    get salt = hash(id) % n_salts, src prefix rows explode — every pair
-    meets exactly once). Verify = sorted word-hash arrays with a
-    dst-size filter (inter <= sz_dst, so sz_dst >= t*sz_src) before the
-    intersection. One candidate distinct(), two pair-side set joins —
-    the wide-vocabulary (open web) payload shape.
+    count-gated salted (_hot_keys over the full postings, the side a
+    hot token actually blows up; _salted_join explodes the src prefix
+    rows — every pair meets exactly once). Verify = sorted word-hash
+    arrays with a dst-size filter (inter <= sz_dst, so
+    sz_dst >= t*sz_src) before the intersection. One candidate
+    distinct(), two pair-side set joins — the wide-vocabulary (open
+    web) payload shape.
     """
     words = doc_words(df, text_col, id_col, shingle).persist()
     dfreq = words.groupBy("word").agg(F.count("*").alias("df"))
@@ -498,43 +561,15 @@ def containment_pairs(
     prefix = indexed.filter(F.col("rk") <= pref_len).select(
         "id", "ord", "sz", "rk"
     )
-    # count-gated hot-token salting over the FULL postings side (the
-    # side a hot token actually blows up); the hot set is broadcast to
-    # both sides so each pair meets exactly once.
-    spark = df.sparkSession
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    total = indexed.count()
-    thr = max(AUTO_SALT_FLOOR, (8 * total) // max(parts, 1))
-    hot = (
-        indexed.groupBy("ord").agg(F.count("*").alias("_c"))
-        .filter(F.col("_c") > thr)
-        .select("ord").withColumn("_hot", F.lit(True))
-    )
-    a = (
-        prefix.join(F.broadcast(hot), "ord", "left")
-        .select(
-            "ord", F.col("id").alias("src_id"), F.col("sz").alias("_sza"),
-            F.col("rk").alias("_rka"),
-            F.explode(
-                F.when(F.coalesce(F.col("_hot"), F.lit(False)),
-                       F.sequence(F.lit(0), F.lit(n_salts - 1)))
-                .otherwise(F.array(F.lit(0)))
-            ).alias("_salt"),
-        )
-        .withColumn("_salt", F.col("_salt").cast("int"))
-    )
-    b = (
-        indexed.join(F.broadcast(hot), "ord", "left")
-        .select(
-            "ord", F.col("id").alias("dst_id"), F.col("sz").alias("_szb"),
-            F.col("rk").alias("_rkb"),
-            F.when(F.coalesce(F.col("_hot"), F.lit(False)),
-                   F.pmod(F.xxhash64(F.col("id")), F.lit(n_salts)))
-            .otherwise(F.lit(0)).cast("int").alias("_salt"),
-        )
-    )
     cand = (
-        a.join(b, ["ord", "_salt"])
+        _salted_join(
+            prefix, indexed,
+            ["ord", F.col("id").alias("src_id"), F.col("sz").alias("_sza"),
+             F.col("rk").alias("_rka")],
+            ["ord", F.col("id").alias("dst_id"), F.col("sz").alias("_szb"),
+             F.col("rk").alias("_rkb")],
+            ["ord"], _hot_keys(indexed, ["ord"]),
+        )
         .filter(F.col("src_id") != F.col("dst_id"))
         # size filter INSIDE the candidate join (before the distinct
         # exchange): inter <= sz_dst, so C >= t forces sz_dst >= t*sz_src
@@ -558,25 +593,20 @@ def containment_pairs(
         .select("src_id", "dst_id")
         .distinct()
     )
-    sets = words.groupBy("id").agg(
-        F.sort_array(F.collect_list(F.xxhash64("word"))).alias("masks"),
-        F.count("*").alias("sz"),
-    )
+    sets = _word_hash_sets(words)
     m1 = sets.select(F.col("id").alias("src_id"), F.col("sz").alias("sz1"),
                      F.col("masks").alias("ma"))
     m2 = sets.select(F.col("id").alias("dst_id"), F.col("sz").alias("sz2"),
                      F.col("masks").alias("mb"))
+    # unrounded test, rounded output — the rule of _keep_jaccard
+    c = F.col("inter").cast("double") / F.col("sz1")
     return (
         cand.join(m1, "src_id").join(m2, "dst_id")
         # inter <= sz_dst, so containment >= t needs sz_dst >= t*sz_src
         .filter(F.col("sz2") >= F.lit(threshold) * F.col("sz1"))
         .withColumn("inter", F.size(F.array_intersect("ma", "mb")).cast("long"))
-        .withColumn(
-            "containment",
-            F.round(F.col("inter").cast("double") / F.col("sz1"), 6),
-        )
-        .filter(F.col("containment") >= threshold)
-        .select("src_id", "dst_id", "containment")
+        .filter(c >= threshold)
+        .select("src_id", "dst_id", F.round(c, 6).alias("containment"))
     )
 
 
@@ -598,7 +628,7 @@ def containment_pairs_sql(threshold: float, table: str = "documents",
              round(CAST(inter AS DOUBLE) / s1.sz, 6) AS containment
       FROM inter
       JOIN sizes s1 ON s1.id = src_id
-      WHERE round(CAST(inter AS DOUBLE) / s1.sz, 6) >= {sql_double(threshold, 'duckdb')}
+      WHERE CAST(inter AS DOUBLE) / s1.sz >= {sql_double(threshold, 'duckdb')}
     """
 
 
@@ -676,36 +706,6 @@ def minhash_bands(sigs: DataFrame, bands: int = MINHASH_BANDS, k: int = MINHASH_
     )
 
 
-def _verify_pairs_wordjoin(cand: DataFrame, words: DataFrame,
-                           threshold: float) -> DataFrame:
-    """Exact Jaccard on candidate pairs via a shared-word join — the
-    open-vocabulary verifier (no dense ids needed). Candidate pairs are
-    few post-LSH, so the join fans out over pairs, not the corpus."""
-    sizes = words.groupBy("id").agg(F.count("*").alias("sz"))
-    w1 = words.select(F.col("id").alias("id1"), "word")
-    w2 = words.select(F.col("id").alias("id2"), "word")
-    inter = (
-        cand.join(w1, "id1").join(w2, ["id2", "word"])
-        .groupBy("id1", "id2")
-        .agg(F.count("*").alias("inter"))
-    )
-    s1 = sizes.select(F.col("id").alias("id1"), F.col("sz").alias("sz1"))
-    s2 = sizes.select(F.col("id").alias("id2"), F.col("sz").alias("sz2"))
-    return (
-        inter.join(s1, "id1").join(s2, "id2")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter").cast("double")
-                / (F.col("sz1") + F.col("sz2") - F.col("inter")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id1", "id2", "jaccard")
-    )
-
-
 def minhash_dedup_pairs(
     df: DataFrame,
     threshold: float,
@@ -714,23 +714,22 @@ def minhash_dedup_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     word_id_mode: str = "rank",
-    verify: str | None = None,
 ) -> DataFrame:
     """LSH candidate pairs (same bucket in >= 1 band), verified with true
     Jaccard >= threshold. Only bucket-mates are ever pair-joined — the
     100 TB path; the exact jaccard_pairs() is the small-scale oracle.
 
-    word_id_mode="hash" removes every vocabulary shuffle (see vocab());
-    its verifier keeps each doc's sorted word-hash ARRAY out of the
-    bucket self-join entirely — candidates carry only (sz, sig) and
-    fetch the arrays per surviving pair (_fetch_verified_pairs; exact
-    array_intersect, open-vocabulary, no dense ids). rank mode carries
-    the chunked bitmask inline instead (8 bytes/chunk). Either way only
-    true pairs reach an exchange and no distinct is needed.
+    Both modes run the same salted bucket self-join (_candidate_pairs)
+    with the signature riding along, so each pair is kept in its first
+    matching band only and no distinct is needed. The verifier follows
+    the word ids:
 
-    verify: None (mode default), "bitmask", "fetch", "wordarray"
-    (inline array carry — faster single-process, slower cross-executor),
-    or "wordjoin" (the legacy join verifier, kept for tests)."""
+    * rank (default): the chunked bitmask (8 bytes/chunk) rides through
+      the join and Jaccard is verified inline (_fused_verified_pairs).
+    * hash: removes every vocabulary shuffle (see vocab()). Candidates
+      carry only (sz, sig) and fetch each doc's sorted word-hash ARRAY
+      per surviving pair (_verify_fetched; exact array_intersect,
+      open-vocabulary, no dense ids)."""
     rows_n = k // bands
     words = doc_words(df, text_col, id_col).persist()
     v = wids = None
@@ -758,172 +757,18 @@ def minhash_dedup_pairs(
             ",",
         ),
     )
-    if verify is None:
-        verify = "bitmask" if word_id_mode == "rank" else "fetch"
-    if verify == "wordjoin":
-        cand = (
-            bnd.alias("a")
-            .join(bnd.alias("b"), ["band", "key"])
-            .filter(F.col("a.id") < F.col("b.id"))
-            .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
-            .distinct()
-        )
-        return _verify_pairs_wordjoin(cand, words, threshold)
-    if verify in ("wordarray", "fetch"):
-        # sorted 64-bit word hashes, not the strings: long
-        # array_intersect is ~an order of magnitude cheaper per pair and
-        # a same-doc-pair xxhash64 collision (< 2^-64 per word pair)
-        # is far below the minhash approximation error already accepted
-        sets = words.groupBy("id").agg(
-            F.sort_array(F.collect_list(F.xxhash64("word"))).alias("masks"),
-            F.count("*").alias("sz"),
-        )
-        if verify == "fetch":
-            keyed = bnd.join(sets.select("id", "sz"), "id")
-            return _fetch_verified_pairs(
-                keyed, sets, threshold, band_dedup=(bands, rows_n)
-            )
-        keyed = bnd.join(sets, "id")
-        return _fused_verified_pairs_arrays(
-            keyed, ["band", "key"], threshold, band_dedup=(bands, rows_n)
-        )
+    if word_id_mode != "rank":
+        sets = _word_hash_sets(words)
+        cand = _candidate_pairs(
+            bnd.join(sets.select("id", "sz"), "id"), ["band", "key"],
+            threshold, band_dedup=(bands, rows_n),
+        ).select("id1", "id2", "sz1", "sz2")
+        return _verify_fetched(cand, sets, threshold)
     masks, n_chunks = _doc_masks(words, v, wids=wids)
     keyed = bnd.join(masks, "id")
     return _fused_verified_pairs(
         keyed, ["band", "key"], threshold, n_chunks,
         band_dedup=(bands, rows_n)
-    )
-
-
-def _fused_verified_pairs_arrays(
-    keyed: DataFrame, join_keys: list[str], threshold: float,
-    n_salts: int = 16, band_dedup: tuple[int, int] | None = None,
-) -> DataFrame:
-    """Open-vocabulary twin of _fused_verified_pairs: `masks` is the
-    sorted word-hash array; intersection = size(array_intersect) (JVM
-    built-in, exact). Persisted + salted + band-deduped the same way —
-    first-band filtering matters even more here because the per-pair
-    verify cost (array intersection) is an order of magnitude above the
-    bitmask popcount."""
-    keyed = _with_hot_salt(keyed.persist(), join_keys, n_salts)
-    jk = [*join_keys, "_salt"]
-    extra = ["sig"] if band_dedup else []
-    a = keyed.select(
-        *join_keys, F.col("id").alias("id1"), F.col("sz").alias("sz1"),
-        F.col("masks").alias("ma"),
-        *[F.col(c).alias(f"{c}1") for c in extra],
-        F.explode(
-            F.when(F.col("_hot"),
-                   F.sequence(F.lit(0), F.lit(n_salts - 1)))
-            .otherwise(F.array(F.lit(0)))
-        ).alias("_salt"),
-    ).withColumn("_salt", F.col("_salt").cast("int"))
-    b = keyed.select(
-        *join_keys, F.col("id").alias("id2"), F.col("sz").alias("sz2"),
-        F.col("masks").alias("mb"),
-        *[F.col(c).alias(f"{c}2") for c in extra],
-        F.when(F.col("_hot"), F.pmod(F.xxhash64(F.col("id")), F.lit(n_salts)))
-        .otherwise(F.lit(0)).cast("int").alias("_salt"),
-    )
-    joined = (
-        a.join(b, jk)
-        .filter(F.col("id1") < F.col("id2"))
-        .filter(
-            F.least("sz1", "sz2")
-            >= F.lit(threshold) * F.greatest("sz1", "sz2")
-        )
-    )
-    if band_dedup:
-        bands_n, rows_n = band_dedup
-        joined = joined.filter(
-            F.col("band")
-            == _first_match_band(F.col("sig1"), F.col("sig2"), bands_n, rows_n)
-        )
-    joined = (
-        joined
-        .withColumn("inter", F.size(F.array_intersect("ma", "mb")).cast("long"))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter").cast("double")
-                / (F.col("sz1") + F.col("sz2") - F.col("inter")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    out = joined.select("id1", "id2", "jaccard")
-    return out if band_dedup else out.distinct()
-
-
-def _fetch_verified_pairs(
-    keyed: DataFrame, sets: DataFrame, threshold: float,
-    n_salts: int = 16, band_dedup: tuple[int, int] | None = None,
-) -> DataFrame:
-    """Candidate-then-fetch twin of _fused_verified_pairs_arrays for the
-    multi-executor path: the band self-join carries ONLY scalars plus the
-    k-long signature (id, sz, sig) — never the word-hash arrays — and the
-    few surviving candidate pairs fetch their arrays from `sets`
-    afterwards.
-
-    Why: carrying each doc's array through the salted self-join shuffles
-    it 2 x bands times across executors. Inside one JVM (local[N]) that
-    shuffle is process-local and nearly free, but on a real cluster it is
-    netty traffic — measured 2x SLOWER at 4 executors than at 1 on a
-    1.5M-doc corpus (BENCH/BASELINE.md §6). Here the array-bearing
-    table is only touched by the two candidate joins; when candidates
-    are few (the normal case post-LSH) AQE turns them into broadcast
-    joins and the arrays never cross an exchange at all.
-
-    band_dedup is required here: first-band filtering is what guarantees
-    each pair reaches the fetch joins exactly once without a distinct."""
-    assert band_dedup is not None, "fetch verifier requires band dedup"
-    bands_n, rows_n = band_dedup
-    keyed = _with_hot_salt(keyed.persist(), ["band", "key"], n_salts)
-    jk = ["band", "key", "_salt"]
-    a = keyed.select(
-        "band", "key", F.col("id").alias("id1"), F.col("sz").alias("sz1"),
-        F.col("sig").alias("sig1"),
-        F.explode(
-            F.when(F.col("_hot"),
-                   F.sequence(F.lit(0), F.lit(n_salts - 1)))
-            .otherwise(F.array(F.lit(0)))
-        ).alias("_salt"),
-    ).withColumn("_salt", F.col("_salt").cast("int"))
-    b = keyed.select(
-        "band", "key", F.col("id").alias("id2"), F.col("sz").alias("sz2"),
-        F.col("sig").alias("sig2"),
-        F.when(F.col("_hot"), F.pmod(F.xxhash64(F.col("id")), F.lit(n_salts)))
-        .otherwise(F.lit(0)).cast("int").alias("_salt"),
-    )
-    cand = (
-        a.join(b, jk)
-        .filter(F.col("id1") < F.col("id2"))
-        .filter(
-            F.least("sz1", "sz2")
-            >= F.lit(threshold) * F.greatest("sz1", "sz2")
-        )
-        .filter(
-            F.col("band")
-            == _first_match_band(F.col("sig1"), F.col("sig2"), bands_n, rows_n)
-        )
-        .select("id1", "id2", "sz1", "sz2")
-    )
-    m1 = sets.select(F.col("id").alias("id1"), F.col("masks").alias("ma"))
-    m2 = sets.select(F.col("id").alias("id2"), F.col("masks").alias("mb"))
-    return (
-        cand.join(m1, "id1").join(m2, "id2")
-        .withColumn("inter", F.size(F.array_intersect("ma", "mb")).cast("long"))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter").cast("double")
-                / (F.col("sz1") + F.col("sz2") - F.col("inter")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id1", "id2", "jaccard")
     )
 
 
@@ -970,7 +815,7 @@ def minhash_dedup_pairs_sql(
       SELECT id1, id2,
              round(CAST(inter AS DOUBLE) / (s1.sz + s2.sz - inter), 6) AS jaccard
       FROM inter JOIN sizes s1 ON s1.id = id1 JOIN sizes s2 ON s2.id = id2
-      WHERE round(CAST(inter AS DOUBLE) / (s1.sz + s2.sz - inter), 6) >= {sql_double(threshold, 'duckdb')}
+      WHERE CAST(inter AS DOUBLE) / (s1.sz + s2.sz - inter) >= {sql_double(threshold, 'duckdb')}
     """
 
 
@@ -1095,20 +940,15 @@ def simhash_pairs(
         "id", "simhash", F.explode(bands).alias("_b")
     ).select("id", "simhash", F.col("_b.band").alias("band"),
              F.col("_b.bval").alias("bval")).persist()
-    # salted self-join (band x bval keys are FEW — e.g. 4 x 16 for a
+    # every key salted (band x bval keys are FEW — e.g. 4 x 16 for a
     # 16-bit hash — so unsalted parallelism caps at the key count)
-    n_salts = 16
-    a = keyed.select(
-        F.col("id").alias("id1"), F.col("simhash").alias("s1"), "band", "bval",
-        F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))).alias("_salt"),
-    ).withColumn("_salt", F.col("_salt").cast("int"))
-    b = keyed.select(
-        F.col("id").alias("id2"), F.col("simhash").alias("s2"), "band", "bval",
-        F.pmod(F.xxhash64(F.col("id")), F.lit(n_salts)).cast("int")
-        .alias("_salt"),
-    )
     return (
-        a.join(b, ["band", "bval", "_salt"])
+        _salted_join(
+            keyed, keyed,
+            [F.col("id").alias("id1"), F.col("simhash").alias("s1"), "band", "bval"],
+            [F.col("id").alias("id2"), F.col("simhash").alias("s2"), "band", "bval"],
+            ["band", "bval"],
+        )
         .filter(F.col("id1") < F.col("id2"))
         .select(
             "id1", "id2",

@@ -43,6 +43,8 @@ from pdal_spark.datapipe.dedup import (
     P31,
     _first_match_band,
     _hash_params,
+    _size_ok,
+    _verify_fetched,
     doc_words,
 )
 from pdal_spark.operators.pointcloud import cc_edge_roots
@@ -126,8 +128,8 @@ class NearDupIndex:
         minhash register columns — pure map-side column math (explode
         of a k-element array), no shuffle.
 
-        sig and sz ride along (the batch fetch-verifier shape,
-        dedup._fetch_verified_pairs): with both docs' signatures in
+        sig and sz ride along (the batch candidate shape,
+        dedup._candidate_pairs): with both docs' signatures in
         hand at collision time, first-match-band filtering gives each
         candidate pair exactly once WITHOUT a distinct exchange, and
         the size filter runs before any array fetch."""
@@ -234,7 +236,8 @@ class NearDupIndex:
         # one row per pair — no distinct exchange over the O(bucket^2)
         # collision volume, which on dup-dense crawls is the dominant
         # ingest cost. The size filter runs inline before any fetch:
-        # jaccard >= t forces min(sz)/max(sz) >= t.
+        # jaccard >= t forces min(sz)/max(sz) >= t; the sizes ride on
+        # to the verifier.
         rows_n = self.k // self.bands
         other = (
             self._read_cached(self.bands_t)
@@ -253,40 +256,24 @@ class NearDupIndex:
             new_bands.join(other, ["band", "key"])
             .filter(F.col("id") != F.col("id2"))
             .filter(~F.col("_new2") | (F.col("id") < F.col("id2")))
-            .filter(
-                F.least("sz", "sz2")
-                >= F.lit(self.threshold) * F.greatest("sz", "sz2")
-            )
+            .filter(_size_ok(self.threshold, "sz", "sz2"))
             .filter(
                 F.col("band")
                 == _first_match_band(
                     F.col("sig"), F.col("sig2"), self.bands, rows_n
                 )
             )
-            .select(
-                F.least("id", "id2").alias("id1"),
-                F.greatest("id", "id2").alias("id2"),
-            )
+            .select(F.col("id").alias("id1"), "id2",
+                    F.col("sz").alias("sz1"), "sz2")
         )
-        # exact verify on the stored hashed-word sets (few candidates
-        # post-LSH; arrays join fans out over pairs, not the corpus)
-        a1 = all_arrays.select(
-            F.col("id").alias("id1"), F.col("sz").alias("sz1"),
-            F.col("warr").alias("w1"),
-        )
-        a2 = all_arrays.select(
-            F.col("id").alias("id2"), F.col("sz").alias("sz2"),
-            F.col("warr").alias("w2"),
-        )
-        inter = F.size(F.array_intersect("w1", "w2"))
+        # exact verify on the stored hashed-word sets — the batch
+        # fetch verifier (few candidates post-LSH; the arrays join fans
+        # out over pairs, not the corpus)
         pairs = (
-            cand.join(a1, "id1").join(a2, "id2")
-            .withColumn(
-                "jaccard",
-                inter.cast("double")
-                / (F.col("sz1") + F.col("sz2") - inter),
+            _verify_fetched(
+                cand, all_arrays.withColumnRenamed("warr", "masks"),
+                self.threshold,
             )
-            .filter(F.col("jaccard") >= self.threshold)
             .select("id1", "id2")
             .unionByName(exact_edges)
             .persist()

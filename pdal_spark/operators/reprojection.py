@@ -1,4 +1,5 @@
-"""filters.reprojection / filters.projpipeline — CRS transforms.
+"""filters.reprojection — CRS transforms (filters.projpipeline lives in
+operators/projpipeline.py).
 
 Reference semantics (PDAL filters/ReprojectionFilter.cpp):
   * transform (X, Y, Z) into out_srs; points whose transform FAILS are
@@ -308,24 +309,3 @@ def reproject_np(xs, ys, in_srs: str = "EPSG:4326", out_srs: str = "EPSG:3857"):
         return e[ok], n[ok], ok
     raise ValueError((in_srs, out_srs))
 
-
-def proj_pipeline(
-    df: DataFrame, steps, x: str = "x", y: str = "y"
-) -> DataFrame:
-    """filters.projpipeline (ProjPipelineFilter.cpp:60-121): apply a
-    CHAIN of coordinate operations in order with per-stage
-    drop-on-failure semantics.
-
-    steps = a real PROJ pipeline STRING ("+proj=pipeline +step ..."),
-    handled by operators/projpipeline.py's closed-form step
-    vocabulary, or the legacy registered-pair form
-    [(in_srs, out_srs), ...] — e.g. 3857 -> 4326 -> UTM 31N.
-    """
-    if isinstance(steps, str):
-        from pdal_spark.operators.projpipeline import projpipeline
-
-        return projpipeline(df, steps, x=x, y=y)
-    out = df
-    for in_srs, out_srs in steps:
-        out = reproject(out, in_srs, out_srs, x=x, y=y)
-    return out

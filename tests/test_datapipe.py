@@ -112,6 +112,63 @@ def test_char_bigram_logloss_short_docs(spark):
 
 # --- dedup -----------------------------------------------------------------
 
+# Pairs straddling t = 0.999 (disjoint vocabularies per pair). Every
+# pipeline keeps a pair iff its UNROUNDED Jaccard (containment) >= t:
+#   1, 2  subset: J = 2996/2999 = 0.99899967 (rounds to 0.999) -> dropped
+#   3, 4  equal size: J = 3995/3999 = 0.99899975 (rounds to 0.999) -> dropped
+#   5, 6  equal size: J = 1998/2000 == t -> kept
+#   7, 8  subset: J = C(7->8) = 999/1000 == t -> kept
+BOUNDARY_T = 0.999
+
+
+def boundary_rows():
+    s = [f"s{i}" for i in range(2999)]
+    e = [f"e{i}" for i in range(3997)]
+    q = [f"q{i}" for i in range(1999)]
+    c = [f"c{i}" for i in range(1000)]
+    docs = [s, s[:2996], e, e[:3995] + ["f0", "f1"],
+            q, q[:1998] + ["r0"], c, c[:999]]
+    return [(i + 1, " ".join(d)) for i, d in enumerate(docs)]
+
+
+def _boundary_expected(measure):
+    """{(a, b): exact value} over ordered pairs, in plain Python."""
+    sets = {i: set(t.split(" ")) for i, t in boundary_rows()}
+    out = {}
+    for a in sets:
+        for b in sets:
+            if a != b and sets[a] & sets[b]:
+                v = measure(sets[a], sets[b])
+                if v >= BOUNDARY_T:
+                    out[(a, b)] = v
+    assert (7, 8) in out and (1, 2) not in out
+    return out
+
+
+def _jaccard(x, y):
+    return len(x & y) / len(x | y)
+
+
+def _containment(x, y):
+    return len(x & y) / len(x)
+
+
+def _check_boundary(spark_df, oracle_sql, measure):
+    """spark_df == DuckDB(oracle_sql) == the plain-Python expectation on
+    the boundary docs (oracle_sql reads table ``bdocs``)."""
+    exp = {k: v for k, v in _boundary_expected(measure).items()
+           if measure is _containment or k[0] < k[1]}
+    got = {(r[0], r[1]): r[2] for r in spark_df.collect()}
+    assert sorted(got) == sorted(exp)
+    for k, v in got.items():
+        assert abs(v - exp[k]) <= 5e-7
+    if oracle_sql is not None:
+        con = duckdb.connect()
+        con.register("bdocs", pd.DataFrame(boundary_rows(),
+                                           columns=["doc_id", "text"]))
+        ora = {(r[0], r[1]): r[2] for r in con.sql(oracle_sql).fetchall()}
+        assert ora == got
+
 
 def test_exact_dedup(docs, ddb):
     out = dedup.exact_dedup(docs).select("doc_id")
@@ -123,10 +180,16 @@ def test_exact_dedup(docs, ddb):
     assert n == docs.count()
 
 
-def test_jaccard_pairs(docs, ddb):
+def test_jaccard_pairs(docs, ddb, spark, monkeypatch):
     out = dedup.jaccard_pairs(docs, threshold=0.8)
     exp = ddb.sql(dedup.jaccard_pairs_sql(0.8))
     _cmp(out, exp, ["id1", "id2"])
+    bd = spark.createDataFrame(boundary_rows(), "doc_id long, text string")
+    sql = dedup.jaccard_pairs_sql(BOUNDARY_T, table="bdocs")
+    _check_boundary(dedup.jaccard_pairs(bd, BOUNDARY_T), sql, _jaccard)
+    # the wide-vocabulary plan (fetched word-hash arrays) on the same docs
+    monkeypatch.setattr(dedup, "MASK_UNROLL_MAX", 0)
+    _check_boundary(dedup.jaccard_pairs(bd, BOUNDARY_T), sql, _jaccard)
 
 
 def test_containment_pairs(docs, ddb):
@@ -154,9 +217,16 @@ def test_containment_literal(spark):
     assert got == {(1, 2): 1.0}  # host->snippet is 4/10, below 0.5
     # Jaccard at the same threshold misses the quote relation entirely
     assert dedup.jaccard_pairs(df, threshold=0.5).count() == 0
+    # C(1->2) = 2996/2999 rounds to t but is below it; C(7->8) == t
+    bd = spark.createDataFrame(boundary_rows(), "doc_id long, text string")
+    _check_boundary(
+        dedup.containment_pairs(bd, threshold=BOUNDARY_T),
+        dedup.containment_pairs_sql(BOUNDARY_T, table="bdocs"),
+        _containment,
+    )
 
 
-def test_minhash_lsh_pairs(docs, ddb):
+def test_minhash_lsh_pairs(docs, ddb, spark):
     out = dedup.minhash_dedup_pairs(docs, threshold=0.8)
     exp = ddb.sql(dedup.minhash_dedup_pairs_sql(0.8))
     _cmp(out, exp, ["id1", "id2"])
@@ -165,10 +235,16 @@ def test_minhash_lsh_pairs(docs, ddb):
     lsh = out.toPandas()
     exact_keys = set(zip(exact.id1, exact.id2))
     assert set(zip(lsh.id1, lsh.id2)) <= exact_keys
+    bd = spark.createDataFrame(boundary_rows(), "doc_id long, text string")
+    _check_boundary(
+        dedup.minhash_dedup_pairs(bd, BOUNDARY_T),
+        dedup.minhash_dedup_pairs_sql(BOUNDARY_T, table="bdocs"),
+        _jaccard,
+    )
 
 
-def test_minhash_hash_word_ids(docs):
-    """vocab mode='hash' (no vocabulary shuffle) + word-join verifier:
+def test_minhash_hash_word_ids(docs, spark):
+    """vocab mode='hash' (no vocabulary shuffle) + word-array verifier:
     every returned pair must carry its TRUE jaccard (verified against the
     exact pair set), i.e. hash ids only perturb recall, never precision."""
     out = dedup.minhash_dedup_pairs(docs, threshold=0.8, word_id_mode="hash")
@@ -181,21 +257,44 @@ def test_minhash_hash_word_ids(docs):
         assert abs(exact_map[(a, b)] - j) < 1e-9
     # recall sanity: the 8x4-band LSH should keep the bulk of true pairs
     assert len(got) >= 0.8 * len(exact)
+    bd = spark.createDataFrame(boundary_rows(), "doc_id long, text string")
+    _check_boundary(
+        dedup.minhash_dedup_pairs(bd, BOUNDARY_T, word_id_mode="hash"),
+        None, _jaccard,
+    )
 
 
 def test_minhash_fetch_verifier_matches_inline(docs):
-    """verify='fetch' (candidates fetch word arrays post-join; the
-    multi-executor default — arrays never ride the band shuffle) is
-    pair-for-pair identical to the inline-carry 'wordarray' verifier."""
-    inline = dedup.minhash_dedup_pairs(
-        docs, threshold=0.8, word_id_mode="hash", verify="wordarray"
-    ).toPandas()
-    fetch = dedup.minhash_dedup_pairs(
-        docs, threshold=0.8, word_id_mode="hash", verify="fetch"
-    ).toPandas()
-    key = lambda d: sorted(zip(d.id1, d.id2, d.jaccard))
-    assert key(inline) == key(fetch)
-    assert len(fetch) > 0
+    """Hash-mode pairs (candidates fetch word arrays post-join — arrays
+    never ride the band shuffle) equal a plain-Python replay: the band
+    collisions of minhash_signature_arrays(word_id_mode="hash"), then
+    exact set Jaccard >= t."""
+    from collections import defaultdict
+
+    t, k, bands = 0.8, dedup.MINHASH_K, dedup.MINHASH_BANDS
+    rows = k // bands
+    got = {
+        (r.id1, r.id2): r.jaccard
+        for r in dedup.minhash_dedup_pairs(
+            docs, threshold=t, word_id_mode="hash"
+        ).collect()
+    }
+    buckets = defaultdict(set)
+    for r in dedup.minhash_signature_arrays(
+        docs, k, word_id_mode="hash"
+    ).collect():
+        for b in range(bands):
+            buckets[(b, tuple(r.sig[b * rows:(b + 1) * rows]))].add(r.id)
+    sets = {r.doc_id: set(r.text.split(" ")) for r in docs.collect()}
+    exp = {}
+    for ids in buckets.values():
+        for a in ids:
+            for b in ids:
+                if a < b and _jaccard(sets[a], sets[b]) >= t:
+                    exp[(a, b)] = _jaccard(sets[a], sets[b])
+    assert sorted(got) == sorted(exp)
+    assert all(abs(got[p] - exp[p]) <= 5e-7 for p in got)
+    assert len(got) > 0
 
 
 def test_simhash_banded_pairs_equal_exact(docs):

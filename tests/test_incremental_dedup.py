@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from pdal_spark.datapipe.dedup import canonicalize, minhash_dedup_pairs
 from pdal_spark.datapipe.incremental_dedup import NearDupIndex
+from test_datapipe import BOUNDARY_T, boundary_rows
 
 
 def _docs(spark, rows):
@@ -23,7 +24,7 @@ OTHER_NEAR = "one two three four six"
 
 def _batch_keep(spark, df, threshold, k=8, bands=4):
     pairs = minhash_dedup_pairs(
-        df, threshold, k=k, bands=bands, word_id_mode="hash", verify="fetch"
+        df, threshold, k=k, bands=bands, word_id_mode="hash"
     ).select("id1", "id2")
     canon = canonicalize(df, pairs)
     return sorted(
@@ -52,6 +53,14 @@ def test_two_increments_match_batch(spark, tmp_path):
     )
     assert kept == batch
     assert 10 not in kept and 1 in kept
+
+    # pairs straddling t = 0.999: only the J == t pairs (5, 6) and
+    # (7, 8) are near-dups, for the index and batch alike
+    bd = _docs(spark, boundary_rows())
+    idx = NearDupIndex(spark, str(tmp_path / "bidx"), threshold=BOUNDARY_T)
+    assert idx.ingest(bd)["n_dropped"] == 2
+    kept = sorted(r.doc_id for r in idx.corpus().collect())
+    assert kept == _batch_keep(spark, bd, BOUNDARY_T) == [1, 2, 3, 4, 5, 7]
 
 
 def test_cross_increment_chain_resolves_like_batch(spark, tmp_path):

@@ -151,7 +151,7 @@ def test_utm_south_zone_false_northing():
 
 
 def test_proj_pipeline_chain(spark):
-    """projpipeline: 4326 -> 3857 -> 4326 -> UTM31N chain equals the
+    """Chained reprojection: 4326 -> 3857 -> 4326 -> UTM31N equals the
     direct UTM transform (round-trip via Mercator is closed-form exact
     up to fp)."""
     import numpy as np
@@ -162,10 +162,12 @@ def test_proj_pipeline_chain(spark):
     ids = np.arange(200)
     xs, ys = geo_mod.geocode_lcg_np(ids)
     df = spark.createDataFrame(pd.DataFrame({"page_id": ids, "x": xs, "y": ys}))
-    chained = rp.proj_pipeline(
-        df, [("EPSG:4326", "EPSG:3857"), ("EPSG:3857", "EPSG:4326"),
-             ("EPSG:4326", "EPSG:32631")]
-    ).toPandas().sort_values("page_id")
+    chained = df
+    for in_srs, out_srs in [("EPSG:4326", "EPSG:3857"),
+                            ("EPSG:3857", "EPSG:4326"),
+                            ("EPSG:4326", "EPSG:32631")]:
+        chained = rp.reproject(chained, in_srs, out_srs)
+    chained = chained.toPandas().sort_values("page_id")
     direct = rp.reproject(df, "EPSG:4326", "EPSG:32631") \
         .toPandas().sort_values("page_id")
     # chained drops |lat|>=85.05 rows first (Mercator stage), direct does
