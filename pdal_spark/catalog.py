@@ -68,6 +68,7 @@ import time
 import uuid
 from typing import Iterator, Optional, Sequence
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from pdal_spark.parquet import read_parquet
@@ -97,23 +98,34 @@ class CommitConflict(RuntimeError):
 # read of the staged file.
 
 
-def _bloom_positions(value) -> list[int]:
-    out = []
-    for i in range(BLOOM_K):
-        d = hashlib.md5(f"{i}:{value}".encode()).digest()
-        out.append(int.from_bytes(d[:8], "big") % BLOOM_BITS)
-    return out
+# md5 state after "<i>:" for each probe i; a value's hash under probe i
+# is a copy fed the value's text
+_BLOOM_PROBES = [hashlib.md5(f"{i}:".encode()) for i in range(BLOOM_K)]
+assert BLOOM_BITS & (BLOOM_BITS - 1) == 0 and BLOOM_BITS <= 1 << 16
+
+
+def _bloom_positions(values) -> np.ndarray:
+    """The BLOOM_K bit positions of each value, one row per value:
+    int.from_bytes(md5 of f"{i}:{value}"[:8], "big") % BLOOM_BITS, which
+    for a power of two up to 2^16 is the low bits of digest bytes 6-7."""
+    digests = bytearray()
+    for v in values:
+        b = f"{v}".encode()
+        for probe in _BLOOM_PROBES:
+            h = probe.copy()
+            h.update(b)
+            digests += h.digest()
+    d = np.frombuffer(digests, dtype=np.uint8).reshape(-1, BLOOM_K, 16)
+    return ((d[..., 6].astype(np.int64) << 8) | d[..., 7]) & (BLOOM_BITS - 1)
 
 
 def _build_bloom(path: str, col: str) -> str:
     import pyarrow.parquet as pq
 
-    bits = bytearray(BLOOM_BITS // 8)
-    vals = pq.read_table(path, columns=[col]).column(0)
-    for v in vals.drop_null().to_pylist():
-        for p in _bloom_positions(v):
-            bits[p >> 3] |= 1 << (p & 7)
-    return bytes(bits).hex()
+    vals = pq.read_table(path, columns=[col]).column(0).drop_null().to_pylist()
+    bits = np.zeros(BLOOM_BITS, dtype=bool)
+    bits[_bloom_positions(vals).ravel()] = True
+    return np.packbits(bits, bitorder="little").tobytes().hex()
 
 
 def _sql_literal(dtype):
@@ -160,14 +172,9 @@ class SnapshotTable:
         bl = f.get("bloom", {}).get(col)
         if bl is None:
             return True  # unindexed file -> cannot prune
-        bits = bytes.fromhex(bl)
-        for v in values:
-            if all(
-                bits[p >> 3] & (1 << (p & 7))
-                for p in _bloom_positions(v)
-            ):
-                return True
-        return False
+        bits = np.unpackbits(np.frombuffer(bytes.fromhex(bl), dtype=np.uint8),
+                             bitorder="little").astype(bool)
+        return bool(bits[_bloom_positions(values)].all(axis=1).any())
 
     # -- snapshot bookkeeping ---------------------------------------------
 

@@ -691,21 +691,6 @@ def minhash_signature_arrays(
     )
 
 
-def minhash_bands(sigs: DataFrame, bands: int = MINHASH_BANDS, k: int = MINHASH_K) -> DataFrame:
-    """(id, band, key): banded signature keys for the LSH bucket join."""
-    rows = k // bands
-    banded = sigs.withColumn("band", (F.col("h") / rows).cast("int"))
-    return banded.groupBy("id", "band").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("h", "minh"))),
-                lambda s: s.getField("minh").cast("string"),
-            ),
-            ",",
-        ).alias("key")
-    )
-
-
 def minhash_dedup_pairs(
     df: DataFrame,
     threshold: float,
@@ -1184,7 +1169,7 @@ def lsh_plan(
     against recall BEFORE running the 100-TB job.
 
     Driver-side closed-form arithmetic only — no Spark job; feeds
-    minhash_bands(bands=...) / minhash_dedup_pairs.
+    minhash_dedup_pairs(bands=...) and NearDupIndex(bands=...).
     """
     if not (0.0 < threshold < 1.0):
         raise ValueError("threshold must be in (0, 1)")

@@ -106,17 +106,19 @@ class NearDupIndex:
 
     def _features(self, df: DataFrame) -> DataFrame:
         """One pass over the increment text -> (id, warr, _m0.._mk-1):
-        the sorted word-hash set plus the k raw minhash registers.
-        Everything downstream (arrays, bands, exact-dup grouping)
-        projects map-side off this single aggregate — the ingest
-        persists its rep-marked extension once, so the explode +
-        k-aggregate featurize runs exactly once per increment."""
+        the sorted 64-bit word-hash array (batch's _word_hash_sets
+        payload, so both verify on the same sets) plus the k raw
+        minhash registers over the 31-bit word ids. Everything
+        downstream (arrays, bands, exact-dup grouping) projects map-side
+        off this single aggregate — the ingest persists its rep-marked
+        extension once, so the explode + k-aggregate featurize runs
+        exactly once per increment."""
         words = doc_words(df, self.text_col, self.id_col, self.shingle)
-        wids = words.select(
-            "id", F.pmod(F.xxhash64("word"), F.lit(P31)).alias("wid")
+        wids = words.select("id", F.xxhash64("word").alias("h")).withColumn(
+            "wid", F.pmod("h", F.lit(P31))
         )
         return wids.groupBy("id").agg(
-            F.sort_array(F.collect_set("wid")).alias("warr"),
+            F.sort_array(F.collect_list("h")).alias("warr"),
             *[
                 F.min((F.col("wid") * F.lit(a) + F.lit(c)) % P31).alias(f"_m{i}")
                 for i, (a, c) in enumerate(_hash_params(self.k))

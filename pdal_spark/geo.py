@@ -66,14 +66,15 @@ def sql_double(v: float, dialect: str) -> str:
     return f"({s})" if math.copysign(1.0, v) < 0 else s
 
 
-def sql_trunc(e: str, dialect: str) -> str:
-    """DOUBLE `e` truncated toward zero to BIGINT, like C++ static_cast.
+def sql_trunc(e: str, dialect: str, to: str = "BIGINT") -> str:
+    """DOUBLE `e` truncated toward zero to BIGINT (or `to`), like C++
+    static_cast.
 
     Spark's CAST truncates; DuckDB's CAST rounds, so it truncates first.
     """
     if dialect == "spark":
-        return f"CAST({e} AS BIGINT)"
-    return f"CAST(trunc({e}) AS BIGINT)"
+        return f"CAST({e} AS {to})"
+    return f"CAST(trunc({e}) AS {to})"
 
 
 def sql_ident(name: str) -> str:
@@ -97,16 +98,35 @@ def sql_shiftright(e: str, k: int, dialect: str) -> str:
     return f"({e} >> {k})"
 
 
-def sql_int_lut(values: list[int], i: str, dialect: str) -> str:
-    """`values[i]` as BIGINT, for a 0-based integer index `i`, from an
-    array literal. DuckDB types a list literal as INTEGER, so the element
-    is cast for the BIGINT shift math around it."""
-    items = ",".join(str(int(v)) for v in values)
+def sql_array(values, elem: str, dialect: str) -> str:
+    """An array of `elem` ("DOUBLE", "INT" or "BIGINT") carried as one
+    string literal that the engine splits and casts.
+
+    The optimizer folds the cast to one array constant, so the
+    expression tree is a few nodes whatever the length; an
+    ``array(v1, v2, ...)`` literal is one node per element to parse,
+    analyze and fold. Floats travel as ``repr``, which both engines parse
+    back to the same double.
+    """
+    py = float if elem == "DOUBLE" else int
+    text = ",".join(map(repr, map(py, values)))
+    if not text:
+        raise ValueError("empty SQL array")
     if dialect == "spark":
-        get = f"element_at(array({items}), CAST({i} + 1 AS INT))"
-    else:
-        get = f"list_extract([{items}], CAST({i} + 1 AS INT))"
-    return f"CAST({get} AS BIGINT)"
+        return f"CAST(split('{text}', ',') AS ARRAY<{elem}>)"
+    return f"CAST(string_split('{text}', ',') AS {elem}[])"
+
+
+def sql_at(arr: str, i: str, dialect: str) -> str:
+    """Element `i` (1-based) of the array `arr`."""
+    if dialect == "spark":
+        return f"element_at({arr}, {i})"
+    return f"list_extract({arr}, {i})"
+
+
+def sql_int_lut(values: list[int], i: str, dialect: str) -> str:
+    """`values[i]` as BIGINT, for a 0-based integer index `i`."""
+    return sql_at(sql_array(values, "BIGINT", dialect), f"CAST({i} + 1 AS INT)", dialect)
 
 
 # ---------------------------------------------------------------------------

@@ -20,6 +20,7 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from pdal_spark import geo
 from pdal_spark.operators.knn import knn_join, knn_join_exact, radius_join
+from pdal_spark.operators.layout import _SPREAD_LUT
 from pdal_spark.operators.ordered import global_rank, running_total
 
 
@@ -424,27 +425,25 @@ def fps(
 _INT_MAX = 2147483647
 
 
-# byte -> its 8 bits spread to even positions (so a 31-bit spread is 4
-# table lookups instead of 31 shift-mask-add terms: the unrolled form
-# compiles to a ~60-node tree that Janino re-compiles per stage — the
-# range-partitioner sample pass, the count pass, and the final pass each
-# paid ~2 s of codegen for a 5k-row input; the LUT keys the same values
-# out of ONE array literal).
-_SPREAD_LUT = [
-    sum(((b >> i) & 1) << (2 * i) for i in range(8)) for b in range(256)
-]
 # byte -> bit-reversed byte (for the reverse-morton 32-bit reversal)
 _REV8_LUT = [int(f"{b:08b}"[::-1], 2) for b in range(256)]
+
+
+def _lut(values: list[int]) -> Column:
+    """A BIGINT lookup table as one folded array literal. The element
+    type matters: shiftleft on IntegerType wraps the shift mod 32."""
+    return F.expr(geo.sql_array(values, "BIGINT", "spark"))
 
 
 def _interleave_bits(v: Column, bits: int) -> Column:
     """Spread the low `bits` bits of v to even positions (codegen expr).
 
-    Bit-identical to the naive per-bit unroll; per-byte LUT keeps the
-    expression tree small (codegen compile time, not row throughput,
-    dominated the unrolled version). The cast matters: F.lit infers
-    array<int>, and shiftleft on IntegerType wraps the shift mod 32."""
-    lut = F.lit(_SPREAD_LUT).cast("array<bigint>")
+    Bit-identical to the naive per-bit unroll, through layout's byte
+    spread table: 4 lookups instead of 31 shift-mask-add terms, whose
+    ~60-node tree Janino re-compiled per stage (the range-partitioner
+    sample pass, the count pass and the final pass each paid ~2 s of
+    codegen for a 5k-row input)."""
+    lut = _lut(_SPREAD_LUT)
     out = F.lit(0).cast("long")
     for byte in range((bits + 7) // 8):
         idx = F.shiftright(v, 8 * byte).bitwiseAND(F.lit(255))
@@ -454,7 +453,7 @@ def _interleave_bits(v: Column, bits: int) -> Column:
 
 def _reverse_bits32(code: Column) -> Column:
     """32-bit bit reversal (ReverseZOrder::reverse_morton) via byte LUT."""
-    lut = F.lit(_REV8_LUT).cast("array<bigint>")
+    lut = _lut(_REV8_LUT)
     out = F.lit(0).cast("long")
     for byte in range(4):
         idx = F.shiftright(code, 8 * byte).bitwiseAND(F.lit(255))

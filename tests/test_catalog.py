@@ -8,6 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from pdal_spark import catalog
 from pdal_spark.catalog import SnapshotTable
 from test_parquet_read import jobs_run
 
@@ -529,6 +530,36 @@ def test_streaming_cdc_apply_resumable(spark, tmp_path):
         for v in range(v_after_b1 + 1, t.current_version() + 1)
     ]
     assert ops == ["merge"]
+
+
+def _bloom_by_formula(values) -> str:
+    """The bloom bits by their defining formula, one md5 per probe."""
+    import hashlib
+
+    bits = bytearray(catalog.BLOOM_BITS // 8)
+    for v in values:
+        for i in range(catalog.BLOOM_K):
+            d = hashlib.md5(f"{i}:{v}".encode()).digest()
+            p = int.from_bytes(d[:8], "big") % catalog.BLOOM_BITS
+            bits[p >> 3] |= 1 << (p & 7)
+    return bytes(bits).hex()
+
+
+@pytest.mark.parametrize("values", [
+    ["", "a", "é", "日本語", "it's", 'say "hi"', "a,b", "x" * 300, None]
+    + [f"https://example.org/{k}" for k in range(2000)],
+    [0, -1, 1, 2**31, -(2**63), 2**63 - 1, None] + list(range(0, 40000, 7)),
+], ids=["str", "int"])
+def test_bloom_bits_equal_formula(tmp_path, values):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "f.parquet")
+    pq.write_table(pa.table({"k": values}), path)
+    want = _bloom_by_formula(v for v in values if v is not None)
+    assert catalog._build_bloom(path, "k") == want
+    f = {"bloom": {"k": want}}
+    assert all(SnapshotTable._bloom_may_contain(f, "k", [v]) for v in values if v is not None)
 
 
 def test_bloom_point_lookup_prune(spark, tmp_path):

@@ -44,7 +44,7 @@ def star_ring(n: int, cx: float, cy: float, r: float) -> tuple:
     )
 
 
-# over the crop's codegen edge limit, so the ring test runs as the Arrow UDF
+# 610 edges, spiky enough that each edge spans several of the grid's rows
 STAR = Polygon(exterior=star_ring(600, 10.0, 5.0, 150.0),
                holes=(star_ring(10, 30.0, 10.0, 40.0),))
 
@@ -129,7 +129,7 @@ def test_text_byte_identity_through_crop(spark):
 
 
 def test_crop_large_ring_stream_outside_batch(spark):
-    assert sum(len(r) for r in STAR.rings()) > crop_mod._EXPR_EDGE_LIMIT
+    assert sum(len(r) for r in STAR.rings()) > 512
     df = synth_points(spark, N)
     ids, xs, ys = pts()
     inside = pnp_even_odd_np(xs, ys, STAR)
@@ -144,7 +144,7 @@ def test_crop_large_ring_stream_outside_batch(spark):
         .select("page_id").collect()
     }
     assert got_out == set(ids[~inside].tolist())
-    # batch mixes both polygon paths in one projection
+    # batch tests a small and a large ring in one projection
     rows = {
         (r[0], r[1]) for r in crop(df, [CONCAVE, STAR], mode="batch")
         .select("page_id", "geom_id").collect()
@@ -154,10 +154,23 @@ def test_crop_large_ring_stream_outside_batch(spark):
     assert rows == want
 
 
-def test_arrow_pnp_column_builds_without_warnings():
+def test_pnp_column_builds_without_warnings():
     with warnings.catch_warnings():
         warnings.simplefilter("error")
         crop_mod.polygon_contains_col(STAR, "x", "y")
+
+
+def _expr_nodes(spark, poly) -> int:
+    """Nodes in the analyzed PnP expression (one treeString line each)."""
+    df = spark.range(1).selectExpr("CAST(id AS DOUBLE) AS x", "CAST(id AS DOUBLE) AS y")
+    plan = df.select(crop_mod.polygon_contains_col(poly))._jdf.queryExecution().analyzed()
+    return len(plan.expressions().apply(0).treeString().splitlines())
+
+
+def test_pnp_expression_size_does_not_grow_with_edges(spark):
+    sizes = {n: _expr_nodes(spark, Polygon(exterior=star_ring(n, 0.0, 0.0, 50.0)))
+             for n in (6, 600, 10_000)}
+    assert len(set(sizes.values())) == 1, sizes
 
 
 def _plan_after_crop(spark, path, poly):
@@ -177,15 +190,16 @@ def _plan_after_crop(spark, path, poly):
 
 @pytest.mark.parametrize("edges", [8, 600])
 def test_crop_plan_reads_xy_and_pushes_bbox(spark, tmp_path, edges):
-    """Both polygon paths: the scan reads only (x, y), the polygon bbox
-    reaches parquet as pushed filters, and no whole-row Python stage runs."""
+    """A small and a large ring: the scan reads only (x, y), the polygon
+    bbox reaches parquet as pushed filters, and no Python stage runs."""
     from pdal_spark.synth import synth_pages, with_coords
 
     path = str(tmp_path / "pages")
     with_coords(synth_pages(spark, 2000)).write.parquet(path)
     poly = Polygon(exterior=star_ring(edges, 10.0, 5.0, 60.0))
     plan = _plan_after_crop(spark, path, poly)
-    assert "MapInPandas" not in plan
+    for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
+        assert node not in plan, node
     scan = plan[plan.index("FileScan parquet"):]
     assert "ReadSchema: struct<x:double,y:double>" in scan
     pushed = scan[scan.index("PushedFilters: ["):]
@@ -196,40 +210,105 @@ def test_crop_plan_reads_xy_and_pushes_bbox(spark, tmp_path, edges):
         assert f in pushed, (f, pushed)
 
 
-def test_pnp_builders_bit_identical_on_boundaries(spark):
-    """Points on vertices, on vertical / horizontal / slanted edges and at
-    a vertex's y: the SQL-string builder and the Arrow builder each equal
-    pnp_even_odd_np row for row."""
-    poly = Polygon(
-        exterior=((0.0, 0.0), (10.0, 0.0), (10.0, 10.0), (5.3, 14.7),
-                  (0.1, 10.3), (0.1, 0.0)),
-        holes=(((2.0, 2.0), (4.0, 2.0), (3.1, 4.3)),),
-    )
-    edges = list(crop_mod._edges(poly))
+def grid_lines(poly) -> tuple[np.ndarray, np.ndarray]:
+    """The x of each column boundary and the y of each row boundary of
+    the cell grid that polygon_pnp_sql indexes the ring's edges on."""
+    e = np.array([s for s in crop_mod._edges(poly) if s[1] != s[3]])
+    b = poly.bbox()
+    g = crop_mod._grid(e, b)
+    assert g.ky > 1 and g.kx > 1
+    return b.minx + g.w * np.arange(g.kx + 1), b.miny + g.h * np.arange(g.ky + 1)
+
+
+def _boundary_points(poly, ts) -> tuple[np.ndarray, np.ndarray]:
+    """Vertices, edge midpoints, points along each vertex's y, points on
+    each slanted edge (at fractions `ts`, by the kernel's own formula)
+    and their float64 neighbours, and points on each grid line and its
+    two neighbours."""
     px, py = [], []
-    for x1, y1, x2, y2 in edges:
+    for x1, y1, x2, y2 in crop_mod._edges(poly):
         px += [x1, (x1 + x2) / 2]  # the vertex, the edge midpoint
         py += [y1, (y1 + y2) / 2]
         for x in (-1.0, x1 - 1e-9, x1 + 1e-9, (x1 + x2) / 2, 20.0):
             px.append(x)  # along the vertex's y
             py.append(y1)
         if y1 != y2:  # on the edge, by the kernel's own formula, and beside it
-            for t in np.arange(1, 17) / 17:
+            for t in ts:
                 y = y1 + t * (y2 - y1)
                 x = (x2 - x1) * (y - y1) / (y2 - y1) + x1
                 px += [x, np.nextafter(x, -np.inf), np.nextafter(x, np.inf)]
                 py += [y, y, y]
-    xs, ys = np.array(px), np.array(py)
-    want = pnp_even_odd_np(xs, ys, poly)
+    bb = poly.bbox()
+    xs, ys = grid_lines(poly)
+    for lines, across, on_x in ((xs, np.linspace(bb.miny, bb.maxy, 9), True),
+                                (ys, np.linspace(bb.minx, bb.maxx, 9), False)):
+        for v in lines:
+            for u in (np.nextafter(v, -np.inf), v, np.nextafter(v, np.inf)):
+                for a in across:
+                    px.append(u if on_x else a)
+                    py.append(a if on_x else u)
+    return np.array(px), np.array(py)
+
+
+SMALL = Polygon(
+    exterior=((0.0, 0.0), (10.0, 0.0), (10.0, 10.0), (5.3, 14.7),
+              (0.1, 10.3), (0.1, 0.0)),
+    holes=(((2.0, 2.0), (4.0, 2.0), (3.1, 4.3)),),
+)
+
+
+def _check_boundaries(spark, poly, ts):
+    xs, ys = _boundary_points(poly, ts)
+    bb = poly.bbox()
+    cx, cy = (bb.minx + bb.maxx) / 2, (bb.miny + bb.maxy) / 2
+    for v in (np.nan, np.inf, -np.inf):
+        xs = np.append(xs, [v, cx, v])
+        ys = np.append(ys, [cy, v, v])
+    with np.errstate(invalid="ignore"):
+        want = pnp_even_odd_np(xs, ys, poly)
     assert want.any() and not want.all()
     rows = [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(xs, ys))]
     n = len(rows)
-    rows += [(n, None, 5.0), (n + 1, 5.0, None)]  # a null coordinate is outside
+    rows += [(n, None, cy), (n + 1, cx, None)]  # a null coordinate is outside
     df = spark.createDataFrame(rows, "id long, x double, y double").repartition(3)
-    for col in (F.expr(crop_mod._pnp_expr_sql(poly, "x", "y")),
-                crop_mod._pnp_arrow_col(poly, "x", "y")):
-        got = dict(df.select("id", col.alias("v")).collect())
-        assert [got[i] for i in range(n + 2)] == want.tolist() + [False, False]
+    got = dict(df.select("id", crop_mod.polygon_contains_col(poly, "x", "y")).collect())
+    assert [got[i] for i in range(n + 2)] == want.tolist() + [False, False]
+    out = {r[0] for r in crop(df, [poly], outside=True, mode="stream")
+           .select("id").collect()}
+    assert out == {i for i in range(n + 2) if i >= n or not want[i]}
+
+
+def test_pnp_builders_bit_identical_on_boundaries(spark):
+    """Points on vertices, on vertical / horizontal / slanted edges, at a
+    vertex's y and on every grid line, and NaN, +-Inf and null
+    coordinates: polygon_contains_col equals pnp_even_odd_np row for row,
+    and outside=True keeps exactly the other rows, null ones included."""
+    _check_boundaries(spark, SMALL, np.arange(1, 17) / 17)
+
+
+def test_pnp_large_ring_bit_identical_on_boundaries(spark):
+    """As above, for a 610-edge ring with a hole."""
+    _check_boundaries(spark, STAR, (0.25, 0.5))
+
+
+@pytest.mark.parametrize("frame", ["ids", "pages"])
+@pytest.mark.parametrize("edges", [480, 600])
+def test_crop_large_ring_over_computed_coordinates(spark, edges, frame):
+    """x and y computed in the same projection (with_coords: the LCG
+    geocode over an id-only frame, the sha256 geocode over pages) are
+    evaluated once per row, not once per edge."""
+    from pdal_spark.synth import synth_pages, with_coords
+
+    poly = Polygon(exterior=star_ring(edges, 10.0, 5.0, 150.0))
+    if frame == "ids":
+        df = with_coords(spark.range(N).withColumnRenamed("id", "page_id"))
+    else:
+        df = with_coords(synth_pages(spark, 2000))
+    xy = df.select("page_id", "x", "y").toPandas()
+    inside = pnp_even_odd_np(xy.x.to_numpy(), xy.y.to_numpy(), poly)
+    assert inside.any() and not inside.all()
+    got = {r[0] for r in crop(df, [poly], mode="stream").select("page_id").collect()}
+    assert got == set(xy.page_id[inside].tolist())
 
 
 @pytest.mark.parametrize("tok", ["nan", "inf", "-inf", "Infinity", "NaN"])

@@ -3,7 +3,8 @@ text (through F.expr), its DuckDB text (through DuckDB) and the numpy
 oracle agree bit for bit, on the inputs where the formulas are most
 fragile: exact negative tile boundaries, buffered-square edges, hex
 mini-column and half-row edges, cell-grid clamp edges and domain corners,
-LCG ids near 2^31, a polygon with horizontal edges, and null coordinates
+LCG ids near 2^31, a polygon with horizontal edges, a 600-edge ring's
+grid lines, and null coordinates
 (Spark and DuckDB only: numpy has no null). The Hilbert key's oracle is
 the textbook xy2d loop. The Spark Columns cost a few py4j calls each."""
 
@@ -19,6 +20,7 @@ from pdal_spark.operators import cellindex as ci
 from pdal_spark.operators import crop
 from pdal_spark.operators.crop import Box, Circle, Polygon, pnp_even_odd_np
 from pdal_spark.operators.layout import HILBERT_ORDER, hilbert_key, hilbert_key_sql
+from test_crop import grid_lines, star_ring
 from test_layout import _grid, _xy2d
 from test_splitter import square_contains_py
 
@@ -39,6 +41,7 @@ POLY = Polygon(  # horizontal edges at y = -30, 0, 45; one slanted edge
     exterior=((-90.0, -30.0), (0.0, -30.0), (VX, VY), (-45.0, VY),
               (-45.0, 0.0), (-75.0, 0.0), (-75.0, 45.0), (-90.0, 45.0)),
 )
+BIG = Polygon(exterior=star_ring(600, -30.0, 0.0, 150.0))  # > 512 edges
 
 
 def _around(vals) -> list[float]:
@@ -78,6 +81,14 @@ def _inputs() -> list[tuple]:
         y = -30.0 + t / 9 * (VY + 30.0)
         px += _around([VX * (y + 30.0) / (VY + 30.0)])
         py += [y] * 3
+    b = BIG.bbox()
+    xs, ys = grid_lines(BIG)
+    for y in _around(ys):  # each grid line of the big ring, and beside it
+        px += np.linspace(b.minx, b.maxx, 9).tolist()
+        py += [y] * 9
+    for x in _around(xs):
+        px += [x] * 9
+        py += np.linspace(b.miny, b.maxy, 9).tolist()
     px += [None, 1.0, None]
     py += [1.0, None, None]
     # ids around 2^31: the LCG's first product approaches 2^63 there
@@ -156,8 +167,8 @@ CASES = {
         ],
     ),
     "crop_polygon": (
-        lambda i, x, y, d: [crop.polygon_pnp_sql(POLY, x, y, d)],
-        lambda i, x, y: [pnp_even_odd_np(x, y, POLY)],
+        lambda i, x, y, d: [crop.polygon_pnp_sql(p, x, y, d) for p in (POLY, BIG)],
+        lambda i, x, y: [pnp_even_odd_np(x, y, p) for p in (POLY, BIG)],
     ),
 }
 

@@ -63,6 +63,29 @@ def test_two_increments_match_batch(spark, tmp_path):
     assert kept == _batch_keep(spark, bd, BOUNDARY_T) == [1, 2, 3, 4, 5, 7]
 
 
+# two words whose xxhash64 values differ but agree mod 2^31 - 1 (the
+# minhash word id), found by a scan over "w0".."w299999"
+COLLIDING = ("w7009", "w63457")
+
+
+def test_word_id_collision_verifies_like_batch(spark, tmp_path):
+    """The pair shares its minhash registers but only 3 of 5 words
+    (J = 0.6 < 0.7): the index verifies on 64-bit word hashes, as batch
+    does, and keeps both docs."""
+    df = spark.range(1).select(
+        F.xxhash64(F.lit(COLLIDING[0])).alias("h0"),
+        F.xxhash64(F.lit(COLLIDING[1])).alias("h1"),
+    ).first()
+    p31 = 2**31 - 1
+    assert df.h0 != df.h1 and df.h0 % p31 == df.h1 % p31
+    docs = _docs(spark, [(1, f"{COLLIDING[0]} alpha beta gamma"),
+                         (2, f"{COLLIDING[1]} alpha beta gamma")])
+    idx = NearDupIndex(spark, str(tmp_path / "cidx"), threshold=0.7)
+    idx.ingest(docs)
+    kept = sorted(r.doc_id for r in idx.corpus().collect())
+    assert kept == _batch_keep(spark, docs, 0.7) == [1, 2]
+
+
 def test_cross_increment_chain_resolves_like_batch(spark, tmp_path):
     """B dups A, A dups O, B !dups O — with A dropped at its own ingest.
     Features of dropped docs stay indexed, so the later B still finds A

@@ -225,7 +225,7 @@ def test_overlay_last_match_wins(pts_df):
 
 
 def test_overlay_large_ring(pts_df):
-    # a ring over the crop's codegen edge limit: the Arrow PnP path
+    # a 610-edge ring, tested over per-cell edge lists in one expression
     from test_crop import STAR
 
     from pdal_spark.operators.crop import pnp_even_odd_np
