@@ -4326,7 +4326,7 @@ def _layout_optimize_oracle() -> str:
 def _eigen_cov_sql(pts_sql: str, k: int, three_d: bool,
                    exclude_self: bool = False) -> str:
     """Shared CTE chain: (d2, id)-ranked kNN (self-inclusive, or
-    exclude_self like _exclude_self_knn) -> float32-demeaned
+    features._self_knn(exclude_self=True)) -> float32-demeaned
     neighborhood covariance (EigenUtils.cpp:196-206 round-trip,
     /(n-1)) — the SQL twin of features._neighbor_cov."""
     self_pred = "s.doc_id <> c.doc_id" if exclude_self else "TRUE"

@@ -6,7 +6,9 @@ we run the cell-bucketed kNN join once, then aggregate):
 
   1. kNN pairs via operators.knn.knn_join (neighbor lists INCLUDE the
      query point itself — kdi.neighbors() returns it at distance 0,
-     EigenvaluesFilter.cpp:86, LOFFilter.cpp:81-87).
+     EigenvaluesFilter.cpp:86, LOFFilter.cpp:81-87). Every operator's
+     cell_size/validate go straight to knn_join: the default
+     cell_size=None is its exact broadcast plan, a cell_size the grid.
   2. neighborhood covariance by relational aggregation — demeaned
      coordinates pass through FLOAT32 exactly like the reference
      (EigenUtils.cpp:185-212 static_cast<float>), divisor n-1.
@@ -42,34 +44,29 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pdal_spark.operators.knn import knn_join, knn_join_exact
+from pdal_spark.operators.knn import knn_join
 
 
 def _self_knn(
     df: DataFrame, k: int, cell_size: float | None, id_col: str,
-    x: str, y: str, z: str | None, exact: bool, validate: bool = False,
+    x: str, y: str, validate: bool, exclude_self: bool = False,
 ) -> DataFrame:
-    """(src, cand, dist, rank) with self included (rank 1, dist 0)."""
-    cols = [F.col(id_col).alias("_f_id"), F.col(x), F.col(y)]
-    pts = df.select(*cols)
-    cand = df.select(
-        F.col(id_col).alias("_f_cand"), F.col(x), F.col(y)
-    )
-    if exact or cell_size is None:
-        return knn_join_exact(pts.withColumnRenamed("_f_id", "_f_src"), cand, k,
-                              src_id="_f_src", cand_id="_f_cand", x=x, y=y)
-    return knn_join(pts.withColumnRenamed("_f_id", "_f_src"), cand, k,
-                    cell_size=cell_size, src_id="_f_src", cand_id="_f_cand",
-                    x=x, y=y, validate=validate)
+    """(_f_src, _f_cand, dist, rank): the k nearest points per point,
+    self included (rank 1, dist 0) unless exclude_self. cell_size and
+    validate: as knn_join (None = the exact broadcast plan)."""
+    pts = df.select(F.col(id_col).alias("_f_src"), F.col(x), F.col(y))
+    cand = df.select(F.col(id_col).alias("_f_cand"), F.col(x), F.col(y))
+    return knn_join(pts, cand, k, cell_size, src_id="_f_src", cand_id="_f_cand",
+                    x=x, y=y, exclude_self=exclude_self, validate=validate)
 
 
 def _neighbor_cov(
     df: DataFrame, k: int, cell_size: float | None, id_col: str,
-    x: str, y: str, z: str | None, exact: bool, validate: bool = False,
+    x: str, y: str, z: str | None, validate: bool,
 ) -> DataFrame:
     """(id, n, cxx, cxy, cxz, cyy, cyz, czz): per-point neighborhood
     covariance (self included in the k, float32 demeaning, /(n-1))."""
-    knn = _self_knn(df, k, cell_size, id_col, x, y, z, exact, validate)
+    knn = _self_knn(df, k, cell_size, id_col, x, y, validate)
     zc = F.col(z) if z else F.lit(0.0)
     coords = df.select(
         F.col(id_col).alias("_f_cand"),
@@ -130,20 +127,19 @@ def _eigh_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         })
 
 
-def _eigen_base(df, k, cell_size, id_col, x, y, z, exact,
-                validate=False) -> DataFrame:
-    cov = _neighbor_cov(df, k, cell_size, id_col, x, y, z, exact, validate)
+def _eigen_base(df, k, cell_size, id_col, x, y, z, validate) -> DataFrame:
+    cov = _neighbor_cov(df, k, cell_size, id_col, x, y, z, validate)
     return cov.mapInPandas(_eigh_kernel, schema=_EIG_OUT)
 
 
 def eigenvalues(
     df: DataFrame, k: int = 8, cell_size: float | None = None,
     normalize: bool = False, id_col: str = "page_id",
-    x: str = "x", y: str = "y", z: str | None = None, exact: bool = False,
+    x: str = "x", y: str = "y", z: str | None = None,
     validate: bool = False,
 ) -> DataFrame:
     """filters.eigenvalues -> Eigenvalue0/1/2 columns (ascending)."""
-    eig = _eigen_base(df, k, cell_size, id_col, x, y, z, exact, validate)
+    eig = _eigen_base(df, k, cell_size, id_col, x, y, z, validate)
     e0, e1, e2 = F.col("e0"), F.col("e1"), F.col("e2")
     if normalize:
         s = e0 + e1 + e2
@@ -160,10 +156,10 @@ def normal(
     df: DataFrame, k: int = 8, cell_size: float | None = None,
     viewpoint: tuple[float, float, float] | None = None, always_up: bool = True,
     id_col: str = "page_id", x: str = "x", y: str = "y", z: str | None = None,
-    exact: bool = False, validate: bool = False,
+    validate: bool = False,
 ) -> DataFrame:
     """filters.normal -> NormalX/Y/Z + Curvature."""
-    eig = _eigen_base(df, k, cell_size, id_col, x, y, z, exact, validate)
+    eig = _eigen_base(df, k, cell_size, id_col, x, y, z, validate)
     nx, ny, nz = F.col("v0x"), F.col("v0y"), F.col("v0z")
     s = F.col("e0") + F.col("e1") + F.col("e2")
     curv = F.when(s != 0, F.abs(F.col("e0") / s)).otherwise(0.0)
@@ -195,11 +191,11 @@ def normal(
 def approximate_coplanar(
     df: DataFrame, k: int = 8, thresh1: float = 25.0, thresh2: float = 6.0,
     cell_size: float | None = None, id_col: str = "page_id",
-    x: str = "x", y: str = "y", z: str | None = None, exact: bool = False,
+    x: str = "x", y: str = "y", z: str | None = None,
     validate: bool = False,
 ) -> DataFrame:
     """filters.approximatecoplanar -> Coplanar 0/1."""
-    eig = _eigen_base(df, k, cell_size, id_col, x, y, z, exact, validate)
+    eig = _eigen_base(df, k, cell_size, id_col, x, y, z, validate)
     cop = (
         (F.col("e1") > thresh1 * F.col("e0"))
         & (thresh2 * F.col("e1") > F.col("e2"))
@@ -211,12 +207,12 @@ def approximate_coplanar(
 def covariance_features(
     df: DataFrame, k: int = 10, cell_size: float | None = None,
     id_col: str = "page_id", x: str = "x", y: str = "y", z: str | None = None,
-    exact: bool = False, validate: bool = False,
+    validate: bool = False,
 ) -> DataFrame:
     """filters.covariancefeatures Dimensionality set: Linearity, Planarity,
     Scattering, Verticality. Neighbors = k+1 (CovarianceFeaturesFilter
     passes knn+1)."""
-    eig = _eigen_base(df, k + 1, cell_size, id_col, x, y, z, exact, validate)
+    eig = _eigen_base(df, k + 1, cell_size, id_col, x, y, z, validate)
     # lambda desc = (e2, e1, e0) clamped at 0
     l0 = F.greatest(F.col("e2"), F.lit(0.0))
     l1 = F.greatest(F.col("e1"), F.lit(0.0))
@@ -239,12 +235,12 @@ def covariance_features(
 def estimate_rank(
     df: DataFrame, k: int = 8, thresh: float = 0.01,
     cell_size: float | None = None, id_col: str = "page_id",
-    x: str = "x", y: str = "y", z: str | None = None, exact: bool = False,
+    x: str = "x", y: str = "y", z: str | None = None,
     validate: bool = False,
 ) -> DataFrame:
     """filters.estimaterank: SVD rank of the neighborhood covariance with
     Eigen's relative threshold (sv > thresh * sv_max)."""
-    eig = _eigen_base(df, k, cell_size, id_col, x, y, z, exact, validate)
+    eig = _eigen_base(df, k, cell_size, id_col, x, y, z, validate)
     # covariance is PSD: singular values == |eigenvalues| == eigenvalues
     s0 = F.greatest(F.abs("e0"), F.abs("e1"), F.abs("e2"))
     t = F.lit(float(np.float32(thresh))) * s0
@@ -261,7 +257,7 @@ def estimate_rank(
 
 def lof(
     df: DataFrame, minpts: int = 10, cell_size: float | None = None,
-    id_col: str = "page_id", x: str = "x", y: str = "y", exact: bool = False,
+    id_col: str = "page_id", x: str = "x", y: str = "y",
     validate: bool = False,
 ) -> DataFrame:
     """filters.lof: KDistance, LocalReachabilityDistance, LocalOutlierFactor.
@@ -271,8 +267,7 @@ def lof(
     self entry participates in the lrd/lof means exactly as in the
     reference. Three relational passes over one cached kNN result."""
     kk = minpts + 1
-    knn = _self_knn(df, kk, cell_size, id_col, x, y, None, exact,
-                    validate).cache()
+    knn = _self_knn(df, kk, cell_size, id_col, x, y, validate).cache()
     kdist = knn.filter(F.col("rank") == kk).select(
         F.col("_f_src").alias("_l_id"), F.col("dist").alias("kdistance")
     )
@@ -302,13 +297,12 @@ def lof(
 
 def reciprocity(
     df: DataFrame, k: int = 8, cell_size: float | None = None,
-    id_col: str = "page_id", x: str = "x", y: str = "y", exact: bool = False,
+    id_col: str = "page_id", x: str = "x", y: str = "y",
     validate: bool = False,
 ) -> DataFrame:
     """filters.reciprocity: 100 * |{j in N_i : i not in N_j}| / k, where
     N are k+1 lists including self (self skipped in the count)."""
-    knn = _self_knn(df, k + 1, cell_size, id_col, x, y, None, exact,
-                    validate).cache()
+    knn = _self_knn(df, k + 1, cell_size, id_col, x, y, validate).cache()
     others = knn.filter(F.col("_f_src") != F.col("_f_cand")).select(
         "_f_src", "_f_cand"
     )
@@ -331,25 +325,10 @@ def reciprocity(
 # ---------------------------------------------------------------------------
 
 
-def _exclude_self_knn(
-    df: DataFrame, k: int, cell_size: float | None, id_col: str,
-    x: str, y: str, exact: bool, validate: bool,
-) -> DataFrame:
-    """(_f_src, _f_cand, dist, rank): k nearest OTHER points per point."""
-    pts = df.select(F.col(id_col).alias("_f_src"), F.col(x), F.col(y))
-    cand = df.select(F.col(id_col).alias("_f_cand"), F.col(x), F.col(y))
-    if exact or cell_size is None:
-        return knn_join_exact(pts, cand, k, src_id="_f_src", cand_id="_f_cand",
-                              x=x, y=y, exclude_self=True)
-    return knn_join(pts, cand, k, cell_size=cell_size, src_id="_f_src",
-                    cand_id="_f_cand", x=x, y=y, exclude_self=True,
-                    validate=validate)
-
-
 def plane_fit(
     df: DataFrame, knn: int = 8, cell_size: float | None = None,
     id_col: str = "page_id", x: str = "x", y: str = "y", z: str | None = None,
-    exact: bool = False, validate: bool = False,
+    validate: bool = False,
 ) -> DataFrame:
     """filters.planefit (PlaneFitFilter.cpp:105-155): PCA plane through
     the k nearest neighbors EXCLUDING the point (ni.begin()+1, :121);
@@ -362,7 +341,8 @@ def plane_fit(
     distance — the reference divides the sum by the knn PARAMETER, not
     the actual neighbor count (:152), replicated.
     """
-    knnp = _exclude_self_knn(df, knn, cell_size, id_col, x, y, exact, validate)
+    knnp = _self_knn(df, knn, cell_size, id_col, x, y, validate,
+                     exclude_self=True)
     zc = F.col(z) if z else F.lit(0.0)
     coords = df.select(
         F.col(id_col).alias("_f_cand"),
@@ -476,7 +456,7 @@ def _seb_ball(pts: "np.ndarray") -> tuple["np.ndarray", float]:
 def miniball(
     df: DataFrame, knn: int = 8, cell_size: float | None = None,
     id_col: str = "page_id", x: str = "x", y: str = "y", z: str | None = None,
-    exact: bool = False, validate: bool = False,
+    validate: bool = False,
 ) -> DataFrame:
     """filters.miniball (MiniballFilter.cpp:107-151): smallest enclosing
     ball of the k nearest neighbors EXCLUDING the point; then
@@ -491,7 +471,8 @@ def miniball(
     sequential per point, but points are independent — the kernel
     parallelizes over partitions like every other mapInPandas stage.
     """
-    knnp = _exclude_self_knn(df, knn, cell_size, id_col, x, y, exact, validate)
+    knnp = _self_knn(df, knn, cell_size, id_col, x, y, validate,
+                     exclude_self=True)
     zc = F.col(z) if z else F.lit(0.0)
     coords = df.select(
         F.col(id_col).alias("_f_cand"),

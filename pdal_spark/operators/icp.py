@@ -51,17 +51,62 @@ def _with_cell3(df: DataFrame, cell: float, x: str, y: str, z: str) -> DataFrame
     )
 
 
-def _min_pair(d2, cand_id, cx, cy, cz):
-    """(distance, cand_id)-ordered argmin — the deterministic stand-in
-    for the reference KD-tree's unspecified equal-distance order (same
-    rule as operators.knn). min_by with the (d2, id) struct key beats
-    min(struct(...)) — the 5-field struct buffer forces SortAggregate;
-    cand_id is unique so the ordering key is tie-free."""
-    return F.min_by(
-        F.struct(d2.alias("d2"), cand_id.alias("i"),
-                 cx.alias("cx"), cy.alias("cy"), cz.alias("cz")),
-        F.struct(d2.alias("d2"), cand_id.alias("i")),
+def _nearest(pairs: DataFrame) -> DataFrame:
+    """Per src row of a (src, cand) pair frame, the (distance,
+    cand_id)-ordered argmin as struct _m(d2, i, cx, cy, cz) — the
+    deterministic stand-in for the reference KD-tree's unspecified
+    equal-distance order (same rule as operators.knn). min_by with the
+    (d2, id) struct key beats min(struct(...)) — the 5-field struct
+    buffer forces SortAggregate; cand_id is unique so the ordering key
+    is tie-free."""
+    d2 = (
+        (F.col("_sx") - F.col("_nx")) ** 2
+        + (F.col("_sy") - F.col("_ny")) ** 2
+        + (F.col("_sz") - F.col("_nz")) ** 2
     )
+    key = F.struct(d2.alias("d2"), F.col("_nid").alias("i"))
+    return pairs.groupBy("_sid", "_sx", "_sy", "_sz").agg(
+        F.min_by(
+            F.struct(d2.alias("d2"), F.col("_nid").alias("i"),
+                     F.col("_nx").alias("cx"), F.col("_ny").alias("cy"),
+                     F.col("_nz").alias("cz")),
+            key,
+        ).alias("_m")
+    )
+
+
+def _round(remaining: DataFrame, c_base: DataFrame, size: float) -> DataFrame:
+    """One exact-NN round on a grid of `size`: every remaining src row
+    joins the candidates of its 27-cell neighborhood, and only rows whose
+    nearest distance is <= size are returned (the certificate: then the
+    neighborhood provably held the true nearest neighbor)."""
+    s = _with_cell3(remaining, size, "_sx", "_sy", "_sz")
+    offs = F.array(
+        *[
+            F.struct(
+                (F.col("_cx") + ox).alias("cx"),
+                (F.col("_cy") + oy).alias("cy"),
+                (F.col("_cz") + oz).alias("cz"),
+            )
+            for ox, oy, oz in _OFFS3
+        ]
+    )
+    s = (
+        s.withColumn("_nb", F.explode(offs))
+        .withColumns({"_cx": F.col("_nb.cx"), "_cy": F.col("_nb.cy"),
+                      "_cz": F.col("_nb.cz")})
+        .drop("_nb")
+    )
+    c = _with_cell3(c_base, size, "_nx", "_ny", "_nz")
+    return _nearest(s.join(c, ["_cx", "_cy", "_cz"])).filter(
+        F.sqrt("_m.d2") <= F.lit(size))
+
+
+def _residual(remaining: DataFrame, c_base: DataFrame) -> DataFrame:
+    """The far-outlier tail after the last round: broadcast the RESIDUAL
+    (small side) against the whole candidate cloud, map-side-combined
+    min per residual row."""
+    return _nearest(c_base.crossJoin(F.broadcast(remaining)))
 
 
 def nn1_join_3d(
@@ -103,12 +148,6 @@ def nn1_join_3d(
         F.col(cand_id).alias("_nid"),
         F.col(x).alias("_nx"), F.col(y).alias("_ny"), F.col(z).alias("_nz"),
     )
-    d2 = (
-        (F.col("_sx") - F.col("_nx")) ** 2
-        + (F.col("_sy") - F.col("_ny")) ** 2
-        + (F.col("_sz") - F.col("_nz")) ** 2
-    )
-
     remaining = s_base
     # remaining-size bookkeeping is ARITHMETIC (n_rem -= matched): a
     # `remaining.limit(1).count()` emptiness probe on an empty anti-join
@@ -120,33 +159,7 @@ def nn1_join_3d(
     done: list[DataFrame] = []
     size = float(cell)
     for _ in range(max_rounds):
-        s = _with_cell3(remaining, size, "_sx", "_sy", "_sz")
-        offs = F.array(
-            *[
-                F.struct(
-                    (F.col("_cx") + ox).alias("cx"),
-                    (F.col("_cy") + oy).alias("cy"),
-                    (F.col("_cz") + oz).alias("cz"),
-                )
-                for ox, oy, oz in _OFFS3
-            ]
-        )
-        s = (
-            s.withColumn("_nb", F.explode(offs))
-            .withColumns({"_cx": F.col("_nb.cx"), "_cy": F.col("_nb.cy"),
-                          "_cz": F.col("_nb.cz")})
-            .drop("_nb")
-        )
-        c = _with_cell3(c_base, size, "_nx", "_ny", "_nz")
-        best = (
-            s.join(c, ["_cx", "_cy", "_cz"])
-            .groupBy("_sid", "_sx", "_sy", "_sz")
-            .agg(_min_pair(d2, F.col("_nid"), F.col("_nx"), F.col("_ny"),
-                           F.col("_nz")).alias("_m"))
-        )
-        # certificate: min distance within one cell => 27-neighborhood
-        # provably covered the true nearest neighbor
-        ok = best.filter(F.sqrt("_m.d2") <= F.lit(size)).persist()
+        ok = _round(remaining, c_base, size).persist()
         if handles is not None:
             handles.append(ok)
         done.append(ok)
@@ -162,15 +175,7 @@ def nn1_join_3d(
             break
 
     if remaining is not None and n_rem > 0:
-        # far-outlier tail: broadcast the RESIDUAL (small side) against
-        # the candidate cloud, map-side-combined min per residual row
-        resid = (
-            c_base.crossJoin(F.broadcast(remaining))
-            .groupBy("_sid", "_sx", "_sy", "_sz")
-            .agg(_min_pair(d2, F.col("_nid"), F.col("_nx"), F.col("_ny"),
-                           F.col("_nz")).alias("_m"))
-        )
-        done.append(resid)
+        done.append(_residual(remaining, c_base))
 
     out = done[0]
     for d in done[1:]:
@@ -207,8 +212,6 @@ def _nn_moments(
     fixed-side NN coordinates and b = the moved query coordinates.
     """
     s_cols = ("_sx", "_sy", "_sz")
-    n_cols = ("_nx", "_ny", "_nz")
-    d2 = sum((F.col(s) - F.col(n)) ** 2 for s, n in zip(s_cols, n_cols))
     prods = {
         f"p{i}{j}": F.sum(F.col(f"_m.{a}") * F.col(b))
         for i, a in enumerate(("cx", "cy", "cz"))
@@ -247,32 +250,7 @@ def _nn_moments(
     size = float(cell)
     handles = []
     for _ in range(max_rounds):
-        s = _with_cell3(remaining, size, "_sx", "_sy", "_sz")
-        offs = F.array(
-            *[
-                F.struct(
-                    (F.col("_cx") + ox).alias("cx"),
-                    (F.col("_cy") + oy).alias("cy"),
-                    (F.col("_cz") + oz).alias("cz"),
-                )
-                for ox, oy, oz in _OFFS3
-            ]
-        )
-        s = (
-            s.withColumn("_nb", F.explode(offs))
-            .withColumns({"_cx": F.col("_nb.cx"), "_cy": F.col("_nb.cy"),
-                          "_cz": F.col("_nb.cz")})
-            .drop("_nb")
-        )
-        c = _with_cell3(c_base, size, "_nx", "_ny", "_nz")
-        ok = (
-            s.join(c, ["_cx", "_cy", "_cz"])
-            .groupBy("_sid", "_sx", "_sy", "_sz")
-            .agg(_min_pair(d2, F.col("_nid"), F.col("_nx"), F.col("_ny"),
-                           F.col("_nz")).alias("_m"))
-            .filter(F.sqrt("_m.d2") <= F.lit(size))
-            .persist()
-        )
+        ok = _round(remaining, c_base, size).persist()
         handles.append(ok)
         # this one collect materializes the cache AND reduces the round
         row = ok.agg(*aggs).collect()[0]
@@ -284,13 +262,7 @@ def _nn_moments(
         size *= 2.0
 
     if n_rem > 0:
-        resid = (
-            c_base.crossJoin(F.broadcast(remaining))
-            .groupBy("_sid", "_sx", "_sy", "_sz")
-            .agg(_min_pair(d2, F.col("_nid"), F.col("_nx"), F.col("_ny"),
-                           F.col("_nz")).alias("_m"))
-        )
-        fold(resid.agg(*aggs).collect()[0])
+        fold(_residual(remaining, c_base).agg(*aggs).collect()[0])
 
     for h in handles:
         h.unpersist()

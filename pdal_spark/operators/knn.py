@@ -1,23 +1,29 @@
 """Cell-bucketed kNN / radius join primitive + the operators built on it.
 
 The reference does all neighbor searches through an exact in-memory
-KD-tree (pdal/KDIndex.hpp, nanoflann L2). The distributed equivalent here
-is a grid-bucketed join:
+KD-tree (pdal/KDIndex.hpp, nanoflann L2). Here every kNN search goes
+through one entry point, :func:`knn_join`, whose `cell_size` picks the
+contract:
 
-  * candidates get a cell id (floor(x/cell), floor(y/cell))
-  * each query point joins its 3x3 cell neighborhood
-  * per-query window takes the k nearest (or all within radius)
+  * cell_size=None — exact at any density: the candidates are broadcast
+    and every (src, cand) pair is ranked. The plan for small candidate
+    sets (tests, the feature family's default, hausdorff/delta on small
+    clouds).
+  * cell_size=c — grid-bucketed, nothing broadcast (the scale plan):
+    candidates get a cell id (floor(x/c), floor(y/c)), each query point
+    sees its 3x3 cell neighborhood, and the k nearest of those are kept.
 
-Exactness: results equal the KD-tree's whenever the true kth-neighbor
-distance (or search radius) is <= cell_size. Callers pick cell_size from
-expected density; `validate=True` asserts the invariant on the computed
-result (one extra aggregate) — the scale-safe way to *prove* exactness
-instead of hoping.
+Grid exactness: results equal the KD-tree's whenever the true
+kth-neighbor distance (or search radius) is <= cell_size. Callers pick
+cell_size from expected density; `validate=True` asserts the invariant
+on the computed result (one extra aggregate) — the scale-safe way to
+*prove* exactness instead of hoping.
 
-Skew (the north rule's mega-cell case): candidate cells whose population
-exceeds `salt_threshold` are split into `n_salts` sub-keys; query rows
-explode over the sub-keys of hot cells only (driven by a broadcast join
-against the small hot-cell table). Cold cells pay nothing.
+Skew (the north rule's mega-cell case): keys (cells or blocks) whose
+population exceeds `salt_threshold` are split into `n_salts` sub-keys;
+the other side replicates over the sub-keys of hot keys only (driven by
+a broadcast join against the small hot-key table). Cold keys pay
+nothing.
 
 Operators built on the primitive:
   * neighbor_classifier — filters.neighborclassifier
@@ -52,7 +58,118 @@ def _with_cell(df: DataFrame, cell_size: float, x: str, y: str) -> DataFrame:
     )
 
 
+def _sides(src, cand, cell_size, src_id, cand_id, x, y):
+    """(src_id, x, y) and (cand_id, _cxv, _cyv) projections, each with
+    its grid cell (_cx, _cy) when cell_size is given."""
+    s = src.select(F.col(src_id), F.col(x), F.col(y))
+    c = cand.select(F.col(cand_id), F.col(x).alias("_cxv"), F.col(y).alias("_cyv"))
+    if cell_size is None:
+        return s, c
+    return _with_cell(s, cell_size, x, y), _with_cell(c, cell_size, "_cxv", "_cyv")
+
+
+def _d2(x: str, y: str):
+    return (F.col(x) - F.col("_cxv")) ** 2 + (F.col(y) - F.col("_cyv")) ** 2
+
+
+def _neighbourhood(s: DataFrame) -> DataFrame:
+    """Each row once per cell of its 3x3 neighborhood, with (_cx, _cy)
+    rewritten to that cell (arrays of struct -> explode: one narrow
+    pass, no shuffle until the join itself)."""
+    offs = F.array(*[
+        F.struct((F.col("_cx") + dx).alias("cx"), (F.col("_cy") + dy).alias("cy"))
+        for dx, dy in NEIGHBOR_OFFSETS
+    ])
+    return (
+        s.withColumn("_nb", F.explode(offs))
+        .withColumn("_cx", F.col("_nb.cx"))
+        .withColumn("_cy", F.col("_nb.cy"))
+        .drop("_nb")
+    )
+
+
+def _rank(pairs, k, src_id, cand_id, x, y, exclude_self):
+    """The k nearest candidates per src of a pair frame -> (src_id,
+    cand_id, dist, rank); rank is 1-based by (d², cand_id)."""
+    if exclude_self:
+        pairs = pairs.filter(F.col(src_id) != F.col(cand_id))
+    w = Window.partitionBy(src_id).orderBy(F.col("_d2").asc(), F.col(cand_id).asc())
+    return (
+        pairs.withColumn("_d2", _d2(x, y))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(F.col(src_id), F.col(cand_id), F.sqrt(F.col("_d2")).alias("dist"), "rank")
+    )
+
+
 AUTO_SALT_FLOOR = 65_536
+
+
+def _hot_keys(side, keys, salt_threshold, n_salts):
+    """(keys..., _nsalt) for the keys whose row count in `side` exceeds
+    the salt threshold; None when salt_threshold is None (no salting).
+
+    salt_threshold="auto": a key is hot when its count exceeds
+    max(AUTO_SALT_FLOOR, 8 * |side| / shuffle_partitions), i.e. when one
+    key alone would dominate a reduce task. |side| is the sum of the
+    same per-key counts (the 1-row total broadcasts), so there is no
+    eager count() driver action per call (looped callers: ICP, the
+    features family). On well-spread data the hot table is empty and
+    the plan degenerates to the unsalted one."""
+    if salt_threshold is None:
+        return None
+    counts = side.groupBy(*keys).agg(F.count("*").alias("_n"))
+    if salt_threshold == "auto":
+        parts = int(side.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+        counts = counts.crossJoin(F.broadcast(counts.agg(F.sum("_n").alias("_tot"))))
+        thr = F.greatest(
+            F.lit(AUTO_SALT_FLOOR).cast("double"),
+            (8.0 * F.col("_tot")) / F.lit(float(max(parts, 1))))
+    else:
+        thr = F.lit(salt_threshold)
+    return counts.filter(F.col("_n") > thr).select(*keys, F.lit(n_salts).alias("_nsalt"))
+
+
+def _salt(split, replicate, hot, keys, split_id):
+    """DS2-style hot-key salting -> (split, replicate), both with _salt.
+    Rows of `split` in a hot key go to one of its `_nsalt` sub-keys by a
+    hash of `split_id`; rows of `replicate` in a hot key are copied to
+    every sub-key. Cold keys, and every key when hot is None, get 0."""
+    if hot is None:
+        return split.withColumn("_salt", F.lit(0)), replicate.withColumn("_salt", F.lit(0))
+    split = split.join(F.broadcast(hot), keys, "left").withColumn(
+        "_salt",
+        F.when(
+            F.col("_nsalt").isNotNull(),
+            F.pmod(F.xxhash64(F.col(split_id)), F.col("_nsalt")).cast("int"),
+        ).otherwise(F.lit(0)),
+    ).drop("_nsalt")
+    # Spark rejects a generator nested in an expression: cast separately
+    replicate = replicate.join(F.broadcast(hot), keys, "left").withColumn(
+        "_salt",
+        F.explode(F.sequence(F.lit(0), F.coalesce(F.col("_nsalt"), F.lit(1)) - 1)),
+    ).withColumn("_salt", F.col("_salt").cast("int")).drop("_nsalt")
+    return split, replicate
+
+
+def _check_grid(out, k, cell_size, src_id):
+    """Raise unless every query found k neighbors AND its kth distance
+    fits within one cell (then the 3x3 neighborhood provably covered
+    the true k-disk). Fewer than k found => neighborhood exhausted
+    before k => grid too coarse (or k > |cand|, where the exact plan is
+    the tool)."""
+    bad = (
+        out.groupBy(src_id)
+        .agg(F.count("*").alias("_nf"), F.max("dist").alias("_md"))
+        .filter((F.col("_nf") < k) | (F.col("_md") > F.lit(float(cell_size))))
+        .count()
+    )
+    if bad:
+        raise ValueError(
+            f"kNN grid too coarse: {bad} query points have < {k} neighbors "
+            f"in the 3x3 neighborhood or kth distance > cell_size="
+            f"{cell_size}; increase cell_size or pass cell_size=None"
+        )
 
 
 #: block edge in cells for the kernel kNN — candidates replicate into a
@@ -67,7 +184,7 @@ def knn_join(
     src: DataFrame,
     cand: DataFrame,
     k: int,
-    cell_size: float,
+    cell_size: float | None = None,
     src_id: str = "src_id",
     cand_id: str = "cand_id",
     x: str = "x",
@@ -81,121 +198,88 @@ def knn_join(
 
     rank is 1-based by (distance, cand_id) — the cand_id tiebreak makes
     the result deterministic where the reference KD-tree's equal-distance
-    order is unspecified. Semantics identical to
-    :func:`knn_join_pairwise` (the k nearest among the 3x3 cell
-    neighborhood); the physical plan is radically different:
+    order is unspecified. exclude_self drops cand rows whose id equals
+    the src id (self-kNN).
 
-    The pairwise plan materializes EVERY (src, neighborhood-candidate)
-    pair and shuffles all of them through a per-src window — ~200
-    pairs/point at typical densities, so a 1M-point join moves 198M
-    rows through the rank exchange and the window sort is ~90% of the
-    wall clock (measured on the 4-worker standalone harness; scaling
-    efficiency 0.47). Here the pair stream never exists as rows:
-    candidates replicate into the 1-cell halo of each BLOCK x BLOCK
-    cell block (the SMRF tiled-halo pattern), one cogroup shuffle
-    brings each block's srcs and halo candidates together, and a
-    vectorized numpy kernel emits exactly k rows per src — masked to
-    the src's own 3x3 cell neighborhood so results match the pairwise
-    plan bit for bit. Shuffle volume drops from O(pairs) to
+    cell_size=None is the exact plan: the candidates are broadcast, every
+    (src, cand) pair is ranked in one window, and the result equals the
+    KD-tree's at any density. Use it when the candidate set fits in a
+    broadcast; salt_threshold, n_salts and validate do not apply.
+
+    With a cell_size the k nearest among the 3x3 cell neighborhood are
+    returned (exact iff the kth distance is <= cell_size; validate=True
+    checks that on the result and raises ValueError otherwise). Small
+    inputs (both sides under the ordered.SMALL_BYTES plan-stats gate)
+    take :func:`knn_join_pairwise`, where pure codegen beats the cogroup
+    kernel's Arrow/python overhead; PDAL_SPARK_FORCE_DISTRIBUTED=1 pins
+    the kernel shape so the plan census audits the at-scale plan (same
+    convention as operators/ordered.py). Larger inputs take the cogroup
+    kernel, which returns the same rows as the pairwise plan.
+
+    Why a kernel: the pairwise plan materializes EVERY (src,
+    neighborhood-candidate) pair and shuffles all of them through a
+    per-src window — ~200 pairs/point at typical densities, so a
+    1M-point join moves 198M rows through the rank exchange and the
+    window sort is ~90% of the wall clock (measured on the 4-worker
+    standalone harness; scaling efficiency 0.47). In the kernel the pair
+    stream never exists as rows: candidates replicate into the 1-cell
+    halo of each BLOCK x BLOCK cell block (the SMRF tiled-halo pattern),
+    one cogroup shuffle brings each block's srcs and halo candidates
+    together, and a vectorized numpy kernel emits exactly k rows per src
+    — masked to the src's own 3x3 cell neighborhood so results match the
+    pairwise plan bit for bit. Shuffle volume drops from O(pairs) to
     O(1.6 x points); there is no window.
 
-    Skew: blocks whose SRC population exceeds salt_threshold split
-    their srcs over n_salts sub-groups and replicate the block's
-    candidates per sub-group (srcs are independent given the
-    candidates, so this is exact).
-
-    exclude_self: drop cand rows whose id equals the src id (self-kNN).
-
-    Small inputs (both sides under the ordered.SMALL_BYTES plan-stats
-    gate) take the pairwise window plan instead — pure codegen beats
-    the cogroup kernel's Arrow/python overhead when the pair stream is
-    tiny; PDAL_SPARK_FORCE_DISTRIBUTED=1 pins the kernel shape so the
-    plan census audits the at-scale plan (same convention as
-    operators/ordered.py).
+    Skew: the kernel splits the srcs of blocks whose SRC population
+    exceeds salt_threshold over n_salts sub-groups and replicates the
+    block's candidates per sub-group (srcs are independent given the
+    candidates, so this is exact); the pairwise plan splits hot
+    candidate cells and replicates their srcs. salt_threshold="auto"
+    (default) is the count rule of :func:`_hot_keys`; pass an int to pin
+    the threshold, or None to disable salting.
     """
+    from pdal_spark.operators.ordered import SMALL_BYTES, _is_small
+
+    if cell_size is None:
+        s, c = _sides(src, cand, None, src_id, cand_id, x, y)
+        return _rank(s.crossJoin(F.broadcast(c)), k, src_id, cand_id, x, y,
+                     exclude_self)
+    plan = (knn_join_pairwise
+            if _is_small(src, SMALL_BYTES) and _is_small(cand, SMALL_BYTES)
+            else _knn_cogroup)
+    out = plan(src, cand, k, cell_size, src_id=src_id, cand_id=cand_id,
+               x=x, y=y, exclude_self=exclude_self,
+               salt_threshold=salt_threshold, n_salts=n_salts)
+    if validate:
+        _check_grid(out, k, cell_size, src_id)
+    return out
+
+
+def _knn_cogroup(src, cand, k, cell_size, src_id, cand_id, x, y,
+                 exclude_self, salt_threshold, n_salts) -> DataFrame:
+    """knn_join's block-cogroup kernel plan (see knn_join)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
-    from pdal_spark.operators.ordered import SMALL_BYTES, _is_small
-
-    if _is_small(src, SMALL_BYTES) and _is_small(cand, SMALL_BYTES):
-        return knn_join_pairwise(
-            src, cand, k, cell_size, src_id=src_id, cand_id=cand_id,
-            x=x, y=y, exclude_self=exclude_self,
-            salt_threshold=salt_threshold, n_salts=n_salts,
-            validate=validate,
-        )
-
-    spark = src.sparkSession
     B = KNN_BLOCK_CELLS
-
-    s = _with_cell(src.select(F.col(src_id), F.col(x), F.col(y)),
-                   cell_size, x, y)
+    s, c = _sides(src, cand, cell_size, src_id, cand_id, x, y)
     s = s.withColumn("_bx", F.floor(F.col("_cx") / B).cast("long")) \
          .withColumn("_by", F.floor(F.col("_cy") / B).cast("long"))
-    c0 = _with_cell(
-        cand.select(F.col(cand_id), F.col(x).alias("_cxv"),
-                    F.col(y).alias("_cyv")),
-        cell_size, "_cxv", "_cyv",
-    )
     # candidate (cell cx,cy) belongs to block (bx,by)'s halo iff
     # cx in [bx*B-1, bx*B+B] — i.e. up to 4 blocks; enumerate them
     # map-side with an explode over the distinct floor values
-    bxs = F.array_distinct(F.array(
-        F.floor((F.col("_cx") - 1) / B).cast("long"),
-        F.floor(F.col("_cx") / B).cast("long"),
-        F.floor((F.col("_cx") + 1) / B).cast("long"),
-    ))
-    bys = F.array_distinct(F.array(
-        F.floor((F.col("_cy") - 1) / B).cast("long"),
-        F.floor(F.col("_cy") / B).cast("long"),
-        F.floor((F.col("_cy") + 1) / B).cast("long"),
-    ))
-    c = (
-        c0.withColumn("_bx", F.explode(bxs))
-        .withColumn("_by", F.explode(bys))
-    )
+    def halo_blocks(cell):
+        return F.array_distinct(F.array(*[
+            F.floor((F.col(cell) + d) / B).cast("long") for d in (-1, 0, 1)
+        ]))
 
-    if salt_threshold is not None:
-        bc = s.groupBy("_bx", "_by").agg(F.count("*").alias("_n"))
-        if salt_threshold == "auto":
-            # same heuristic as before (a block is hot when its src
-            # population exceeds max(floor, 8*|src|/partitions)) but
-            # derived INSIDE the plan from the block-count aggregate the
-            # hot table needs anyway — no eager src.count() driver
-            # action per call (looped callers: ICP, features family).
-            # |src| = sum of block counts; the 1-row total broadcasts.
-            parts = int(
-                spark.conf.get("spark.sql.shuffle.partitions", "200"))
-            tot = bc.agg(F.sum("_n").alias("_tot"))
-            hot = (
-                bc.crossJoin(F.broadcast(tot))
-                .filter(F.col("_n") > F.greatest(
-                    F.lit(AUTO_SALT_FLOOR).cast("double"),
-                    (8.0 * F.col("_tot")) / F.lit(float(max(parts, 1)))))
-                .select("_bx", "_by", F.lit(n_salts).alias("_nsalt"))
-            )
-        else:
-            hot = bc.filter(F.col("_n") > salt_threshold).select(
-                "_bx", "_by", F.lit(n_salts).alias("_nsalt"))
-        s = s.join(F.broadcast(hot), ["_bx", "_by"], "left").withColumn(
-            "_salt",
-            F.when(
-                F.col("_nsalt").isNotNull(),
-                F.pmod(F.xxhash64(F.col(src_id)), F.col("_nsalt")).cast("int"),
-            ).otherwise(F.lit(0)),
-        ).drop("_nsalt")
-        c = c.join(F.broadcast(hot), ["_bx", "_by"], "left").withColumn(
-            "_salts", F.coalesce(F.col("_nsalt"), F.lit(1))
-        ).drop("_nsalt").withColumn(
-            "_salt",
-            F.explode(F.sequence(
-                F.lit(0), (F.col("_salts") - 1).cast("int"))),
-        ).withColumn("_salt", F.col("_salt").cast("int")).drop("_salts")
-    else:
-        s = s.withColumn("_salt", F.lit(0))
-        c = c.withColumn("_salt", F.lit(0))
+    c = (
+        c.withColumn("_bx", F.explode(halo_blocks("_cx")))
+        .withColumn("_by", F.explode(halo_blocks("_cy")))
+    )
+    hot = _hot_keys(s, ["_bx", "_by"], salt_threshold, n_salts)
+    s, c = _salt(s, c, hot, ["_bx", "_by"], src_id)
 
     out_schema = T.StructType([
         T.StructField(src_id, src.schema[src_id].dataType),
@@ -261,25 +345,11 @@ def knn_join(
                      ).astype(np.int32),
         })
 
-    out = (
+    return (
         s.groupBy("_bx", "_by", "_salt")
         .cogroup(c.groupBy("_bx", "_by", "_salt"))
         .applyInPandas(kernel, schema=out_schema)
     )
-    if validate:
-        bad = (
-            out.groupBy(src_id)
-            .agg(F.count("*").alias("_nf"), F.max("dist").alias("_md"))
-            .filter((F.col("_nf") < k) | (F.col("_md") > F.lit(float(cell_size))))
-            .count()
-        )
-        if bad:
-            raise ValueError(
-                f"kNN grid too coarse: {bad} query points have < {k} neighbors "
-                f"in the 3x3 neighborhood or kth distance > cell_size="
-                f"{cell_size}; increase cell_size or use knn_join_exact"
-            )
-    return out
 
 
 def knn_join_pairwise(
@@ -294,157 +364,18 @@ def knn_join_pairwise(
     exclude_self: bool = False,
     salt_threshold: int | None | str = "auto",
     n_salts: int = 8,
-    validate: bool = False,
 ) -> DataFrame:
-    """Materialized-pair reference plan for knn_join (every neighborhood
-    pair as a row through a per-src rank window). Kept as the parity
-    oracle for the kernel plan — tests assert bit-equal results — and
-    for callers that want the pure-codegen shape on tiny inputs.
-
-    rank is 1-based by (distance, cand_id) — the cand_id tiebreak makes
-    the result deterministic where the reference KD-tree's equal-distance
-    order is unspecified.
-
-    exclude_self: drop cand rows whose id equals the src id (self-kNN).
-
-    salt_threshold="auto" (default): count-based heuristic — a cell is
-    hot when its candidate population exceeds
-    max(AUTO_SALT_FLOOR, 8 * |cand| / shuffle_partitions), i.e. when one
-    cell alone would dominate a reduce task. Costs one extra map-side-
-    combined aggregate; on well-spread data the hot table is empty and
-    the plan degenerates to the unsalted one. Pass an int to pin the
-    threshold, or None to disable salting entirely.
-    """
-    s = _with_cell(src.select(F.col(src_id), F.col(x), F.col(y)), cell_size, x, y)
-    c = _with_cell(
-        cand.select(F.col(cand_id), F.col(x).alias("_cxv"), F.col(y).alias("_cyv")),
-        cell_size,
-        "_cxv",
-        "_cyv",
-    )
-
-    if salt_threshold is not None:
-        cc = c.groupBy("_cx", "_cy").agg(F.count("*").alias("_n"))
-        if salt_threshold == "auto":
-            # lazy auto threshold (see knn_join): hot iff cell count >
-            # max(floor, 8*|cand|/partitions), with |cand| computed from
-            # the same aggregate — no eager cand.count() action
-            spark = src.sparkSession
-            parts = int(
-                spark.conf.get("spark.sql.shuffle.partitions", "200"))
-            tot = cc.agg(F.sum("_n").alias("_tot"))
-            hot = (
-                cc.crossJoin(F.broadcast(tot))
-                .filter(F.col("_n") > F.greatest(
-                    F.lit(AUTO_SALT_FLOOR).cast("double"),
-                    (8.0 * F.col("_tot")) / F.lit(float(max(parts, 1)))))
-                .select("_cx", "_cy", F.lit(n_salts).alias("_nsalt"))
-            )
-        else:
-            hot = cc.filter(F.col("_n") > salt_threshold).select(
-                "_cx", "_cy", F.lit(n_salts).alias("_nsalt"))
-        c = c.join(F.broadcast(hot), ["_cx", "_cy"], "left").withColumn(
-            "_salt",
-            F.when(
-                F.col("_nsalt").isNotNull(),
-                F.pmod(F.xxhash64(F.col(cand_id)), F.col("_nsalt")).cast("int"),
-            ).otherwise(F.lit(0)),
-        ).drop("_nsalt")
-    else:
-        hot = None
-        c = c.withColumn("_salt", F.lit(0))
-
-    # explode src over the 3x3 neighborhood (arrays of struct -> explode:
-    # one narrow pass, no shuffle until the join itself)
-    offs = F.array(
-        *[
-            F.struct(
-                (F.col("_cx") + dx).alias("cx"), (F.col("_cy") + dy).alias("cy")
-            )
-            for dx, dy in NEIGHBOR_OFFSETS
-        ]
-    )
-    s = (
-        s.withColumn("_nb", F.explode(offs))
-        .withColumn("_cx", F.col("_nb.cx"))
-        .withColumn("_cy", F.col("_nb.cy"))
-        .drop("_nb")
-    )
-    if hot is not None:
-        s = s.join(F.broadcast(hot), ["_cx", "_cy"], "left").withColumn(
-            "_salts", F.coalesce(F.col("_nsalt"), F.lit(1))
-        ).drop("_nsalt")
-        s = s.withColumn(
-            "_salt", F.explode(F.sequence(F.lit(0), (F.col("_salts") - 1).cast("int")))
-        ).withColumn("_salt", F.col("_salt").cast("int")).drop("_salts")
-    else:
-        s = s.withColumn("_salt", F.lit(0))
-
-    joined = s.join(c, ["_cx", "_cy", "_salt"])
-    if exclude_self:
-        joined = joined.filter(F.col(src_id) != F.col(cand_id))
-    d2 = (F.col(x) - F.col("_cxv")) ** 2 + (F.col(y) - F.col("_cyv")) ** 2
-    joined = joined.withColumn("_d2", d2)
-
-    w = Window.partitionBy(src_id).orderBy(F.col("_d2").asc(), F.col(cand_id).asc())
-    out = (
-        joined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col(src_id),
-            F.col(cand_id),
-            F.sqrt(F.col("_d2")).alias("dist"),
-            "rank",
-        )
-    )
-    if validate:
-        # exact iff every query found k neighbors AND its kth distance fits
-        # within one cell (then the 3x3 neighborhood provably covered the
-        # true k-disk). Fewer than k found => neighborhood exhausted before
-        # k => grid too coarse (or k > |cand|, where exact join is the tool).
-        bad = (
-            out.groupBy(src_id)
-            .agg(F.count("*").alias("_nf"), F.max("dist").alias("_md"))
-            .filter((F.col("_nf") < k) | (F.col("_md") > F.lit(float(cell_size))))
-            .count()
-        )
-        if bad:
-            raise ValueError(
-                f"kNN grid too coarse: {bad} query points have < {k} neighbors "
-                f"in the 3x3 neighborhood or kth distance > cell_size="
-                f"{cell_size}; increase cell_size or use knn_join_exact"
-            )
-    return out
-
-
-def knn_join_exact(
-    src: DataFrame,
-    cand: DataFrame,
-    k: int,
-    src_id: str = "src_id",
-    cand_id: str = "cand_id",
-    x: str = "x",
-    y: str = "y",
-    exclude_self: bool = False,
-) -> DataFrame:
-    """Brute-force kNN via broadcast cross join — the small-candidate-set
-    path (hausdorff/delta kernels, tests). Same output contract."""
-    c = F.broadcast(
-        cand.select(
-            F.col(cand_id), F.col(x).alias("_cxv"), F.col(y).alias("_cyv")
-        )
-    )
-    joined = src.select(F.col(src_id), F.col(x), F.col(y)).crossJoin(c)
-    if exclude_self:
-        joined = joined.filter(F.col(src_id) != F.col(cand_id))
-    d2 = (F.col(x) - F.col("_cxv")) ** 2 + (F.col(y) - F.col("_cyv")) ** 2
-    w = Window.partitionBy(src_id).orderBy(d2.asc(), F.col(cand_id).asc())
-    return (
-        joined.withColumn("_d2", d2)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col(src_id), F.col(cand_id), F.sqrt(F.col("_d2")).alias("dist"), "rank")
-    )
+    """Materialized-pair plan of knn_join with a cell_size: every
+    neighborhood pair as a row through a per-src rank window. knn_join
+    takes it for small inputs, and it is the parity oracle for the
+    cogroup kernel (tests assert bit-equal results). Same arguments and
+    output as knn_join; salting splits hot candidate cells and
+    replicates their srcs."""
+    s, c = _sides(src, cand, cell_size, src_id, cand_id, x, y)
+    hot = _hot_keys(c, ["_cx", "_cy"], salt_threshold, n_salts)
+    c, s = _salt(c, _neighbourhood(s), hot, ["_cx", "_cy"], cand_id)
+    return _rank(s.join(c, ["_cx", "_cy", "_salt"]), k, src_id, cand_id, x, y,
+                 exclude_self)
 
 
 def radius_join(
@@ -464,31 +395,12 @@ def radius_join(
     cell = cell_size or radius
     if cell < radius:
         raise ValueError("cell_size must be >= radius for exact coverage")
-    s = _with_cell(src.select(F.col(src_id), F.col(x), F.col(y)), cell, x, y)
-    c = _with_cell(
-        cand.select(F.col(cand_id), F.col(x).alias("_cxv"), F.col(y).alias("_cyv")),
-        cell,
-        "_cxv",
-        "_cyv",
-    )
-    offs = F.array(
-        *[
-            F.struct((F.col("_cx") + dx).alias("cx"), (F.col("_cy") + dy).alias("cy"))
-            for dx, dy in NEIGHBOR_OFFSETS
-        ]
-    )
-    s = (
-        s.withColumn("_nb", F.explode(offs))
-        .withColumn("_cx", F.col("_nb.cx"))
-        .withColumn("_cy", F.col("_nb.cy"))
-        .drop("_nb")
-    )
-    joined = s.join(c, ["_cx", "_cy"])
+    s, c = _sides(src, cand, cell, src_id, cand_id, x, y)
+    joined = _neighbourhood(s).join(c, ["_cx", "_cy"])
     if exclude_self:
         joined = joined.filter(F.col(src_id) != F.col(cand_id))
-    d2 = (F.col(x) - F.col("_cxv")) ** 2 + (F.col(y) - F.col("_cyv")) ** 2
     return (
-        joined.withColumn("_d2", d2)
+        joined.withColumn("_d2", _d2(x, y))
         .filter(F.col("_d2") <= F.lit(radius * radius))
         .select(F.col(src_id), F.col(cand_id), F.sqrt(F.col("_d2")).alias("dist"))
     )
@@ -503,14 +415,13 @@ def neighbor_classifier(
     src: DataFrame,
     cand: DataFrame | None,
     k: int,
-    cell_size: float,
+    cell_size: float | None = None,
     dim: str = "classification",
     domain: list[str] | None = None,
     id_col: str = "page_id",
     cand_id_col: str | None = None,
     x: str = "x",
     y: str = "y",
-    exact: bool = False,
     salt_threshold: int | None = None,
 ) -> DataFrame:
     """filters.neighborclassifier (NeighborClassifierFilter.cpp:108-193).
@@ -524,6 +435,7 @@ def neighbor_classifier(
     cand=None -> self mode with SNAPSHOT semantics (reference self mode
     votes on already-updated neighbors in scan order — order-dependent;
     non-goal, divergence documented). Candidate mode is exact parity.
+    cell_size: as knn_join (None = the exact broadcast plan).
     """
     self_mode = cand is None
     cand_df = src if self_mode else cand
@@ -546,18 +458,17 @@ def neighbor_classifier(
     queries = src.filter(in_domain) if in_domain is not None else src
     q_pts = queries.select(F.col(id_col).alias("_nc_src"), F.col(x), F.col(y))
 
-    join_fn = knn_join_exact if exact else knn_join
-    kw = {} if exact else {"cell_size": cell_size, "salt_threshold": salt_threshold}
-    knn = join_fn(
+    knn = knn_join(
         q_pts,
         cand_sel.select(F.col("_nc_cand"), F.col(x), F.col(y)),
         k,
+        cell_size,
         src_id="_nc_src",
         cand_id="_nc_cand",
         x=x,
         y=y,
         exclude_self=self_mode,
-        **kw,
+        salt_threshold=salt_threshold,
     )
 
     # F.mode() has no deterministic tie rule, so the vote is explicit:
@@ -605,25 +516,19 @@ def outlier_statistical(
     id_col: str = "page_id",
     x: str = "x",
     y: str = "y",
-    exact: bool = False,
     validate: bool = False,
 ) -> DataFrame:
     """filters.outlier statistical (OutlierFilter.cpp:96-151): per-point
     mean distance to mean_k nearest neighbors (self excluded); outlier iff
     mean dist >= mean + multiplier * sample-stdev of all mean dists;
-    outliers get Classification = noise_class."""
+    outliers get Classification = noise_class. cell_size and validate:
+    as knn_join (None = the exact broadcast plan)."""
     pts = df.select(F.col(id_col).alias("_o_src"), F.col(x), F.col(y))
     cand = df.select(F.col(id_col).alias("_o_cand"), F.col(x), F.col(y))
-    if exact:
-        knn = knn_join_exact(
-            pts, cand, mean_k, src_id="_o_src", cand_id="_o_cand", x=x, y=y,
-            exclude_self=True,
-        )
-    else:
-        knn = knn_join(
-            pts, cand, mean_k, cell_size, src_id="_o_src", cand_id="_o_cand",
-            x=x, y=y, exclude_self=True, validate=validate,
-        )
+    knn = knn_join(
+        pts, cand, mean_k, cell_size, src_id="_o_src", cand_id="_o_cand",
+        x=x, y=y, exclude_self=True, validate=validate,
+    )
     mean_d = knn.groupBy("_o_src").agg(F.avg("dist").alias("_mean_d"))
     thr_row = mean_d.agg(
         F.avg("_mean_d").alias("m"), F.stddev_samp("_mean_d").alias("s")
@@ -672,19 +577,15 @@ def nn_distance(
     id_col: str = "page_id",
     x: str = "x",
     y: str = "y",
-    exact: bool = False,
     validate: bool = False,
 ) -> DataFrame:
     """filters.nndistance (NNDistanceFilter.cpp:60-66): per-point kth or
-    average neighbor distance as a new NNDistance column."""
+    average neighbor distance as a new NNDistance column. cell_size and
+    validate: as knn_join (None = the exact broadcast plan)."""
     pts = df.select(F.col(id_col).alias("_n_src"), F.col(x), F.col(y))
     cand = df.select(F.col(id_col).alias("_n_cand"), F.col(x), F.col(y))
-    if exact:
-        knn = knn_join_exact(pts, cand, k, src_id="_n_src", cand_id="_n_cand",
-                             x=x, y=y, exclude_self=True)
-    else:
-        knn = knn_join(pts, cand, k, cell_size, src_id="_n_src", cand_id="_n_cand",
-                       x=x, y=y, exclude_self=True, validate=validate)
+    knn = knn_join(pts, cand, k, cell_size, src_id="_n_src", cand_id="_n_cand",
+                   x=x, y=y, exclude_self=True, validate=validate)
     if mode == "kth":
         agg = knn.filter(F.col("rank") == k).select(
             F.col("_n_src"), F.col("dist").alias("nn_distance")
@@ -719,17 +620,6 @@ def radial_density(
 # ---------------------------------------------------------------------------
 
 
-def _nn1(src, cand, src_id, cand_id, x, y, cell_size, validate):
-    """Nearest-1 join: bucketed grid join when cell_size is given (the
-    scale path — no broadcast of the candidate side), else broadcast
-    exact. validate=True proves grid exactness at run time."""
-    if cell_size is not None:
-        return knn_join(src, cand, 1, cell_size, src_id=src_id,
-                        cand_id=cand_id, x=x, y=y, validate=validate)
-    return knn_join_exact(src, cand, 1, src_id=src_id, cand_id=cand_id,
-                          x=x, y=y)
-
-
 def hausdorff(
     a: DataFrame, b: DataFrame, id_a: str = "page_id", id_b: str = "page_id",
     x: str = "x", y: str = "y", cell_size: float | None = None,
@@ -737,13 +627,14 @@ def hausdorff(
 ) -> float:
     """kernels.hausdorff: max(max-min-dist(a->b), max-min-dist(b->a)).
 
-    cell_size routes through the bucketed grid join (candidate side is a
-    full point cloud at scale — not broadcastable)."""
+    cell_size and validate: as knn_join — give a cell_size when the
+    candidate side is a full point cloud (not broadcastable)."""
     def one_way(s, c, ids, idc):
-        nn = _nn1(
+        nn = knn_join(
             s.select(F.col(ids).alias("_h_src"), x, y),
             c.select(F.col(idc).alias("_h_cand"), x, y),
-            "_h_src", "_h_cand", x, y, cell_size, validate,
+            1, cell_size, src_id="_h_src", cand_id="_h_cand", x=x, y=y,
+            validate=validate,
         )
         return nn.agg(F.max("dist")).collect()[0][0]
 
@@ -755,11 +646,13 @@ def delta(
     id_cand: str = "page_id", x: str = "x", y: str = "y",
     cell_size: float | None = None, validate: bool = False,
 ) -> DataFrame:
-    """kernels.delta: per src point, coordinate diffs vs nearest cand."""
-    nn = _nn1(
+    """kernels.delta: per src point, coordinate diffs vs nearest cand
+    (cell_size and validate: as knn_join)."""
+    nn = knn_join(
         src.select(F.col(id_src).alias("_d_src"), x, y),
         cand.select(F.col(id_cand).alias("_d_cand"), x, y),
-        "_d_src", "_d_cand", x, y, cell_size, validate,
+        1, cell_size, src_id="_d_src", cand_id="_d_cand", x=x, y=y,
+        validate=validate,
     )
     c = cand.select(
         F.col(id_cand).alias("_d_cand"),

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from pdal_spark import geo
-from pdal_spark.operators.knn import knn_join, knn_join_exact, radius_join
+from pdal_spark.operators.knn import knn_join, radius_join
 from pdal_spark.operators.layout import _SPREAD_LUT
 from pdal_spark.operators.ordered import global_rank, running_total
 
@@ -86,18 +86,12 @@ def elm(
 
 def _cc_roots(pts: DataFrame, edges: DataFrame, driver_max_edges: int,
               max_iters: int = 50) -> DataFrame:
-    """Dispatch CC resolution: driver union-find under the edge cap,
-    distributed min-label above it. The cap check IS the collect — a
-    limit(cap+1) Arrow probe — so the common small-graph case pays ONE
-    job over the edge list instead of count()-then-collect()."""
-    probe = (
-        edges.select("src_id", "cand_id")
-        .limit(driver_max_edges + 1)
-        .toPandas()
-    )
-    if len(probe) <= driver_max_edges:
-        return _cc_union_find(pts, edges, pdf=probe)
-    return _cc_min_label(pts.select("id"), edges, max_iters)
+    """(id, root) for every id of `pts`: cc_edge_roots over the edges,
+    left-joined to the points; isolated points are their own root."""
+    roots = cc_edge_roots(edges, driver_max_edges, max_iters)
+    return pts.select("id").join(
+        roots.withColumnRenamed("root", "_er"), "id", "left"
+    ).select("id", F.coalesce("_er", F.col("id")).alias("root"))
 
 
 def _union_find_rows(pdf) -> list[tuple[int, int]]:
@@ -132,56 +126,35 @@ def _union_find_rows(pdf) -> list[tuple[int, int]]:
 
 def cc_edge_roots(edges: DataFrame, driver_max_edges: int = 5_000_000,
                   max_iters: int = 50) -> DataFrame:
-    """(id, root) restricted to nodes that APPEAR IN AN EDGE. Isolated
-    nodes are their own root by definition, so callers that only need
-    "drop iff root != id" (dedup survivor selection) skip both the
-    touched-node distinct and the pts join that _cc_roots pays —
-    several shuffles fewer per call. Same driver-cap dispatch."""
+    """(id, root) restricted to nodes that APPEAR IN AN EDGE; root = the
+    smallest member id of the node's component. Isolated nodes are
+    their own root by definition, so callers that only need "drop iff
+    root != id" (dedup survivor selection) use this directly and skip
+    _cc_roots' pts join.
+
+    Dispatch: driver union-find while the edge list stays under
+    `driver_max_edges`, distributed min-label propagation above it. The
+    cap check IS the collect — a limit(cap+1) Arrow probe — so the
+    common small-graph case pays ONE job over the edge list instead of
+    count()-then-collect(), and the edges cross the boundary as one
+    Arrow batch rather than per-row pickled Rows (at the 5M cap about
+    1 s against 30 s of driver deserialization). Driver memory is
+    bounded by that cap, not by the point count. The driver-built root
+    table comes back broadcast-hinted for the caller's join."""
     probe = (
         edges.select("src_id", "cand_id")
         .limit(driver_max_edges + 1)
         .toPandas()
     )
-    spark = edges.sparkSession
     if len(probe) <= driver_max_edges:
         rows = _union_find_rows(probe)
-        if rows:
-            return spark.createDataFrame(rows, "id long, root long")
-        return spark.createDataFrame([], "id long, root long")
+        return F.broadcast(edges.sparkSession.createDataFrame(rows, "id long, root long"))
     pts = (
         edges.select(F.col("src_id").alias("id"))
         .union(edges.select(F.col("cand_id").alias("id")))
         .distinct()
     )
     return _cc_min_label(pts, edges, max_iters)
-
-
-def _cc_union_find(pts: DataFrame, edges: DataFrame,
-                   pdf=None) -> DataFrame:
-    """(id, root) via driver union-find — the small-graph parity path.
-    Root = smallest member id (union by smaller id).
-
-    Only ids that APPEAR IN AN EDGE ever reach the driver (isolated
-    points are their own root by definition and stay distributed — a
-    left join + coalesce at the end), so driver memory is bounded by
-    the edge list the caller already capped, not by |pts|. The edge
-    list crosses the boundary as ONE Arrow batch (toPandas), not
-    per-row pickled Rows — at the driver cap (5M edges) that is the
-    difference between ~1 s and ~30 s of driver deserialization.
-    ``pdf`` lets _cc_roots hand over its already-collected probe."""
-    if pdf is None:
-        pdf = edges.select("src_id", "cand_id").toPandas()
-    rows = _union_find_rows(pdf)
-    spark = pts.sparkSession
-    edge_roots = (
-        spark.createDataFrame(rows, "id long, _er long")
-        if rows
-        else spark.createDataFrame([], "id long, _er long")
-    )
-    # isolated points: root = self, resolved distributed
-    return pts.select("id").join(F.broadcast(edge_roots), "id", "left").select(
-        "id", F.coalesce("_er", F.col("id")).alias("root")
-    )
 
 
 def _cc_min_label(pts: DataFrame, edges: DataFrame, max_iters: int) -> DataFrame:
@@ -685,21 +658,14 @@ def hag(
     q = non_ground.select(F.col(id_col).alias("_q_id"), F.col(x), F.col(y),
                           F.col(z).alias("_qz"))
     # Ground points are ~1/3 of a point cloud — never broadcastable at
-    # scale. cell_size routes through the bucketed grid join (validate
-    # proves exactness); the broadcast path stays for tiny ground sets.
-    if cell_size is not None:
-        knn = knn_join(
-            q.select(F.col("_q_id").alias("src_id"), x, y),
-            g.select(F.col("_g_id").alias("cand_id"), x, y),
-            count, cell_size, src_id="src_id", cand_id="cand_id", x=x, y=y,
-            validate=validate,
-        )
-    else:
-        knn = knn_join_exact(
-            q.select(F.col("_q_id").alias("src_id"), x, y),
-            g.select(F.col("_g_id").alias("cand_id"), x, y),
-            count, src_id="src_id", cand_id="cand_id", x=x, y=y,
-        )
+    # scale: give a cell_size for the bucketed grid join (validate
+    # proves exactness); cell_size=None broadcasts tiny ground sets.
+    knn = knn_join(
+        q.select(F.col("_q_id").alias("src_id"), x, y),
+        g.select(F.col("_g_id").alias("cand_id"), x, y),
+        count, cell_size, src_id="src_id", cand_id="cand_id", x=x, y=y,
+        validate=validate,
+    )
     nb = knn.join(
         g.select(F.col("_g_id").alias("cand_id"), F.col(x).alias("_gx"),
                  F.col(y).alias("_gy"), "_gz"),

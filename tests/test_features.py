@@ -62,7 +62,7 @@ def eig_oracle():
 def test_eigenvalues(pts_df, eig_oracle):
     w, _ = eig_oracle
     out = (
-        features.eigenvalues(pts_df, k=K, exact=True)
+        features.eigenvalues(pts_df, k=K)
         .toPandas().sort_values("page_id").reset_index(drop=True)
     )
     np.testing.assert_allclose(out["eigenvalue0"], w[:, 0], atol=1e-9)
@@ -73,7 +73,7 @@ def test_eigenvalues(pts_df, eig_oracle):
 def test_normal_and_curvature(pts_df, eig_oracle):
     w, v = eig_oracle
     out = (
-        features.normal(pts_df, k=K, exact=True)
+        features.normal(pts_df, k=K)
         .toPandas().sort_values("page_id").reset_index(drop=True)
     )
     nrm = v[:, :, 0].copy()  # eigenvector of smallest eigenvalue
@@ -91,7 +91,7 @@ def test_covariance_features(pts_df):
     xs, ys, zs = _coords()
     nb = _knn_ids(xs, ys, 10 + 1)
     out = (
-        features.covariance_features(pts_df, k=10, exact=True)
+        features.covariance_features(pts_df, k=10)
         .toPandas().sort_values("page_id").reset_index(drop=True)
     )
     for i in range(N):
@@ -114,7 +114,7 @@ def test_covariance_features(pts_df):
 def test_approximate_coplanar(pts_df, eig_oracle):
     w, _ = eig_oracle
     out = (
-        features.approximate_coplanar(pts_df, k=K, exact=True)
+        features.approximate_coplanar(pts_df, k=K)
         .toPandas().sort_values("page_id").reset_index(drop=True)
     )
     exp = ((w[:, 1] > 25.0 * w[:, 0]) & (6.0 * w[:, 1] > w[:, 2])).astype(int)
@@ -124,7 +124,7 @@ def test_approximate_coplanar(pts_df, eig_oracle):
 def test_estimate_rank(pts_df, eig_oracle):
     w, _ = eig_oracle
     out = (
-        features.estimate_rank(pts_df, k=K, thresh=0.01, exact=True)
+        features.estimate_rank(pts_df, k=K, thresh=0.01)
         .toPandas().sort_values("page_id").reset_index(drop=True)
     )
     sv = np.abs(w)
@@ -148,7 +148,7 @@ def test_lof(pts_df):
         lrd[i] = 1.0 / np.mean(reach)
     lofv = np.array([np.mean([lrd[j] / lrd[i] for j in nb[i]]) for i in range(N)])
     out = (
-        features.lof(pts_df, minpts=minpts, exact=True)
+        features.lof(pts_df, minpts=minpts)
         .toPandas().sort_values("page_id").reset_index(drop=True)
     )
     np.testing.assert_allclose(out["kdistance"], kdist, atol=1e-9)
@@ -165,7 +165,7 @@ def test_reciprocity(pts_df):
         for i in range(N)
     ])
     out = (
-        features.reciprocity(pts_df, k=K, exact=True)
+        features.reciprocity(pts_df, k=K)
         .toPandas().sort_values("page_id").reset_index(drop=True)
     )
     np.testing.assert_allclose(out["reciprocity"], exp, atol=1e-9)
@@ -178,7 +178,7 @@ def test_bucketed_matches_exact(pts_df):
         .toPandas().sort_values("page_id").reset_index(drop=True)
     )
     b = (
-        features.eigenvalues(pts_df, k=K, exact=True)
+        features.eigenvalues(pts_df, k=K)
         .toPandas().sort_values("page_id").reset_index(drop=True)
     )
     for c in ("eigenvalue0", "eigenvalue1", "eigenvalue2"):
@@ -232,7 +232,7 @@ def test_plane_fit(pts_df):
         dbar = sum(abs(nrm @ (pts[:, j] - cent)) for j in range(len(ids))) / K
         exp[i] = d / (d + dbar)
     out = (
-        features.plane_fit(_pts_z(pts_df), knn=K, z="z", exact=True)
+        features.plane_fit(_pts_z(pts_df), knn=K, z="z")
         .toPandas().sort_values("page_id").reset_index(drop=True)
     )
     np.testing.assert_allclose(out["plane_fit"], exp, atol=1e-7)
@@ -293,7 +293,7 @@ def test_miniball(pts_df):
         d = float(np.linalg.norm(np.array([xs[i], ys[i], zs[i]]) - c))
         exp[i] = d / (d + 2 * r / np.sqrt(3.0))
     out = (
-        features.miniball(_pts_z(pts_df), knn=K, z="z", exact=True)
+        features.miniball(_pts_z(pts_df), knn=K, z="z")
         .toPandas().sort_values("page_id").reset_index(drop=True)
     )
     np.testing.assert_allclose(out["miniball"], exp, atol=1e-7)
@@ -303,7 +303,7 @@ def test_planefit_miniball_bucketed_match_exact(pts_df):
     df = _pts_z(pts_df)
     for fn, col in ((features.plane_fit, "plane_fit"),
                     (features.miniball, "miniball")):
-        ex = fn(df, knn=K, z="z", exact=True).toPandas() \
+        ex = fn(df, knn=K, z="z").toPandas() \
             .sort_values("page_id").reset_index(drop=True)
         bu = fn(df, knn=K, z="z", cell_size=80.0, validate=True).toPandas() \
             .sort_values("page_id").reset_index(drop=True)

@@ -7,7 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from pdal_spark import geo
+from pdal_spark import geo, synth
 from pdal_spark.operators import knn as K
 
 N_SRC, N_CAND, KK = 300, 400, 5
@@ -89,7 +89,7 @@ def test_knn_join_salted_same_result(spark_dfs, pts):
 def test_knn_exact_equals_grid(spark_dfs):
     src, cand = spark_dfs
     a = K.knn_join(src, cand, KK, cell_size=30.0)
-    b = K.knn_join_exact(src, cand, KK)
+    b = K.knn_join(src, cand, KK)  # cell_size=None: the exact plan
     key = ["src_id", "rank", "cand_id"]
     assert sorted(map(tuple, a.select(key).collect())) == sorted(
         map(tuple, b.select(key).collect())
@@ -180,13 +180,25 @@ def test_outlier_statistical_matches_numpy(spark, pts):
         "page_id long, x double, y double",
     )
     got = {r["page_id"]: r["classification"] for r in
-           K.outlier_statistical(df, mean_k=8, multiplier=2.0, exact=True).collect()}
+           K.outlier_statistical(df, mean_k=8, multiplier=2.0).collect()}
     d2 = (xs[:, None] - xs[None, :]) ** 2 + (ys[:, None] - ys[None, :]) ** 2
     np.fill_diagonal(d2, np.inf)
     mean_d = np.sort(np.sqrt(d2), axis=1)[:, :8].mean(axis=1)
     thr = mean_d.mean() + 2.0 * mean_d.std(ddof=1)
     for i, sid in enumerate(ids_s.tolist()):
         assert got[sid] == (7 if mean_d[i] >= thr else 0), sid
+    # filters.nndistance with no cell_size (the exact plan), on a
+    # synth_points frame: its plan statistics are under
+    # ordered.SMALL_BYTES, where createDataFrame's are not
+    pdf = synth.synth_points(spark, 400).toPandas().sort_values("page_id")
+    px, py = pdf["x"].to_numpy(), pdf["y"].to_numpy()
+    d2 = (px[:, None] - px[None, :]) ** 2 + (py[:, None] - py[None, :]) ** 2
+    np.fill_diagonal(d2, np.inf)
+    want = np.sort(np.sqrt(d2), axis=1)[:, 3]
+    got = {r["page_id"]: r["nn_distance"] for r in
+           K.nn_distance(synth.synth_points(spark, 400), k=4).collect()}
+    for i, sid in enumerate(pdf["page_id"].tolist()):
+        assert got[sid] == pytest.approx(want[i], rel=1e-12), sid
 
 
 def test_hausdorff_and_delta(spark_dfs, pts):

@@ -338,6 +338,29 @@ def test_outlier_stage_statistical(spark):
     assert out.filter("classification = 7").count() > 0
 
 
+def test_outlier_stage_statistical_faux(spark):
+    """filters.outlier (statistical, the default method) on generated
+    readers.faux points: every row kept, and Classification 7 exactly
+    where the numpy oracle puts it — mean distance to the 8 nearest
+    other points >= mean + 2 * sample stdev of those means."""
+    import numpy as np
+
+    doc = [
+        {"type": "readers.faux", "count": 500, "mode": "points"},
+        {"type": "filters.outlier", "mean_k": 8, "multiplier": 2.0},
+    ]
+    got = pl.run(spark, doc).select("page_id", "x", "y", "classification") \
+        .toPandas().sort_values("page_id")
+    assert len(got) == 500
+    xs, ys = got["x"].to_numpy(), got["y"].to_numpy()
+    d2 = (xs[:, None] - xs[None, :]) ** 2 + (ys[:, None] - ys[None, :]) ** 2
+    np.fill_diagonal(d2, np.inf)
+    mean_d = np.sort(np.sqrt(d2), axis=1)[:, :8].mean(axis=1)
+    want = np.where(mean_d >= mean_d.mean() + 2.0 * mean_d.std(ddof=1), 7, 0)
+    assert 0 < (want == 7).sum() < 500
+    assert got["classification"].tolist() == want.tolist()
+
+
 @needs_simple
 def test_pmf_stage(spark):
     """filters.pmf as a pipeline stage classifies ground (2) vs not."""
