@@ -2834,13 +2834,12 @@ def q_bitext_align(spark, sf_dir):
 
 
 def q_sim_cosine_topk(spark, sf_dir):
-    """Exact top-k cosine via the DISTRIBUTED blocked brute force
-    (candidates stay sharded, queries fan to blocks, per-block local
-    top-k + global window) — same rows as the bounded
-    collect-and-broadcast cosine_topk rerank utility, which this entry
-    deliberately does not showcase."""
+    """Exact top-k cosine via the distributed blocked brute force
+    (candidates hashed into one block per default-parallelism slot,
+    queries fan to every block, per-block local top-k + global
+    window)."""
     df = _table(spark, sf_dir, "embeddings")
-    return sim_op.cosine_topk_blocked(df, k=3, n_blocks=8)
+    return sim_op.cosine_topk(df, k=3)
 
 
 def q_sim_lsh_topk(spark, sf_dir):

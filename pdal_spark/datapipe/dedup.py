@@ -460,7 +460,7 @@ def jaccard_pairs(
             F.row_number().over(Window.partitionBy("id").orderBy(F.col("ord").asc())),
         )
         .filter(F.col("rk") <= pref_len)
-        .select("id", "ord")
+        .select("id", "ord", "sz")
     )
     # Representation + plan switch on how the per-doc payload would
     # ride through the candidate self-join. Narrow vocab (word mode):
@@ -469,7 +469,8 @@ def jaccard_pairs(
     # no candidate distinct() exchange. Wide vocab (shingles): the
     # bitmask balloons past the doc's own set size (and the fused join
     # replicates payloads N_SALTS-fold — measured OOM at 3-gram scale);
-    # switch to the unfused plan: slim (id, ord)-only candidate join ->
+    # switch to the unfused plan: slim (id, ord, sz)-only salted
+    # candidate join with the length filter (_candidate_pairs) ->
     # distinct pairs -> per-side join of sorted word-hash arrays ->
     # array_intersect verify. Pairs post-prefix-filter are few relative
     # to the corpus there, so the two pair-side joins are the cheap
@@ -477,18 +478,16 @@ def jaccard_pairs(
     # (the array payload), capped at the codegen unroll width.
     avg_sz = n_words / max(df.count(), 1)
     if n_chunks > min(MASK_UNROLL_MAX, max(2 * avg_sz, 16)):
-        sets = _word_hash_sets(words)
         cand = (
-            prefix.alias("a")
-            .join(prefix.alias("b"), "ord")
-            .filter(F.col("a.id") < F.col("b.id"))
-            .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"))
+            _candidate_pairs(prefix, ["ord"], threshold)
+            .select("id1", "id2", "sz1", "sz2")
             .distinct()
         )
-        return _verify_fetched(cand, sets, threshold)
+        return _verify_fetched(cand, _word_hash_sets(words), threshold)
     v = vocab(df, text_col, id_col, shingle=shingle, words=words)
     masks, _ = _doc_masks(words, v, n_chunks)
-    keyed = prefix.join(masks, "id")  # prefix rows only — small join
+    # prefix rows only — small join
+    keyed = prefix.drop("sz").join(masks, "id")
     return _fused_verified_pairs(keyed, ["ord"], threshold, n_chunks)
 
 

@@ -33,10 +33,10 @@ Scale shape:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pdal_spark.datapipe.simsearch import _round_half_up
+from pdal_spark.datapipe.simsearch import _matrix, _round_half_up
 
 __all__ = ["pq_train", "pq_encode", "pq_topk", "pq_topk_sql"]
 
@@ -44,6 +44,29 @@ PQ_M = 8
 PQ_KSUB = 16
 PQ_ITERS = 2
 ROUND = 6  # ADC distances are ranked on this rounding (ulp-drift guard)
+
+
+def _sub(M: "np.ndarray", s: int, dsub: int) -> "np.ndarray":
+    """Subspace s's columns of M."""
+    return M[:, s * dsub:(s + 1) * dsub]
+
+
+def _sq_dists(X: "np.ndarray", C: "np.ndarray") -> "np.ndarray":
+    """(n, ksub) squared L2 distances of X's rows to one codebook."""
+    return ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1)
+
+
+def _codes(M: "np.ndarray", codebooks: "np.ndarray") -> "np.ndarray":
+    """(n, m) argmin-L2 code of each row in every subspace (np.argmin
+    takes the first minimum: the smallest code wins ties)."""
+    import numpy as np
+
+    mm, _, dd = codebooks.shape
+    return np.stack(
+        [np.argmin(_sq_dists(_sub(M, s, dd), codebooks[s]), axis=1)
+         for s in range(mm)],
+        axis=1,
+    )
 
 
 def pq_train(
@@ -73,7 +96,7 @@ def pq_train(
     dsub = d // m
     # cents[s] = (ksub, dsub) codebook of subspace s
     cents = np.stack(
-        [seeds[:, s * dsub:(s + 1) * dsub].copy() for s in range(m)]
+        [_sub(seeds, s, dsub).copy() for s in range(m)]
     )
 
     for _ in range(n_iters):
@@ -89,11 +112,11 @@ def pq_train(
             for pdf in batches:
                 if not len(pdf):
                     continue
-                M = np.array(list(pdf["v"]), dtype=np.float64)
+                M = _matrix(pdf["v"])
+                codes = _codes(M, C)
                 for s in range(mm):
-                    X = M[:, s * dd:(s + 1) * dd]
-                    dist = ((X[:, None, :] - C[s][None, :, :]) ** 2).sum(-1)
-                    a = np.argmin(dist, axis=1)  # first min = smallest code
+                    X = _sub(M, s, dd)
+                    a = codes[:, s]
                     for code in np.unique(a):
                         mask = a == code
                         sums[s, code] += X[mask].sum(axis=0)
@@ -145,17 +168,10 @@ def pq_encode(
     bc = spark.sparkContext.broadcast(codebooks)
 
     def kernel(batches):
-        C = bc.value
-        mm, kk, dd = C.shape
         for pdf in batches:
             if not len(pdf):
                 continue
-            M = np.array(list(pdf["v"]), dtype=np.float64)
-            codes = np.empty((len(M), mm), dtype=np.int32)
-            for s in range(mm):
-                X = M[:, s * dd:(s + 1) * dd]
-                dist = ((X[:, None, :] - C[s][None, :, :]) ** 2).sum(-1)
-                codes[:, s] = np.argmin(dist, axis=1)
+            codes = _codes(_matrix(pdf["v"]), bc.value).astype(np.int32)
             yield pd.DataFrame(
                 {"id": pdf["id"].to_numpy(np.int64), "codes": list(codes)}
             )
@@ -179,21 +195,42 @@ def pq_topk(
     emits only its partition-local top-k per query; grouped_topk
     finishes globally, so distances for the full corpus never
     shuffle."""
+    return _adc_topk(enc, _luts(codebooks, queries), k)
+
+
+def _luts(
+    codebooks: "np.ndarray", queries: list[tuple[int, "np.ndarray"]]
+) -> dict[int, "np.ndarray"]:
+    """{qid: (m, ksub) LUT}: the query's squared distance to every
+    centroid of every subspace."""
+    import numpy as np
+
+    mm, _, dd = codebooks.shape
+    luts = {}
+    for qid, qv in queries:
+        q = np.asarray(qv, dtype=np.float64)[None, :]
+        luts[int(qid)] = np.stack(
+            [_sq_dists(_sub(q, s, dd), codebooks[s])[0] for s in range(mm)]
+        )
+    return luts
+
+
+def _adc_topk(cand: DataFrame, luts: dict[int, "np.ndarray"],
+              k: int) -> DataFrame:
+    """ADC top-k -> (qid, id, adc_dist, rank): k rows per query.
+
+    ``cand`` is (id, codes), scored against every query, or (qid, id,
+    codes), each row scored against its own query. A database vector
+    costs m LUT lookups, accumulated in subspace order (the order the
+    SQL twins sum in). The kernel emits only its partition-local top-k
+    per query by (rounded distance, id); grouped_topk finishes
+    globally, so distances for the full corpus never shuffle."""
     import numpy as np
     import pandas as pd
 
     from pdal_spark.operators.ordered import grouped_topk
 
-    spark = enc.sparkSession
-    mm, kk, dd = codebooks.shape
-    lut = {}
-    for qid, qv in queries:
-        q = np.asarray(qv, dtype=np.float64)
-        t = np.empty((mm, kk))
-        for s in range(mm):
-            t[s] = ((q[s * dd:(s + 1) * dd][None, :] - codebooks[s]) ** 2).sum(-1)
-        lut[int(qid)] = t
-    bc = spark.sparkContext.broadcast(lut)
+    bc = cand.sparkSession.sparkContext.broadcast(luts)
     kq = int(k)
 
     def kernel(batches):
@@ -203,35 +240,31 @@ def pq_topk(
                 continue
             codes = np.array(list(pdf["codes"]), dtype=np.int64)
             ids = pdf["id"].to_numpy(np.int64)
-            out_q, out_i, out_d = [], [], []
-            for qid, t in L.items():
-                acc = np.zeros(len(codes))
+            if "qid" in pdf.columns:
+                qids = pdf["qid"].to_numpy(np.int64)
+                groups = [(int(q), qids == q) for q in np.unique(qids)]
+            else:
+                groups = [(q, slice(None)) for q in L]
+            out = []
+            for qid, sel in groups:
+                t, c, i = L[qid], codes[sel], ids[sel]
+                acc = np.zeros(len(c))
                 for s in range(t.shape[0]):  # fixed sub order
-                    acc = acc + t[s][codes[:, s]]
-                # partition-local prune: top-k by (dist, id)
-                order = np.lexsort((ids, np.round(acc, ROUND)))[:kq]
-                out_q.extend([qid] * len(order))
-                out_i.extend(ids[order])
-                out_d.extend(acc[order])
-            yield pd.DataFrame(
-                {
-                    "qid": np.array(out_q, np.int64),
-                    "id": np.array(out_i, np.int64),
-                    "adc_dist": np.array(out_d),
-                }
-            )
+                    acc = acc + t[s][c[:, s]]
+                order = np.lexsort((i, np.round(acc, ROUND)))[:kq]
+                out.append(pd.DataFrame(
+                    {"qid": np.int64(qid), "id": i[order],
+                     "adc_dist": acc[order]}
+                ))
+            if out:
+                yield pd.concat(out)
 
-    local = enc.mapInPandas(
+    local = cand.mapInPandas(
         kernel, schema="qid long, id long, adc_dist double"
     ).withColumn("adc_dist", F.round("adc_dist", ROUND))
-    top = grouped_topk(
-        local, ["qid"], [F.col("adc_dist").asc(), F.col("id").asc()], kq
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("qid").orderBy(
-        F.col("adc_dist").asc(), F.col("id").asc()
-    )
+    order = [F.col("adc_dist").asc(), F.col("id").asc()]
+    top = grouped_topk(local, ["qid"], order, kq)
+    w = Window.partitionBy("qid").orderBy(*order)
     return top.withColumn("rank", F.row_number().over(w)).select(
         "qid", "id", "adc_dist", "rank"
     )
@@ -368,12 +401,10 @@ def ivfpq_topk(
     import pandas as pd
 
     from pdal_spark.datapipe.simsearch import (
-        _seq_dot_matrix,
-        _seq_norms,
+        _nearest_lists,
         ivf_assign,
         ivf_train,
     )
-    from pdal_spark.operators.ordered import grouped_topk
 
     spark = df.sparkSession
     cents = ivf_train(df, nlist, n_iters, id_col, vec_col, sample_mod)
@@ -384,70 +415,17 @@ def ivfpq_topk(
     enc = pq_encode(df, books, id_col, vec_col)
     corpus = enc.join(members, "id")
 
-    # probe selection: same argmax-cosine + smallest-list tie-break as
-    # ivf_assign, on the driver (queries are few, centroids tiny)
-    probe_rows = []
-    lists = np.arange(cents.shape[0])
-    for qid, qv in queries:
-        q = np.asarray(qv, dtype=np.float64)[None, :]
-        sims = (_seq_dot_matrix(q, cents) / _seq_norms(q)[:, None])[0]
-        order = np.lexsort((lists, -sims))[: int(nprobe)]
-        probe_rows.extend((int(qid), int(l)) for l in lists[order])
-    probes = spark.createDataFrame(
-        pd.DataFrame(probe_rows, columns=["qid", "list_id"])
+    # probe selection: ivf_assign's nearest-list rule, on the driver
+    # (queries are few, centroids tiny)
+    qids = [int(qid) for qid, _ in queries]
+    lists = _nearest_lists(
+        np.array([qv for _, qv in queries], dtype=np.float64), cents,
+        int(nprobe),
     )
-
-    mm, kk_, dd = books.shape
-    lut = {}
-    for qid, qv in queries:
-        q = np.asarray(qv, dtype=np.float64)
-        t = np.empty((mm, kk_))
-        for s in range(mm):
-            t[s] = ((q[s * dd:(s + 1) * dd][None, :] - books[s]) ** 2).sum(-1)
-        lut[int(qid)] = t
-    bc = spark.sparkContext.broadcast(lut)
-    kq = int(k)
-
-    def kernel(batches):
-        L = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes = np.array(list(pdf["codes"]), dtype=np.int64)
-            ids = pdf["id"].to_numpy(np.int64)
-            qids = pdf["qid"].to_numpy(np.int64)
-            out = []
-            for qid in np.unique(qids):
-                sel = qids == qid
-                t = L[int(qid)]
-                acc = np.zeros(int(sel.sum()))
-                csel = codes[sel]
-                for s in range(t.shape[0]):
-                    acc = acc + t[s][csel[:, s]]
-                isel = ids[sel]
-                order = np.lexsort((isel, np.round(acc, ROUND)))[:kq]
-                out.append(
-                    pd.DataFrame(
-                        {"qid": qid, "id": isel[order], "adc_dist": acc[order]}
-                    )
-                )
-            if out:
-                yield pd.concat(out)
-
+    probes = spark.createDataFrame(pd.DataFrame({
+        "qid": np.repeat(qids, lists.shape[1]), "list_id": lists.ravel(),
+    }))
     cand = corpus.join(F.broadcast(probes), "list_id").select(
         "qid", "id", "codes"
     )
-    local = cand.mapInPandas(
-        kernel, schema="qid long, id long, adc_dist double"
-    ).withColumn("adc_dist", F.round("adc_dist", ROUND))
-    top = grouped_topk(
-        local, ["qid"], [F.col("adc_dist").asc(), F.col("id").asc()], kq
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("qid").orderBy(
-        F.col("adc_dist").asc(), F.col("id").asc()
-    )
-    return top.withColumn("rank", F.row_number().over(w)).select(
-        "qid", "id", "adc_dist", "rank"
-    )
+    return _adc_topk(cand, _luts(books, queries), k)

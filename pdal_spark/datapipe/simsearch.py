@@ -1,16 +1,23 @@
 """Similarity search over an embedding column (array<float>).
 
-  cosine_topk      brute-force exact top-k neighbors (pair join) — the
-                   correctness baseline; quadratic, fine for candidate
-                   re-ranking and small partitions.
-  lsh_cosine_topk  random-hyperplane LSH bucketing: only same-bucket
-                   pairs are joined, then exact cosine re-rank — the
-                   scale path (bucket join ≈ the spatial cell join shape
-                   in operators/knn.py, salting strategy shared).
+  cosine_topk         exact top-k neighbors: the blocked plan (candidates
+                      hashed into blocks, every query visits every block,
+                      per-block local top-k, then a per-query window);
+                      margin_align runs the same plan across collections.
+  lsh_cosine_topk     random-hyperplane LSH bucketing: only same-bucket
+                      pairs are scored, each once, then ranked.
+  ivf_topk            spherical-k-means inverted lists; a query probes its
+                      nprobe nearest lists (exact at nprobe = nlist).
+  cosine_dedup_pairs  near-dup pairs over the LSH buckets; semdedup over
+                      the k-means clusters.
 
-Dot products run JVM-side via zip_with + aggregate (ordered left fold in
-double) so the DuckDB oracle — same fold, same order, same types — is
-bit-comparable; emitted similarities are rounded to 6 decimals.
+Every Arrow kernel is built from the same numpy pieces: _cosine_block
+(the rounded cosine block), _topk (per-query top-k), _group_pairs
+(within-group pairs) and _nearest_lists (nearest centroids). Their
+dot products are a dimension-ordered left fold in double
+(_seq_dot_matrix), the fold the JVM Column (_dot: zip_with + aggregate)
+and the DuckDB oracle run too, so all three are bit-comparable;
+emitted similarities are rounded to 6 decimals.
 
 Hyperplane components are deterministic rationals
 ((p*131 + j*31 + 7) % 1000)/1000 - 0.5 (plane p, dim j) — identical
@@ -91,124 +98,160 @@ def _round_half_up(x: "np.ndarray", digits: int = ROUND) -> "np.ndarray":
     return np.sign(x) * np.floor(np.abs(x) * s + 0.5) / s
 
 
+def _matrix(vectors: "pd.Series") -> "np.ndarray":
+    """An Arrow batch's array column as an (n, d) float64 matrix."""
+    import numpy as np
+
+    return np.array(list(vectors), dtype=np.float64)
+
+
+def _cosine_block(A: "np.ndarray", B: "np.ndarray") -> "np.ndarray":
+    """(m, n) cosines of A's rows against B's, rounded HALF_UP to ROUND
+    places — the similarity every Arrow kernel ranks and filters on."""
+    import numpy as np
+
+    return _round_half_up(
+        _seq_dot_matrix(A, B) / np.multiply.outer(_seq_norms(A), _seq_norms(B))
+    )
+
+
+def _topk(
+    qids: "np.ndarray", cids: "np.ndarray", sims: "np.ndarray", k: int,
+    exclude_self: bool,
+) -> "pd.DataFrame":
+    """(src_id, cand_id, cosine): each query's k best candidates by
+    (cosine desc, cand id asc) from its row of the cosine block.
+    exclude_self drops the candidate whose id is the query's own, which
+    is right for self-search only: across two collections an equal id
+    is a different vector."""
+    import numpy as np
+    import pandas as pd
+
+    out_s, out_c, out_v = [], [], []
+    for i in range(len(qids)):
+        cands, vals = cids, sims[i]
+        if exclude_self:
+            mask = cids != qids[i]
+            cands, vals = cids[mask], vals[mask]
+        order = np.lexsort((cands, -vals))[:k]
+        out_s.extend([qids[i]] * len(order))
+        out_c.extend(cands[order])
+        out_v.extend(vals[order])
+    return pd.DataFrame({
+        "src_id": np.array(out_s, np.int64),
+        "cand_id": np.array(out_c, np.int64),
+        "cosine": np.array(out_v, np.float64),
+    })
+
+
+def _group_pairs(
+    pdf: "pd.DataFrame", tbl: int | None = None,
+    threshold: float | None = None,
+) -> "pd.DataFrame":
+    """(id1, id2, cosine), id1 < id2: every pair of one group's (id, v)
+    rows once. With ``tbl`` the group is one LSH (tbl, bucket) and each
+    row carries all its table buckets in ``bks``: a pair is kept only in
+    its first colliding table, so the pairs of all groups are distinct
+    without a dedup exchange. With ``threshold`` only pairs whose cosine
+    is >= threshold are kept."""
+    import numpy as np
+    import pandas as pd
+
+    ids = pdf["id"].to_numpy(np.int64)
+    M = _matrix(pdf["v"])
+    iu, ju = np.triu_indices(len(ids), 1)
+    swap = ids[iu] > ids[ju]
+    i1 = np.where(swap, ju, iu)
+    i2 = np.where(swap, iu, ju)
+    sim = _cosine_block(M, M)[iu, ju]
+    keep = ids[i1] != ids[i2]
+    if tbl is not None:
+        bks = np.array(list(pdf["bks"]), dtype=np.int64)
+        keep &= (bks[i1] == bks[i2]).argmax(axis=1) == tbl
+    if threshold is not None:
+        keep &= sim >= threshold
+    return pd.DataFrame({
+        "id1": ids[i1][keep], "id2": ids[i2][keep], "cosine": sim[keep],
+    })
+
+
+def _nearest_lists(
+    M: "np.ndarray", C: "np.ndarray", nprobe: int = 1
+) -> "np.ndarray":
+    """(rows, min(nprobe, nlist)) ids of each row's nprobe
+    highest-cosine unit-norm centroids, ties to the smaller list id."""
+    import numpy as np
+
+    sims = _seq_dot_matrix(M, C) / _seq_norms(M)[:, None]
+    lists = np.broadcast_to(np.arange(C.shape[0]), sims.shape)
+    return np.lexsort((lists, -sims), axis=1)[:, :nprobe]
+
+
+def _rank(pairs: DataFrame, k: int) -> DataFrame:
+    """(src_id, cand_id, cosine, rank): each src's k best pairs by
+    (cosine desc, cand_id asc)."""
+    w = Window.partitionBy("src_id").orderBy(
+        F.col("cosine").desc(), F.col("cand_id").asc()
+    )
+    return (
+        pairs.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("src_id", "cand_id", "cosine", "rank")
+    )
+
+
 def cosine_topk(
     df: DataFrame,
     k: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact brute-force top-k cosine neighbors per vector (excluding
-    self); ties broken by candidate id ascending.
-
-    BOUNDED rerank utility: the candidate matrix is collected and
-    broadcast, source vectors streamed through an Arrow-batched kernel
-    doing vectorized numpy block products and per-row top-k selection —
-    no pair join, no shuffle beyond the scan, but bounded by broadcast
-    size (~0.5 GB per 10^6 x 64-d float64). For exact top-k at scale
-    use cosine_topk_blocked (candidates stay distributed); for ANN use
-    the LSH/IVF paths, with this kernel re-ranking within buckets."""
-    return _cross_topk(df, df, k, id_col=id_col, vec_col=vec_col,
-                       exclude_self=True)
+    """Exact top-k cosine neighbors per vector (excluding self); ties
+    broken by candidate id ascending. Runs the blocked plan of
+    _exact_topk with one block per default-parallelism slot."""
+    return _exact_topk(df, df, k, exclude_self=True, id_col=id_col,
+                       vec_col=vec_col)
 
 
-def cosine_topk_blocked(
-    df: DataFrame,
-    k: int,
-    n_blocks: int = 32,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact brute-force top-k cosine self-search, fully distributed —
-    same rows as cosine_topk (same sequential-fold dot, same half-up
-    rounding, same cand-id tie-break) with no collect-the-matrix step.
-
-    Shape: candidates hash into n_blocks blocks (list_id =
-    xxhash64(id) mod B — a plain id-mod would let stride-k id patterns
-    empty some blocks and overload others),
-    every query replicates to every block (a B-row broadcast crossJoin,
-    not a data crossJoin), each block emits its LOCAL top-k through the
-    shared ivf_rank Arrow kernel, and the per-query window keeps the
-    global top-k — provably exact because the global top-k is contained
-    in the union of per-block top-ks under the same comparator. Cost is
-    the unavoidable O(n^2/B) block products spread across executors;
-    memory per task is O(n/B * d). This is the scale path the bounded
-    cosine_topk rerank utility is NOT."""
-    spark = df.sparkSession
-    B = int(n_blocks)
-    base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    members = base.withColumn(
-        "list_id", (F.pmod(F.xxhash64("id"), F.lit(B))).cast("int")
-    ).withColumn("role", F.lit(0))
-    block_df = spark.range(B).select(F.col("id").cast("int").alias("list_id"))
-    probes = base.crossJoin(F.broadcast(block_df)).withColumn(
-        "role", F.lit(1)
-    )
-    return ivf_rank(members, probes, k)
-
-
-def _cross_topk(
+def _exact_topk(
     src_df: DataFrame,
     cand_df: DataFrame,
     k: int,
+    exclude_self: bool,
+    n_blocks: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    exclude_self: bool = False,
 ) -> DataFrame:
-    """Top-k cosine neighbors of every src vector within the CANDIDATE
-    collection (cand_df may be a different set — the cross-collection
-    primitive behind bitext/semantic alignment). Same broadcast +
-    Arrow-batched block-product shape as cosine_topk."""
-    import numpy as np
-    import pandas as pd
+    """Exact top-k cosine neighbors of every src vector among cand_df's
+    vectors (cand_df may be src_df itself, with exclude_self, or another
+    collection) — the one exact plan behind cosine_topk and
+    margin_align.
 
+    Shape: candidates hash into n_blocks blocks (list_id =
+    xxhash64(id) mod B — a plain id-mod would let stride-k id patterns
+    empty some blocks and overload others; B defaults to the session's
+    defaultParallelism), every query replicates to every block (a B-row
+    broadcast crossJoin, not a data crossJoin), each block emits its
+    LOCAL top-k through ivf_rank's Arrow kernel, and the per-query
+    window keeps the global top-k — exact because the global top-k is
+    contained in the union of per-block top-ks under the same
+    comparator. Nothing is collected on the driver. Each block's group
+    holds all n queries plus about n/B candidates, so task memory is
+    O(n·d + n²/B) (the vectors and the n x n/B cosine block), and the
+    queries cross the exchange B times."""
     spark = src_df.sparkSession
-    cand_rows = (
-        cand_df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .orderBy("id")
-        .collect()
+    B = int(n_blocks or spark.sparkContext.defaultParallelism)
+    cols = [F.col(id_col).alias("id"), F.col(vec_col).alias("v")]
+    members = cand_df.select(
+        *cols,
+        F.pmod(F.xxhash64(F.col(id_col)), F.lit(B)).cast("int").alias("list_id"),
+        F.lit(0).alias("role"),
     )
-    ids_c = np.array([r.id for r in cand_rows], dtype=np.int64)
-    C = np.array([r.v for r in cand_rows], dtype=np.float64)
-    bc = spark.sparkContext.broadcast((ids_c, C, _seq_norms(C)))
-    kk = int(k)
-    excl = bool(exclude_self)
-
-    src = src_df.select(F.col(id_col).alias("src_id"), F.col(vec_col).alias("v"))
-
-    def kernel(batches):
-        ids_cand, Cm, nC = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            S = np.array(list(pdf["v"]), dtype=np.float64)
-            sims = _seq_dot_matrix(S, Cm) / np.multiply.outer(_seq_norms(S), nC)
-            sims = _round_half_up(sims)
-            src_ids = pdf["src_id"].to_numpy(np.int64)
-            out_src, out_cand, out_cos, out_rank = [], [], [], []
-            for i in range(len(S)):
-                row = sims[i]
-                if excl:
-                    mask = ids_cand != src_ids[i]
-                    cands = ids_cand[mask]
-                    vals = row[mask]
-                else:
-                    cands = ids_cand
-                    vals = row
-                order = np.lexsort((cands, -vals))[:kk]
-                out_src.extend([src_ids[i]] * len(order))
-                out_cand.extend(cands[order])
-                out_cos.extend(vals[order])
-                out_rank.extend(range(1, len(order) + 1))
-            yield pd.DataFrame({
-                "src_id": np.array(out_src, np.int64),
-                "cand_id": np.array(out_cand, np.int64),
-                "cosine": np.array(out_cos, np.float64),
-                "rank": np.array(out_rank, np.int32),
-            })
-
-    return src.mapInPandas(
-        kernel, schema="src_id long, cand_id long, cosine double, rank int"
+    blocks = spark.range(B).select(F.col("id").cast("int").alias("list_id"))
+    probes = src_df.select(*cols).crossJoin(F.broadcast(blocks)).withColumn(
+        "role", F.lit(1)
     )
+    return ivf_rank(members, probes, k, exclude_self)
 
 
 def margin_align(
@@ -235,13 +278,13 @@ def margin_align(
     to 6 dp. That is what makes the DuckDB twin bit-comparable despite
     the two avg() aggregations inside the formula.
 
-    Scale shape: two _cross_topk passes (broadcast candidate matrix,
-    Arrow block products, no pair shuffle) + two map-side-combined
-    integer sums + a per-src argmax window over k rows. At
-    larger-than-broadcast collections the forward/backward top-k swap
-    to the LSH/IVF candidates with this same scorer on top."""
-    fwd = _cross_topk(src_df, cand_df, k, id_col=id_col, vec_col=vec_col)
-    bwd = _cross_topk(cand_df, src_df, k, id_col=id_col, vec_col=vec_col)
+    Scale shape: two exact top-k passes (_exact_topk, forward and
+    backward, neither excluding equal ids) + two map-side-combined
+    integer sums + a per-src argmax window over k rows."""
+    fwd = _exact_topk(src_df, cand_df, k, exclude_self=False, id_col=id_col,
+                      vec_col=vec_col)
+    bwd = _exact_topk(cand_df, src_df, k, exclude_self=False, id_col=id_col,
+                      vec_col=vec_col)
 
     def _micro_sums(df: DataFrame, out_id: str, s: str, c: str) -> DataFrame:
         return df.groupBy(F.col("src_id").alias(out_id)).agg(
@@ -401,7 +444,9 @@ def lsh_buckets(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(id, v, tbl, bucket): one row per (vector, hash table).
+    """(id, v, bks, tbl, bucket): one row per (vector, hash table);
+    bks is the vector's bucket in every table (the first-colliding-table
+    rule of _group_pairs reads it).
 
     Multi-table OR-amplification: a pair is a candidate if it collides
     in ANY table — the recall knob for random-hyperplane LSH."""
@@ -411,10 +456,10 @@ def lsh_buckets(
         v.alias("v"),
         F.array(
             *[_bucket_col(v, t, n_planes) for t in range(n_tables)]
-        ).alias("_buckets"),
+        ).alias("bks"),
     )
     return tagged.select(
-        "id", "v", F.posexplode("_buckets").alias("tbl", "bucket")
+        "id", "v", "bks", F.posexplode("bks").alias("tbl", "bucket")
     )
 
 
@@ -428,43 +473,26 @@ def lsh_cosine_topk(
 ) -> DataFrame:
     """Approximate top-k: exact cosine re-rank over pairs that collide in
     at least one LSH table. Deterministic — the SQL oracle reproduces it
-    exactly. Recall grows with n_tables (OR), precision with n_planes."""
-    import numpy as np
-    import pandas as pd
+    exactly. Recall grows with n_tables (OR), precision with n_planes.
 
-    b = lsh_buckets(df, n_planes, n_tables, id_col, vec_col)
+    Each pair is scored once, in its first colliding table (_group_pairs),
+    and leaves the kernel in both directions — no dedup exchange."""
 
-    def bucket_pairs(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        # all within-bucket pairs, vectorized; ordered-fold dot (see
-        # _seq_dot_matrix) keeps parity with the SQL oracle
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame({"src_id": [], "cand_id": [], "cosine": []}).astype(
-                {"src_id": np.int64, "cand_id": np.int64, "cosine": np.float64}
-            )
-        ids = pdf["id"].to_numpy(np.int64)
-        M = np.array(list(pdf["v"]), dtype=np.float64)
-        nm = _seq_norms(M)
-        sims = _round_half_up(_seq_dot_matrix(M, M) / np.multiply.outer(nm, nm))
-        src, cand = np.where(~np.eye(n, dtype=bool))
-        return pd.DataFrame({
-            "src_id": ids[src], "cand_id": ids[cand],
-            "cosine": sims[src, cand],
-        })
+    def bucket_pairs(key, pdf):
+        return _group_pairs(pdf, tbl=int(key[0]))
 
     pairs = (
-        b.groupBy("tbl", "bucket")
-        .applyInPandas(bucket_pairs, schema="src_id long, cand_id long, cosine double")
-        .dropDuplicates(["src_id", "cand_id"])
+        lsh_buckets(df, n_planes, n_tables, id_col, vec_col)
+        .groupBy("tbl", "bucket")
+        .applyInPandas(bucket_pairs, schema="id1 long, id2 long, cosine double")
     )
-    w = Window.partitionBy("src_id").orderBy(
-        F.col("cosine").desc(), F.col("cand_id").asc()
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("src_id", "cand_id", "cosine", "rank")
-    )
+    both = pairs.select(F.inline(F.array(
+        F.struct(F.col("id1").alias("src_id"), F.col("id2").alias("cand_id"),
+                 "cosine"),
+        F.struct(F.col("id2").alias("src_id"), F.col("id1").alias("cand_id"),
+                 "cosine"),
+    )))
+    return _rank(both, k)
 
 
 def _bucket_sql(table_idx: int, n_planes: int) -> str:
@@ -565,11 +593,8 @@ def ivf_train(
             for pdf in batches:
                 if not len(pdf):
                     continue
-                M = np.array(list(pdf["v"]), dtype=np.float64)
-                sims = _seq_dot_matrix(M, C) / _seq_norms(M)[:, None]
-                # argmax with smallest-list-id tie-break (np.argmax takes
-                # the first max, which is the smallest index)
-                a = np.argmax(sims, axis=1)
+                M = _matrix(pdf["v"])
+                a = _nearest_lists(M, C)[:, 0]
                 for lst in np.unique(a):
                     mask = a == lst
                     sums[lst] += M[mask].sum(axis=0)
@@ -631,20 +656,12 @@ def ivf_assign(
         for pdf in batches:
             if not len(pdf):
                 continue
-            M = np.array(list(pdf["v"]), dtype=np.float64)
-            sims = _seq_dot_matrix(M, C) / _seq_norms(M)[:, None]
-            lists = np.arange(C.shape[0])
-            ids = pdf["id"].to_numpy(np.int64)
-            out_id, out_v, out_l = [], [], []
-            for i in range(len(M)):
-                order = np.lexsort((lists, -sims[i]))[:npb]
-                out_id.extend([ids[i]] * len(order))
-                out_v.extend([pdf["v"].iloc[i]] * len(order))
-                out_l.extend(lists[order])
+            lists = _nearest_lists(_matrix(pdf["v"]), C, npb)
+            n = lists.shape[1]
             yield pd.DataFrame({
-                "id": np.array(out_id, np.int64),
-                "v": out_v,
-                "list_id": np.array(out_l, np.int32),
+                "id": np.repeat(pdf["id"].to_numpy(np.int64), n),
+                "v": pdf["v"].repeat(n).tolist(),
+                "list_id": lists.ravel().astype(np.int32),
             })
 
     src = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
@@ -680,9 +697,6 @@ def ivf_topk(
     tie-break); ivf_topk_sql exports that oracle. Recall at nprobe <
     nlist is covered by tests against the exact path.
     """
-    import numpy as np
-    import pandas as pd
-
     cents = ivf_train(df, nlist, n_iters, id_col, vec_col, sample_mod)
     members = ivf_assign(df, cents, 1, id_col, vec_col).withColumn(
         "role", F.lit(0)
@@ -693,58 +707,30 @@ def ivf_topk(
     return ivf_rank(members, probes, k)
 
 
-def ivf_rank(members: DataFrame, probes: DataFrame, k: int) -> DataFrame:
-    """The IVF rank stage shared by ivf_topk and the persistent index
-    (annindex.IvfIndex): per-list local top-k Arrow kernel on the
-    list_id exchange, then the per-query window. ``members`` and
-    ``probes`` carry (id, v, list_id, role 0/1)."""
+def ivf_rank(
+    members: DataFrame, probes: DataFrame, k: int, exclude_self: bool = True
+) -> DataFrame:
+    """The blocked rank stage shared by ivf_topk, the persistent index
+    (annindex.IvfIndex) and _exact_topk: per-list local top-k Arrow
+    kernel on the list_id exchange, then the per-query window.
+    ``members`` and ``probes`` carry (id, v, list_id, role 0/1)."""
     import numpy as np
-    import pandas as pd
 
-    both = members.unionByName(probes)
     kk = int(k)
 
-    def list_pairs(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"src_id": [], "cand_id": [], "cosine": []}).astype(
-            {"src_id": np.int64, "cand_id": np.int64, "cosine": np.float64}
-        )
+    def list_pairs(key, pdf):
         q = pdf[pdf["role"] == 1]
         m = pdf[pdf["role"] == 0]
         if not len(q) or not len(m):
-            return empty
-        Q = np.array(list(q["v"]), dtype=np.float64)
-        M = np.array(list(m["v"]), dtype=np.float64)
-        qids = q["id"].to_numpy(np.int64)
-        mids = m["id"].to_numpy(np.int64)
-        sims = _round_half_up(
-            _seq_dot_matrix(Q, M)
-            / np.multiply.outer(_seq_norms(Q), _seq_norms(M))
-        )
-        out_s, out_c, out_v = [], [], []
-        for i in range(len(Q)):
-            mask = mids != qids[i]
-            cands, vals = mids[mask], sims[i][mask]
-            order = np.lexsort((cands, -vals))[:kk]
-            out_s.extend([qids[i]] * len(order))
-            out_c.extend(cands[order])
-            out_v.extend(vals[order])
-        return pd.DataFrame({
-            "src_id": np.array(out_s, np.int64),
-            "cand_id": np.array(out_c, np.int64),
-            "cosine": np.array(out_v, np.float64),
-        })
+            return _topk(np.empty(0, np.int64), None, None, kk, exclude_self)
+        sims = _cosine_block(_matrix(q["v"]), _matrix(m["v"]))
+        return _topk(q["id"].to_numpy(np.int64), m["id"].to_numpy(np.int64),
+                     sims, kk, exclude_self)
 
-    pairs = both.groupBy("list_id").applyInPandas(
+    pairs = members.unionByName(probes).groupBy("list_id").applyInPandas(
         list_pairs, schema="src_id long, cand_id long, cosine double"
     )
-    w = Window.partitionBy("src_id").orderBy(
-        F.col("cosine").desc(), F.col("cand_id").asc()
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= kk)
-        .select("src_id", "cand_id", "cosine", "rank")
-    )
+    return _rank(pairs, kk)
 
 
 def ivf_topk_sql(
@@ -763,86 +749,29 @@ def cosine_dedup_pairs(
     n_tables: int = N_TABLES,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    exact: bool = False,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs (id1 < id2, cosine >= threshold).
 
-    Scale path: random-hyperplane LSH buckets (multi-table OR
-    amplification), SALTED same-bucket self-join, exact cosine verified
-    INLINE on the joined rows (JVM ordered-fold dot), and each pair
-    verified only in its FIRST colliding table — no candidate distinct,
-    no trailing dedup exchange. exact=True runs the all-pairs broadcast
-    join instead (the small-scale oracle; recall tests compare the two).
-    """
-    v = F.col(vec_col)
-    if exact:
-        base = df.select(
-            F.col(id_col).alias("id"), v.alias("v"), _norm(v).alias("n")
-        )
-        a = base.select(
-            F.col("id").alias("id1"), F.col("v").alias("va"), F.col("n").alias("na")
-        )
-        b = base.select(
-            F.col("id").alias("id2"), F.col("v").alias("vb"), F.col("n").alias("nb")
-        )
-        joined = a.join(b, F.col("id1") < F.col("id2"))
-        out = joined.withColumn(
-            "cosine",
-            F.round(
-                _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")),
-                ROUND,
-            ),
-        ).filter(F.col("cosine") >= threshold)
-        return out.select("id1", "id2", "cosine")
+    Random-hyperplane LSH buckets (lsh_buckets, multi-table OR
+    amplification), one exchange on (tbl, bucket), and the exact cosine
+    computed in the Arrow bucket kernel (_group_pairs: the
+    dimension-ordered numpy fold is bit-par with the SQL twin — see
+    _seq_dot_matrix), each pair emitted only by its FIRST colliding
+    table — no candidate distinct, no trailing dedup exchange. Measured
+    ~3x faster (warm) than verifying with interpreted zip_with/aggregate
+    folds on the joined row stream. NOTE: unrolling the bucket
+    projection to codegen adds was tried and measured 10x SLOWER
+    (1024-term expression trees kill compilation) — keep the HOF fold.
+    cosine_dedup_pairs_sql(exact=True) is the brute-force oracle the
+    recall tests compare against."""
+    thr = float(threshold)
 
-    # LSH path: same (tbl, bucket) group shape as lsh_cosine_topk, with
-    # the exact cosine computed in the Arrow bucket kernel (the
-    # dimension-ordered numpy fold is bit-par with the SQL twin — see
-    # _seq_dot_matrix) and each pair emitted only by its FIRST colliding
-    # table, so no cross-bucket dedup exchange. Measured ~3x faster
-    # (warm) than verifying with interpreted zip_with/aggregate folds on
-    # the joined row stream. NOTE: unrolling the bucket projection to
-    # codegen adds was tried and measured 10x SLOWER (1024-term
-    # expression trees kill compilation) — keep the HOF fold.
-    import numpy as np
-    import pandas as pd
-
-    tagged = df.select(
-        F.col(id_col).alias("id"), v.alias("v"),
-        F.array(
-            *[_bucket_col(v, t, n_planes) for t in range(n_tables)]
-        ).alias("bks"),
-    )
-    b = tagged.select(
-        "id", "v", "bks", F.posexplode("bks").alias("tbl", "bucket")
-    )
-
-    def bucket_pairs(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        tbl = int(key[0])
-        n = len(pdf)
-        empty = pd.DataFrame({"id1": [], "id2": [], "cosine": []}).astype(
-            {"id1": np.int64, "id2": np.int64, "cosine": np.float64}
-        )
-        if n < 2:
-            return empty
-        ids = pdf["id"].to_numpy(np.int64)
-        M = np.array(list(pdf["v"]), dtype=np.float64)
-        B = np.array(list(pdf["bks"]), dtype=np.int64)
-        nm = _seq_norms(M)
-        sims = _round_half_up(_seq_dot_matrix(M, M) / np.multiply.outer(nm, nm))
-        iu, ju = np.triu_indices(n, 1)
-        swap = ids[iu] > ids[ju]
-        i1 = np.where(swap, ju, iu)
-        i2 = np.where(swap, iu, ju)
-        first = (B[i1] == B[i2]).argmax(axis=1)  # eq at tbl guaranteed
-        sim = sims[iu, ju]
-        keep = (first == tbl) & (sim >= threshold) & (ids[i1] != ids[i2])
-        return pd.DataFrame({
-            "id1": ids[i1][keep], "id2": ids[i2][keep], "cosine": sim[keep],
-        })
+    def bucket_pairs(key, pdf):
+        return _group_pairs(pdf, tbl=int(key[0]), threshold=thr)
 
     return (
-        b.groupBy("tbl", "bucket")
+        lsh_buckets(df, n_planes, n_tables, id_col, vec_col)
+        .groupBy("tbl", "bucket")
         .applyInPandas(bucket_pairs, schema="id1 long, id2 long, cosine double")
     )
 
@@ -913,9 +842,6 @@ def semdedup(
     the graph-generic CC (driver union-find under driver_max_edges,
     distributed min-label above — same engine as filters.cluster).
     """
-    import numpy as np
-    import pandas as pd
-
     from pdal_spark.operators.pointcloud import _cc_roots
 
     spark = df.sparkSession
@@ -940,28 +866,14 @@ def semdedup(
 
     thr = float(threshold)
 
-    def cluster_pairs(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"src_id": [], "cand_id": []}).astype(
-            {"src_id": np.int64, "cand_id": np.int64}
-        )
-        n = len(pdf)
-        if n < 2:
-            return empty
-        pdf = pdf.sort_values("id")
-        ids = pdf["id"].to_numpy(np.int64)
-        M = np.array(list(pdf["v"]), dtype=np.float64)
-        nm = _seq_norms(M)
-        sims = _round_half_up(_seq_dot_matrix(M, M) / np.multiply.outer(nm, nm))
-        iu, ju = np.triu_indices(n, 1)
-        keep = sims[iu, ju] >= thr
-        return pd.DataFrame({
-            "src_id": ids[iu][keep], "cand_id": ids[ju][keep],
-        })
+    def cluster_pairs(key, pdf):
+        return _group_pairs(pdf, threshold=thr)
 
     edges = (
         m.select("list_id", "id", "v")
         .groupBy("list_id")
-        .applyInPandas(cluster_pairs, schema="src_id long, cand_id long")
+        .applyInPandas(cluster_pairs, schema="id1 long, id2 long, cosine double")
+        .select(F.col("id1").alias("src_id"), F.col("id2").alias("cand_id"))
         .persist()
     )
     pts = m.select("id")

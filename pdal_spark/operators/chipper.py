@@ -155,6 +155,28 @@ def chip_assign_np(
     return chip, rank
 
 
+def _chip_groups(
+    df: DataFrame, keys: list[str], capacity: int, x: str, y: str,
+    order_col: str,
+) -> DataFrame:
+    """df + (chip_id, chip_rank): chip_assign_np over each group of
+    ``keys``, its rows taken in ``order_col`` order."""
+    cap = int(capacity)
+
+    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(order_col, kind="stable").reset_index(drop=True)
+        cid, crank = chip_assign_np(
+            pdf[x].to_numpy(np.float64), pdf[y].to_numpy(np.float64), cap
+        )
+        return pdf.assign(chip_id=cid, chip_rank=crank)
+
+    schema = StructType(
+        list(df.schema.fields)
+        + [StructField("chip_id", LongType()), StructField("chip_rank", LongType())]
+    )
+    return df.groupBy(*keys).applyInPandas(kernel, schema=schema)
+
+
 def chip(
     df: DataFrame,
     capacity: int,
@@ -168,30 +190,11 @@ def chip(
     required for deterministic results on distributed input. The whole
     dataset is gathered into one numpy kernel — parity/per-tile mode.
     """
-    cols = df.columns
     if order_col is None:
         raise ValueError("chip() needs order_col to pin PDAL arrival order")
-
-    cap = int(capacity)
-    xcol, ycol, ocol = x, y, order_col
-
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ocol, kind="stable").reset_index(drop=True)
-        cid, crank = chip_assign_np(
-            pdf[xcol].to_numpy(np.float64), pdf[ycol].to_numpy(np.float64), cap
-        )
-        return pdf.assign(chip_id=cid, chip_rank=crank)
-
-    schema = StructType(
-        list(df.schema.fields)
-        + [StructField("chip_id", LongType()), StructField("chip_rank", LongType())]
-    )
-    return (
-        df.withColumn("_g", F.lit(0))
-        .groupBy("_g")
-        .applyInPandas(kernel, schema=schema.add("_g", "integer"))
-        .drop("_g")
-    )
+    return _chip_groups(
+        df.withColumn("_g", F.lit(0)), ["_g"], capacity, x, y, order_col
+    ).drop("_g")
 
 
 def chip_partitioned(
@@ -213,22 +216,9 @@ def chip_partitioned(
     """
     if order_col is None:
         raise ValueError("chip_partitioned() needs order_col")
-    cap = int(capacity)
-    xcol, ycol, ocol = x, y, order_col
-
     tiled = df.withColumn(
         "tile_x", geo.tile_coord(x, origin_x, tile_len)
     ).withColumn("tile_y", geo.tile_coord(y, origin_y, tile_len))
-
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ocol, kind="stable").reset_index(drop=True)
-        cid, crank = chip_assign_np(
-            pdf[xcol].to_numpy(np.float64), pdf[ycol].to_numpy(np.float64), cap
-        )
-        return pdf.assign(chip_id=cid, chip_rank=crank)
-
-    schema = StructType(
-        list(tiled.schema.fields)
-        + [StructField("chip_id", LongType()), StructField("chip_rank", LongType())]
+    return _chip_groups(
+        tiled, ["tile_x", "tile_y"], capacity, x, y, order_col
     )
-    return tiled.groupBy("tile_x", "tile_y").applyInPandas(kernel, schema=schema)

@@ -238,14 +238,14 @@ def knn_join(
     (default) is the count rule of :func:`_hot_keys`; pass an int to pin
     the threshold, or None to disable salting.
     """
-    from pdal_spark.operators.ordered import SMALL_BYTES, _is_small
+    from pdal_spark.operators.ordered import _is_small
 
     if cell_size is None:
         s, c = _sides(src, cand, None, src_id, cand_id, x, y)
         return _rank(s.crossJoin(F.broadcast(c)), k, src_id, cand_id, x, y,
                      exclude_self)
     plan = (knn_join_pairwise
-            if _is_small(src, SMALL_BYTES) and _is_small(cand, SMALL_BYTES)
+            if _is_small(src) and _is_small(cand)
             else _knn_cogroup)
     out = plan(src, cand, k, cell_size, src_id=src_id, cand_id=cand_id,
                x=x, y=y, exclude_self=exclude_self,

@@ -29,7 +29,7 @@ Small-input fast path: the three-exchange scheme costs ~1 s of fixed
 overhead (persist + counts job + two shuffles) that dwarfs a small
 input's actual sort. When Catalyst's plan-time size estimate
 (optimizedPlan().stats.sizeInBytes — no job, no scan) is under
-``small_bytes``, the primitives instead run one window partitioned by a
+``SMALL_BYTES``, the primitives instead run one window partitioned by a
 constant — a single sorted task, which is exactly right for an input
 that fits one task, and produces identical ranks (same total order
 keys). Inputs whose stats are unknown or above the threshold always
@@ -46,17 +46,16 @@ _PID = "_ord_pid"
 SMALL_BYTES = 64 << 20
 
 
-def _is_small(df: DataFrame, small_bytes: int | None) -> bool:
-    """Plan-time size gate (never runs a job). Conservative: any
-    failure to estimate counts as big. PDAL_SPARK_FORCE_DISTRIBUTED=1
-    pins the distributed shape regardless of size — the plan census
-    (tests/test_planshape.py, tools/plan_metrics.py) audits plans in
-    the shape they would have at scale, not the small-input one."""
+def _is_small(df: DataFrame) -> bool:
+    """Plan-time size gate against SMALL_BYTES, read at call time (never
+    runs a job). Conservative: any failure to estimate counts as big.
+    PDAL_SPARK_FORCE_DISTRIBUTED=1 pins the distributed shape regardless
+    of size — the plan census (tests/test_planshape.py,
+    tools/plan_metrics.py) audits plans in the shape they would have at
+    scale, not the small-input one."""
     import os
 
     if os.environ.get("PDAL_SPARK_FORCE_DISTRIBUTED"):
-        return False
-    if not small_bytes:
         return False
     try:
         est = int(
@@ -64,7 +63,7 @@ def _is_small(df: DataFrame, small_bytes: int | None) -> bool:
         )
     except Exception:
         return False
-    return 0 <= est <= small_bytes
+    return 0 <= est <= SMALL_BYTES
 
 
 def _range_partitioned(
@@ -98,11 +97,10 @@ def global_rank(
     out_col: str = "rank",
     zero_based: bool = False,
     num_partitions: int | None = None,
-    small_bytes: int | None = SMALL_BYTES,
 ) -> DataFrame:
     """Exact ``row_number() OVER (ORDER BY keys)`` without the
     single-task global window. ``keys`` must totally order the rows."""
-    if _is_small(df, small_bytes):
+    if _is_small(df):
         w = Window.partitionBy(F.lit(0)).orderBy(*keys)
         rank = F.row_number().over(w).cast("long") - (
             1 if zero_based else 0
@@ -125,13 +123,12 @@ def prefix_sums(
     values: dict[str, Column],
     inclusive: bool = True,
     num_partitions: int | None = None,
-    small_bytes: int | None = SMALL_BYTES,
 ) -> DataFrame:
     """Exact global prefix sums of several DOUBLE expressions in key
     order, sharing one range partitioning (the multi-column sibling of
     running_total; used by running-moment scans like
     filters.skewnessbalancing)."""
-    if _is_small(df, small_bytes):
+    if _is_small(df):
         hi = 0 if inclusive else -1
         w = (
             Window.partitionBy(F.lit(0))
@@ -179,11 +176,10 @@ def running_total(
     out_col: str = "running_total",
     inclusive: bool = False,
     num_partitions: int | None = None,
-    small_bytes: int | None = SMALL_BYTES,
 ) -> DataFrame:
     """Exact global prefix sum of ``value`` in key order (exclusive by
     default: sum over rows strictly before this row)."""
-    if _is_small(df, small_bytes):
+    if _is_small(df):
         hi = 0 if inclusive else -1
         w = (
             Window.partitionBy(F.lit(0))

@@ -340,16 +340,33 @@ def test_cosine_topk(embs, ddb):
     assert (cnt["count"] == 3).all()
 
 
-def test_cosine_topk_blocked_equals_bounded(embs, ddb):
-    """The distributed blocked brute force is row-for-row equal to both
-    the bounded rerank utility and the SQL oracle — exact, not ANN."""
-    out = simsearch.cosine_topk_blocked(embs, k=3, n_blocks=5)
+def test_cosine_topk_block_counts(embs, ddb):
+    """The blocked exact plan is row-for-row equal to the SQL oracle
+    whatever the block count — exact, not ANN."""
     exp = ddb.sql(simsearch.cosine_topk_sql(3))
-    _cmp(out, exp, ["src_id", "rank"])
-    a = simsearch.cosine_topk(embs, k=3).toPandas() \
-        .sort_values(["src_id", "rank"]).reset_index(drop=True)
-    b = out.toPandas().sort_values(["src_id", "rank"]).reset_index(drop=True)
-    assert a.equals(b)
+    for n_blocks in (2, 5):
+        out = simsearch._exact_topk(embs, embs, 3, exclude_self=True,
+                                    n_blocks=n_blocks)
+        _cmp(out, exp, ["src_id", "rank"])
+
+
+def test_cross_collection_topk_keeps_equal_ids(spark):
+    """Only self-search drops a candidate with the query's own id:
+    across two collections an equal id is a different vector, and here
+    it is the best match."""
+    src = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0])], "vec_id long, embedding array<double>"
+    )
+    cand = spark.createDataFrame(
+        [(1, [1.0, 0.1]), (7, [0.1, 1.0]), (8, [-1.0, 0.0])],
+        "vec_id long, embedding array<double>",
+    )
+    top = {(r.src_id, r.rank): r.cand_id for r in
+           simsearch._exact_topk(src, cand, 2, exclude_self=False).collect()}
+    assert top == {(1, 1): 1, (1, 2): 7, (2, 1): 7, (2, 2): 1}
+    aligned = {r.src_id: r.dst_id for r in
+               simsearch.margin_align(src, cand, k=1, threshold=0.0).collect()}
+    assert aligned[1] == 1
 
 
 def test_margin_align(embs, ddb):
@@ -389,7 +406,7 @@ def test_margin_align_hub_suppression(spark):
     cand = df.filter(F.col("vec_id") >= 10)
     got = {r.src_id: r.dst_id
            for r in simsearch.margin_align(src, cand, k=2).collect()}
-    raw = simsearch._cross_topk(src, cand, k=1).collect()
+    raw = simsearch._exact_topk(src, cand, 1, exclude_self=False).collect()
     raw_best = {r.src_id: r.cand_id for r in raw}
     assert raw_best[1] == 11      # cosine alone picks the hub...
     assert got[1] == 10           # ...margin picks the exclusive partner
@@ -399,6 +416,8 @@ def test_lsh_cosine_topk(embs, ddb):
     out = simsearch.lsh_cosine_topk(embs, k=3)
     exp = ddb.sql(simsearch.lsh_cosine_topk_sql(3))
     _cmp(out, exp, ["src_id", "rank"])
+    # each pair leaves the bucket kernel once: no dedup aggregate
+    assert "Aggregate" not in out._jdf.queryExecution().executedPlan().toString()
 
 
 def test_lsh_recall_reasonable(embs):
@@ -475,11 +494,9 @@ def test_cosine_dedup_pairs(embs, ddb):
 
 
 def test_cosine_dedup_exact_superset(embs, ddb):
-    # exact mode == brute-force oracle; LSH pairs are a subset of it
-    exact = simsearch.cosine_dedup_pairs(embs, threshold=0.3, exact=True)
-    exp = ddb.sql(simsearch.cosine_dedup_pairs_sql(0.3, exact=True))
-    _cmp(exact, exp, ["id1", "id2"])
-    e = {(r.id1, r.id2) for r in exact.collect()}
+    # LSH pairs are a subset of the brute-force oracle's pairs
+    e = {(r[0], r[1]) for r in
+         ddb.sql(simsearch.cosine_dedup_pairs_sql(0.3, exact=True)).fetchall()}
     a = {(r.id1, r.id2)
          for r in simsearch.cosine_dedup_pairs(embs, threshold=0.3).collect()}
     assert a <= e

@@ -8,6 +8,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from pdal_spark.operators import ordered
 from pdal_spark.operators.ordered import global_rank, running_total
 
 
@@ -77,18 +78,18 @@ def test_running_total_inclusive(df, rows):
     assert got == expect
 
 
-def test_no_global_window_in_plan(df):
+def test_no_global_window_in_plan(df, monkeypatch):
     """The point of the module: the physical plan must not contain a
-    single-partition window exchange (SinglePartition). small_bytes=0
-    pins the distributed shape (a small test input would otherwise take
-    the fast path)."""
-    out = global_rank(df, [F.col("v").asc(), F.col("id").asc()], out_col="r",
-                      small_bytes=0)
+    single-partition window exchange (SinglePartition).
+    PDAL_SPARK_FORCE_DISTRIBUTED pins the distributed shape (a small
+    test input would otherwise take the fast path)."""
+    monkeypatch.setenv("PDAL_SPARK_FORCE_DISTRIBUTED", "1")
+    out = global_rank(df, [F.col("v").asc(), F.col("id").asc()], out_col="r")
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" not in plan
 
 
-def test_small_fast_path_equals_distributed(spark):
+def test_small_fast_path_equals_distributed(spark, monkeypatch):
     """The stats-gated fast path must produce identical ranks and
     running totals to the range-partition + offsets shape. The input
     must come from a stats-bearing source (range/parquet) —
@@ -100,14 +101,18 @@ def test_small_fast_path_equals_distributed(spark):
         F.pmod(F.xxhash64("id", F.lit(1)), F.lit(2)).alias("flag"),
     ).repartition(7)
     keys = [F.col("v").asc(), F.col("id").asc()]
-    fast = global_rank(base, keys, out_col="r", small_bytes=1 << 40)
-    dist = global_rank(base, keys, out_col="r", small_bytes=0)
+    with monkeypatch.context() as m:
+        m.setattr(ordered, "SMALL_BYTES", 1 << 40)
+        fast = global_rank(base, keys, out_col="r")
+        fast_t = running_total(base, [F.col("id").asc()], F.col("flag"),
+                               out_col="t")
+    with monkeypatch.context() as m:
+        m.setenv("PDAL_SPARK_FORCE_DISTRIBUTED", "1")
+        dist = global_rank(base, keys, out_col="r")
+        dist_t = running_total(base, [F.col("id").asc()], F.col("flag"),
+                               out_col="t")
     assert {(r["id"], r["r"]) for r in fast.collect()} == \
         {(r["id"], r["r"]) for r in dist.collect()}
-    fast_t = running_total(base, [F.col("id").asc()], F.col("flag"),
-                           out_col="t", small_bytes=1 << 40)
-    dist_t = running_total(base, [F.col("id").asc()], F.col("flag"),
-                           out_col="t", small_bytes=0)
     assert {(r["id"], r["t"]) for r in fast_t.collect()} == \
         {(r["id"], r["t"]) for r in dist_t.collect()}
     # and the fast path really did engage (no range exchange in plan)

@@ -28,7 +28,7 @@ PATTERNS = {
     "broadcasts": r"BroadcastExchange|BroadcastHashJoin|BroadcastNestedLoop",
     "sorts": r"\bSort \[",
     "py_kernels": r"ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas"
-                  r"|MapInArrow|BatchEvalPython",
+                  r"|FlatMapCoGroupsInPandas|MapInArrow|BatchEvalPython",
     "cartesian": r"CartesianProduct",
     "global_window": r"Window \[[^\]]*\](?!, \[)",  # no partition spec
 }
